@@ -12,6 +12,10 @@ Scale design:
   src/finlogic/data.py:55-56 — a driver OOM at 100 TB).
 - indicators are built lazily and cached; on a cluster you would
   ``write_parquet`` them back partitioned by period instead.
+- the cached trades and indicators are stored at a partition count
+  derived from the input size (``_cache_partitions``), not at the
+  shuffle default: AQE cannot shrink the output of a cached plan, and
+  every later scan of the cache pays one task per stored partition.
 """
 
 from __future__ import annotations
@@ -24,6 +28,7 @@ from pyspark.sql import functions as F
 from finlogic_spark import indicators as ind
 from finlogic_spark.operators.dedup import keep_first, keep_last
 from finlogic_spark.operators.topk import top_k
+from finlogic_spark.session import local_frame
 
 SEARCH_COLS = ("name_id", "cvm_id", "tax_id")
 SHOW_COLS = (
@@ -55,7 +60,11 @@ class Engine:
         self.data_url = data_url or "(in-memory)"
         trades = trades.filter(F.col("volume") >= min_volume)
         order = [entry_order_col] if entry_order_col else []
-        self.trades = keep_last(trades, ["cvm_id"], ["trade_date", *order])
+        # One row per company. Sized before the semi-join below uses it,
+        # so the cached trades plan is the one inside financials and
+        # filling the financials cache fills it too.
+        trades = keep_last(trades, ["cvm_id"], ["trade_date", *order])
+        self.trades = trades.coalesce(_cache_partitions(trades))
         if is_traded:
             financials = financials.join(
                 self.trades.select("cvm_id"), "cvm_id", "left_semi"
@@ -66,7 +75,10 @@ class Engine:
         if cache:
             self.financials = self.financials.cache()
             self.trades = self.trades.cache()
-            self.indicators = self.indicators.cache()
+            # The indicators follow the financials scan they derive from.
+            self.indicators = self.indicators.coalesce(
+                _cache_partitions(financials)
+            ).cache()
 
     @classmethod
     def from_urls(
@@ -123,9 +135,11 @@ class Engine:
         (data_url, memory_usage, accounting_entries, number_of_reports,
         first_report, last_report, number_of_companies). One Spark job:
         all scalar aggregates are computed in a single ``agg`` pass, not
-        one job per stat. memory_usage is the Catalyst size estimate of
-        financials + trades (the distributed analogue of the reference's
-        ``estimated_size()`` — driver RAM is not where the data lives)."""
+        one job per stat, and the result rows come back as a local
+        frame, so collecting it runs no job. memory_usage is the
+        Catalyst size estimate of financials + trades (the distributed
+        analogue of the reference's ``estimated_size()`` — driver RAM is
+        not where the data lives)."""
         stats = self.financials.agg(
             F.count("*").alias("entries"),
             F.count_distinct("cvm_id", "is_annual", "period_end").alias("reports"),
@@ -143,7 +157,7 @@ class Engine:
             ("last_report", str(stats["last_report"])),
             ("number_of_companies", str(stats["companies"])),
         ]
-        return self.spark.createDataFrame(rows, "key string, `FinLogic Info` string")
+        return local_frame(self.spark, rows, "key string, `FinLogic Info` string")
 
     # ---- reference: search_segment (src/finlogic/data.py:98-100) ----
     def search_segment(self, search_value: str) -> DataFrame:
@@ -223,6 +237,19 @@ def _estimated_size(df: DataFrame) -> int:
     sources this is the on-disk footprint; for cached plans the
     in-memory stats)."""
     return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+
+def _cache_partitions(df: DataFrame) -> int:
+    """Partitions to store a cached ``df`` in: one per
+    ``spark.sql.files.maxPartitionBytes`` of the analyzed plan's size
+    estimate (the rule a file scan splits its input by), capped at the
+    shuffle-partition default. The analyzed plan already exists, so this
+    costs no planning and no job; a source without a size estimate gets
+    the cap."""
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    size = int(df._jdf.queryExecution().analyzed().stats().sizeInBytes())
+    per_part = int(conf.filesMaxPartitionBytes())
+    return max(1, min(-(-size // per_part), int(conf.numShufflePartitions())))
 
 
 # ---- module-level convenience mirroring the reference API ----

@@ -3,8 +3,15 @@
 
 Validated mutable properties re-derive state like the reference, but
 "state" here is a cheap lazy plan rebuild; the only eager work per
-re-set is one 4-aggregate collect for the period boundaries (the same
-driver boundary the reference has, src/finlogic/company.py:267-278).
+re-set is one aggregate collect for the period boundaries and the row
+count (the same driver boundary the reference has,
+src/finlogic/company.py:267-278).
+
+Each call runs a small, fixed number of Spark jobs: per-call fixed cost,
+not data volume, dominates an interactive session on one company's few
+hundred accounts. ``report`` collects its period set with one small
+aggregate and names every period column explicitly, so the table is one
+``groupBy("acc_code")`` aggregation ordered inside one partition.
 """
 
 from __future__ import annotations
@@ -17,8 +24,7 @@ from pyspark.sql import functions as F
 from finlogic_spark import indicators as ic
 from finlogic_spark.api import Engine
 from finlogic_spark.functions import hierarchy_depth, multi_prefix
-from finlogic_spark.operators.dedup import keep_last
-from finlogic_spark.operators.reshape import pivot_wide
+from finlogic_spark.session import local_frame
 
 # acc_code first segment selects the statement; prefix lists per report
 # type (reference: src/finlogic/company.py:449-464).
@@ -149,13 +155,15 @@ class Company:
                 F.col("acc_value") / F.lit(self._acc_unit),
             ).otherwise(F.col("acc_value")),
         )
-        # ONE eager collect for the period boundaries (4 aggregates, 1 job).
+        # ONE eager collect for the period boundaries and the row count.
         bounds = df.agg(
+            F.count("*").alias("rows"),
             F.min("period_end").alias("first"),
             F.max("period_end").alias("last"),
             F.max(F.when(F.col("is_annual"), F.col("period_end"))).alias("last_annual"),
             F.max(F.when(~F.col("is_annual"), F.col("period_end"))).alias("last_quarterly"),
         ).first()
+        self._n_rows = bounds["rows"]
         self._first_period = bounds["first"]
         self._last_period = bounds["last"]
         self._last_annual = bounds["last_annual"]
@@ -172,7 +180,7 @@ class Company:
             ("Name", str(self.name_id)),
             ("CVM ID", str(self._cvm_id)),
             ("Fiscal ID (CNPJ)", str(self.tax_id)),
-            ("Total Accounting Rows", str(self._df.count())),
+            ("Total Accounting Rows", str(self._n_rows)),
             (
                 "Selected Accounting Method",
                 "consolidated" if self._is_consolidated else "separate",
@@ -182,38 +190,42 @@ class Company:
             ("First Report", str(self._first_period)),
             ("Last Report", str(self._last_period)),
         ]
-        return self._engine.spark.createDataFrame(
-            rows, "key string, `Company Info` string"
+        return local_frame(
+            self._engine.spark, rows, "key string, `Company Info` string"
         )
 
     # ---- report pipeline (company.py:310-477) ----
-    def _build_report(self, dfi: DataFrame) -> DataFrame:
-        """Index (latest acc_name per code) left-joined with the
-        period pivot; the reference's per-period loop-join
-        (company.py:323-336) is a single groupBy().pivot() here."""
-        index = keep_last(
-            dfi.select("acc_code", "acc_name", "period_end"),
-            ["acc_code"],
-            ["period_end"],
-        ).select("acc_code", "acc_name")
-        labeled = dfi.withColumn(
-            "period_str",
-            F.when(
-                (F.col("period_end") == F.lit(self._last_period))
-                & F.lit(self._last_period_type == "quarterly"),
-                F.concat(F.date_format("period_end", "yyyy-MM-dd"), F.lit(" ltm")),
-            ).otherwise(F.date_format("period_end", "yyyy-MM-dd")),
+    def _period_label(self, period) -> str:
+        """"yyyy-MM-dd", with " ltm" on a trailing quarterly period."""
+        label = period.isoformat()
+        if period == self._last_period and self._last_period_type == "quarterly":
+            label += " ltm"
+        return label
+
+    def _build_report(self, dfi: DataFrame, periods: list) -> DataFrame:
+        """One row per acc_code: its latest acc_name and one column per
+        period, 0.0 where the account has no value. The reference's
+        per-period loop-join (company.py:323-336) is one conditional
+        aggregation over explicit period columns here. The output is
+        one company's few hundred accounts, so it is ordered in a
+        single partition instead of through a range-partitioning sort."""
+        labels = sorted((self._period_label(p), p) for p in periods)
+        cells = [
+            F.coalesce(
+                F.first(
+                    F.when(F.col("period_end") == F.lit(p), F.col("acc_value")),
+                    ignorenulls=True,
+                ),
+                F.lit(0.0),
+            ).alias(label)
+            for label, p in labels
+        ]
+        return (
+            dfi.groupBy("acc_code")
+            .agg(F.max_by("acc_name", "period_end").alias("acc_name"), *cells)
+            .coalesce(1)
+            .sortWithinPartitions("acc_code")
         )
-        values = pivot_wide(
-            labeled,
-            index=["acc_code"],
-            on="period_str",
-            values="acc_value",
-            agg="first",
-            fill=None,
-        )
-        out = index.join(values, "acc_code", "left")
-        return out.na.fill(0.0).orderBy("acc_code")
 
     def _remove_not_last_quarters(self, df: DataFrame) -> DataFrame:
         return df.filter(
@@ -230,6 +242,13 @@ class Company:
         df = self._remove_not_last_quarters(self._df)
         if acc_level:
             df = df.filter(hierarchy_depth("acc_code") <= acc_level)
+        df = df.filter(multi_prefix("acc_code", REPORT_TYPES[report_type]))
+        # The report's period set: one small aggregate over the
+        # company's filtered rows, collected once.
+        periods = sorted(df.agg(F.collect_set("period_end")).first()[0])
+        if num_years:
+            periods = periods[-num_years:]
+            df = df.filter(F.col("period_end").isin(periods))
         if self._language == "English":
             lang = self._engine.language
             df = (
@@ -244,17 +263,7 @@ class Company:
                 )
                 .drop("pt", "en")
             )
-        df = df.filter(multi_prefix("acc_code", REPORT_TYPES[report_type]))
-        if num_years:
-            # Last N distinct periods via TakeOrderedAndProject (no
-            # global window — that would single-partition the data).
-            periods = (
-                df.select("period_end").distinct()
-                .orderBy(F.col("period_end").desc())
-                .limit(num_years)
-            )
-            df = df.join(F.broadcast(periods), "period_end", "left_semi")
-        return self._build_report(df)
+        return self._build_report(df, periods)
 
     def custom_report(self, acc_list: list[str], num_years: int = 0) -> DataFrame:
         df_bs = self.report("balance_sheet", num_years=num_years)

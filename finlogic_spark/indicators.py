@@ -224,25 +224,35 @@ def adjust_unit(df: DataFrame, unit: float) -> DataFrame:
 def format_indicators(df: DataFrame, unit: float) -> DataFrame:
     """Wide indicators → display pivot: one row per indicator, one
     column per period (presentation edge only — the canonical form
-    stays wide-by-indicator)."""
+    stays wide-by-indicator).
+
+    Meant for one company's rows: the period set is collected with one
+    small aggregate and named explicitly, so the pivot is a single
+    conditional aggregation with no distinct-collection job, and the
+    27 output rows are ordered in one partition, not by a range sort."""
     df = adjust_unit(df, unit)
     melt_cols = ["cvm_id", "name_id", "is_annual", "is_consolidated", "period_end"]
     value_cols = [c for c in df.columns if c not in melt_cols]
     long = df.unpivot(melt_cols, value_cols, "indicator", "value").withColumn(
         "period_end", F.col("period_end").cast("string")
     )
-    out = pivot_wide(
-        long,
-        index=["cvm_id", "is_consolidated", "indicator"],
-        on="period_end",
-        values="value",
-        agg="first",
-        fill=None,
+    periods = sorted(
+        df.agg(F.collect_set(F.col("period_end").cast("string"))).first()[0]
     )
+    keys = ["cvm_id", "is_consolidated", "indicator"]
+    cells = [
+        F.first(
+            F.when(F.col("period_end") == F.lit(p), F.col("value")),
+            ignorenulls=True,
+        ).alias(p)
+        for p in periods
+    ]
+    out = long.groupBy(*keys).agg(*cells) if cells else long.select(*keys).distinct()
     order = F.array(*[F.lit(i) for i in INDICATOR_ORDER])
     return (
         out.withColumn("_order", F.array_position(order, F.col("indicator")))
         .filter(F.col("_order") > 0)
-        .orderBy("_order")
+        .coalesce(1)
+        .sortWithinPartitions("_order")
         .drop("_order")
     )

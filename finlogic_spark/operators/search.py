@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from finlogic_spark.functions.text import tokens
+from finlogic_spark.session import local_frame
 
 
 def build_postings(
@@ -198,15 +199,14 @@ def _bucket_pruned_terms(
     PartitionFilters on __tok_bkt plus a pushed token IN-filter — it
     reads |distinct buckets| partitions, never the corpus. Shared by
     the frequency (_term_lookup) and positional (phrase_search) serve
-    paths."""
+    paths. The terms are a local frame, so the optimizer folds the
+    bucket projection into it and the collect runs no Spark job."""
     uniq = list(dict.fromkeys(terms))
     spark = postings.sparkSession
     bkts = sorted(
         {
             int(r[0])
-            for r in spark.createDataFrame(
-                [(t,) for t in uniq], "token string"
-            )
+            for r in local_frame(spark, [(t,) for t in uniq], "token string")
             .select(_token_bucket(F.col("token"), n_buckets))
             .collect()
         }

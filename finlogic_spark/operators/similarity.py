@@ -31,6 +31,9 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
+
+from finlogic_spark.session import local_frame
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -330,22 +333,48 @@ def build_lsh_index_table(
         .parquet(path)
     )
     spark.createDataFrame(
-        [(dim, num_planes, num_tables)],
-        "dim int, num_planes int, num_tables int",
+        [(dim, num_planes, num_tables)], _LSH_STATS
     ).write.mode("overwrite").parquet(os.path.join(path, "_stats"))
     return read_lsh_index(spark, path)
 
 
-def read_lsh_index(spark, path: str) -> LshIndex:
+# ``_stats`` sidecar schemas. Reading with the schema given skips the
+# schema-inference job a plain ``spark.read.parquet`` runs first.
+_LSH_STATS = "dim int, num_planes int, num_tables int"
+_IVF_STATS = "cid int, cv array<double>"
+
+
+def _read_stats(spark, path: str, schema: str) -> list:
     import os
 
-    r = spark.read.parquet(os.path.join(path, "_stats")).first()
+    return spark.read.schema(schema).parquet(os.path.join(path, "_stats")).collect()
+
+
+def _appended_index_frame(spark, path: str, rows: DataFrame, part_col: str) -> DataFrame:
+    """Serving frame of an index just appended to, read with the
+    schema the written ``rows`` imply instead of inferring it again:
+    the data columns nullable as Parquet reads them, then the partition
+    column as the int that partition discovery infers for small ids."""
+    data = [
+        StructField(f.name, f.dataType, True)
+        for f in rows.schema.fields
+        if f.name != part_col
+    ]
+    schema = StructType(data + [StructField(part_col, IntegerType(), True)])
+    return spark.read.schema(schema).parquet(path)
+
+
+def _lsh_handle(df: DataFrame, stats) -> LshIndex:
     return LshIndex(
-        df=spark.read.parquet(path),
-        dim=int(r["dim"]),
-        num_planes=int(r["num_planes"]),
-        num_tables=int(r["num_tables"]),
+        df=df,
+        dim=int(stats["dim"]),
+        num_planes=int(stats["num_planes"]),
+        num_tables=int(stats["num_tables"]),
     )
+
+
+def read_lsh_index(spark, path: str) -> LshIndex:
+    return _lsh_handle(spark.read.parquet(path), _read_stats(spark, path, _LSH_STATS)[0])
 
 
 def append_to_lsh_index(
@@ -370,19 +399,20 @@ def append_to_lsh_index(
     mismatched plane count would silently split the corpus across
     incompatible bucket spaces."""
     spark = new_vecs.sparkSession
-    idx = read_lsh_index(spark, path)
+    stats = _read_stats(spark, path, _LSH_STATS)[0]
+    num_tables = int(stats["num_tables"])
     rows = lsh_index_multi(
-        new_vecs, vec_col, idx.dim, idx.num_planes, idx.num_tables,
-        id_col=id_col,
+        new_vecs, vec_col, int(stats["dim"]), int(stats["num_planes"]),
+        num_tables, id_col=id_col,
     )
     (
-        rows.repartition(idx.num_tables, F.col("__tbl"))
+        rows.repartition(num_tables, F.col("__tbl"))
         .sortWithinPartitions("__tbl", "__bucket")
         .write.partitionBy("__tbl")
         .mode("append")
         .parquet(path)
     )
-    return read_lsh_index(spark, path)
+    return _lsh_handle(_appended_index_frame(spark, path, rows, "__tbl"), stats)
 
 
 class IvfIndex:
@@ -416,19 +446,19 @@ def build_ivf_index_table(
     )
     cells.write.partitionBy("__cell").mode("overwrite").parquet(path)
     spark.createDataFrame(
-        [(int(c), [float(x) for x in v]) for c, v in cents],
-        "cid int, cv array<double>",
+        [(int(c), [float(x) for x in v]) for c, v in cents], _IVF_STATS
     ).write.mode("overwrite").parquet(os.path.join(path, "_stats"))
     return read_ivf_index(spark, path)
 
 
-def read_ivf_index(spark, path: str) -> IvfIndex:
-    import os
+def _ivf_cents(stats) -> list:
+    return sorted((int(r["cid"]), list(map(float, r["cv"]))) for r in stats)
 
-    rows = spark.read.parquet(os.path.join(path, "_stats")).collect()
-    cents = [(int(r["cid"]), list(map(float, r["cv"]))) for r in rows]
-    cents.sort()
-    return IvfIndex(df=spark.read.parquet(path), cents=cents)
+
+def read_ivf_index(spark, path: str) -> IvfIndex:
+    return IvfIndex(
+        df=spark.read.parquet(path), cents=_ivf_cents(_read_stats(spark, path, _IVF_STATS))
+    )
 
 
 def append_to_ivf_index(
@@ -445,12 +475,10 @@ def append_to_ivf_index(
     tests/test_ann_append.py). Centroid DRIFT is a rebuild decision,
     not an append one: fold-in never re-clusters."""
     spark = new_vecs.sparkSession
-    idx = read_ivf_index(spark, path)
-    cells = ivf_assign(
-        new_vecs.select(id_col, vec_col), idx.cents, vec_col, "__cell"
-    )
+    cents = _ivf_cents(_read_stats(spark, path, _IVF_STATS))
+    cells = ivf_assign(new_vecs.select(id_col, vec_col), cents, vec_col, "__cell")
     cells.write.partitionBy("__cell").mode("append").parquet(path)
-    return read_ivf_index(spark, path)
+    return IvfIndex(df=_appended_index_frame(spark, path, cells, "__cell"), cents=cents)
 
 
 def lsh_query_probes_local(
@@ -528,10 +556,6 @@ def _probe_rows_from_collected(
 def _probe_df_from_rows(
     spark, q_schema, rows, dim, num_planes, num_tables, probe_radius
 ) -> DataFrame:
-    from pyspark.sql.types import (
-        IntegerType, LongType, StructField, StructType,
-    )
-
     out = _probe_rows_from_collected(
         rows, dim, num_planes, num_tables, probe_radius
     )
@@ -541,7 +565,7 @@ def _probe_df_from_rows(
         StructField("__tbl", IntegerType(), False),
         StructField("__bucket", LongType(), False),
     ])
-    return spark.createDataFrame(out, schema)
+    return local_frame(spark, out, schema)
 
 
 def lsh_cosine_topk(
@@ -597,7 +621,8 @@ def lsh_cosine_topk(
         # ONE collect serves both sides: the probe fan-out AND the
         # broadcast vector join are rebuilt from the same driver rows,
         # so the queries plan (often a scan+filter) runs once per serve
-        # batch, not twice.
+        # batch, not twice. Both are local frames: broadcasting them
+        # runs no job.
         q_sel = queries.select(query_id, query_vec)
         q_rows = q_sel.collect()
         spark = queries.sparkSession
@@ -605,7 +630,7 @@ def lsh_cosine_topk(
             spark, q_sel.schema, q_rows, dim, num_planes, num_tables,
             probe_radius,
         )
-        q_local = spark.createDataFrame(q_rows, q_sel.schema)
+        q_local = local_frame(spark, q_rows, q_sel.schema)
         scored = (
             c.join(F.broadcast(probes), ["__tbl", "__bucket"])
             .join(F.broadcast(q_local), query_id)

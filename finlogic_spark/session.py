@@ -10,7 +10,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
@@ -68,3 +69,31 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """Rows held on the driver → an Arrow-backed ``LocalRelation``.
+
+    ``createDataFrame(list)`` parallelizes a Python RDD, so every action
+    on the frame (a broadcast, a collect) runs a Spark job. Passing a
+    ``pyarrow.Table`` instead makes a ``LocalRelation`` when the batches
+    fit under ``spark.sql.execution.arrow.localRelationThreshold``
+    (48 MB by default; larger inputs fall back to an RDD, same rows):
+    a collect, a broadcast, or a Project that the optimizer folds into
+    the relation then run on the driver with no job. ``schema`` is a
+    ``StructType`` or a DDL string; ``rows`` are tuples in its order."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    rows = list(rows)
+    table = pa.Table.from_arrays(
+        [
+            pa.array([r[i] for r in rows], type=f.type)
+            for i, f in enumerate(arrow_schema)
+        ],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
