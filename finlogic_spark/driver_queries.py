@@ -8111,6 +8111,11 @@ def doc_bpe_shingle_pairs(spark, sf_dir):
             )
         ).alias("bb"),
     ).select("doc_id", "bb.band", "bb.band_hash")
+    # Uncapped on purpose, as in minhash_lsh_pairs: max_bucket_size
+    # would drop pairs the oracle keeps. A corpus of many identical
+    # documents puts one O(n²) expansion in one task; the fix that keeps
+    # the pair set is the ROADMAP item "Bound `bucket_pairs` for giant
+    # buckets".
     return bucket_pairs(buckets, "doc_id").orderBy("id_a", "id_b")
 
 

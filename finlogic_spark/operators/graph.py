@@ -29,7 +29,9 @@ Two interchangeable algorithms behind one signature:
 
 Scale notes (both algorithms):
 - Per round: shuffles keyed by vertex id with map-side partial mins —
-  no broadcast of anything graph-sized, no driver collect.
+  no broadcast of anything graph-sized, no driver collect. (Only the
+  'auto' small-graph regime collects, under its byte gate; see
+  ``connected_components``.)
 - ``localCheckpoint(eager=False)`` truncates per-iteration lineage —
   without it the plan doubles every round and analysis cost explodes
   by round ~10; the convergence certificate's agg is the one action
@@ -85,8 +87,8 @@ def connected_components(
     took 157.7 s — at that shape the label rounds are wasted work,
     while at bench scale (thousands of edges) label converges in a few
     cheap rounds and star's heavier per-round plan loses. The edge
-    count is read off the ALREADY-persisted edge cache, so the probe
-    costs one cheap job, not an extra pass over the pair computation.
+    count comes from the job that fills the edge checkpoint, so the
+    probe costs no extra pass over the pair computation.
     ``stats``: pass a dict to receive {'label_rounds', 'star_rounds',
     'converged'} — rounds actually executed (round-complexity pins in
     tests) and whether a fixpoint was REACHED within ``max_iters``.
@@ -95,30 +97,35 @@ def connected_components(
     more than one label); a warning is emitted in that case so budget
     exhaustion is never silent.
 
-    ``small_graph_max_bytes`` (r16, the pagerank single-job precedent):
-    in 'auto' mode, when the DIRECTED edge list measures under this
-    many bytes (measured octet sums for string/binary ids + planner
-    fixed widths — the same job that materializes the edge cache), the
-    whole label propagation collapses into ONE Arrow pass:
-    repartition(1) funnel of the bounded edge cache into a vectorized
-    min-label/pointer-jumping worker. Bit-identical output (min
-    reachable id per component has exactly one answer; pinned
-    cross-regime in tests). 0 disables; explicit 'label'/'star' also
-    bypass it (callers asking for a specific distributed algorithm get
-    it).
+    ``small_graph_max_bytes``: in 'auto' mode, when the DIRECTED edge
+    list measures under this many bytes (measured octet sums for
+    string/binary ids + planner fixed widths — the same job that
+    materializes the edge checkpoint), the whole label propagation runs
+    ON THE DRIVER: the edges come back as one Arrow table, a vectorized
+    min-label/pointer-jumping loop labels them (``_cc_on_driver``), and
+    the labels return as a local relation. Driver memory peaks at about
+    4× the gated bytes (the Arrow table, its dictionary encoding and the
+    int64 index arrays), so the gate bounds the driver heap as well as
+    the Python process. Bit-identical output (min reachable id per
+    component has exactly one answer; pinned cross-regime in tests).
+    ``stats['auto_choice']`` reads 'single-job'. 0 disables; explicit
+    'label'/'star' also bypass it (callers asking for a specific
+    distributed algorithm get it).
     """
     if algorithm not in ("auto", "label", "star"):
         raise ValueError(
             f"algorithm must be 'auto', 'label' or 'star'; got {algorithm!r}"
         )
-    # Persist the DIRECTED edge projection and derive the symmetrized
-    # view from the cache: persisting the union itself made the cache
-    # fill evaluate the upstream pair pipeline TWICE (Spark does not
-    # share subplans across union branches — at dedup scale that is two
-    # full tokenize->minhash->bucket passes); the union over the cached
-    # projection is two in-memory scans instead.
-    e0 = edges.select(F.col(src).alias("s"), F.col(dst).alias("d")).persist(
-        _SPILL
+    # Checkpoint the DIRECTED edge projection and derive the symmetrized
+    # view from it: materializing the union itself made the fill
+    # evaluate the upstream pair pipeline TWICE (Spark does not share
+    # subplans across union branches — at dedup scale that is two full
+    # tokenize->minhash->bucket passes); the union over the checkpoint
+    # is two in-memory scans instead. A lazy local checkpoint rather
+    # than a cache: AQE may coalesce its partitions (a cached plan keeps
+    # the shuffle default, 32 tasks per scan on a few hundred edges).
+    e0 = edges.select(F.col(src).alias("s"), F.col(dst).alias("d")).localCheckpoint(
+        eager=False, storageLevel=_SPILL
     )
     und = e0.unionByName(e0.select(F.col("d").alias("s"), F.col("s").alias("d")))
     if stats is None:
@@ -126,11 +133,11 @@ def connected_components(
     stats["label_rounds"] = 0
     stats["star_rounds"] = 0
     if algorithm == "auto":
-        # Materialize the edge cache with the shape/size measurement
-        # job (the first label/star round was about to pay this
-        # materialization anyway) and pick the regime: single-job under
-        # the measured byte gate, else label-first/star-first by edge
-        # count (see docstring).
+        # Materialize the edge checkpoint with the shape/size
+        # measurement job (the first label/star round was about to pay
+        # this materialization anyway) and pick the regime: driver-side
+        # under the measured byte gate, else label-first/star-first by
+        # edge count (see docstring).
         from pyspark.sql import types as T
 
         var_cols = [
@@ -158,15 +165,13 @@ def connected_components(
             ):
                 stats["auto_choice"] = "single-job"
                 stats["converged"] = True
-                labels = _cc_single_job(e0)
+                labels = _cc_on_driver(e0)
                 isolated = (
                     vertices.select(F.col(id_col).alias("id"))
                     .join(labels.select("id"), "id", "left_anti")
                     .withColumn("label", F.col("id"))
                 )
-                out = labels.unionByName(isolated)
-                e0.unpersist()
-                return out
+                return labels.unionByName(isolated)
         if n_edges >= star_edge_threshold:
             algorithm = "star"
             stats["auto_choice"] = "star-first"
@@ -229,7 +234,6 @@ def connected_components(
                 "id", F.coalesce("label", F.col("mid")).alias("label")
             )
         )
-    e0.unpersist()
     stats["converged"] = converged
     if not converged:
         import warnings
@@ -249,19 +253,16 @@ def connected_components(
     return labels.unionByName(isolated)
 
 
-def _cc_single_job(e0: DataFrame) -> DataFrame:
-    """All connected-components rounds in ONE Spark job — the
-    small-graph regime behind ``connected_components(
-    small_graph_max_bytes=...)``, the exact analogue of
-    ``_pagerank_single_job``.
+def _cc_on_driver(e0: DataFrame) -> DataFrame:
+    """All connected-components rounds on the driver — the small-graph
+    regime behind ``connected_components(small_graph_max_bytes=...)``.
 
     The distributed label path pays a fixed per-round price (join +
     aggregate + certificate job) that dwarfs the label arithmetic on a
     small graph. When the measured edge bytes fit the caller's gate,
-    funnel the cached DIRECTED edge list through ``repartition(1)``
-    (the upstream pair pipeline stays parallel; only the bounded edge
-    list funnels) into one Arrow worker that runs vectorized
-    min-label propagation with pointer jumping:
+    the checkpointed DIRECTED edge list comes back as one Arrow table
+    (one job; the upstream pair pipeline stayed parallel) and a
+    vectorized min-label propagation with pointer jumping labels it:
 
     - node ids (any orderable type) are dictionary-encoded by Arrow,
       then ranked via ``sort_indices`` so comparing RANKS is comparing
@@ -273,32 +274,35 @@ def _cc_single_job(e0: DataFrame) -> DataFrame:
     - labels are monotone non-increasing integer vectors, so the loop
       terminates at the first unchanged round — that IS the fixpoint.
 
-    Output: (id, label) for every edge ENDPOINT, label = min reachable
-    id — bit-identical to the distributed rounds (one answer exists;
-    pinned cross-regime in tests/test_operators.py)."""
+    Output: (id, label) for every edge ENDPOINT as a local relation,
+    label = min reachable id — bit-identical to the distributed rounds
+    (one answer exists; pinned cross-regime in
+    tests/test_operators.py). Running on the driver, not in a
+    ``repartition(1)`` Python-worker task, saves that shuffle, an eager
+    checkpoint job and the worker's per-task start-up (README "The
+    Python-worker tax")."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
     from pyspark.sql import types as T
 
     id_type = e0.schema["s"].dataType
     out_schema = T.StructType(
-        [T.StructField("id", id_type), T.StructField("label", id_type)]
+        [T.StructField("id", id_type, False), T.StructField("label", id_type, False)]
     )
-
-    def _run(batches):
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        tbls = [pa.Table.from_batches([b]) for b in batches]
-        if not tbls:
-            return
-        t = pa.concat_tables(tbls)
-        s = t.column("s").combine_chunks()
-        d = t.column("d").combine_chunks()
-        enc = pa.chunked_array([s, d]).combine_chunks().dictionary_encode()
-        nodes = enc.dictionary
-        n = len(nodes)
-        if n == 0:
-            return
+    # ADVICE r16: a null endpoint would put nulls into enc.indices and
+    # to_numpy() (zero-copy) raises. A null endpoint cannot join
+    # anything in the distributed regime either (join semantics drop
+    # it), so filter first — connectivity among non-null ids is
+    # unaffected.
+    t = e0.filter(F.col("s").isNotNull() & F.col("d").isNotNull()).toArrow()
+    s = t.column("s").combine_chunks()
+    d = t.column("d").combine_chunks()
+    enc = pa.chunked_array([s, d]).combine_chunks().dictionary_encode()
+    nodes = enc.dictionary
+    n = len(nodes)
+    labels = nodes
+    if n:
         # rank -> node index, and node index -> rank (value order)
         order = pc.sort_indices(nodes).to_numpy().astype(np.int64, copy=False)
         rank_of = np.empty(n, dtype=np.int64)
@@ -315,24 +319,10 @@ def _cc_single_job(e0: DataFrame) -> DataFrame:
             np.minimum(lab, lab[order[lab]], out=lab)
             if np.array_equal(lab, old):
                 break
-        yield pa.record_batch(
-            [nodes, nodes.take(pa.array(order[lab]))], ["id", "label"]
-        )
-
-    # ADVICE r16: a null endpoint would put nulls into enc.indices and
-    # to_numpy() (zero-copy) raises, failing the whole query in this
-    # regime. A null endpoint cannot join anything in the distributed
-    # regime either (join semantics drop it), so filter before the
-    # funnel — connectivity among non-null ids is unaffected.
-    res = (
-        e0.filter(F.col("s").isNotNull() & F.col("d").isNotNull())
-        .select("s", "d")
-        .repartition(1)
-        .mapInArrow(_run, out_schema)
+        labels = nodes.take(pa.array(order[lab]))
+    return e0.sparkSession.createDataFrame(
+        pa.table([nodes, labels], names=["id", "label"]), out_schema
     )
-    # one eager job end-to-end, after which the caller can release the
-    # edge cache (same discipline as _pagerank_single_job)
-    return res.localCheckpoint(eager=True, storageLevel=_SPILL)
 
 
 # Certificates sum vertex ids, which can be arbitrarily large (sf100

@@ -1,7 +1,9 @@
 """Deduplication operators for document corpora (engine-scope addition;
 SURVEY.md §7 phase 4). Four tiers, cheapest first:
 
-1. exact       — md5 of canonical text, hash-groupBy keep-min-id.
+1. exact       — md5 of canonical text, rank() by id within each hash
+                 class, rank 1 kept: one hash shuffle, map-side group
+                 limit.
 2. ngram       — pairwise Jaccard over word shingles via shingle-join
                  (exact near-dup, quadratic only within shared shingles).
 3. minhash+LSH — per-doc MinHash signature, banded into LSH buckets;
@@ -24,10 +26,10 @@ near-linear; this is the standard web-scale dedup layout.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from finlogic_spark.functions.text import tokens
+from finlogic_spark.functions.text import bind, tokens
 
 DEFAULT_NUM_HASHES = 12
 DEFAULT_BANDS = 4  # 4 bands × 3 rows: ~Jaccard 0.6+ candidates
@@ -42,18 +44,22 @@ def canonical_text(col: str | Column) -> Column:
 def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Keep the lowest-id representative of each exact (canonicalized)
     duplicate class. Null-text rows pass through untouched: they carry
-    no comparable content, and a null join key would otherwise drop
-    them silently (nulls never match in a semi-join). Plan: one
-    hash-shuffle on the md5 key with partial min() map-side — the
-    minimal exact-dedup plan."""
+    no comparable content. Tied lowest ids keep every tied row; a null
+    id never survives, so a class whose ids are all null drops out.
+
+    Plan: ``rank()`` over the md5 key ordered by id, rank 1 kept — ONE
+    hash shuffle, and Spark plans a ``WindowGroupLimit`` before it, so
+    duplicates are cut map-side. The older min()-aggregate plus
+    semi-join form (same rows) paid a second exchange at scale, or a
+    broadcast job, and evaluated its input twice."""
     nulls = df.filter(F.col(text_col).isNull())
-    keyed = df.filter(F.col(text_col).isNotNull()).withColumn(
-        "__h", F.md5(canonical_text(text_col))
-    )
-    reps = keyed.groupBy("__h").agg(F.min(id_col).alias(id_col))
+    w = Window.partitionBy("__h").orderBy(F.col(id_col).asc_nulls_last())
     return (
-        keyed.join(reps, ["__h", id_col], "left_semi")
-        .drop("__h")
+        df.filter(F.col(text_col).isNotNull())
+        .withColumn("__h", F.md5(canonical_text(text_col)))
+        .withColumn("__r", F.rank().over(w))
+        .filter((F.col("__r") == 1) & F.col(id_col).isNotNull())
+        .drop("__h", "__r")
         .unionByName(nulls)
     )
 
@@ -89,9 +95,8 @@ def shingles(col: str | Column, k: int = 3) -> Column:
 
 def minhash_value(shingle_col: Column, seed: int) -> Column:
     """One min-hash: lexicographic min of md5("{seed}|" + shingle)."""
-    return F.array_min(
-        F.transform(shingle_col, lambda s: F.md5(F.concat(F.lit(f"{seed}|"), s)))
-    )
+    prefix = F.lit(f"{seed}|")
+    return F.array_min(F.transform(shingle_col, lambda s: F.md5(F.concat(prefix, s))))
 
 
 def minhash_signature(
@@ -101,27 +106,35 @@ def minhash_signature(
     k: int = 3,
     num_hashes: int = DEFAULT_NUM_HASHES,
 ) -> DataFrame:
-    """(id, minhash_0..minhash_{n-1}) via explode + min-aggregate.
+    """(id, minhash_0..minhash_{n-1}), one row per non-null-text
+    document, computed row-locally: ids must be unique (every in-repo
+    caller passes a document table keyed by its id, or a deduplicated
+    frame of one).
 
-    Exploding shingles then taking ``num_hashes`` MIN aggregates beats
-    per-row array transforms: the shingle array is built ONCE per row
-    (array-expression columns get re-inlined into every consumer by
-    Catalyst's CollapseProject, so the withColumn-per-seed form
-    recomputes tokenization 6×), and partial min() combines map-side so
-    the shuffle carries one row per document — the 100 TB shape.
+    The distinct shingle array is bound ONCE per row (``text.bind``)
+    and every ``minhash_i`` is an ``array_min`` over md5s of that array,
+    all inside one struct — a narrow map, no exchange. The earlier
+    explode + ``groupBy(id).min`` form computed the same minimum over
+    the same md5 set but exploded every shingle into a row, shuffled,
+    and sort-aggregated the string mins: on the 2k-document curation
+    batch that was one job and a sort per pass for no change in the
+    values.
 
-    Null-text documents produce no signature row (explode of a null
-    array emits nothing; a MinHash over no tokens is undefined). The
-    SQL oracle behaves identically, so parity holds."""
-    sh = df.select(
-        F.col(id_col),
-        F.explode(F.array_distinct(shingles(text_col, k))).alias("__sh"),
+    Null-text documents produce no signature row (a MinHash over no
+    tokens is undefined). The explode form emitted an all-null row for
+    them (under ANSI ``size(null)`` is null, so the shingle array was
+    [null]), and ``lsh_buckets`` then gave every such row the same band
+    hashes, pairing all null-text documents with each other."""
+    sig = bind(
+        F.array_distinct(shingles(text_col, k)),
+        lambda sh: F.struct(
+            *[minhash_value(sh, i).alias(f"minhash_{i}") for i in range(num_hashes)]
+        ),
     )
-    return sh.groupBy(id_col).agg(
-        *[
-            F.min(F.md5(F.concat(F.lit(f"{i}|"), F.col("__sh")))).alias(f"minhash_{i}")
-            for i in range(num_hashes)
-        ]
+    return (
+        df.filter(F.col(text_col).isNotNull())
+        .select(F.col(id_col), sig.alias("__sig"))
+        .select(id_col, "__sig.*")
     )
 
 
@@ -188,6 +201,13 @@ def minhash_lsh_pairs(
     collect_list per bucket stays small; ``max_bucket_size`` drops
     degenerate mega-buckets (boilerplate-heavy corpora) before the
     quadratic expansion."""
+    # No cap by default: ``max_bucket_size`` DROPS pairs, so it changes
+    # the result (and the oracle's). Buckets stay small only while the
+    # documents differ; n identical documents share every bucket and
+    # expand to n²/2 pairs inside one task. Curation runs exact_dedup
+    # first, which removes that case; the pair-preserving fix (chunked
+    # expansion of oversized buckets) is the ROADMAP item "Bound
+    # `bucket_pairs` for giant buckets".
     sig = minhash_signature(df, text_col, id_col, k, num_hashes)
     buckets = lsh_buckets(sig, id_col, num_hashes, bands)
     return bucket_pairs(buckets, id_col, max_bucket_size)
