@@ -6925,40 +6925,52 @@ def events_winsorize(spark, sf_dir):
 )
 def events_kll_quantiles(spark, sf_dir):
     # Mergeable per-group KLL quantile sketch as a distributed
-    # aggregate (operators/sketch.py), validated against exact rank
-    # bands. ONE data-sized pass: the value-frequency histogram
-    # (map-side-combining groupBy — sf100's 100M rows compact to
-    # ~280k) feeds (a) the sketch via binary-weight insertion, (b) the
-    # exact interpolated percentiles (histogram_percentiles — the
-    # winsorize-pinned arithmetic, bit-identical to percentile()),
-    # (c) the band counts. The band is checked EXACTLY: the estimate
-    # is an item of the group, so its possible ranks are
-    # [count(<est), count(<=est)]; the flag asserts that interval
-    # intersects [p-eps, p+eps]*n with eps=0.02 (k=200;
-    # randomized-KLL 99%-confidence bound is 2.3/k ~ 0.0115, widened
-    # for the deterministic-parity variant).
-    from pyspark.storagelevel import StorageLevel
-
-    from finlogic_spark.operators.profile import histogram_percentiles
+    # aggregate (operators/sketch.py: DataSketches kll_sketch_agg_double
+    # over the raw filtered rows, map-side partials, a sketch-only
+    # shuffle), validated against exact rank bands. The value-frequency
+    # histogram (map-side-combining groupBy — sf100's 100M rows compact
+    # to ~280k) feeds only the band report: the exact interpolated
+    # percentiles (histogram_percentiles — the winsorize-pinned
+    # arithmetic, bit-identical to percentile()) and the band counts.
+    # The band is checked EXACTLY: the estimate is an item of the
+    # group, so its possible ranks are [count(<est), count(<=est)]; the
+    # flag asserts that interval intersects [p-eps, p+eps]*n with
+    # eps=0.02 (k=200; DataSketches' 99%-confidence single-rank bound
+    # is 1.33%). The JVM KLL is randomized, so the estimate moves
+    # between runs; the band holds on every run.
     from finlogic_spark.operators.sketch import kll_group_quantiles
 
-    e = _t(spark, sf_dir, "events")
+    base = _kll_base(spark, sf_dir)
+    est = kll_group_quantiles(base, ["event_type"], "value", [0.5, 0.99])
+    return _kll_band_report(_kll_wide(est), _kll_hist(base))
+
+
+def _kll_base(spark, sf_dir, *extra):
     v = F.col("value")
-    base = e.filter(v.isNotNull() & ~F.isnan(v)).select("event_type", "value")
-    hist = (
+    e = _t(spark, sf_dir, "events")
+    return e.filter(v.isNotNull() & ~F.isnan(v)).select(
+        *extra, "event_type", "value"
+    )
+
+
+def _kll_hist(base):
+    """(event_type, value, __c) value-frequency histogram the band
+    report reads twice (percentiles and band counts)."""
+    from pyspark.storagelevel import StorageLevel
+
+    return (
         base.groupBy("event_type", "value")
         .agg(F.count(F.lit(1)).alias("__c"))
-        # sketch, percentile, and band branches share this frame
         .localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
     )
-    est = kll_group_quantiles(
-        hist, ["event_type"], "value", [0.5, 0.99], weight_col="__c"
-    )
-    est_w = est.groupBy("event_type").agg(
+
+
+def _kll_wide(est):
+    """(event_type, prob, value) rows → (event_type, kll_p50, kll_p99)."""
+    return est.groupBy("event_type").agg(
         F.max(F.when(F.col("prob") == 0.5, F.col("value"))).alias("kll_p50"),
         F.max(F.when(F.col("prob") == 0.99, F.col("value"))).alias("kll_p99"),
     )
-    return _kll_band_report(est_w, hist)
 
 
 def _kll_band_report(est_w, hist, eps: float = 0.02):
@@ -7006,17 +7018,15 @@ def _kll_band_report(est_w, hist, eps: float = 0.02):
 
 @q("stream_kll_quantiles", None)
 def stream_kll_quantiles(spark, sf_dir):
-    # Streaming twin of events_kll_quantiles: the KLL sketch as keyed
-    # streaming state (a few KB per key at ANY stream length — exact
-    # streaming percentiles would hold every value ever seen). Each
-    # micro-batch folds into the key's sketch and re-emits estimates;
-    # keep_last over the monotone n takes the final ones, validated
-    # against the same exact rank bands as the batch query (the band
-    # holds for any insertion order, so the result is micro-batch-
-    # boundary independent). Oracle attached below (same SQL as the
-    # batch twin).
-    from pyspark.storagelevel import StorageLevel
-
+    # Streaming twin of events_kll_quantiles: an update-mode streaming
+    # aggregate over kll_sketch_agg_double keeps one KLL sketch per key
+    # as state (a few KB at ANY stream length — exact streaming
+    # percentiles would hold every value ever seen). Each micro-batch
+    # re-emits the touched keys' estimates; keep_last over the monotone
+    # n takes the final ones, validated against the same exact rank
+    # bands as the batch query (the band holds for any insertion order
+    # and any run of the randomized sketch). Oracle attached below
+    # (same SQL as the batch twin).
     from finlogic_spark.streaming import drain_stream_to_df, read_events_stream
     from finlogic_spark.streaming.stateful import kll_quantiles_stream
 
@@ -7027,15 +7037,7 @@ def stream_kll_quantiles(spark, sf_dir):
     est_w = keep_last(drained, ["event_type"], ["n"]).select(
         "event_type", "kll_p50", "kll_p99"
     )
-    e = _t(spark, sf_dir, "events")
-    v = F.col("value")
-    base = e.filter(v.isNotNull() & ~F.isnan(v)).select("event_type", "value")
-    hist = (
-        base.groupBy("event_type", "value")
-        .agg(F.count(F.lit(1)).alias("__c"))
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
-    )
-    return _kll_band_report(est_w, hist)
+    return _kll_band_report(est_w, _kll_hist(_kll_base(spark, sf_dir)))
 
 
 ORACLES["stream_kll_quantiles"] = ORACLES["events_kll_quantiles"]
@@ -7167,56 +7169,26 @@ def events_kll_rollup(spark, sf_dir):
     # The KLL rollup pipeline end-to-end (operators/sketch.py
     # kll_sketch_table -> kll_table_quantiles): ONE pass over the raw
     # events builds a per-(day, event_type) sketch table — the
-    # persistable daily artifact, one O(k log n/k) row per group — and
-    # the 30-day window's percentiles then come from merging the ~30
-    # sketch rows per event_type, KBs of input, ZERO raw rows
-    # re-scanned. This is the 100 TB percentile shape: store a sketch
-    # table per day partition; any window is a merge of stored rows.
-    # Validation: the merged estimates must land in the same exact
-    # rank bands as the batch/streaming twins (the KLL merge preserves
-    # the sketch's rank-error bound — that's what mergeability means),
-    # so the oracle is identical.
-    from pyspark.storagelevel import StorageLevel
-
+    # persistable daily artifact, one DataSketches binary per group —
+    # and the 30-day window's percentiles then come from merging the
+    # ~30 sketch rows per event_type (kll_merge_agg_double), KBs of
+    # input, ZERO raw rows re-scanned. This is the 100 TB percentile
+    # shape: store a sketch table per day partition; any window is a
+    # merge of stored rows. Validation: the merged estimates must land
+    # in the same exact rank bands as the batch/streaming twins (the
+    # KLL merge preserves the sketch's rank-error bound — that's what
+    # mergeability means), so the oracle is identical. The sketch
+    # reads the raw rows; the value histogram serves the band report
+    # only.
     from finlogic_spark.operators.sketch import (
         kll_sketch_table,
         kll_table_quantiles,
     )
 
-    e = _t(spark, sf_dir, "events")
-    v = F.col("value")
-    base = e.filter(v.isNotNull() & ~F.isnan(v)).select(
-        F.to_date("ts").alias("day"), "event_type", "value"
-    )
-    # ONE scan of the raw events: the per-(day, type) value-frequency
-    # histogram feeds BOTH the sketch build (weighted insert — same
-    # arithmetic as pre_compact) and, re-aggregated over days, the
-    # band-report's exact histogram. The previous formulation scanned
-    # and shuffled the 100M raw rows twice (pre_compact inside
-    # kll_sketch_table + a separate band hist): 7.0 s vs 3.8 s at
-    # sf100, 3.16x -> 1.7x vs the exact-percentile baseline
-    # (BENCH_r12_probes.json sf100:events_kll_rollup).
-    h_day = (
-        base.groupBy("day", "event_type", "value")
-        .agg(F.count(F.lit(1)).alias("__c"))
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
-    )
-    daily = kll_sketch_table(
-        h_day, ["day", "event_type"], "value", weight_col="__c"
-    )
-    est = kll_table_quantiles(
-        daily.drop("day"), ["event_type"], [0.5, 0.99]
-    )
-    est_w = est.groupBy("event_type").agg(
-        F.max(F.when(F.col("prob") == 0.5, F.col("value"))).alias("kll_p50"),
-        F.max(F.when(F.col("prob") == 0.99, F.col("value"))).alias("kll_p99"),
-    )
-    hist = (
-        h_day.groupBy("event_type", "value")
-        .agg(F.sum("__c").alias("__c"))
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
-    )
-    return _kll_band_report(est_w, hist)
+    base = _kll_base(spark, sf_dir, F.to_date("ts").alias("day"))
+    daily = kll_sketch_table(base, ["day", "event_type"], "value")
+    est = kll_table_quantiles(daily.drop("day"), ["event_type"], [0.5, 0.99])
+    return _kll_band_report(_kll_wide(est), _kll_hist(base.drop("day")))
 
 
 ORACLES["events_kll_rollup"] = ORACLES["events_kll_quantiles"]
@@ -7372,7 +7344,7 @@ def events_hll_rollup(spark, sf_dir):
 )
 def stream_hll_distinct(spark, sf_dir):
     # Streaming twin of events_hll_rollup: per-event_type distinct
-    # users with HLL registers as keyed streaming state
+    # users from an update-mode streaming hll_sketch_agg
     # (streaming/stateful.py hll_distinct_stream) — 8 KiB of state per
     # key at ANY stream length, where exact streaming distinct holds
     # every id ever seen. HLL state is a per-register max (commutative,
@@ -7537,33 +7509,26 @@ def events_kll_bucketize(spark, sf_dir):
     # alternative (ntile over a global sort) is a full-data
     # range-exchange + sort; at 100 TB that is the difference between
     # a feature-bucketizer you can run per training batch and one you
-    # can't. Validation: per-bucket populations against the rank band
-    # (the value-frequency histogram feeds both the weighted sketch
-    # and the band counts — one data-sized pass, the
-    # events_kll_quantiles trick).
-    from pyspark.storagelevel import StorageLevel
-
+    # can't. Validation: per-bucket populations against the rank band;
+    # the value-frequency histogram gives each group's n and its
+    # largest value mass for the degeneracy exemption below.
     from finlogic_spark.operators.sketch import kll_bucketize
 
-    e = _t(spark, sf_dir, "events")
-    v = F.col("value")
-    base = e.filter(v.isNotNull() & ~F.isnan(v)).select("event_type", "value")
-    hist = (
-        base.groupBy("event_type", "value")
-        .agg(F.count(F.lit(1)).alias("__c"))
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
+    base = _kll_base(spark, sf_dir)
+    bucketed = kll_bucketize(base, ["event_type"], "value", num_buckets=4)
+    nb = bucketed.groupBy("event_type", "bucket").agg(
+        F.count(F.lit(1)).alias("__nb")
     )
-    bucketed = kll_bucketize(
-        hist, ["event_type"], "value", num_buckets=4, weight_col="__c"
-    )
-    nb = bucketed.groupBy("event_type", "bucket").agg(F.sum("__c").alias("__nb"))
     # full grid + degeneracy exemption (see oracle comment): a group
     # where one value holds > n/4 of the mass cannot be equi-depth
     # split by any boundaries, so the band yields to that exact flag;
     # empty buckets surface as 0-count grid rows instead of missing
     # rows, keeping presence an identity check.
-    tot = hist.groupBy("event_type").agg(
-        F.sum("__c").alias("__n"), F.max("__c").alias("__maxc")
+    tot = (
+        base.groupBy("event_type", "value")
+        .agg(F.count(F.lit(1)).alias("__c"))
+        .groupBy("event_type")
+        .agg(F.sum("__c").alias("__n"), F.max("__c").alias("__maxc"))
     )
     grid = tot.crossJoin(
         spark.range(4).select(F.col("id").cast("int").alias("bucket"))
@@ -7664,11 +7629,12 @@ def events_hll_window(spark, sf_dir):
 @q(
     "events_kmv_overlap",
     """
-    -- Property-style oracle (the sketch-band pattern): KMV
-    -- intersection ESTIMATES are sketch-specific, but below k distinct
-    -- values the sketch holds every hash and the estimate is exact —
-    -- both gate scales sit in that regime (<=1500 users vs k=4096), so
-    -- est_ok is a strict check here; super-k error is pinned in
+    -- Property-style oracle (the sketch-band pattern): Theta
+    -- intersection ESTIMATES are sketch-specific, but a sketch of at
+    -- most 2^lgNomEntries distinct values holds every hash and the
+    -- estimate is exact — both gate scales sit in that regime (<=1500
+    -- users vs 4096 nominal entries), so est_ok is a strict check
+    -- here; super-nominal error is pinned in
     -- tests/test_distinct_sketch.py. Exact overlaps compare directly.
     WITH u AS (SELECT DISTINCT event_type, user_id FROM events
                WHERE user_id IS NOT NULL)
@@ -7682,26 +7648,27 @@ def events_hll_window(spark, sf_dir):
 )
 def events_kmv_overlap(spark, sf_dir):
     # Distinct-set INTERSECTION estimates — the set operation HLL
-    # cannot express (operators/distinct_sketch.py KMV): audience
-    # overlap between every pair of event types from one KMV sketch
-    # row per type. Build: map-side partial k-min sketches, a
-    # sketch-only shuffle (<=k longs per partial), reduce-side merge;
-    # pair stage: a broadcast cross-join of the 5 sketch rows + the
-    # rho estimator over the exact k-min union — |groups|^2 pairs of
-    # k longs, never the raw sets (the exact alternative self-joins
-    # the distinct (type,user) table, quadratic in type overlap at
-    # 100 TB). Validation: exact overlap via that self-join (gate
-    # scale only) + the band flag.
+    # cannot express (operators/distinct_sketch.py Theta sketches):
+    # audience overlap between every pair of event types from one
+    # Theta sketch row per type. Build: theta_sketch_agg with map-side
+    # partials and a sketch-only shuffle; pair stage: a broadcast
+    # self-join of the 5 sketch rows + theta_intersection per pair —
+    # |groups|^2 pairs of sketches, never the raw sets (the exact
+    # alternative self-joins the distinct (type,user) table, quadratic
+    # in type overlap at 100 TB). Validation: exact overlap via that
+    # self-join (gate scale only) + the band flag. The query keeps its
+    # KMV-era name so bench history stays comparable.
     from finlogic_spark.operators.distinct_sketch import (
-        kmv_pair_overlap,
-        kmv_sketch_table,
+        theta_pair_overlap,
+        theta_sketch_table,
     )
 
     e = _t(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
-    sk = kmv_sketch_table(
-        e.select("event_type", "user_id"), ["event_type"], "user_id", k=4096
+    sk = theta_sketch_table(
+        e.select("event_type", "user_id"), ["event_type"], "user_id",
+        lg_nom_entries=12,
     )
-    est = kmv_pair_overlap(sk, "event_type", out_col="approx_overlap")
+    est = theta_pair_overlap(sk, "event_type", out_col="approx_overlap")
     # r16: BOTH sides of the exact self-join consume this distinct —
     # without a barrier the scan+distinct exchange ran twice (probe
     # sketch_exact_subtrees: barrier better in all 3 alternations; the
@@ -8053,6 +8020,27 @@ def _bpe_shingle_oracle_sql(sf_dir: str) -> str:
 LAZY_ORACLES["doc_bpe_shingle_pairs"] = _bpe_shingle_oracle_sql
 
 
+def _piece_minhash(p):
+    """(doc_id, m0..m3) MinHash signature over 3-piece shingles of a
+    (doc_id, pieces) frame, row-locally as text_dedup.minhash_signature
+    does: the distinct shingle array is bound once and each m_i is an
+    array_min of seeded md5s — a narrow map, no shuffle. A row with no
+    non-null shingle (null pieces) is dropped: its signature would be
+    all-null, and all-null signatures share one LSH bucket."""
+    from finlogic_spark.functions.text import bind
+    from finlogic_spark.operators.text_dedup import array_shingles, minhash_value
+
+    sig = bind(
+        F.array_distinct(array_shingles(F.col("pieces"), 3)),
+        lambda sh: F.struct(*[minhash_value(sh, i).alias(f"m{i}") for i in range(4)]),
+    )
+    return (
+        p.select("doc_id", sig.alias("__sig"))
+        .filter(F.col("__sig.m0").isNotNull())
+        .select("doc_id", "__sig.*")
+    )
+
+
 @q("doc_bpe_shingle_pairs")  # data-dependent oracle: see LAZY_ORACLES.
 def doc_bpe_shingle_pairs(spark, sf_dir):
     # Near-dup candidates on BPE-PIECE shingles — the third leg of the
@@ -8061,37 +8049,20 @@ def doc_bpe_shingle_pairs(spark, sf_dir):
     # the same banded-LSH shape (4 hashes, 2 bands of 2, never
     # all-pairs) reaches duplicates the word-shingle path scores
     # apart. Pieces come Arrow-batched from bpe_pieces; shingling,
-    # seeded-md5 minhashing (explode + map-side min partials, one
-    # exchange row per doc), banding, and the pair expansion are all
-    # JVM-side — bit-reproducible in any engine with md5, hence the
-    # exact-SQL oracle. Banding explodes ONE array of (band, hash)
-    # structs and pairs expand bucket-side via bucket_pairs (the
-    # minhash_lsh_pairs shape): the union-of-selects + bucket
-    # self-join form evaluated the sig pipeline 4x (2 union branches
-    # x 2 join sides — Spark shares no subplans across branches).
+    # seeded-md5 minhashing (_piece_minhash: a narrow map, no
+    # exchange), banding, and the pair expansion are all JVM-side —
+    # bit-reproducible in any engine with md5, hence the exact-SQL
+    # oracle. Banding explodes ONE array of (band, hash) structs and
+    # pairs expand bucket-side via bucket_pairs (the minhash_lsh_pairs
+    # shape): the union-of-selects + bucket self-join form evaluated
+    # the sig pipeline 4x (2 union branches x 2 join sides — Spark
+    # shares no subplans across branches).
     from finlogic_spark.operators.bpe import bpe_pieces
-    from finlogic_spark.operators.text_dedup import (
-        array_shingles,
-        bucket_pairs,
-    )
+    from finlogic_spark.operators.text_dedup import bucket_pairs
 
     d = _t(spark, sf_dir, "documents")
     m, lk = _bpe_index_store(spark, sf_dir)
-    p = bpe_pieces(d, m, pieces_lookup=lk)
-    sh = p.select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(array_shingles(F.col("pieces"), 3))
-        ).alias("__sh"),
-    )
-    sig = sh.groupBy("doc_id").agg(
-        *[
-            F.min(
-                F.md5(F.concat(F.lit(f"{i}|"), F.col("__sh")))
-            ).alias(f"m{i}")
-            for i in range(4)
-        ]
-    )
+    sig = _piece_minhash(bpe_pieces(d, m, pieces_lookup=lk))
     buckets = sig.select(
         "doc_id",
         F.explode(

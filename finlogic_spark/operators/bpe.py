@@ -43,6 +43,8 @@ from collections.abc import Iterable, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from finlogic_spark.session import local_frame
+
 __all__ = [
     "append_bpe_index",
     "bpe_doc_stats",
@@ -343,7 +345,8 @@ def build_bpe_index(
     merges = learn_bpe_merges(wc, num_merges)
     from finlogic_spark.functions.text import tokens
 
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(i, a, b) for i, (a, b) in enumerate(merges)],
         "rank int, left string, right string",
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/merges")
@@ -356,7 +359,8 @@ def build_bpe_index(
     _encode_words_df(words, merges).write.mode("overwrite").parquet(
         f"{path}/word_pieces"
     )
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(BPE_INDEX_VERSION, num_merges, top_words)],
         "version int, num_merges int, top_words int",
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/_stats")
@@ -371,8 +375,8 @@ def read_bpe_index(
     """-> (merges list ordered by rank, word_pieces DataFrame). The
     merge table is bounded (num_merges rows) by construction — a
     driver read, like every consumer of the model. Raises on a stats
-    version mismatch (the KMV __hash lesson: silent format drift makes
-    silently-wrong encodings). Pass ``expected_num_merges`` /
+    version mismatch (silent format drift makes silently-wrong
+    encodings). Pass ``expected_num_merges`` /
     ``expected_top_words`` to ALSO refuse an index built under other
     training parameters (ADVICE r14: a scratch root surviving a
     parameter change would otherwise silently serve the stale model —

@@ -1,5 +1,5 @@
-"""Persistable distinct-count (HLL) sketch tables + a pure-Python HLL
-for streaming state.
+"""Persistable distinct-count (HLL) and set-operation (Theta) sketch
+tables on Spark's built-in DataSketches aggregates.
 
 The 100 TB distinct-count shape (sibling of operators/sketch.py's KLL
 quantile tables): store ONE sketch row per (partition key, group) —
@@ -9,40 +9,29 @@ Reference parity: the reference's n_unique (SURVEY §2.4 A4) done the
 only way that works when the raw data is 100 TB and the question is
 "distinct users this month" asked daily.
 
-Batch path is Spark-first: the native Datasketches HLL aggregates
-(``hll_sketch_agg`` / ``hll_union_agg`` / ``hll_sketch_estimate``) —
-JVM-side, map-side-combining partial aggregation, binary-mergeable,
-and the sketch binary round-trips through parquet unchanged (pinned in
-tests/test_distinct_sketch.py).
-
-The streaming path can't use the JVM sketches (keyed state lives in
-Python under ``applyInPandasWithState``), so :class:`PyHLL` is a
-minimal classic HyperLogLog (Flajolet et al. 2007, with the standard
-small-range linear-counting correction): dense uint8 registers, a
-splitmix64 hash, vectorized inserts. Unlike the KLL sketch, HLL state
-is a per-register MAX — insertion-order independent — so the streaming
-estimate is EXACTLY the batch estimate over the same rows, not merely
-band-equivalent; micro-batch boundaries cannot move it.
+Every operator here is a JVM aggregate with map-side partials
+(``hll_sketch_agg`` / ``hll_union_agg`` / ``hll_sketch_estimate`` for
+counts, ``theta_sketch_agg`` / ``theta_intersection`` /
+``theta_sketch_estimate`` for overlaps); the sketch binaries round-trip
+through parquet unchanged, and no plan holds a Python worker. The
+streaming twin (streaming/stateful.py ``hll_distinct_stream``) runs the
+same ``hll_sketch_agg`` as a streaming aggregate, so its final estimate
+equals the batch table's over the same rows.
 """
 
 from __future__ import annotations
 
-import math
 from collections.abc import Sequence
 
-import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 __all__ = [
-    "KMV",
-    "PyHLL",
     "hll_sketch_table",
     "hll_table_estimate",
     "hll_window_estimate",
-    "kmv_pair_overlap",
-    "kmv_sketch_table",
-    "xxhash64_long",
+    "theta_pair_overlap",
+    "theta_sketch_table",
 ]
 
 
@@ -79,108 +68,6 @@ def hll_table_estimate(
     )
 
 
-# ---------------------------------------------------------------------------
-# Pure-Python HLL for streaming keyed state
-# ---------------------------------------------------------------------------
-
-_SPLITMIX_GAMMA = np.uint64(0x9E3779B97F4A7C15)
-_SPLITMIX_M1 = np.uint64(0xBF58476D1CE4E5B9)
-_SPLITMIX_M2 = np.uint64(0x94D049BB133111EB)
-
-
-def _mix64(x: np.ndarray) -> np.ndarray:
-    """splitmix64 finalizer: a full-avalanche 64-bit mix, vectorized
-    over a uint64 array. Deterministic across runs/partitions (no RNG,
-    no Python hash seed)."""
-    with np.errstate(over="ignore"):
-        z = x.astype(np.uint64) + _SPLITMIX_GAMMA
-        z = (z ^ (z >> np.uint64(30))) * _SPLITMIX_M1
-        z = (z ^ (z >> np.uint64(27))) * _SPLITMIX_M2
-        return z ^ (z >> np.uint64(31))
-
-
-def _clz64(w: np.ndarray) -> np.ndarray:
-    """Exact leading-zero count of uint64 values (binary-search shifts,
-    fully vectorized — no float log2, whose rounding misplaces the top
-    bit near powers of two). w == 0 maps to 64."""
-    zero = w == 0
-    n = np.zeros(w.shape, dtype=np.int64)
-    x = w.copy()
-    for shift in (32, 16, 8, 4, 2, 1):
-        mask = x < (np.uint64(1) << np.uint64(64 - shift))
-        n[mask] += shift
-        x[mask] <<= np.uint64(shift)
-    n[zero] = 64
-    return n
-
-
-class PyHLL:
-    """Classic dense HyperLogLog over 64-bit-hashed int64 keys.
-
-    State is ``m = 2^lgk`` uint8 registers (8 KiB at the default
-    lgk=13) — bounded per streaming key at ANY stream length, where an
-    exact streaming distinct would hold every id ever seen. Register
-    updates are max(), so the structure is a commutative idempotent
-    monoid: merge order, insert order, and micro-batch boundaries are
-    all invisible in the estimate.
-
-    Standard error 1.04/√m ≈ 1.15% at lgk=13; the registry band check
-    asserts 6% (≈5σ) against the exact count. Small cardinalities use
-    the linear-counting correction (E ≤ 2.5m with empty registers), so
-    gate-scale groups (10²–10³ distinct) are near-exact.
-    """
-
-    __slots__ = ("lgk", "regs")
-
-    def __init__(self, lgk: int = 13, regs: np.ndarray | None = None):
-        self.lgk = lgk
-        m = 1 << lgk
-        if regs is None:
-            regs = np.zeros(m, dtype=np.uint8)
-        else:
-            regs = np.asarray(regs, dtype=np.uint8)
-            if regs.shape != (m,):
-                raise ValueError(
-                    f"register blob has {regs.size} bytes, lgk={lgk} needs {m}"
-                )
-        self.regs = regs
-
-    def add_ints(self, values: np.ndarray) -> None:
-        """Fold int64 keys in (vectorized). NaN-free by construction —
-        callers pass integer id columns; nulls are filtered upstream."""
-        if values.size == 0:
-            return
-        h = _mix64(values.astype(np.int64).view(np.uint64))
-        lgk = np.uint64(self.lgk)
-        idx = (h >> (np.uint64(64) - lgk)).astype(np.int64)
-        w = h << lgk  # remaining 64-lgk bits, left-aligned
-        rho = (_clz64(w) + 1).clip(max=64 - self.lgk + 1).astype(np.uint8)
-        np.maximum.at(self.regs, idx, rho)
-
-    def merge(self, other: "PyHLL") -> "PyHLL":
-        if other.lgk != self.lgk:
-            raise ValueError("cannot merge HLLs with different lgk")
-        np.maximum(self.regs, other.regs, out=self.regs)
-        return self
-
-    def estimate(self) -> float:
-        m = float(self.regs.size)
-        alpha = 0.7213 / (1.0 + 1.079 / m)
-        est = alpha * m * m / float(np.sum(np.exp2(-self.regs.astype(np.float64))))
-        if est <= 2.5 * m:
-            zeros = int(np.count_nonzero(self.regs == 0))
-            if zeros:
-                return m * math.log(m / zeros)
-        return est
-
-    def to_bytes(self) -> bytes:
-        return self.regs.tobytes()
-
-    @classmethod
-    def from_bytes(cls, lgk: int, blob: bytes) -> "PyHLL":
-        return cls(lgk, np.frombuffer(blob, dtype=np.uint8).copy())
-
-
 def hll_window_estimate(
     sketch_df: DataFrame,
     key_cols: Sequence[str],
@@ -215,312 +102,69 @@ def hll_window_estimate(
     )
 
 
-# ---------------------------------------------------------------------------
-# KMV (k-minimum-values) sketch: the set-operation estimator
-# ---------------------------------------------------------------------------
-
-# XXH64 primes (public algorithm, Yann Collet; same constants Spark's
-# catalyst XxHash64 uses).
-_XXP1 = np.uint64(0x9E3779B185EBCA87)
-_XXP2 = np.uint64(0xC2B2AE3D27D4EB4F)
-_XXP3 = np.uint64(0x165667B19E3779F9)
-_XXP4 = np.uint64(0x85EBCA77C2B2AE63)
-_XXP5 = np.uint64(0x27D4EB2F165667C5)
-
-
-def _rotl64(x: np.ndarray, r: int) -> np.ndarray:
-    r = np.uint64(r)
-    return (x << r) | (x >> (np.uint64(64) - r))
-
-
-def xxhash64_long(values: np.ndarray, seed: int = 42) -> np.ndarray:
-    """Vectorized XXH64 of int64 values, BIT-IDENTICAL to Spark's
-    ``xxhash64(bigint)`` (seed 42, single 8-byte block; parity pinned
-    in tests/test_distinct_sketch.py). Returns the raw uint64 digests.
-    Shared hash between the JVM sketch build (kmv_sketch_table) and
-    the Python :class:`KMV` — sketches from either path merge and
-    compare exactly."""
-    with np.errstate(over="ignore"):
-        v = np.asarray(values, dtype=np.int64).view(np.uint64)
-        h = np.uint64(seed) + _XXP5 + np.uint64(8)
-        h = h ^ (_rotl64(v * _XXP2, 31) * _XXP1)
-        h = _rotl64(h, 27) * _XXP1 + _XXP4
-        h ^= h >> np.uint64(33)
-        h *= _XXP2
-        h ^= h >> np.uint64(29)
-        h *= _XXP3
-        h ^= h >> np.uint64(32)
-        return h
-
-
-# Wire-format identity of persisted KMV sketches: the hash family and
-# seed the longs were produced with. The r13 change from splitmix64 to
-# Spark-parity xxhash64 was a SILENT break for any sketch table
-# persisted before it (old blobs decode without error and merge into
-# garbage estimates), so the format now carries this tag in a __hash
-# column and every decode path refuses a mismatch.
-KMV_WIRE_TAG = "xxhash64:42"
-
-
-class KMV:
-    """K-minimum-values sketch [Bar-Yossef et al. 2002; Beyer et al.
-    SIGMOD'07]: keep the k smallest 64-bit hash values of a set. What
-    HLL cannot do, KMV can: INTERSECTION estimates — the union sketch
-    of A and B is exact-by-construction (k smallest of the merged
-    hash sets), and the fraction rho of its values present in both
-    sides estimates |A∩B| = rho * D̂(A∪B). Relative error ~1/sqrt(k)
-    on the union; the naive HLL alternative (inclusion-exclusion
-    |A|+|B|-|A∪B|) degrades without bound as the intersection shrinks
-    relative to the union.
-
-    Mergeable (k-min of concatenation, associative+commutative+
-    idempotent like HLL), so the same partial/shuffle shape as the
-    other sketch tables applies. Below k distinct values the sketch
-    holds EVERY hash and all estimates are exact — the gate-scale
-    regime; the error band at super-k cardinalities is pinned in
-    tests/test_distinct_sketch.py.
-
-    Hashes are Spark-parity xxhash64 of the int64 key (seed 42, the
-    same digest ``F.xxhash64(bigint)`` emits), kept order-isomorphic
-    in int64 via the sign-flip shift (h XOR 2^63) so they ride Spark
-    array<long> columns. Because unsigned order on h equals SIGNED
-    order on the raw xxhash64 long, the wire longs are exactly the
-    raw JVM digests sorted ascending — which is what lets
-    :func:`kmv_sketch_table` build the whole sketch JVM-side with
-    ``slice(array_sort(...), 1, k)`` and stay mergeable with
-    Python-built sketches."""
-
-    __slots__ = ("k", "hashes")
-
-    def __init__(self, k: int = 1024, hashes: np.ndarray | None = None):
-        if k < 16:
-            raise ValueError(f"k must be >= 16, got {k}")
-        self.k = k
-        self.hashes = (
-            np.empty(0, dtype=np.uint64)
-            if hashes is None
-            else np.asarray(hashes, dtype=np.uint64)
-        )
-
-    def add_ints(self, values: np.ndarray) -> None:
-        if values.size == 0:
-            return
-        h = xxhash64_long(values) ^ self._SHIFT
-        merged = np.unique(np.concatenate([self.hashes, h]))
-        self.hashes = merged[: self.k]
-
-    def merge(self, other: "KMV") -> "KMV":
-        if other.k != self.k:
-            raise ValueError("cannot merge KMVs with different k")
-        merged = np.unique(np.concatenate([self.hashes, other.hashes]))
-        self.hashes = merged[: self.k]
-        return self
-
-    def distinct_estimate(self) -> float:
-        n = self.hashes.size
-        if n < self.k:  # holds every hash — exact
-            return float(n)
-        kth = float(self.hashes[-1]) / float(2**64)
-        return (self.k - 1) / kth
-
-    @staticmethod
-    def intersection_estimate(a: "KMV", b: "KMV") -> float:
-        """rho-fraction estimator over the exact k-min union sketch."""
-        if a.k != b.k:
-            raise ValueError("sketches must share k")
-        union = np.unique(np.concatenate([a.hashes, b.hashes]))[: a.k]
-        if union.size == 0:
-            return 0.0
-        both = np.intersect1d(union, a.hashes, assume_unique=True)
-        both = np.intersect1d(both, b.hashes, assume_unique=True)
-        u = KMV(a.k, union)
-        return (both.size / union.size) * u.distinct_estimate()
-
-    # ---- wire format (array<long> via order-preserving sign shift) ----
-
-    _SHIFT = np.uint64(1 << 63)
-
-    def to_longs(self) -> list[int]:
-        return (self.hashes ^ self._SHIFT).view(np.int64).tolist()
-
-    @classmethod
-    def from_longs(cls, k: int, longs, wire_tag: str = KMV_WIRE_TAG) -> "KMV":
-        if wire_tag != KMV_WIRE_TAG:
-            raise ValueError(
-                f"KMV wire tag mismatch: blob carries {wire_tag!r}, this "
-                f"build decodes {KMV_WIRE_TAG!r} — sketches hashed with a "
-                "different function merge into silent garbage; rebuild the "
-                "stored sketch table"
-            )
-        arr = np.asarray(longs, dtype=np.int64).view(np.uint64) ^ cls._SHIFT
-        if arr.size > k:
-            raise ValueError(
-                f"wire format holds {arr.size} hashes > k={k} — the blob "
-                "was built with a larger k"
-            )
-        return cls(k, np.sort(arr))
-
-
-def kmv_sketch_table(
+def theta_sketch_table(
     df: DataFrame,
     key_cols: Sequence[str],
     value_col: str,
-    k: int = 1024,
+    lg_nom_entries: int = 12,
 ) -> DataFrame:
-    """ONE KMV row per group: (keys..., __kmv array<long>) — the
-    persistable artifact for distinct AND set-operation estimates.
+    """ONE DataSketches Theta sketch per group: (keys..., __theta
+    binary) — the persistable artifact for distinct AND set-operation
+    estimates. What HLL cannot do, Theta can: INTERSECTION estimates
+    (:func:`theta_pair_overlap`), where the HLL alternative
+    (inclusion-exclusion |A|+|B|-|A∪B|) degrades without bound as the
+    intersection shrinks relative to the union.
 
-    ENTIRELY JVM-side (no Arrow/Python boundary in the build — the
-    r12 Python heap-merge over shipped distinct pairs was 3.3x an
-    exact DuckDB baseline at sf100; this build measures 6.5 s vs that
-    4.2 s exact baseline, 1.5x, BENCH_r13_probes.json). Wire parity:
-    the k smallest sketch hashes under unsigned order are the k
-    smallest raw ``xxhash64`` longs under SIGNED order (sign-flip
-    isomorphism, see :class:`KMV`), so plain ``array_sort`` + ``slice``
-    over the signed digests produces the exact wire format
-    :meth:`KMV.from_longs` reads. Three stages, all codegen-friendly:
-
-    1. hash + ``distinct()`` over (keys, digest): the one data-sized
-       exchange, and it ships the MAP-SIDE-DEDUPED hash set — the
-       minimum any exact-start one-pass distinct estimator pays.
-       (Measured against the alternative that skips the distinct and
-       collect_set's per (group, source-partition): that ships the
-       same dedup volume but as per-group array blobs through the
-       non-codegen ObjectHashAggregate and sorts multi-million-element
-       arrays — 13.7 s vs 6.5 s at sf100.)
-    2. per-(group, post-shuffle-partition) k-min:
-       ``slice(array_sort(collect_list(...)), 1, k)`` — each group's
-       rows are partition-local, lists are partition-sized, and stage
-       3's input is ≤ k longs per (group, partition), so no group's
-       full distinct set ever concentrates on one reducer.
-    3. k-min of the k-mins: flatten + array_distinct + sort + slice —
-       ≤ k·n_partitions longs per group, KBs.
-
-    Null semantics match the JVM groupBy of hll_sketch_table: null
-    KEYS form their own group; null VALUES are dropped (they carry no
-    identity to count). The table carries ``__k`` so consumers bind to
-    the build-time parameter instead of guessing it, and ``__hash``
-    (:data:`KMV_WIRE_TAG`) so a stored table hashed under a different
-    function/seed is refused at decode instead of silently merging
-    into garbage. The value column must be INTEGRAL (byte/short/int/
-    long): it is cast to bigint before hashing because ``xxhash64`` is
-    type-sensitive and the Python twin hashes int64 — but a
-    non-integral column (e.g. string ids) would cast to NULL, and
-    xxhash64(NULL) returns the seed, collapsing every such value onto
-    ONE distinct hash. Raise loudly instead (the same dtype guard as
-    bloom_pruned_join)."""
-    keys = list(key_cols)
-    vtype = dict(df.dtypes)[value_col]
-    if vtype not in ("tinyint", "smallint", "int", "bigint"):
-        raise TypeError(
-            f"kmv_sketch_table value column {value_col!r} is {vtype}, not "
-            "an integral type — a failed cast to bigint becomes NULL and "
-            "xxhash64(NULL) is the seed, so all such values would collapse "
-            "to one distinct hash; hash-map the column to integers first"
-        )
-    hashed = (
-        df.filter(F.col(value_col).isNotNull())
-        .select(
-            *keys,
-            F.xxhash64(F.col(value_col).cast("long")).alias("__h"),
-        )
-        .distinct()
-        .withColumn("__pid", F.spark_partition_id())
-    )
-    partials = hashed.groupBy(*keys, "__pid").agg(
-        F.slice(F.array_sort(F.collect_list("__h")), 1, k).alias("__part")
-    )
-    return (
-        partials.groupBy(*keys)
-        .agg(
-            F.slice(
-                F.array_sort(
-                    F.array_distinct(F.flatten(F.collect_list("__part")))
-                ),
-                1,
-                k,
-            ).alias("__kmv")
-        )
-        .select(
-            *keys,
-            F.lit(k).alias("__k"),
-            F.lit(KMV_WIRE_TAG).alias("__hash"),
-            "__kmv",
-        )
+    One hash aggregate with map-side partial sketches; each partial is
+    at most ~2^(lg_nom_entries+1) hashes, never the raw set. A group
+    with at most 2^lg_nom_entries distinct values keeps every hash, so
+    its distinct count and its intersections with other such groups
+    are EXACT; above that the relative error is ~1/sqrt(2^lg) on the
+    union, scaled by |A∪B|/|A∩B| for an intersection. Null values are
+    dropped; null keys form their own group. Integral, string and
+    binary values all hash natively (int and bigint of the same number
+    hash alike), so the value column needs no cast."""
+    return df.groupBy(*key_cols).agg(
+        F.theta_sketch_agg(value_col, lg_nom_entries).alias("__theta")
     )
 
 
-def kmv_pair_overlap(
+def theta_pair_overlap(
     sketch_df: DataFrame,
     key_col: str,
     out_col: str = "approx_overlap",
 ) -> DataFrame:
     """Pairwise distinct-intersection estimates between every two
-    groups of a KMV sketch table: cross-join the (tiny) sketch rows on
-    key_a < key_b and run the rho estimator per pair — |groups|² pairs
-    of k-long arrays, never the raw sets. ``k`` is read from the
-    table's own ``__k`` column (set at build time), so a stored table
-    can never be misread with a different k — a too-large k would
-    silently flip under-full sketches into the 'exact' branch.
+    groups of a Theta sketch table: a broadcast self-join of the (tiny)
+    sketch rows on key_a < key_b, then ``theta_intersection`` per pair
+    — |groups|² pairs of sketches, never the raw sets. DataSketches
+    checks the seed hash stored in every sketch, so rows hashed under a
+    different seed fail loudly instead of estimating garbage.
 
-    Refuses tables without a ``__hash`` wire tag (persisted before the
-    splitmix64→xxhash64 break) and, per row, tags that differ from
-    :data:`KMV_WIRE_TAG` — mixed-hash sketch rows estimate garbage
-    without erroring otherwise."""
-    if "__hash" not in sketch_df.columns:
+    Tables written in the retired KMV format (an ``__kmv`` array<long>
+    column) are refused with a ``ValueError``: they cannot be read as
+    Theta sketches."""
+    cols = sketch_df.columns
+    if "__theta" not in cols:
+        got = (
+            "the retired KMV format (__kmv xxhash64 longs)"
+            if "__kmv" in cols
+            else f"columns {cols}"
+        )
         raise ValueError(
-            "KMV sketch table has no __hash wire tag — it was persisted "
-            "before the splitmix64→xxhash64 format change and would decode "
-            "into silently wrong estimates under the current hash; rebuild "
-            "it with kmv_sketch_table"
+            "theta_pair_overlap needs a __theta DataSketches column, "
+            f"got {got}; rebuild the table with theta_sketch_table"
         )
     a = sketch_df.select(
-        F.col(key_col).alias("key_a"),
-        F.col("__k").alias("__k_a"),
-        F.col("__hash").alias("__hash_a"),
-        F.col("__kmv").alias("__kmv_a"),
+        F.col(key_col).alias("key_a"), F.col("__theta").alias("__theta_a")
     )
     b = sketch_df.select(
-        F.col(key_col).alias("key_b"),
-        F.col("__k").alias("__k_b"),
-        F.col("__hash").alias("__hash_b"),
-        F.col("__kmv").alias("__kmv_b"),
+        F.col(key_col).alias("key_b"), F.col("__theta").alias("__theta_b")
     )
-    pairs = a.join(F.broadcast(b), F.col("key_a") < F.col("key_b"))
-
-    def est(batches):
-        import pandas as pd
-
-        # cache decoded sketches per key: with G groups the batch holds
-        # ~G^2/2 pairs but only G distinct sketches — decoding per PAIR
-        # made the estimator the bottleneck at G=256 (32k pairs)
-        cache: dict = {}
-
-        def decode(key, k, tag, longs):
-            s = cache.get(key)
-            if s is None:
-                s = KMV.from_longs(k, longs, wire_tag=tag)
-                cache[key] = s
-            return s
-
-        for pdf in batches:
-            outs = []
-            for key_a, k_a, ha, la, key_b, k_b, hb, lb in zip(
-                pdf["key_a"], pdf["__k_a"], pdf["__hash_a"], pdf["__kmv_a"],
-                pdf["key_b"], pdf["__k_b"], pdf["__hash_b"], pdf["__kmv_b"],
-            ):
-                if k_a != k_b:
-                    raise ValueError(
-                        f"sketch rows built with different k: {k_a} vs {k_b}"
-                    )
-                ka = decode(key_a, int(k_a), ha, la)
-                kb = decode(key_b, int(k_b), hb, lb)
-                outs.append(
-                    (key_a, key_b, KMV.intersection_estimate(ka, kb))
-                )
-            yield pd.DataFrame(outs, columns=["key_a", "key_b", out_col])
-
-    kt = sketch_df.schema[key_col].dataType.simpleString()
-    return pairs.mapInPandas(
-        est, schema=f"key_a {kt}, key_b {kt}, {out_col} double"
+    return a.join(F.broadcast(b), F.col("key_a") < F.col("key_b")).select(
+        "key_a",
+        "key_b",
+        F.theta_sketch_estimate(F.theta_intersection("__theta_a", "__theta_b"))
+        .cast("double")
+        .alias(out_col),
     )

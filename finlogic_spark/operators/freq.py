@@ -153,9 +153,8 @@ class MisraGries:
     screen guarantee the streaming twin (stream_heavy_tokens) relies
     on with k = ceil(2/phi).
 
-    Wire format mirrors the KLL sketch's to_parts/from_parts so it can
-    ride an applyInPandasWithState state row (arrays of items and
-    counters)."""
+    ``to_parts``/``from_parts`` give the wire format (arrays of items
+    and counters) that rides an applyInPandasWithState state row."""
 
     __slots__ = ("k", "n", "counts")
 

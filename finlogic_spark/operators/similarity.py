@@ -332,8 +332,8 @@ def build_lsh_index_table(
         .mode("overwrite")
         .parquet(path)
     )
-    spark.createDataFrame(
-        [(dim, num_planes, num_tables)], _LSH_STATS
+    local_frame(
+        spark, [(dim, num_planes, num_tables)], _LSH_STATS
     ).write.mode("overwrite").parquet(os.path.join(path, "_stats"))
     return read_lsh_index(spark, path)
 
@@ -445,8 +445,8 @@ def build_ivf_index_table(
         corpus.select(id_col, vec_col), list(cents), vec_col, "__cell"
     )
     cells.write.partitionBy("__cell").mode("overwrite").parquet(path)
-    spark.createDataFrame(
-        [(int(c), [float(x) for x in v]) for c, v in cents], _IVF_STATS
+    local_frame(
+        spark, [(int(c), [float(x) for x in v]) for c, v in cents], _IVF_STATS
     ).write.mode("overwrite").parquet(os.path.join(path, "_stats"))
     return read_ivf_index(spark, path)
 

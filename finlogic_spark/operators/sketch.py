@@ -1,44 +1,38 @@
-"""Mergeable per-group quantile sketch (KLL) as a first-class
-distributed aggregate — the missing primitive behind every percentile-
-shaped operator in this engine (winsorize bounds, MAD outliers,
-resample bands) once a single group no longer fits one pass of exact
-percentile state.
+"""Mergeable per-group quantile sketches (KLL) as persistable tables —
+the primitive behind every percentile-shaped operator in this engine
+(winsorize bounds, MAD outliers, resample bands) once a single group no
+longer fits one pass of exact percentile state.
 
 Algorithm: KLL (Karnin, Lang, Liberty — "Optimal Quantile
-Approximation in Streams", FOCS'16), the compactor-hierarchy sketch
-Apache DataSketches ships as its production quantile sketch. A sketch
-is a stack of levels; items at level l carry weight 2^l; when a level
-overflows its capacity (k·c^depth, c = 2/3, floor 2) it is sorted and
-every other item is promoted one level up. Size is O(k·log(n/k)) —
-a few KB for k=200 at any n — and two sketches MERGE by level-wise
-concatenation + the same compaction, which is what makes it a
-distributed aggregate rather than a percentile buffer:
+Approximation in Streams", FOCS'16), as Apache DataSketches ships it
+and Spark exposes it: ``kll_sketch_agg_double`` builds one sketch per
+group with map-side partial aggregation, ``kll_merge_agg_double``
+merges stored sketches, and ``kll_sketch_get_quantile_double`` reads
+an array of probs in one call. A k=200 sketch is a few KB of binary at
+any n, so the only exchange carries sketches, never rows:
 
-    map side:    one sketch per (input partition, group)   [mapInPandas]
-    shuffle:     sketches only — KBs per group, never rows
-    reduce side: merge sketches per group, read quantiles  [applyInPandas]
+    map side:    partial sketch per (task, group)    [HashAggregate]
+    shuffle:     sketches only — KBs per group
+    reduce side: merge, read quantiles              [HashAggregate]
 
-This mirrors exactly how Spark's own approx_percentile UDAF
-partial-aggregates, but with the sketch exposed as a value the caller
-can persist, ship, and merge across days/tables — the property a
-100 TB rollup pipeline needs (today's sketch + yesterday's sketch =
-the week's percentiles without re-reading either day).
+The sketch column (``__kll``, DataSketches binary) is the persistable
+artifact of the rollup pipeline: today's sketch table + yesterday's =
+the week's percentiles without re-reading either day. It round-trips
+through parquet unchanged, and everything runs in the JVM — no Python
+worker in the plan.
 
-Arrow batching note: this is one of the justified Pandas-UDF sites
-(like the k-means distance kernel) — the per-item compactor loop is
-imperative by nature; the DataFrame API has no mergeable-sketch
-aggregate to compose. The map side walks each Arrow batch as numpy
-arrays (bulk level-0 append + vectorized sorts), never per-row Python.
+Run-to-run contract: the DataSketches KLL compactor is randomized, so
+the same input can give a different (equally valid) estimate on every
+run. What holds is the rank band: the estimate's exact rank lies
+within eps·n of the requested rank (eps ≈ 1.33% at k=200,
+DataSketches' 99%-confidence single-rank bound; the registry asserts
+2%). A group with at most k values is never compacted, so its
+quantiles are exact (inclusive-rank convention: the smallest value
+whose rank reaches p·n).
 
-Determinism: compaction parity alternates per level instead of the
-paper's coin flip — the sketch is then a deterministic function of
-(partitioning, batch order), and the rank-error guarantee (ε ≈ 2.3/k
-at 99% confidence for the randomized variant; the deterministic
-parity behaves equivalently on non-adversarial data and is the
-DataSketches default test mode) is validated property-style in the
-registry oracle: the estimate must land inside the exact
-[p−ε̄, p+ε̄] rank band. Different partitionings may yield different
-(all valid) estimates — same contract as approx_percentile.
+Tables written in the earlier Python KLL format (``__k, __n, __items,
+__lvls, __par`` columns) are refused with a ``ValueError``; rebuild
+them from the raw rows.
 
 Reference parity note: the reference engine (crdcj/FinLogic) has no
 sketch operator; this is an engine-scope addition per SURVEY §2.10.
@@ -48,162 +42,46 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-_C = 2.0 / 3.0  # KLL level-capacity decay
+SKETCH_COL = "__kll"
 
 
-class KLL:
-    """Plain-python/numpy KLL compactor stack. Levels are numpy float64
-    arrays; ``levels[l]`` items carry weight 2**l. Not thread-safe; one
-    instance per (partition, group)."""
+def _probs(probs: Sequence[float]) -> Column:
+    return F.array(*[F.lit(float(p)) for p in probs])
 
-    __slots__ = ("k", "n", "levels", "parity")
 
-    def __init__(self, k: int = 200):
-        if k < 8:
-            raise ValueError("k < 8 gives useless error bounds")
-        self.k = k
-        self.n = 0
-        self.levels: list[np.ndarray] = [np.empty(0, dtype=np.float64)]
-        self.parity: list[bool] = [False]
+def kll_sketch_table(
+    df: DataFrame,
+    key_cols: Sequence[str],
+    value_col: str,
+    k: int = 200,
+) -> DataFrame:
+    """ONE sketch row per group: (keys..., __kll binary). Write this
+    table per day/partition; any window's percentiles are then a merge
+    of the stored rows via :func:`kll_table_quantiles` — KBs per group
+    read back, ZERO raw rows re-scanned. Null and NaN values are
+    dropped; a group with no other values gets no row."""
+    v = F.col(value_col)
+    return (
+        df.filter(v.isNotNull() & ~F.isnan(v))
+        .groupBy(*key_cols)
+        .agg(F.kll_sketch_agg_double(v.cast("double"), k).alias(SKETCH_COL))
+    )
 
-    def _cap(self, level: int) -> int:
-        depth = len(self.levels) - 1 - level
-        return max(2, int(self.k * (_C ** depth)))
 
-    def extend(self, values: np.ndarray) -> None:
-        """Bulk append (one Arrow batch's worth) then restore the size
-        invariant — the hot path stays vectorized."""
-        if values.size == 0:
-            return
-        self.levels[0] = np.concatenate([self.levels[0], values])
-        self.n += int(values.size)
-        self._compress()
-
-    def extend_weighted(self, values: np.ndarray, weights: np.ndarray) -> None:
-        """Bulk insert of (value, count) pairs — the pre-compacted
-        path: a count w decomposes into powers of two, the item
-        entering level b once per set bit (items at level l carry
-        weight 2^l), identical in rank semantics to inserting w copies
-        at level 0 without ever materializing them. This is what makes
-        the sketch ride a value-frequency histogram: 100M rows whose
-        values quantize to ~280k distinct (key, value) pairs cost the
-        Python side ~280k inserts, not 100M."""
-        if values.size == 0:
-            return
-        weights = np.asarray(weights, dtype=np.int64)
-        if (weights <= 0).any():
-            raise ValueError("weights must be positive counts")
-        self.n += int(weights.sum())
-        for b in range(int(weights.max()).bit_length()):
-            mask = (weights >> b) & 1 == 1
-            if not mask.any():
-                continue
-            while len(self.levels) <= b:
-                self.levels.append(np.empty(0, dtype=np.float64))
-                self.parity.append(False)
-            self.levels[b] = np.concatenate([self.levels[b], values[mask]])
-        self._compress()
-
-    def _compress(self) -> None:
-        total_cap = sum(self._cap(l) for l in range(len(self.levels)))
-        while sum(a.size for a in self.levels) > total_cap:
-            for l in range(len(self.levels)):
-                if self.levels[l].size > self._cap(l):
-                    srt = np.sort(self.levels[l])
-                    off = 1 if self.parity[l] else 0
-                    self.parity[l] = not self.parity[l]
-                    promoted = srt[off::2]
-                    self.levels[l] = np.empty(0, dtype=np.float64)
-                    if l + 1 == len(self.levels):
-                        self.levels.append(np.empty(0, dtype=np.float64))
-                        self.parity.append(False)
-                    self.levels[l + 1] = np.concatenate(
-                        [self.levels[l + 1], promoted]
-                    )
-                    break
-            else:  # no level over its own cap: grow top by compacting 0
-                break
-            total_cap = sum(self._cap(l) for l in range(len(self.levels)))
-
-    def merge(self, other: "KLL") -> "KLL":
-        while len(self.levels) < len(other.levels):
-            self.levels.append(np.empty(0, dtype=np.float64))
-            self.parity.append(False)
-        for l, arr in enumerate(other.levels):
-            if arr.size:
-                self.levels[l] = np.concatenate([self.levels[l], arr])
-        self.n += other.n
-        self._compress()
-        return self
-
-    def quantiles(self, probs: Sequence[float]) -> list[float]:
-        """Estimate each prob's quantile: smallest sketch item whose
-        cumulative weight reaches prob·n (rank convention shared with
-        the validation band; within ε any convention is equivalent).
-
-        An empty sketch (n=0, or one deserialized from a persisted row
-        whose group absorbed no values) has no defined quantiles —
-        return NaN per prob rather than raising an opaque executor-side
-        error from the empty concatenate."""
-        if not any(a.size for a in self.levels):
-            return [float("nan")] * len(probs)
-        items = np.concatenate([a for a in self.levels if a.size])
-        weights = np.concatenate(
-            [
-                np.full(a.size, 1 << l, dtype=np.int64)
-                for l, a in enumerate(self.levels)
-                if a.size
-            ]
-        )
-        order = np.argsort(items, kind="stable")
-        items, weights = items[order], weights[order]
-        cum = np.cumsum(weights)
-        out = []
-        for p in probs:
-            target = p * self.n
-            idx = int(np.searchsorted(cum, target, side="left"))
-            out.append(float(items[min(idx, items.size - 1)]))
-        return out
-
-    # --- interchange with Spark rows: (k, n, items, lvls, par) ---
-    #
-    # ``par`` is the compaction-parity bitmask (bit l set ⇔ level l's
-    # next compaction keeps odd indices). Parity is the deterministic
-    # variant's anti-bias mechanism — each level alternates which half
-    # it keeps — so it must survive the round-trip: without it every
-    # reduce-side merge and every streaming micro-batch (state
-    # round-trips through from_parts) would restart at off=0 and
-    # systematically keep even-index items, biasing rank estimates on
-    # structured data. log2-level counts stay far below 64 bits for
-    # any physical n (level count ≈ log_{3/2}(n/k)).
-
-    def to_parts(self) -> tuple[int, int, list[float], list[int], int]:
-        items: list[float] = []
-        lvls: list[int] = []
-        for l, a in enumerate(self.levels):
-            items.extend(float(x) for x in a)
-            lvls.extend([l] * a.size)
-        par = 0
-        for l, p in enumerate(self.parity):
-            if p:
-                par |= 1 << l
-        return self.k, self.n, items, lvls, par
-
-    @classmethod
-    def from_parts(cls, k: int, n: int, items, lvls, par: int = 0) -> "KLL":
-        s = cls(k)
-        s.n = int(n)
-        items = np.asarray(items, dtype=np.float64)
-        lvls = np.asarray(lvls, dtype=np.int64)
-        top = int(lvls.max()) if lvls.size else 0
-        s.levels = [items[lvls == l] for l in range(top + 1)]
-        par = int(par or 0)
-        s.parity = [bool((par >> l) & 1) for l in range(top + 1)]
-        return s
+def _quantile_rows(sketch_df: DataFrame, keys: list[str], probs) -> DataFrame:
+    pa = _probs(probs)
+    return sketch_df.select(
+        *keys,
+        F.inline(
+            F.arrays_zip(
+                pa.alias("prob"),
+                F.kll_sketch_get_quantile_double(SKETCH_COL, pa).alias("value"),
+            )
+        ),
+    )
 
 
 def kll_group_quantiles(
@@ -212,185 +90,40 @@ def kll_group_quantiles(
     value_col: str,
     probs: Sequence[float],
     k: int = 200,
-    weight_col: str | None = None,
-    pre_compact: bool = False,
 ) -> DataFrame:
-    """Per-group quantile estimates via distributed KLL: map-side
-    partial sketches (one per input partition per group), a
-    sketch-only shuffle, reduce-side merge + extraction.
-
-    Returns (keys..., prob, value) — one row per group per requested
-    prob. In the default direct mode the raw rows shuffle NOWHERE: the
-    only exchange carries O(partitions·groups) sketch rows of
-    O(k·log(n/k)) doubles each — the right shape for continuous
-    values at any scale.
-
-    ``pre_compact=True`` first folds the input to a value-frequency
-    histogram (groupBy(keys, value) with map-side combine) and feeds
-    (value, count) pairs to the sketch via binary-weight insertion:
-    when values quantize (currency cents, sensor ticks — sf100's 100M
-    event rows compact to ~280k distinct pairs) the Python stage costs
-    |distinct|, not |rows|, at the price of one compacted shuffle.
-    ``weight_col`` feeds an ALREADY-aggregated (keys, value, count)
-    frame (e.g. a histogram a caller built and shares with other
-    consumers) straight into the weighted path.
-    """
-    partials, key_fields = _sketch_partials(
-        df, key_cols, value_col, k, weight_col, pre_compact
-    )
-    return kll_table_quantiles(partials, key_cols, probs, key_fields=key_fields)
-
-
-def _sketch_partials(
-    df: DataFrame,
-    key_cols: Sequence[str],
-    value_col: str,
-    k: int,
-    weight_col: str | None,
-    pre_compact: bool,
-):
-    """Map-side partial sketches (one per Arrow-task per group) as a
-    DataFrame of sketch rows, plus the key-fields DDL string shared by
-    every sketch-row schema."""
+    """Per-group quantile estimates: (keys..., prob, value), one row per
+    group per requested prob. One hash aggregate with map-side sketch
+    partials; the raw rows shuffle NOWHERE."""
     keys = list(key_cols)
-    v = F.col(value_col)
-    if weight_col is None:
-        base = df.filter(v.isNotNull() & ~F.isnan(v)).select(*keys, value_col)
-        if pre_compact:
-            weight_col = "__w"
-            base = base.groupBy(*keys, value_col).agg(
-                F.count(F.lit(1)).alias(weight_col)
-            )
-    else:
-        # same value hygiene as the unweighted path: a NaN or null in a
-        # caller-supplied histogram would otherwise enter the sketch and
-        # (NaN sorting last) silently poison high-quantile estimates
-        base = df.filter(v.isNotNull() & ~F.isnan(v)).select(
-            *keys, value_col, weight_col
-        )
-    types = {f.name: f.dataType.simpleString() for f in base.schema.fields}
-    key_fields = ", ".join(f"`{name}` {types[name]}" for name in keys)
-    sketch_schema = (
-        f"{key_fields}, __k int, __n bigint, "
-        "__items array<double>, __lvls array<int>, __par bigint"
-    )
-
-    def build_partials(batches):
-        import pandas as pd
-
-        sketches: dict[tuple, KLL] = {}
-        for pdf in batches:
-            vals = pdf[value_col].to_numpy(dtype=np.float64)
-            wts = (
-                pdf[weight_col].to_numpy(dtype=np.int64)
-                if weight_col is not None
-                else None
-            )
-            grouped = pdf.groupby(keys, sort=False, dropna=False).indices
-            for gkey, idx in grouped.items():
-                if not isinstance(gkey, tuple):
-                    gkey = (gkey,)
-                s = sketches.setdefault(gkey, KLL(k))
-                if wts is None:
-                    s.extend(vals[idx])
-                else:
-                    s.extend_weighted(vals[idx], wts[idx])
-        rows = []
-        for gkey, s in sketches.items():
-            kk, n, items, lvls, par = s.to_parts()
-            rows.append((*gkey, kk, n, items, lvls, par))
-        cols = keys + ["__k", "__n", "__items", "__lvls", "__par"]
-        yield pd.DataFrame(rows, columns=cols)
-
-    return base.mapInPandas(build_partials, schema=sketch_schema), key_fields
-
-
-def _key_fields_of(sketch_df: DataFrame, keys: list[str]) -> str:
-    types = {f.name: f.dataType.simpleString() for f in sketch_df.schema.fields}
-    return ", ".join(f"`{name}` {types[name]}" for name in keys)
-
-
-def kll_sketch_table(
-    df: DataFrame,
-    key_cols: Sequence[str],
-    value_col: str,
-    k: int = 200,
-    weight_col: str | None = None,
-    pre_compact: bool = False,
-) -> DataFrame:
-    """ONE merged sketch row per group — the persistable artifact of
-    the rollup pipeline: write this table per day/partition, and the
-    week's (or year's) percentiles are a merge of the stored sketch
-    tables via ``kll_table_quantiles`` — KBs per group read back,
-    ZERO raw rows re-scanned. Schema: (keys..., __k, __n, __items,
-    __lvls, __par) — exactly what ``KLL.from_parts`` consumes."""
-    keys = list(key_cols)
-    partials, key_fields = _sketch_partials(
-        df, key_cols, value_col, k, weight_col, pre_compact
-    )
-    sketch_schema = (
-        f"{key_fields}, __k int, __n bigint, "
-        "__items array<double>, __lvls array<int>, __par bigint"
-    )
-
-    def merge_rows(pdf):
-        import pandas as pd
-
-        merged = _merge_pdf(pdf)
-        gkey = [pdf.iloc[0][c] for c in keys]
-        kk, n, items, lvls, par = merged.to_parts()
-        return pd.DataFrame(
-            [(*gkey, kk, n, items, lvls, par)],
-            columns=keys + ["__k", "__n", "__items", "__lvls", "__par"],
-        )
-
-    return partials.groupBy(*keys).applyInPandas(merge_rows, schema=sketch_schema)
-
-
-def _merge_pdf(pdf) -> KLL:
-    merged: KLL | None = None
-    has_par = "__par" in pdf.columns  # read pre-__par persisted tables
-    for _, row in pdf.iterrows():
-        s = KLL.from_parts(
-            row["__k"],
-            row["__n"],
-            row["__items"],
-            row["__lvls"],
-            row["__par"] if has_par else 0,
-        )
-        merged = s if merged is None else merged.merge(s)
-    return merged
+    return _quantile_rows(kll_sketch_table(df, keys, value_col, k), keys, probs)
 
 
 def kll_table_quantiles(
     sketch_df: DataFrame,
     key_cols: Sequence[str],
     probs: Sequence[float],
-    key_fields: str | None = None,
 ) -> DataFrame:
-    """Quantiles from sketch rows — partials fresh off the map side,
-    one stored table, or a UNION of stored tables across days: rows
-    sharing a key merge level-wise (the KLL merge is associative and
-    commutative), then each requested prob is read out. Input is
-    sketch-sized, so this costs O(groups·tables), never O(rows)."""
-    keys = list(key_cols)
-    probs = [float(p) for p in probs]
-    if key_fields is None:
-        key_fields = _key_fields_of(sketch_df, keys)
-    out_fields = key_fields + ", prob double, value double"
-
-    def merge_extract(pdf):
-        import pandas as pd
-
-        merged = _merge_pdf(pdf)
-        gkey = [pdf.iloc[0][c] for c in keys]
-        qs = merged.quantiles(probs)
-        return pd.DataFrame(
-            [(*gkey, p, q) for p, q in zip(probs, qs)],
-            columns=keys + ["prob", "value"],
+    """Quantiles from stored sketch rows — one table, or a UNION of
+    tables across days: rows sharing a key merge (the KLL merge is
+    associative and commutative), then each requested prob is read
+    out. Input is sketch-sized, so this costs O(groups·tables), never
+    O(rows)."""
+    cols = sketch_df.columns
+    if SKETCH_COL not in cols:
+        got = (
+            "the retired Python KLL format (__items/__lvls level arrays)"
+            if "__items" in cols
+            else f"columns {cols}"
         )
-
-    return sketch_df.groupBy(*keys).applyInPandas(merge_extract, schema=out_fields)
+        raise ValueError(
+            f"kll_table_quantiles needs a {SKETCH_COL} DataSketches column, "
+            f"got {got}; rebuild the table with kll_sketch_table"
+        )
+    keys = list(key_cols)
+    merged = sketch_df.groupBy(*keys).agg(
+        F.kll_merge_agg_double(SKETCH_COL).alias(SKETCH_COL)
+    )
+    return _quantile_rows(merged, keys, probs)
 
 
 def kll_bucketize(
@@ -399,7 +132,6 @@ def kll_bucketize(
     value_col: str,
     num_buckets: int = 4,
     k: int = 200,
-    weight_col: str | None = None,
     bucket_col: str = "bucket",
 ) -> DataFrame:
     """Equi-depth feature binning at scale: per-group KLL sketches
@@ -412,24 +144,25 @@ def kll_bucketize(
     range-exchange + sort).
 
     Bucket populations inherit the sketch's rank guarantee: boundary
-    i's exact rank is within eps*n of i*n/num_buckets (eps ~= 2.3/k),
-    so every bucket holds n/num_buckets +- 2*eps*n rows — the property
-    the registry query (events_kll_bucketize) asserts exactly.
+    i's exact rank is within eps*n of i*n/num_buckets, so every bucket
+    holds n/num_buckets +- 2*eps*n rows — the property the registry
+    query (events_kll_bucketize) asserts exactly.
 
     Returns ``df`` plus an integer ``bucket_col`` in
-    [0, num_buckets). Nulls/NaNs in ``value_col`` must be filtered
-    upstream (same contract as kll_group_quantiles)."""
+    [0, num_buckets). The boundaries ignore null and NaN values, but
+    such rows still get a bucket (null → 0, NaN → the top one, as Spark
+    orders NaN above every double): filter them upstream. Groups with
+    no other values get no boundaries and drop out of the inner join."""
     if num_buckets < 2:
         raise ValueError(f"num_buckets must be >= 2, got {num_buckets}")
     keys = list(key_cols)
-    probs = [i / num_buckets for i in range(1, num_buckets)]
-    est = kll_group_quantiles(
-        df, keys, value_col, probs, k=k, weight_col=weight_col
-    )
-    # per-group sorted boundary array (estimates are monotone in prob
-    # for a single merged sketch; sort_array pins it against ties)
-    bounds = est.groupBy(*keys).agg(
-        F.sort_array(F.collect_list("value")).alias("__bs")
+    # quantiles read from one sketch are monotone in prob: the array is
+    # the group's sorted boundary list as it comes out
+    bounds = kll_sketch_table(df, keys, value_col, k).select(
+        *keys,
+        F.kll_sketch_get_quantile_double(
+            SKETCH_COL, _probs([i / num_buckets for i in range(1, num_buckets)])
+        ).alias("__bs"),
     )
     out = df.join(F.broadcast(bounds), keys, "inner")
     v = F.col(value_col)

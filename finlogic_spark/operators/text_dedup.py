@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from finlogic_spark.functions.text import bind, tokens
+from finlogic_spark.session import local_frame
 
 DEFAULT_NUM_HASHES = 12
 DEFAULT_BANDS = 4  # 4 bands × 3 rows: ~Jaccard 0.6+ candidates
@@ -280,8 +281,8 @@ def build_minhash_index_table(
         .mode("overwrite")
         .parquet(path)
     )
-    spark.createDataFrame(
-        [(k, num_hashes, bands)], "k int, num_hashes int, bands int"
+    local_frame(
+        spark, [(k, num_hashes, bands)], "k int, num_hashes int, bands int"
     ).write.mode("overwrite").parquet(os.path.join(path, "_stats"))
     return read_minhash_index(spark, path)
 

@@ -1,20 +1,23 @@
-"""Custom stateful streaming operator via ``applyInPandasWithState``
-(engine-scope addition — the reference has no streaming, SURVEY.md
-§2.10; north-star surface: "applyInPandasWithState for custom stateful
-operators").
+"""Stateful streaming operators (engine-scope addition — the reference
+has no streaming, SURVEY.md §2.10; north-star surface:
+"applyInPandasWithState for custom stateful operators").
 
 The built-in windowed aggregations (see ``finlogic_spark.streaming``)
-cover tumbling/sliding/session semantics natively; this module covers
-the case they can't express: per-key state machines with arbitrary
-Python logic — here a per-user running profile (event count, value sum,
-last-seen timestamp, distinct-event-type count) that emits an updated
-row per key per micro-batch and expires idle keys via processing-time
-timeout.
+cover tumbling/sliding/session semantics natively. This module covers
+two further shapes:
 
-Scale notes: state is partitioned by key across executors (one
-GroupState per user_id, shuffled by key), Arrow-batched per micro-batch,
-and bounded by the timeout — the same layout Flink calls keyed state.
-State size is O(active keys), not O(events).
+- per-key state machines with arbitrary Python logic, through
+  ``applyInPandasWithState``: a per-user running profile with idle-key
+  expiry, the hourly resample gap-fill, and sharded Misra-Gries token
+  summaries;
+- streaming sketches (KLL quantiles, HLL distinct counts), which need
+  no Python at all: an update-mode ``groupBy().agg`` over Spark's
+  built-in DataSketches aggregates keeps one sketch per key in the
+  state store.
+
+Scale notes: state is partitioned by key across executors (shuffled by
+key) and is O(active keys), not O(events) — the same layout Flink
+calls keyed state.
 """
 
 from __future__ import annotations
@@ -169,6 +172,12 @@ def user_profile_stream(
 # durable checkpoints must start a NEW checkpoint location when this
 # schema changes; treat any edit to RESAMPLE_STATE_SCHEMA as a
 # state-format version bump requiring a fresh checkpoint dir.
+#
+# The same holds for kll_quantiles_stream and hll_distinct_stream:
+# their state moved from applyInPandasWithState structs (Python KLL
+# levels, PyHLL registers) to the streaming aggregate's DataSketches
+# buffers, so checkpoints written before that change cannot be
+# resumed — start those queries on a fresh checkpoint location.
 RESAMPLE_STATE_SCHEMA = T.StructType(
     [
         T.StructField("hour_us", T.LongType()),
@@ -365,197 +374,63 @@ def resample_ffill_stream(events: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Streaming KLL quantiles: the sketch as keyed streaming state
+# Streaming KLL quantiles and HLL distinct counts: built-in sketch
+# aggregates as streaming state
 # ---------------------------------------------------------------------------
 
-# The state IS the sketch's wire format (operators/sketch.py
-# to_parts/from_parts): O(k log n/k) doubles per key — a few KB —
-# regardless of how many events the key has absorbed. Treat any edit
-# as a checkpoint-format change (same contract as RESAMPLE_STATE_SCHEMA).
-KLL_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("k", T.IntegerType()),
-        T.StructField("n", T.LongType()),
-        T.StructField("items", T.ArrayType(T.DoubleType())),
-        T.StructField("lvls", T.ArrayType(T.IntegerType())),
-        # compaction-parity bitmask — must round-trip with the sketch or
-        # every micro-batch restarts compaction at off=0 (even-index
-        # bias); see KLL.to_parts
-        T.StructField("par", T.LongType()),
-    ]
-)
-
-KLL_OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("event_type", T.StringType()),
-        T.StructField("n", T.LongType()),
-        T.StructField("kll_p50", T.DoubleType()),
-        T.StructField("kll_p99", T.DoubleType()),
-    ]
-)
-
-KLL_STREAM_PROBS = (0.5, 0.99)
-
-
-def _kll_update(
-    key: tuple,
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    from finlogic_spark.operators.sketch import KLL
-
-    (event_type,) = key
-    if state.exists:
-        k, n, items, lvls, par = state.get
-        s = KLL.from_parts(k, n, items, lvls, par)
-    else:
-        s = KLL(200)
-    for pdf in pdfs:
-        vals = pdf["value"].to_numpy(dtype=np.float64)
-        vals = vals[~np.isnan(vals)]
-        if vals.size:
-            # in-batch value compaction (the batch twin's pre_compact
-            # trick): quantized measurement values repeat heavily, so
-            # the sketch sees |distinct| weighted inserts per batch,
-            # not |rows|
-            uniq, counts = np.unique(vals, return_counts=True)
-            s.extend_weighted(uniq, counts)
-    k, n, items, lvls, par = s.to_parts()
-    state.update((k, n, list(items), list(lvls), par))
-    p50, p99 = s.quantiles(list(KLL_STREAM_PROBS))
-    yield pd.DataFrame(
-        [
-            {
-                "event_type": event_type,
-                "n": n,
-                "kll_p50": p50,
-                "kll_p99": p99,
-            }
-        ]
-    )
-
-
 def kll_quantiles_stream(events: DataFrame) -> DataFrame:
-    """Streaming per-key quantiles with the KLL sketch as keyed state
-    (streaming twin of events_kll_quantiles): each micro-batch folds
-    its rows into the key's sketch and emits the updated p50/p99
-    estimate — a live percentile dashboard with a few KB of state per
-    key, where exact streaming percentiles would need every value ever
-    seen in state.
+    """Streaming per-key quantiles (streaming twin of
+    events_kll_quantiles): an update-mode ``groupBy().agg`` over
+    ``kll_sketch_agg_double``, so the state store keeps one DataSketches
+    KLL sketch per key — a few KB at ANY stream length, where exact
+    streaming percentiles would hold every value ever seen — and each
+    micro-batch re-emits (event_type, n, kll_p50, kll_p99) for the keys
+    it touched. The state is the same binary the batch sketch tables
+    (operators/sketch.py ``kll_sketch_table``) store. Null and NaN
+    values are dropped.
 
     The emitted ``n`` is monotone per key, so a downstream keep-last
-    over n yields the final estimates — which equal a single-stream
-    batch KLL build over the same data in micro-batch order (the
-    sketch is a deterministic function of insertion order; the rank
-    band the oracle checks holds for ANY order).
-
-    Measured streaming contract (BENCH_r12_stream_kll.json — 50
-    micro-batches × 2M rows, local[32]): median 2.06 s / p95 2.91 s
-    per batch, 877k rows/s sustained, 17.6 KB of state per key. The
-    pure-JVM alternative (groupBy + approx_percentile in update mode)
-    measured WORSE on every axis — 2.95 s median / 8.02 s p95, 535k
-    rows/s, 49.7 MB state per key (the percentile digest holds the
-    observed-value set and re-serializes per batch) — so the
-    Arrow→Python sketch path is the shipped tier, not a compromise;
-    its state is also persist/merge-compatible with the batch sketch
-    tables (kll_sketch_table), which no JVM digest is."""
-    from finlogic_spark.streaming import with_event_time
-
+    over n yields the final estimates. The JVM KLL is randomized: the
+    final estimate varies run to run and with micro-batch boundaries,
+    but always lands inside the rank band the oracle checks."""
+    v = F.col("value")
+    sk = F.kll_sketch_agg_double(v)
     return (
-        with_event_time(events)
-        .select("event_type", "value")
+        events.filter(v.isNotNull() & ~F.isnan(v))
         .groupBy("event_type")
-        .applyInPandasWithState(
-            _kll_update,
-            outputStructType=KLL_OUTPUT_SCHEMA,
-            stateStructType=KLL_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.kll_sketch_get_quantile_double(sk, F.lit(0.5)).alias("kll_p50"),
+            F.kll_sketch_get_quantile_double(sk, F.lit(0.99)).alias("kll_p99"),
         )
     )
 
 
-# ---------------------------------------------------------------------------
-# Streaming distinct count: HLL registers as keyed streaming state
-# ---------------------------------------------------------------------------
-
-# State is the PyHLL register array (operators/distinct_sketch.py):
-# 2^lgk bytes per key — 8 KiB at the default lgk=13 — at ANY stream
-# length, where exact streaming distinct would hold every id ever seen.
-# Treat any edit as a checkpoint-format change (same contract as
-# KLL_STATE_SCHEMA).
-HLL_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("lgk", T.IntegerType()),
-        T.StructField("n", T.LongType()),
-        T.StructField("regs", T.BinaryType()),
-    ]
-)
-
-HLL_OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("event_type", T.StringType()),
-        T.StructField("n", T.LongType()),
-        T.StructField("approx_users", T.DoubleType()),
-    ]
-)
-
-
-def _hll_update(
-    key: tuple,
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    from finlogic_spark.operators.distinct_sketch import PyHLL
-
-    (event_type,) = key
-    if state.exists:
-        lgk, n, regs = state.get
-        h = PyHLL.from_bytes(lgk, regs)
-    else:
-        lgk, n = 13, 0
-        h = PyHLL(lgk)
-    for pdf in pdfs:
-        ids = pdf["user_id"].dropna().to_numpy(dtype=np.int64)
-        n += ids.size
-        h.add_ints(ids)
-    state.update((lgk, n, h.to_bytes()))
-    yield pd.DataFrame(
-        [{"event_type": event_type, "n": n, "approx_users": h.estimate()}]
-    )
-
-
 def hll_distinct_stream(events: DataFrame) -> DataFrame:
-    """Streaming per-key distinct-user count with HLL registers as
-    keyed state (streaming twin of the events_hll_rollup batch
-    pipeline): each micro-batch folds its ids into the key's registers
-    and re-emits the updated estimate — a live cardinality dashboard
-    with 8 KiB of state per key.
+    """Streaming per-key distinct-user count (streaming twin of the
+    events_hll_rollup batch pipeline): an update-mode ``groupBy().agg``
+    over ``hll_sketch_agg(user_id, 13)`` — 8 KiB of HLL registers per
+    key in the state store — re-emitting (event_type, n, approx_users)
+    for the keys each micro-batch touched.
 
-    Stronger contract than the KLL twin: HLL registers accumulate by
-    per-register max — a commutative idempotent monoid — so the final
-    streaming estimate EQUALS a single batch PyHLL build over the same
-    rows, not merely lands in the same error band. Micro-batch
-    boundaries, insert order, and restarts cannot move it (re-inserting
-    an id after a replay is a no-op, which also makes the operator
-    naturally idempotent under at-least-once delivery).
+    Stronger contract than the KLL twin: HLL registers merge by
+    per-register max, so the final streaming estimate EQUALS a batch
+    ``hll_sketch_table(..., lgk=13)`` → ``hll_table_estimate`` build
+    over the same rows, not merely lands in the same error band.
+    Micro-batch boundaries and insert order cannot move it.
 
-    The emitted ``n`` (rows absorbed) is monotone per key, so a
+    The emitted ``n`` (non-null ids absorbed) is monotone per key, so a
     downstream keep-last over n takes the final estimates. Validated in
     the registry against the exact distinct count with the sketch's
     published error band (stream_hll_distinct)."""
-    from finlogic_spark.streaming import with_event_time
-
     return (
-        with_event_time(events)
-        .select("event_type", "user_id")
+        events.filter(F.col("user_id").isNotNull())
         .groupBy("event_type")
-        .applyInPandasWithState(
-            _hll_update,
-            outputStructType=HLL_OUTPUT_SCHEMA,
-            stateStructType=HLL_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.hll_sketch_estimate(F.hll_sketch_agg("user_id", 13))
+            .cast("double")
+            .alias("approx_users"),
         )
     )
 
@@ -567,7 +442,7 @@ def hll_distinct_stream(events: DataFrame) -> DataFrame:
 # State is the MG summary's wire format (operators/freq.py
 # to_parts/from_parts): <= k (item, counter) pairs per shard — tens of
 # KB — at ANY stream length. Treat any edit as a checkpoint-format
-# change (same contract as KLL_STATE_SCHEMA).
+# change (same contract as RESAMPLE_STATE_SCHEMA).
 MG_STATE_SCHEMA = T.StructType(
     [
         T.StructField("k", T.IntegerType()),

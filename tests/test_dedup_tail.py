@@ -101,6 +101,41 @@ def test_minhash_signature_matches_explode_form(spark, num_hashes):
     assert (6, 7) not in pairs and (0, 1) in pairs
 
 
+def test_bpe_piece_minhash_matches_explode_form(spark):
+    """doc_bpe_shingle_pairs' row-local signature equals the explode +
+    groupBy(doc_id).min form it replaced on every row that form gave a
+    non-null signature: short piece lists, repeated shingles, an empty
+    list (one "" shingle), null elements. A null piece list gets no row
+    here; the explode form emitted an all-null signature for it."""
+    from finlogic_spark.driver_queries import _piece_minhash
+    from finlogic_spark.operators.text_dedup import array_shingles
+
+    p = spark.createDataFrame(
+        [
+            (0, ["th", "e", "ca", "t", "sat"]), (1, ["th", "e", "ca", "t", "sat"]),
+            (2, ["x"]), (3, ["x", "y"]), (4, []), (5, None),
+            (6, ["a", "a", "a", "a", "a", "a"]), (7, ["a", None, "b", "c"]),
+            (8, [None]),
+        ],
+        "doc_id long, pieces array<string>",
+    )
+    sh = p.select(
+        "doc_id",
+        F.explode(F.array_distinct(array_shingles(F.col("pieces"), 3))).alias("__sh"),
+    )
+    legacy = {
+        r.doc_id: r
+        for r in sh.groupBy("doc_id")
+        .agg(*[F.min(F.md5(F.concat(F.lit(f"{i}|"), "__sh"))).alias(f"m{i}") for i in range(4)])
+        .collect()
+    }
+    got = {r.doc_id: r for r in _piece_minhash(p).collect()}
+    assert set(got) == set(range(9)) - {5}
+    assert got == {i: legacy[i] for i in got}
+    assert all(v is None for v in legacy[5][1:])
+    assert got[0][1:] == got[1][1:]
+
+
 def _reference_labels(edges, verts):
     parent = {v: v for v in verts}
 

@@ -1,6 +1,6 @@
-"""Distinct-count sketches (operators/distinct_sketch.py), the exact
-heavy-hitters screen (operators/freq.py), and the streaming HLL state
-op (streaming/stateful.py hll_distinct_stream)."""
+"""Distinct-count and set-overlap sketches (operators/distinct_sketch.py),
+the exact heavy-hitters screen (operators/freq.py), and the streaming
+HLL aggregate (streaming/stateful.py hll_distinct_stream)."""
 
 import glob as _glob
 import shutil as _shutil
@@ -10,66 +10,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from finlogic_spark.operators.distinct_sketch import (
-    PyHLL,
     hll_sketch_table,
     hll_table_estimate,
 )
 from finlogic_spark.operators.freq import frequency_screen, heavy_hitters
-
-
-# ---------------------------------------------------------------------------
-# PyHLL
-# ---------------------------------------------------------------------------
-
-
-@pytest.mark.parametrize("n", [1, 30, 150, 1500, 20_000, 100_000])
-def test_pyhll_error_band(n):
-    h = PyHLL(13)
-    h.add_ints(np.arange(n, dtype=np.int64) * 7919 + 3)
-    est = h.estimate()
-    # registry band is 6%; pin tighter here (worst measured: 2.9% at
-    # the linear-counting crossover ~2.5m)
-    assert abs(est - n) / n <= 0.04, (n, est)
-
-
-def test_pyhll_order_and_batching_invariant():
-    """Register updates are max() — insert order, chunking, and
-    duplicate re-insertion must not move the estimate AT ALL (this is
-    the property that makes the streaming estimate equal the batch
-    one)."""
-    v = np.arange(5000, dtype=np.int64)
-    a = PyHLL(13)
-    a.add_ints(v)
-    b = PyHLL(13)
-    perm = np.random.default_rng(7).permutation(v)
-    for chunk in np.array_split(perm, 11):
-        b.add_ints(chunk)
-        b.add_ints(chunk)  # at-least-once replay is a no-op
-    assert a.estimate() == b.estimate()
-
-
-def test_pyhll_merge_equals_union_build():
-    lo = np.arange(0, 3000, dtype=np.int64)
-    hi = np.arange(2000, 6000, dtype=np.int64)  # overlapping
-    a = PyHLL(13)
-    a.add_ints(lo)
-    b = PyHLL(13)
-    b.add_ints(hi)
-    both = PyHLL(13)
-    both.add_ints(np.concatenate([lo, hi]))
-    assert a.merge(b).estimate() == both.estimate()
-
-
-def test_pyhll_wire_roundtrip_and_guards():
-    h = PyHLL(13)
-    h.add_ints(np.arange(1234, dtype=np.int64))
-    back = PyHLL.from_bytes(13, h.to_bytes())
-    assert back.estimate() == h.estimate()
-    with pytest.raises(ValueError, match="bytes"):
-        PyHLL.from_bytes(12, h.to_bytes())  # wrong lgk for blob size
-    with pytest.raises(ValueError, match="merge"):
-        PyHLL(12).merge(PyHLL(13))
-    assert PyHLL(13).estimate() == 0.0  # empty sketch is 0, not NaN
 
 
 # ---------------------------------------------------------------------------
@@ -180,9 +124,10 @@ def test_heavy_hitters_rejects_bad_phi(spark):
 
 
 def test_stream_hll_state_equals_batch_build(spark, tmp_path):
-    """Three micro-batches of ids folded through keyed state must give
-    EXACTLY the single-shot PyHLL estimate over all ids (order
-    independence), and land inside the band of the true distinct."""
+    """Three micro-batches of ids folded through the streaming HLL
+    aggregate must give EXACTLY the batch hll_sketch_table →
+    hll_table_estimate estimate over all ids (order independence), and
+    land inside the band of the true distinct."""
     from finlogic_spark.streaming import drain_stream_to_df
     from finlogic_spark.streaming.stateful import hll_distinct_stream
 
@@ -219,11 +164,17 @@ def test_stream_hll_state_equals_batch_build(spark, tmp_path):
         if r["event_type"] not in finals or r["n"] > finals[r["event_type"]]["n"]:
             finals[r["event_type"]] = r
     assert set(finals) == {"a", "b"}
+    events = spark.read.parquet(str(src / "events_*.parquet"))
+    batch = {
+        r["event_type"]: r["approx_distinct"]
+        for r in hll_table_estimate(
+            hll_sketch_table(events, ["event_type"], "user_id", lgk=13),
+            ["event_type"],
+        ).collect()
+    }
     for g, r in finals.items():
         assert r["n"] == len(all_ids[g])
-        batch = PyHLL(13)
-        batch.add_ints(np.array(all_ids[g], dtype=np.int64))
-        assert r["approx_users"] == batch.estimate()
+        assert r["approx_users"] == batch[g]
         exact = len(set(all_ids[g]))
         assert abs(r["approx_users"] - exact) / exact <= 0.06
 
@@ -338,178 +289,87 @@ def test_hll_window_estimate_band(spark):
 
 
 # ---------------------------------------------------------------------------
-# KMV set-operation sketch
+# Theta set-operation sketch
 # ---------------------------------------------------------------------------
 
 
-def test_kmv_exact_below_k_and_wire_roundtrip():
-    from finlogic_spark.operators.distinct_sketch import KMV
+def test_theta_intersection_error_band(spark):
+    """Above the nominal entries (2^12): intersection estimates across
+    eight independent seeds stay within the modeled band — relative
+    error ~1/sqrt(theta*|A∩B|), ~3% here at |A|=|B|=60k, |A∩B|=15k."""
+    from finlogic_spark.operators.distinct_sketch import (
+        theta_pair_overlap,
+        theta_sketch_table,
+    )
 
-    ids = np.arange(900, dtype=np.int64)
-    s = KMV(1024)
-    for chunk in np.array_split(ids, 5):
-        s.add_ints(chunk)
-        s.add_ints(chunk)  # idempotent
-    assert s.distinct_estimate() == 900.0  # below k: exact
-    rt = KMV.from_longs(1024, s.to_longs())
-    assert np.array_equal(rt.hashes, s.hashes)
-    with pytest.raises(ValueError, match="k"):
-        KMV(8)
-    with pytest.raises(ValueError, match="merge"):
-        KMV(64).merge(KMV(128))
-
-
-def test_kmv_merge_equals_union_build():
-    from finlogic_spark.operators.distinct_sketch import KMV
-
-    lo = np.arange(0, 40_000, dtype=np.int64)
-    hi = np.arange(30_000, 90_000, dtype=np.int64)
-    a, b, u = KMV(512), KMV(512), KMV(512)
-    a.add_ints(lo)
-    b.add_ints(hi)
-    u.add_ints(np.concatenate([lo, hi]))
-    assert np.array_equal(a.merge(b).hashes, u.hashes)
-
-
-def test_kmv_intersection_error_band():
-    """Super-k regime: rho-estimator error across seeds stays within
-    the modeled band (~1/sqrt(k) on the union, scaled by union/inter)."""
-    from finlogic_spark.operators.distinct_sketch import KMV
-
-    k = 4096
-    rels = []
+    sides = []
     for seed in range(8):
-        rng = np.random.RandomState(seed)
-        A = rng.choice(50_000_000, 60_000, replace=False)
-        B = np.concatenate(
-            [A[:15_000],
-             rng.choice(np.arange(50_000_000, 99_000_000), 45_000, replace=False)]
-        )
-        ka, kb = KMV(k), KMV(k)
-        ka.add_ints(A)
-        kb.add_ints(B)
-        exact = len(np.intersect1d(A, B))
-        est = KMV.intersection_estimate(ka, kb)
-        rels.append(abs(est - exact) / exact)
-    # union/inter = 7; 3 sigma ~ 3 * sqrt(rho(1-rho)/k) / rho ~ 0.12
+        off = seed * 100_000_000
+        a = spark.range(off, off + 60_000)
+        b = spark.range(off + 45_000, off + 105_000)
+        sides += [
+            a.select(F.lit(seed * 2).alias("grp"), "id"),
+            b.select(F.lit(seed * 2 + 1).alias("grp"), "id"),
+        ]
+    df = sides[0]
+    for extra in sides[1:]:
+        df = df.unionByName(extra)
+    sk = theta_sketch_table(df, ["grp"], "id", lg_nom_entries=12)
+    est = theta_pair_overlap(sk, "grp").filter(
+        (F.col("key_a") % 2 == 0) & (F.col("key_b") == F.col("key_a") + 1)
+    )
+    rels = [abs(r["approx_overlap"] - 15_000) / 15_000 for r in est.collect()]
+    assert len(rels) == 8
     assert max(rels) <= 0.15, rels
     assert sum(rels) / len(rels) <= 0.06, rels
 
 
-def test_kmv_sketch_table_pair_overlap(spark):
-    """Distributed build + pair estimator: below-k groups are exact, so
-    the pair overlaps must equal the true intersections exactly."""
+def test_theta_sketch_table_pair_overlap(spark):
+    """Distributed build + pair estimator: groups below the nominal
+    entries keep every hash, so pair overlaps equal the true
+    intersections exactly — for long and string ids alike, with null
+    ids dropped, a one-id group and a disjoint pair included."""
     from finlogic_spark.operators.distinct_sketch import (
-        kmv_pair_overlap,
-        kmv_sketch_table,
+        theta_pair_overlap,
+        theta_sketch_table,
     )
 
     rng = np.random.RandomState(3)
     rows = []
-    sets = {"a": set(), "b": set(), "c": set()}
+    sets = {"a": set(), "b": set(), "c": set(), "d": set(), "e": set()}
     for g, lo, hi in (("a", 0, 800), ("b", 400, 1200), ("c", 0, 1500)):
         ids = rng.randint(lo, hi, 2000)
         sets[g].update(int(u) for u in ids)
         rows += [(g, int(u)) for u in ids]
+    rows += [("d", 5), ("d", 5), ("d", None), ("e", 10_000), ("e", None)]
+    sets["d"], sets["e"] = {5}, {10_000}
     df = spark.createDataFrame(rows, "grp string, uid long").repartition(6)
-    sk = kmv_sketch_table(df, ["grp"], "uid", k=4096)
-    assert all(r["__k"] == 4096 for r in sk.select("__k").collect())
-    got = {
-        (r["key_a"], r["key_b"]): r["approx_overlap"]
-        for r in kmv_pair_overlap(sk, "grp").collect()
-    }
-    for (x, y), v in got.items():
-        assert v == len(sets[x] & sets[y]), (x, y, v)
-    assert len(got) == 3
+    for col in ("uid", "uid_str"):
+        src = df.withColumn("uid_str", F.concat(F.lit("u"), "uid"))
+        sk = theta_sketch_table(src, ["grp"], col)
+        assert sk.columns == ["grp", "__theta"]
+        got = {
+            (r["key_a"], r["key_b"]): r["approx_overlap"]
+            for r in theta_pair_overlap(sk, "grp").collect()
+        }
+        assert len(got) == 10
+        for (x, y), v in got.items():
+            assert v == len(sets[x] & sets[y]), (col, x, y, v)
+        assert got[("a", "e")] == 0.0
 
 
-def test_xxhash64_long_matches_spark(spark):
-    """The numpy XXH64 kernel is bit-identical to Spark's
-    xxhash64(bigint) — the contract that makes JVM-built and
-    Python-built KMV sketches one wire format."""
-    from finlogic_spark.operators.distinct_sketch import xxhash64_long
-
-    vals = np.array(
-        [0, 1, -1, 12345, 2**62, -(2**63), 2**63 - 1, 987654321012345],
-        dtype=np.int64,
-    )
-    jvm = [
-        r.h
-        for r in spark.sql(
-            "SELECT xxhash64(CAST(v AS BIGINT)) AS h FROM VALUES "
-            + ", ".join(f"({int(v)})" for v in vals)
-            + " t(v)"
-        ).collect()
-    ]
-    assert jvm == [int(x) for x in xxhash64_long(vals).view(np.int64)]
-
-
-def test_kmv_jvm_build_equals_python_build(spark):
-    """kmv_sketch_table (all-JVM slice/array_sort build) emits byte-
-    for-byte the wire longs a Python KMV.add_ints build produces over
-    the same values — including the super-k truncation."""
-    from finlogic_spark.operators.distinct_sketch import KMV, kmv_sketch_table
-
-    rng = np.random.RandomState(7)
-    k = 64
-    vals = {
-        "x": rng.randint(-(2**62), 2**62, 500, dtype=np.int64),
-        "y": rng.randint(0, 40, 300, dtype=np.int64),  # below k: exact
-    }
-    rows = [(g, int(v)) for g, arr in vals.items() for v in arr]
-    df = spark.createDataFrame(rows, "grp string, uid long").repartition(5)
-    got = {
-        r["grp"]: list(r["__kmv"])
-        for r in kmv_sketch_table(df, ["grp"], "uid", k=k).collect()
-    }
-    for g, arr in vals.items():
-        py = KMV(k)
-        py.add_ints(arr)
-        assert got[g] == py.to_longs(), g
-
-
-def test_kmv_rejects_non_integral_value_column(spark):
-    """A string value column must raise, not silently cast→NULL→seed
-    (which collapses every uncastable value onto one distinct hash)."""
+def test_theta_refuses_retired_kmv_table(spark):
+    """A table persisted in the retired KMV format (sorted xxhash64
+    longs) must raise a clear error, never be misread as sketches."""
     import pytest
-    from finlogic_spark.operators.distinct_sketch import kmv_sketch_table
 
-    df = spark.createDataFrame(
-        [("a", "user_1"), ("a", "user_2")], "grp string, uid string"
+    from finlogic_spark.operators.distinct_sketch import theta_pair_overlap
+
+    legacy = spark.createDataFrame(
+        [("a", 64, "xxhash64:42", [1, 2, 3]), ("b", 64, "xxhash64:42", [2])],
+        "grp string, __k int, __hash string, __kmv array<bigint>",
     )
-    with pytest.raises(TypeError, match="integral"):
-        kmv_sketch_table(df, ["grp"], "uid")
-
-
-def test_kmv_wire_tag_guards_hash_change(spark):
-    """The persisted format carries its hash identity: a table without
-    the __hash tag (pre-xxhash64 era) is refused at the operator edge,
-    and a blob tagged with a DIFFERENT hash is refused at decode — both
-    failure modes previously produced silently-garbage estimates."""
-    import pytest
-    from finlogic_spark.operators.distinct_sketch import (
-        KMV,
-        KMV_WIRE_TAG,
-        kmv_pair_overlap,
-        kmv_sketch_table,
-    )
-
-    df = spark.createDataFrame(
-        [("a", i) for i in range(50)] + [("b", i) for i in range(25, 75)],
-        "grp string, uid long",
-    )
-    sk = kmv_sketch_table(df, ["grp"], "uid", k=64)
-    assert sk.columns == ["grp", "__k", "__hash", "__kmv"]
-    assert {r["__hash"] for r in sk.select("__hash").collect()} == {
-        KMV_WIRE_TAG
-    }
-    # round-trips: a tagged table still estimates
-    got = kmv_pair_overlap(sk, "grp").collect()
-    assert len(got) == 1 and got[0]["approx_overlap"] > 0
-
-    legacy = sk.drop("__hash")  # a table persisted before the break
-    with pytest.raises(ValueError, match="__hash"):
-        kmv_pair_overlap(legacy, "grp")
-
-    with pytest.raises(ValueError, match="wire tag mismatch"):
-        KMV.from_longs(64, [1, 2, 3], wire_tag="splitmix64:0")
+    with pytest.raises(ValueError, match="retired KMV format"):
+        theta_pair_overlap(legacy, "grp")
+    with pytest.raises(ValueError, match="__theta"):
+        theta_pair_overlap(legacy.select("grp"), "grp")

@@ -5,6 +5,7 @@ oracle harness; these pin the physical strategy."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from finlogic_spark import plans
@@ -535,3 +536,51 @@ def test_hybrid_search_legs_serve_partition_pruned(spark, sf_dir):
     plan = plans.formatted_plan(df)
     assert "PartitionFilters" in plan and "__tok_bkt" in plan
     assert df.count() == 15
+
+
+_PYTHON_NODES = (
+    "MapInPandas",
+    "FlatMapGroupsInPandas",  # also matches ...InPandasWithState
+    "MapInArrow",
+    "ArrowEvalPython",
+    "BatchEvalPython",
+)
+
+
+def _python_nodes(plan: str) -> list[str]:
+    return [n for n in _PYTHON_NODES if n in plan]
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "events_kll_quantiles",
+        "events_kll_rollup",
+        "events_kll_bucketize",
+        "events_kmv_overlap",
+    ],
+)
+def test_sketch_plans_have_no_python_stage(spark, sf_dir, name):
+    """The KLL and Theta sketch queries run on the built-in
+    DataSketches aggregates: no executed plan may hold a Python-worker
+    node (each such task pays the worker start-up cost)."""
+    df = QUERIES[name](spark, sf_dir)
+    assert df.collect()
+    plan = plans.formatted_plan(df)
+    assert "isFinalPlan=true" in plan
+    assert not _python_nodes(plan), (name, _python_nodes(plan))
+
+
+def test_sketch_streams_have_no_python_stage(spark, sf_dir):
+    from finlogic_spark.streaming import read_events_stream
+    from finlogic_spark.streaming.stateful import (
+        hll_distinct_stream,
+        kll_quantiles_stream,
+    )
+
+    for op in (kll_quantiles_stream, hll_distinct_stream):
+        df = op(read_events_stream(spark, sf_dir))
+        assert df.isStreaming
+        plan = plans.formatted_plan(df)
+        assert "HashAggregate" in plan
+        assert not _python_nodes(plan), (op.__name__, _python_nodes(plan))

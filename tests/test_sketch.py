@@ -1,19 +1,29 @@
-"""KLL mergeable quantile sketch (operators/sketch.py).
+"""KLL mergeable quantile sketch tables (operators/sketch.py, on Spark's
+DataSketches aggregates).
 
-Pins: (1) rank-error bound on single-stream builds across
+Pins: (1) rank-error bound on single-group builds across
 distributions, (2) merge-of-chunks lands in the same band (the
-distributed-aggregate property), (3) determinism for a fixed input
-order, (4) parts round-trip, (5) the Spark aggregate end-to-end with
-multi-key groups, (6) sketch size stays O(k log n/k).
+distributed-aggregate property), (3) the Spark aggregate end-to-end
+with multi-key groups and degenerate groups (identical values, one
+row, n < k exact, null/NaN dropped, empty input), (4) stored tables
+roll up across days and refuse the retired Python format, (5) sketch
+size stays O(k log n/k).
 """
 
 from __future__ import annotations
+
+import math
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from finlogic_spark.operators.sketch import KLL, kll_group_quantiles
+from finlogic_spark.operators.sketch import (
+    kll_group_quantiles,
+    kll_sketch_table,
+    kll_table_quantiles,
+)
+from finlogic_spark.session import local_frame
 
 EPS = 0.02  # k=200 band used by the registry oracle
 PROBS = [0.01, 0.1, 0.25, 0.5, 0.75, 0.9, 0.99]
@@ -29,11 +39,15 @@ def _rank_err(values: np.ndarray, est: float, p: float) -> float:
     return min(abs(p - lo), abs(p - hi))
 
 
+def _frame(spark, rows, schema="grp string, value double"):
+    return local_frame(spark, rows, schema).repartition(4)
+
+
 @pytest.mark.parametrize(
     "dist",
     ["uniform", "lognormal", "sorted", "reversed", "ties"],
 )
-def test_kll_rank_bound_single_stream(dist):
+def test_kll_rank_bound_single_stream(spark, dist):
     rng = np.random.RandomState(7)
     n = 50_000
     if dist == "uniform":
@@ -46,112 +60,46 @@ def test_kll_rank_bound_single_stream(dist):
         vals = np.sort(rng.uniform(0, 1000, n))[::-1].copy()
     else:  # heavy ties: 100 distinct values
         vals = rng.randint(0, 100, n).astype(np.float64)
-    s = KLL(200)
-    # feed in Arrow-batch-sized chunks like mapInPandas would
-    for i in range(0, n, 8192):
-        s.extend(vals[i : i + 8192])
-    assert s.n == n
-    for p, est in zip(PROBS, s.quantiles(PROBS)):
-        assert _rank_err(vals, est, p) <= EPS, (dist, p)
+    df = local_frame(spark, [("g", float(v)) for v in vals], "grp string, value double")
+    got = kll_group_quantiles(df, ["grp"], "value", PROBS).collect()
+    assert sorted(r["prob"] for r in got) == PROBS
+    for r in got:
+        assert _rank_err(vals, r["value"], r["prob"]) <= EPS, (dist, r["prob"])
 
 
-def test_kll_merge_matches_band_and_counts():
+def test_kll_merge_matches_band_and_counts(spark):
+    """Twelve separately built sketch rows merge into one sketch whose
+    count is the total and whose quantiles hold the band."""
     rng = np.random.RandomState(11)
     chunks = [rng.lognormal(2.0, 1.5, 7000) for _ in range(12)]
     full = np.concatenate(chunks)
-    merged = KLL(200)
-    for c in chunks:
-        part = KLL(200)
-        part.extend(c)
-        merged.merge(part)
-    assert merged.n == full.size
-    for p, est in zip(PROBS, merged.quantiles(PROBS)):
-        assert _rank_err(full, est, p) <= EPS, p
-
-
-def test_kll_deterministic_and_roundtrip():
-    rng = np.random.RandomState(3)
-    vals = rng.uniform(-5, 5, 30_000)
-    a, b = KLL(200), KLL(200)
-    for i in range(0, vals.size, 4096):
-        a.extend(vals[i : i + 4096])
-        b.extend(vals[i : i + 4096])
-    assert a.to_parts() == b.to_parts()
-    k, n, items, lvls, par = a.to_parts()
-    c = KLL.from_parts(k, n, items, lvls, par)
-    assert c.n == a.n
-    assert c.parity == a.parity  # compaction parity survives the wire
-    assert c.quantiles(PROBS) == a.quantiles(PROBS)
-    # the round-tripped sketch keeps evolving identically to the
-    # original — the bias the parity bitmask exists to prevent
-    more = np.random.RandomState(4).uniform(-5, 5, 30_000)
-    for i in range(0, more.size, 4096):
-        a.extend(more[i : i + 4096])
-        c.extend(more[i : i + 4096])
-    assert a.to_parts() == c.to_parts()
-
-
-def test_kll_empty_sketch_quantiles_nan():
-    s = KLL(200)
-    assert all(np.isnan(q) for q in s.quantiles(PROBS))
-    k, n, items, lvls, par = s.to_parts()
-    r = KLL.from_parts(k, n, items, lvls, par)
-    assert all(np.isnan(q) for q in r.quantiles(PROBS))
-
-
-def test_kll_weighted_insert_matches_band():
-    """extend_weighted (binary-weight insertion from a value-frequency
-    histogram) must satisfy the same rank bound as inserting the
-    expanded copies, including heavy and power-of-two weights."""
-    rng = np.random.RandomState(29)
-    vals = np.unique(rng.uniform(0, 100, 3000))
-    wts = rng.randint(1, 500, vals.size).astype(np.int64)
-    expanded = np.repeat(vals, wts)
-    s = KLL(200)
-    # feed in chunks like the Arrow batches would
-    for i in range(0, vals.size, 512):
-        s.extend_weighted(vals[i : i + 512], wts[i : i + 512])
-    assert s.n == expanded.size
-    for p, est in zip(PROBS, s.quantiles(PROBS)):
-        assert _rank_err(expanded, est, p) <= EPS, p
-
-
-def test_kll_weighted_rejects_nonpositive():
-    s = KLL(200)
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        s.extend_weighted(np.array([1.0]), np.array([0]))
-
-
-def test_kll_group_quantiles_pre_compact_matches_band(spark):
-    rng = np.random.RandomState(31)
-    rows = []
-    for g in ("x", "y"):
-        # quantized values: the shape pre_compact exists for
-        vals = np.round(rng.lognormal(2.0, 1.0, 6000), 1)
-        rows += [(g, float(v)) for v in vals]
-    df = spark.createDataFrame(rows, "grp string, value double")
-    out = kll_group_quantiles(
-        df, ["grp"], "value", [0.1, 0.5, 0.9], pre_compact=True
+    df = _frame(
+        spark,
+        [(i, float(v)) for i, c in enumerate(chunks) for v in c],
+        "chunk int, value double",
     )
-    got = {(r["grp"], r["prob"]): r["value"] for r in out.collect()}
-    assert len(got) == 6
-    by_g = {
-        g: np.array([v for (gg, v) in rows if gg == g]) for g in ("x", "y")
-    }
-    for (g, p), est in got.items():
-        assert _rank_err(by_g[g], est, p) <= EPS, (g, p)
+    parts = kll_sketch_table(df, ["chunk"], "value").withColumn("g", F.lit(1))
+    assert parts.count() == 12
+    merged = parts.groupBy("g").agg(F.kll_merge_agg_double("__kll").alias("s"))
+    assert merged.select(F.kll_sketch_get_n_double("s")).first()[0] == full.size
+    for r in kll_table_quantiles(parts.drop("chunk"), ["g"], PROBS).collect():
+        assert _rank_err(full, r["value"], r["prob"]) <= EPS, r["prob"]
 
 
-def test_kll_size_stays_logarithmic():
-    rng = np.random.RandomState(5)
-    s = KLL(200)
-    for _ in range(40):
-        s.extend(rng.uniform(0, 1, 25_000))
-    stored = sum(a.size for a in s.levels)
-    assert s.n == 1_000_000
-    assert stored < 3_000  # O(k log(n/k)) — ~KBs, never the stream
+def test_kll_size_stays_logarithmic(spark):
+    df = spark.range(1_000_000).select(
+        F.lit(1).alias("g"), F.rand(5).alias("value")
+    )
+    r = (
+        kll_sketch_table(df, ["g"], "value")
+        .select(
+            F.kll_sketch_get_n_double("__kll").alias("n"),
+            F.octet_length("__kll").alias("bytes"),
+        )
+        .first()
+    )
+    assert r["n"] == 1_000_000
+    assert r["bytes"] < 16_000  # O(k log(n/k)) — ~KBs, never the stream
 
 
 def test_kll_group_quantiles_spark(spark):
@@ -163,26 +111,58 @@ def test_kll_group_quantiles_spark(spark):
             rows.append((g, 1, float(x)))
     # nulls/nans must be ignored, not crash
     rows += [("a", 1, None), ("b", 1, float("nan"))]
-    df = spark.createDataFrame(rows, "grp string, sub int, value double")
+    # degenerate groups: all-identical values, one row, n < k (exact:
+    # the smallest value whose rank reaches p*n), and a group holding
+    # only null/NaN values, which gets no rows at all
+    small = rng.uniform(-5, 5, 37)
+    rows += [("same", 1, 7.25)] * 500 + [("one", 1, -3.5)]
+    rows += [("small", 1, float(x)) for x in small]
+    rows += [("small", 1, None), ("small", 1, float("nan"))]
+    rows += [("void", 1, None), ("void", 1, float("nan"))]
+    df = _frame(spark, rows, "grp string, sub int, value double")
     out = kll_group_quantiles(df, ["grp", "sub"], "value", [0.25, 0.5, 0.9])
     got = {(r["grp"], r["sub"], r["prob"]): r["value"] for r in out.collect()}
-    assert len(got) == 9
+    assert len(got) == 18
     by_g = {g: np.array([v for (gg, _, v) in rows if gg == g and v == v and v is not None])
             for g in ("a", "b", "c")}
+    srt = np.sort(small)
     for (g, sub, p), est in got.items():
         assert sub == 1
-        assert _rank_err(by_g[g], est, p) <= EPS, (g, p)
+        if g in by_g:
+            assert _rank_err(by_g[g], est, p) <= EPS, (g, p)
+        elif g == "same":
+            assert est == 7.25
+        elif g == "one":
+            assert est == -3.5
+        else:
+            assert est == srt[math.ceil(p * srt.size) - 1], (p, est)
+
+
+def test_kll_empty_input_gives_no_rows(spark):
+    df = local_frame(spark, [], "grp string, value double")
+    assert kll_group_quantiles(df, ["grp"], "value", [0.5]).collect() == []
+    assert kll_sketch_table(df, ["grp"], "value").collect() == []
+
+
+def test_kll_table_refuses_retired_python_format(spark):
+    """A table persisted by the earlier Python KLL (level arrays, no
+    DataSketches binary) must raise a clear error, never be misread."""
+    legacy = local_frame(
+        spark,
+        [("g", 200, 3, [1.0, 2.0, 3.0], [0, 0, 0], 0)],
+        "grp string, __k int, __n bigint, __items array<double>, "
+        "__lvls array<int>, __par bigint",
+    )
+    with pytest.raises(ValueError, match="retired Python KLL format"):
+        kll_table_quantiles(legacy, ["grp"], [0.5])
+    with pytest.raises(ValueError, match="__kll"):
+        kll_table_quantiles(legacy.select("grp"), ["grp"], [0.5])
 
 
 def test_kll_sketch_table_rollup_across_days(spark, tmp_path):
     """The 100TB rollup contract: per-day sketch tables persisted to
     parquet, read back, unioned, and merged must give band-valid
     quantiles for the WHOLE period without re-reading any raw rows."""
-    from finlogic_spark.operators.sketch import (
-        kll_sketch_table,
-        kll_table_quantiles,
-    )
-
     rng = np.random.RandomState(41)
     days = []
     for d in range(5):

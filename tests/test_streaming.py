@@ -805,10 +805,10 @@ def test_parquet_sink_refuses_stale_path(spark, sf_dir, tmp_path):
 
 
 def test_stream_kll_state_carries_across_batches(spark, tmp_path):
-    """KLL sketch as keyed streaming state: three files -> three
+    """KLL sketch as streaming aggregate state: three files -> three
     micro-batches; the final emission per key must reflect ALL rows
-    (state round-trips the compactor arrays through the state store)
-    and land inside the exact rank band."""
+    (the sketch round-trips through the state store) and land inside
+    the exact rank band."""
     import numpy as np
 
     from finlogic_spark.streaming import drain_stream_to_df

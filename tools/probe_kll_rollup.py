@@ -6,7 +6,8 @@ without re-reading a single raw row.
 
 Scenario at sf100 (100M event rows split into 7 equal time slices):
 - daily_build_s: cost of one day's sketch-table build+persist (the
-  incremental pipeline's recurring cost; pre_compact path).
+  incremental pipeline's recurring cost; a DataSketches build over
+  the day's raw rows).
 - rollup_merge_s: union the 7 persisted sketch tables and extract
   week percentiles — the query a dashboard runs; reads KBs.
 - day_arrival_s: day 7 raw build + merge with 6 stored sketches —
@@ -69,9 +70,9 @@ def main() -> int:
     for d in range(7):
         day = base.filter(F.col("__day") == d).select("event_type", "value")
         t0 = time.perf_counter()
-        kll_sketch_table(
-            day, ["event_type"], "value", pre_compact=True
-        ).write.mode("overwrite").parquet(os.path.join(root, f"day={d}"))
+        kll_sketch_table(day, ["event_type"], "value").write.mode(
+            "overwrite"
+        ).parquet(os.path.join(root, f"day={d}"))
         build_times.append(time.perf_counter() - t0)
     out["daily_build_s_median"] = round(sorted(build_times)[3], 2)
     out["sketch_bytes"] = sum(
@@ -100,7 +101,6 @@ def main() -> int:
             base.filter(F.col("__day") == 6).select("event_type", "value"),
             ["event_type"],
             "value",
-            pre_compact=True,
         )
         stored = spark.read.parquet(
             *[os.path.join(root, f"day={d}") for d in range(6)]

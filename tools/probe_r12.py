@@ -466,8 +466,7 @@ def probe_rollup(spark, out, sf100, runs, timeout):
         )
 
     def build_daily():
-        noop(kll_sketch_table(h_day(), ["day", "event_type"], "value",
-                              weight_col="__c"))
+        noop(kll_sketch_table(base, ["day", "event_type"], "value"))
 
     def validation_only():
         # the band report fed by exact values — the part of the query
@@ -478,9 +477,9 @@ def probe_rollup(spark, out, sf100, runs, timeout):
         noop(hist.groupBy("event_type").agg(F.count(F.lit(1)).alias("n")))
 
     daily_path = tempfile.mkdtemp(prefix="kllrollup_") + "/daily"
-    kll_sketch_table(
-        h_day(), ["day", "event_type"], "value", weight_col="__c"
-    ).write.mode("overwrite").parquet(daily_path)
+    kll_sketch_table(base, ["day", "event_type"], "value").write.mode(
+        "overwrite"
+    ).parquet(daily_path)
 
     def serve_window():
         stored = spark.read.parquet(daily_path)

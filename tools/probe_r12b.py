@@ -378,8 +378,8 @@ def main() -> int:
         # kmv production path: sketch build + pair estimator, no exact
         # self-join validation branch
         from finlogic_spark.operators.distinct_sketch import (
-            kmv_pair_overlap,
-            kmv_sketch_table,
+            theta_pair_overlap,
+            theta_sketch_table,
         )
 
         eu = e.filter(F.col("user_id").isNotNull()).select(
@@ -388,8 +388,8 @@ def main() -> int:
 
         def kmv_production():
             _drop_persisted(spark)
-            sk = kmv_sketch_table(eu, ["event_type"], "user_id", k=4096)
-            noop(kmv_pair_overlap(sk, "event_type"))
+            sk = theta_sketch_table(eu, ["event_type"], "user_id", lg_nom_entries=12)
+            noop(theta_pair_overlap(sk, "event_type"))
 
         if do_kmv:
             t = timed(kmv_production, runs)

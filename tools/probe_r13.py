@@ -64,16 +64,16 @@ def probe_kmv(out, sf100, runs):
     from pyspark.sql import functions as F
 
     from finlogic_spark.operators.distinct_sketch import (
-        kmv_pair_overlap,
-        kmv_sketch_table,
+        theta_pair_overlap,
+        theta_sketch_table,
     )
 
     e = SPARK.read.parquet(f"{sf100}/events.parquet")
     eu = e.filter(F.col("user_id").isNotNull()).select("event_type", "user_id")
 
     def production():
-        noop(kmv_pair_overlap(
-            kmv_sketch_table(eu, ["event_type"], "user_id", k=4096),
+        noop(theta_pair_overlap(
+            theta_sketch_table(eu, ["event_type"], "user_id", lg_nom_entries=12),
             "event_type",
         ))
 
@@ -123,8 +123,8 @@ def probe_kmv(out, sf100, runs):
     pairs = SPARK.read.parquet(xpath)
 
     def cross_production():
-        noop(kmv_pair_overlap(
-            kmv_sketch_table(pairs, ["grp"], "user_id", k=4096), "grp"
+        noop(theta_pair_overlap(
+            theta_sketch_table(pairs, ["grp"], "user_id", lg_nom_entries=12), "grp"
         ))
 
     t = timed(cross_production, runs)

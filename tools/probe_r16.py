@@ -837,16 +837,16 @@ def sketch_exact_subtrees(out: dict) -> None:
 
     def kmv(ckpt):
         from finlogic_spark.operators.distinct_sketch import (
-            kmv_pair_overlap,
-            kmv_sketch_table,
+            theta_pair_overlap,
+            theta_sketch_table,
         )
 
         e = dq._t(spark, SF_DIR, "events").filter(F.col("user_id").isNotNull())
-        sk = kmv_sketch_table(
+        sk = theta_sketch_table(
             e.select("event_type", "user_id"), ["event_type"], "user_id",
-            k=4096,
+            lg_nom_entries=12,
         )
-        est = kmv_pair_overlap(sk, "event_type", out_col="approx_overlap")
+        est = theta_pair_overlap(sk, "event_type", out_col="approx_overlap")
         u = e.select("event_type", "user_id").distinct()
         if ckpt:
             u = u.localCheckpoint(eager=False, storageLevel=_S)

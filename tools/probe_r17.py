@@ -946,63 +946,6 @@ def bpe_shingle_onepass(out: dict) -> None:
     print(json.dumps(out), flush=True)
 
 
-def kll_rollup_decompose(out: dict) -> None:
-    """events_kll_rollup (3.5 s, largest untouched non-adjudicated
-    row): attribute between the h_day histogram build, the per-(day,
-    type) sketch table (mapInPandas partials + applyInPandas merge),
-    the cross-day merge/extract, and the band report — decides whether
-    anything beyond job floors is on the table (the pipeline already
-    shares the checkpointed histogram across all three consumers)."""
-    from pyspark.storagelevel import StorageLevel
-    from pyspark.sql import functions as F
-
-    from finlogic_spark.operators.sketch import (
-        kll_sketch_table,
-        kll_table_quantiles,
-    )
-
-    spark = get_spark("probe-r17")
-    sc = spark.sparkContext
-
-    def h_day():
-        e = dq._t(spark, SF_DIR, "events")
-        v = F.col("value")
-        base = e.filter(v.isNotNull() & ~F.isnan(v)).select(
-            F.to_date("ts").alias("day"), "event_type", "value"
-        )
-        return base.groupBy("day", "event_type", "value").agg(
-            F.count(F.lit(1)).alias("__c")
-        )
-
-    def daily():
-        return kll_sketch_table(
-            h_day().localCheckpoint(
-                eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK
-            ),
-            ["day", "event_type"],
-            "value",
-            weight_col="__c",
-        )
-
-    def est():
-        return kll_table_quantiles(
-            daily().drop("day"), ["event_type"], [0.5, 0.99]
-        )
-
-    stages = {
-        "h_day": lambda: h_day(),
-        "daily_sketch_table": daily,
-        "est_quantiles": est,
-        "full_query": lambda: dq.QUERIES["events_kll_rollup"](
-            spark, SF_DIR
-        ),
-    }
-    for label, mk in stages.items():
-        sc.setJobDescription(f"kll_rollup: {label}")
-        out[label] = _time(lambda: _noop(mk()))
-        print(label, out[label], flush=True)
-
-
 def neardup_bucketpairs(out: dict) -> None:
     """emb_cosine_neardup: cosine_neardup_pairs self-joins each
     table's bucket assignment (a_side x b_side on (__tbl, __bucket)) —
@@ -1092,7 +1035,6 @@ PROBES = {
     "ngram_jaccard_reuse": ngram_jaccard_reuse,
     "hybrid_decompose": hybrid_decompose,
     "bpe_shingle_onepass": bpe_shingle_onepass,
-    "kll_rollup_decompose": kll_rollup_decompose,
     "neardup_bucketpairs": neardup_bucketpairs,
 }
 

@@ -15,12 +15,11 @@ numbers read back from the StreamingQuery progress log:
   i.e. excluding batch 0 which pays codegen + state-store open)
 - input rows/s sustained across the run
 - state rows (= live keys) and state-store bytes, total and per key
-- the same stream through a pure-JVM groupBy().approx_percentile
-  update-mode aggregate — the "is Arrow->Python the bottleneck"
-  comparison the verdict asks for. (Its state is the percentile
-  digest in the JVM state store; it cannot be persisted/merged with
-  the batch sketch tables, which is why the KLL path remains the
-  primary tier — see streaming/stateful.py docstring.)
+- the same stream through groupBy().approx_percentile, Spark's other
+  update-mode percentile aggregate, for comparison. Its state is the
+  percentile digest, which cannot be persisted or merged with the
+  batch sketch tables; kll_quantiles_stream keeps the same
+  DataSketches KLL binary the batch tables store.
 
 Usage: python tools/probe_stream_kll.py [--json out.json]
        [--batches N] [sf_dir]
