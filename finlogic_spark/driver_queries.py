@@ -7463,11 +7463,11 @@ def orders_supplier_pagerank(spark, sf_dir):
         F.concat(F.lit("s"), F.col("l_suppkey")).alias("dst"),
     )
     # r17: the symmetrized view is the operator's job now — on the
-    # small-graph regime the funnel ships only the DIRECTED distinct
-    # edges (half the union's rows) and the worker relaxes both
-    # directions; the distributed regimes build the identical union
-    # over the cached directed edges (bit-equal either way, probed
-    # 3.47 -> 2.41 s at sf0.1).
+    # small-graph regime the driver collects only the DIRECTED distinct
+    # edges (half the union's rows) and relaxes both directions; the
+    # distributed regimes build the identical union over the cached
+    # directed edges (bit-equal either way, probed 3.47 -> 2.41 s at
+    # sf0.1).
     ranks = pagerank(edges, iterations=5, symmetrize=True)
     return (
         ranks.filter(F.col("node").startswith("s"))
@@ -8775,7 +8775,7 @@ def doc_curation_learned(spark, sf_dir):
     # sides of the dedup semi-join and again by domain_mix's totals
     # aggregate — Spark shares no subplans, so without a barrier the
     # fold ran 3x. One lazy checkpoint materializes it once (measured
-    # 2.89 -> 2.03 s alternating A/B, tools/probe_r16.py curation_reuse;
+    # 2.89 -> 2.03 s alternating A/B, BENCH_r16_probes.json curation_reuse;
     # the same barrier on doc_curation_pipeline's ded measured a WASH
     # and was left out).
     from pyspark.storagelevel import StorageLevel

@@ -37,22 +37,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-
-def _est_row_bytes(schema: T.StructType) -> int:
-    """Planner-style per-row width estimate (the same fixed per-type
-    defaults Spark's own stats estimation uses when it has no column
-    stats: 20 bytes for a string, the physical width for fixed types)."""
-    widths = {
-        T.BooleanType: 1, T.ByteType: 1, T.ShortType: 2, T.IntegerType: 4,
-        T.FloatType: 4, T.DateType: 4, T.LongType: 8, T.DoubleType: 8,
-        T.TimestampType: 8,
-    }
-    total = 0
-    for f in schema.fields:
-        total += widths.get(type(f.dataType), 20)
-    return max(total, 1)
+from finlogic_spark.operators import gate
 
 
 def _pos_sql(key_col: str, i: int, num_bits: int) -> str:
@@ -176,7 +162,6 @@ def bloom_pruned_join(
     num_bits: int | None = None,
     num_hashes: int = 5,
     bits_per_key: int = 10,
-    auto_bypass: bool = True,
 ) -> DataFrame:
     """Inner equi-join with the probe side bloom-reduced first. Result
     is identical to the plain inner join — the filter only removes rows
@@ -195,34 +180,25 @@ def bloom_pruned_join(
     — the same materialized rows feed the bit-set build and the final
     exact join — instead of once per consumer.
 
-    ``auto_bypass`` (default on, auto-sized path only): when the build
-    side fits under the session's
-    ``spark.sql.autoBroadcastJoinThreshold``, SKIP the bloom and
-    return the plain join. Two tiers: (1) a ZERO-JOB fast path — if
+    Broadcast bypass (auto-sized path only): when the build side fits
+    under the session's ``spark.sql.autoBroadcastJoinThreshold``, the
+    bloom is skipped and the plain join returned. In the broadcast
+    regime the exact join already prunes probe rows inside the scan
+    stage — the bloom is pure overhead there (measured sf100
+    decomposition: plain broadcast join 1.28 s, bloom adds +1.16 s of
+    per-row hashing for zero extra pruning), while in the shuffle
+    regime the bloom wins 2.35x (6.99 s -> 2.98 s) by shrinking the
+    probe's exchange. Two tiers decide: (1) a ZERO-JOB fast path — if
     Catalyst's optimized-plan stats already put the build side under
-    the threshold, the plain join broadcasts on those same stats, so
-    it is returned untouched, no checkpoint, no count (this was ~0.34 s
-    of pure decision overhead at sf100 when the answer was "do
-    nothing"); (2) otherwise ONE measurement job over the
-    un-checkpointed dim — row count + MEASURED string/binary bytes
-    (``octet_length`` sums on top of the planner's fixed widths; a
-    flat per-string default would let a wide-string dim pass the
-    threshold on paper and then force a driver-heavy broadcast via the
-    explicit hint). A bypassed dim is never materialized: the bypass
-    branch costs exactly one pushdown-filtered dim scan over the bare
-    plain join, and only the bloom branch checkpoints (where
-    scan-once across build+join pays). In the
-    broadcast regime the exact join already prunes probe rows inside
-    the scan stage for free — the bloom is pure overhead there
-    (measured sf100 decomposition: plain broadcast join 1.28 s, bloom
-    adds +1.16 s of per-row hashing for zero extra pruning), while in
-    the shuffle regime (dim too big to broadcast) the bloom wins 2.35x
-    (6.99 s -> 2.98 s) by shrinking the probe's exchange. The counted
-    cardinality the auto-sizer already produces IS the regime signal,
-    so the decision costs nothing extra. Set ``auto_bypass=False`` to
-    force the filter (e.g. to measure it, or when the probe scan is so
-    expensive that even a broadcast-regime prune pays for itself
-    upstream of a multi-join pipeline).
+    the threshold, the plain join broadcasts on those same stats, so it
+    is returned untouched (this was ~0.34 s of pure decision overhead
+    at sf100 when the answer was "do nothing"); (2) otherwise the
+    measurement job of ``operators.gate.measure`` over the
+    un-checkpointed dim (row count + measured string/binary bytes),
+    whose count also sizes the filter. A bypassed dim is never
+    materialized. The threshold is the only switch: with broadcasting
+    off (``<= 0``) or a dim larger than the threshold, the auto-sized
+    join gets the filter.
 
     Raises on probe/build key dtype mismatch: xxhash64 is
     type-sensitive, so hashing e.g. an int probe key against a bigint
@@ -238,26 +214,19 @@ def bloom_pruned_join(
             "so this would silently produce false negatives — cast one "
             "side to the other's type first"
         )
-    if num_bits is None:
-        from finlogic_spark.sources import parse_size_bytes
 
-        threshold = parse_size_bytes(
-            build.sparkSession.conf.get(
-                "spark.sql.autoBroadcastJoinThreshold", "10485760"
-            ),
-            default=10 * 1024 * 1024,
-        )
-        if auto_bypass and 0 < threshold:
-            # Zero-job fast path: if Catalyst's own optimized-plan
-            # stats already put the build side under the broadcast
-            # threshold, a PLAIN join broadcasts it — on exactly these
-            # stats — so return the plain join untouched. This is what
-            # the r13 bench flagged: the bypassed path still paid
-            # ~0.34 s of localCheckpoint+count when the decision was
-            # "do nothing". Only a <=-threshold stats value short-
-            # circuits; unknown/huge stats (joins, checkpoints —
-            # LogicalRDD reports defaults) fall through to the
-            # measured checkpoint+count decision below.
+    def join(p: DataFrame, b: DataFrame) -> DataFrame:
+        if probe_key == build_key:
+            return p.join(b, [probe_key])
+        return p.join(b, F.col(probe_key) == F.col(build_key))
+
+    if num_bits is None:
+        threshold = gate.broadcast_threshold(build.sparkSession)
+        if 0 < threshold:
+            # Zero-job fast path. Only a <=-threshold stats value
+            # short-circuits; unknown/huge stats (joins, checkpoints —
+            # LogicalRDD reports defaults) fall through to the measured
+            # decision below.
             stats_bytes = int(
                 str(
                     build._jdf.queryExecution()
@@ -267,63 +236,20 @@ def bloom_pruned_join(
                 )
             )
             if stats_bytes <= threshold:
-                if probe_key == build_key:
-                    return probe.join(build, [probe_key])
-                return probe.join(
-                    build, F.col(probe_key) == F.col(build_key)
-                )
-        # One measurement job over the UN-checkpointed dim: row count +
-        # MEASURED variable-width bytes (the old flat 20-bytes-per-
-        # string planner default let a wide-string dim pass n*width <=
-        # threshold while its real broadcast size was far above it —
-        # the explicit hint below would then force the very driver-
-        # heavy broadcast the threshold exists to prevent). Measuring
-        # BEFORE checkpointing keeps the bypass branch — the common
-        # case — free of any materialization: its total cost over the
-        # bare plain join is one pushdown-filtered dim scan. Only the
-        # bloom branch checkpoints, where scan-once across build+join
-        # actually pays (the dim is small by this operator's contract,
-        # so its one extra scan there is noise).
-        # the byte measurement only feeds the bypass decision — with
-        # auto_bypass=False the only thing this job must produce is the
-        # row count for the bloom sizer, so the per-string octet sums
-        # would be dead work (ADVICE r14)
-        var_cols = (
-            [
-                f.name
-                for f in build.schema.fields
-                if isinstance(f.dataType, (T.StringType, T.BinaryType))
-            ]
-            if auto_bypass
-            else []
-        )
-        aggs = [F.count(F.lit(1)).alias("__n")] + [
-            F.sum(F.octet_length(F.col(c))).alias(f"__b{i}")
-            for i, c in enumerate(var_cols)
-        ]
-        sized = build.agg(*aggs).collect()[0]
-        n = sized["__n"] or 0
-        var_bytes = sum(
-            sized[f"__b{i}"] or 0 for i in range(len(var_cols))
-        )
-        est_bytes = n * _est_row_bytes(build.schema) + var_bytes
-        if auto_bypass and 0 < threshold and est_bytes <= threshold:
-            # broadcast regime: the exact broadcast hash join prunes
-            # in the scan stage already — skip the redundant k-hash
-            # filter pass over the probe. The hint is explicit because
-            # the dim's plan stats said "too big" (or unknown) while
-            # the measurement says it fits — without the hint the
-            # static planner would SMJ first and leave the fix to AQE
-            # after the probe's shuffle files are written.
-            if probe_key == build_key:
-                return probe.join(F.broadcast(build), [probe_key])
-            return probe.join(
-                F.broadcast(build), F.col(probe_key) == F.col(build_key)
-            )
+                return join(probe, build)
+        # Measured BEFORE checkpointing, so the bypass branch — the
+        # common case — costs one pushdown-filtered dim scan over the
+        # bare plain join. Only the bloom branch checkpoints, where
+        # scan-once across build+join pays.
+        n, est_bytes = gate.measure(build, threshold)
+        if 0 < threshold and est_bytes <= threshold:
+            # The hint is explicit because the dim's plan stats said
+            # "too big" (or unknown) while the measurement says it fits
+            # — without it the static planner would SMJ first and leave
+            # the fix to AQE after the probe's shuffle files are
+            # written.
+            return join(probe, F.broadcast(build))
         build = build.localCheckpoint(eager=True)
         num_bits = 1 << max(10, (bits_per_key * max(n, 1) - 1).bit_length())
     bloom = build_bloom_filter(build, build_key, num_bits, num_hashes)
-    pruned = bloom_prune(probe, probe_key, bloom, num_bits, num_hashes)
-    if probe_key == build_key:
-        return pruned.join(build, [probe_key])
-    return pruned.join(build, F.col(probe_key) == F.col(build_key))
+    return join(bloom_prune(probe, probe_key, bloom, num_bits, num_hashes), build)

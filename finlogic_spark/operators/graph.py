@@ -30,8 +30,7 @@ Two interchangeable algorithms behind one signature:
 Scale notes (both algorithms):
 - Per round: shuffles keyed by vertex id with map-side partial mins —
   no broadcast of anything graph-sized, no driver collect. (Only the
-  'auto' small-graph regime collects, under its byte gate; see
-  ``connected_components``.)
+  small-graph regime collects, under its byte gate; see below.)
 - ``localCheckpoint(eager=False)`` truncates per-iteration lineage —
   without it the plan doubles every round and analysis cost explodes
   by round ~10; the convergence certificate's agg is the one action
@@ -43,6 +42,19 @@ Scale notes (both algorithms):
   the except makes it sufficient). Id sums are computed as exact
   (high-20-bits, low-20-bits) pairs so billion-row edge sets with
   ~1e12 ids cannot overflow int64 (_sum_pair).
+
+Small graphs (connected components in 'auto' mode and ``pagerank``):
+one measurement job (``operators.gate.measure``: edge count + measured
+string/binary bytes) sizes the edge list, and when it is at most
+``SMALL_GRAPH_MAX_BYTES`` the whole computation runs ON THE DRIVER.
+The edges come back as one Arrow table, ``_encode_edges`` turns their
+endpoints into dense int64 indices, an exact numpy loop does every
+round, and the result returns as a local relation. A distributed round
+pays a fixed price (join + aggregate + checkpoint jobs) that dwarfs the
+arithmetic at this size, and a Python worker task would pay its own
+start-up on top (README "The Python-worker tax"); the driver pays
+neither. Both kernels are bit-identical to their distributed rounds
+(one exact answer exists; pinned cross-regime in tests).
 """
 
 from __future__ import annotations
@@ -51,12 +63,21 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from finlogic_spark.operators import gate
+
 # Every per-round materialization (edge cache, label/edge checkpoints)
 # uses serialized MEMORY_AND_DISK: a 100M+-edge graph's working set
 # must SPILL when it outgrows the heap, not OOM the executor — found
 # by measurement at the sf100 probe (117.9M candidate pairs; the
 # deserialized default filled an 8 GiB heap during round 3).
 _SPILL = StorageLevel.MEMORY_AND_DISK
+
+# Byte gate of the driver-side small-graph regimes. Driver memory peaks
+# at about 4x the gated bytes (the Arrow table, its dictionary encoding
+# and the int64 index arrays), so this constant is what bounds the
+# driver heap and the client process at any input scale. 0 sends every
+# graph to the distributed rounds.
+SMALL_GRAPH_MAX_BYTES = 128 << 20
 
 
 def connected_components(
@@ -70,7 +91,6 @@ def connected_components(
     label_rounds: int = 8,
     stats: dict | None = None,
     star_edge_threshold: int = 10_000_000,
-    small_graph_max_bytes: int = 128 << 20,
 ) -> DataFrame:
     """Label each vertex with the smallest vertex id reachable from it
     (= its connected component's canonical representative).
@@ -97,20 +117,14 @@ def connected_components(
     more than one label); a warning is emitted in that case so budget
     exhaustion is never silent.
 
-    ``small_graph_max_bytes``: in 'auto' mode, when the DIRECTED edge
-    list measures under this many bytes (measured octet sums for
-    string/binary ids + planner fixed widths — the same job that
-    materializes the edge checkpoint), the whole label propagation runs
-    ON THE DRIVER: the edges come back as one Arrow table, a vectorized
-    min-label/pointer-jumping loop labels them (``_cc_on_driver``), and
-    the labels return as a local relation. Driver memory peaks at about
-    4× the gated bytes (the Arrow table, its dictionary encoding and the
-    int64 index arrays), so the gate bounds the driver heap as well as
-    the Python process. Bit-identical output (min reachable id per
-    component has exactly one answer; pinned cross-regime in tests).
-    ``stats['auto_choice']`` reads 'single-job'. 0 disables; explicit
-    'label'/'star' also bypass it (callers asking for a specific
-    distributed algorithm get it).
+    Small graphs: in 'auto' mode, when the DIRECTED edge list measures
+    at most ``SMALL_GRAPH_MAX_BYTES`` (the gate job also materializes
+    the edge checkpoint), the label propagation runs on the driver
+    (``_cc_on_driver``; module docstring). ``stats['auto_choice']``
+    reads 'single-job' then. Explicit 'label'/'star' bypass the gate
+    (callers asking for a specific distributed algorithm get it). A
+    null endpoint is not a vertex: the driver regime drops such edges
+    (connectivity among non-null ids is unchanged).
     """
     if algorithm not in ("auto", "label", "star"):
         raise ValueError(
@@ -138,40 +152,17 @@ def connected_components(
         # this materialization anyway) and pick the regime: driver-side
         # under the measured byte gate, else label-first/star-first by
         # edge count (see docstring).
-        from pyspark.sql import types as T
-
-        var_cols = [
-            f.name
-            for f in e0.schema.fields
-            if isinstance(f.dataType, (T.StringType, T.BinaryType))
-        ]
-        measure = [F.count(F.lit(1)).alias("__n")]
-        if small_graph_max_bytes > 0:
-            measure += [
-                F.sum(F.octet_length(F.col(c))).alias(f"__b{i}")
-                for i, c in enumerate(var_cols)
-            ]
-        sized = e0.agg(*measure).collect()[0]
-        n_edges = sized["__n"] or 0
-        if small_graph_max_bytes > 0:
-            from finlogic_spark.operators.bloomjoin import _est_row_bytes
-
-            var_bytes = sum(
-                sized[f"__b{i}"] or 0 for i in range(len(var_cols))
+        n_edges, est_bytes = gate.measure(e0, SMALL_GRAPH_MAX_BYTES)
+        if 0 < SMALL_GRAPH_MAX_BYTES and est_bytes <= SMALL_GRAPH_MAX_BYTES:
+            stats["auto_choice"] = "single-job"
+            stats["converged"] = True
+            labels = _cc_on_driver(e0)
+            isolated = (
+                vertices.select(F.col(id_col).alias("id"))
+                .join(labels.select("id"), "id", "left_anti")
+                .withColumn("label", F.col("id"))
             )
-            if (
-                n_edges * _est_row_bytes(e0.schema) + var_bytes
-                <= small_graph_max_bytes
-            ):
-                stats["auto_choice"] = "single-job"
-                stats["converged"] = True
-                labels = _cc_on_driver(e0)
-                isolated = (
-                    vertices.select(F.col(id_col).alias("id"))
-                    .join(labels.select("id"), "id", "left_anti")
-                    .withColumn("label", F.col("id"))
-                )
-                return labels.unionByName(isolated)
+            return labels.unionByName(isolated)
         if n_edges >= star_edge_threshold:
             algorithm = "star"
             stats["auto_choice"] = "star-first"
@@ -253,20 +244,39 @@ def connected_components(
     return labels.unionByName(isolated)
 
 
+def _encode_edges(e: DataFrame, a: str, b: str):
+    """Edge list ``e`` (endpoint columns ``a``, ``b``) on the driver as
+    ``(nodes, ai, bi)``: ``nodes`` the Arrow array of distinct endpoint
+    ids, ``ai``/``bi`` per-edge int64 indices into it. One Spark job
+    (``toArrow``); the upstream pipeline stays parallel.
+
+    Edges with a null endpoint are dropped: a null is not a vertex (it
+    never joins in the distributed rounds either), and Arrow would put
+    nulls into the dictionary indices. The id → index mapping is Arrow's
+    C-level hash ``dictionary_encode`` (order of appearance): for the
+    sf0.1 PageRank graph's 2.2M string endpoints, pandas factorizing
+    cost ~0.4 s and np.unique's sort 3.1 s."""
+    import numpy as np
+    import pyarrow as pa
+
+    t = e.filter(F.col(a).isNotNull() & F.col(b).isNotNull()).toArrow()
+    ends = pa.chunked_array(
+        t.column(a).chunks + t.column(b).chunks, t.schema.field(a).type
+    )
+    enc = ends.combine_chunks().dictionary_encode()
+    idx = enc.indices.to_numpy().astype(np.int64, copy=False)
+    return enc.dictionary, idx[: t.num_rows], idx[t.num_rows :]
+
+
 def _cc_on_driver(e0: DataFrame) -> DataFrame:
-    """All connected-components rounds on the driver — the small-graph
-    regime behind ``connected_components(small_graph_max_bytes=...)``.
+    """All connected-components rounds on the driver (the small-graph
+    regime of ``connected_components``; module docstring). A vectorized
+    min-label propagation with pointer jumping labels the encoded
+    DIRECTED edge list:
 
-    The distributed label path pays a fixed per-round price (join +
-    aggregate + certificate job) that dwarfs the label arithmetic on a
-    small graph. When the measured edge bytes fit the caller's gate,
-    the checkpointed DIRECTED edge list comes back as one Arrow table
-    (one job; the upstream pair pipeline stayed parallel) and a
-    vectorized min-label propagation with pointer jumping labels it:
-
-    - node ids (any orderable type) are dictionary-encoded by Arrow,
-      then ranked via ``sort_indices`` so comparing RANKS is comparing
-      values (utf8 sort order == Spark's binary string min ordering);
+    - node ids (any orderable type) are ranked via ``sort_indices`` so
+      comparing RANKS is comparing values (utf8 sort order == Spark's
+      binary string min ordering);
     - each round relaxes labels across edges both ways
       (``np.minimum.at``) and then pointer-jumps
       (``lab = min(lab, lab[node_of_rank(lab)])``) — the hash-to-min
@@ -276,11 +286,7 @@ def _cc_on_driver(e0: DataFrame) -> DataFrame:
 
     Output: (id, label) for every edge ENDPOINT as a local relation,
     label = min reachable id — bit-identical to the distributed rounds
-    (one answer exists; pinned cross-regime in
-    tests/test_operators.py). Running on the driver, not in a
-    ``repartition(1)`` Python-worker task, saves that shuffle, an eager
-    checkpoint job and the worker's per-task start-up (README "The
-    Python-worker tax")."""
+    (pinned cross-regime in tests/test_operators.py)."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -290,16 +296,7 @@ def _cc_on_driver(e0: DataFrame) -> DataFrame:
     out_schema = T.StructType(
         [T.StructField("id", id_type, False), T.StructField("label", id_type, False)]
     )
-    # ADVICE r16: a null endpoint would put nulls into enc.indices and
-    # to_numpy() (zero-copy) raises. A null endpoint cannot join
-    # anything in the distributed regime either (join semantics drop
-    # it), so filter first — connectivity among non-null ids is
-    # unaffected.
-    t = e0.filter(F.col("s").isNotNull() & F.col("d").isNotNull()).toArrow()
-    s = t.column("s").combine_chunks()
-    d = t.column("d").combine_chunks()
-    enc = pa.chunked_array([s, d]).combine_chunks().dictionary_encode()
-    nodes = enc.dictionary
+    nodes, si, di = _encode_edges(e0, "s", "d")
     n = len(nodes)
     labels = nodes
     if n:
@@ -307,9 +304,6 @@ def _cc_on_driver(e0: DataFrame) -> DataFrame:
         order = pc.sort_indices(nodes).to_numpy().astype(np.int64, copy=False)
         rank_of = np.empty(n, dtype=np.int64)
         rank_of[order] = np.arange(n, dtype=np.int64)
-        idx = enc.indices.to_numpy().astype(np.int64, copy=False)
-        m = len(s)
-        si, di = idx[:m], idx[m:]
         lab = rank_of.copy()
         while True:
             old = lab
@@ -491,7 +485,6 @@ def pagerank(
     symmetrize: bool = False,
     round_table_dir: str | None = None,
     resume: bool = False,
-    small_graph_max_bytes: int = 128 << 20,
     stats: dict | None = None,
 ) -> DataFrame:
     """PageRank in exact integer micro-units (engine-scope addition:
@@ -544,38 +537,37 @@ def pagerank(
     refuses tables written under different parameters or a different
     edge set instead of silently continuing from wrong ranks.
 
-    ``small_graph_max_bytes`` (in-memory variant only): when the
-    distinct edge list itself is at most this many estimated bytes —
-    i.e. the WHOLE graph is broadcast-sized, not just the rank table —
-    all rounds collapse into ONE Spark job (``_pagerank_single_job``:
-    repartition(1) + an exact-int64 numpy recurrence in mapInArrow).
-    The multi-round plan's fixed price (~2 jobs/round of
-    checkpoint+join scheduling) dwarfs the arithmetic at this size:
-    the sf0.1 bench graph (~600k edges) spent ~4.5 s running ~11
-    materialization jobs whose actual integer math is milliseconds.
-    Bit-identical by construction (non-negative floor division ==
-    DIV; np.add.at is exact int64) and pinned cross-regime in
-    tests/test_pagerank_bucketize.py. Set 0 to force the distributed
-    rounds; disabled when broadcasting is off
-    (autoBroadcastJoinThreshold <= 0 — that session-level "treat
-    everything as big" signal governs this regime too) and on the
-    durable-rounds path (single-job has no per-round tables to
-    restart from).
+    Small graphs (in-memory variant only): when the distinct edge list
+    measures at most ``SMALL_GRAPH_MAX_BYTES`` — i.e. the WHOLE graph
+    is small, not just the rank table — every round runs on the driver
+    (``_pagerank_on_driver``; module docstring): one job fills the edge
+    cache and measures it, one ``toArrow`` job collects it, and the
+    exact int64 recurrence runs in numpy. The multi-round plan's fixed
+    price (~2 jobs/round of checkpoint+join scheduling) dwarfs the
+    arithmetic at this size. Bit-identical by construction
+    (non-negative floor division == DIV; np.add.at is exact int64) and
+    pinned cross-regime in tests/test_pagerank_bucketize.py. Skipped
+    when broadcasting is off (autoBroadcastJoinThreshold <= 0 — that
+    session-level "treat everything as big" signal governs this regime
+    too) and on the durable-rounds path (the driver regime has no
+    per-round tables to restart from).
 
-    ``symmetrize`` (r17): rank the UNDIRECTED view of the edge list —
-    exactly ``pagerank(distinct(e) UNION swap(distinct(e)))`` with
-    non-null endpoints, but the symmetrization never materializes on
-    the small-graph path: the funnel ships only the DIRECTED distinct
-    edges (half the rows of the union) and the Arrow worker relaxes
-    each unordered pair in both directions (degree = both-direction
-    bincount; a pair present in BOTH input orientations and self-loops
-    are collapsed/relaxed exactly once per bi-edge via an unordered
-    np.unique, matching the union's distinct). Bit-identical to the
-    caller-side union (pinned cross-shape in tests). On the
-    distributed regimes the union is built over the persisted directed
-    cache, so the upstream edge pipeline still runs once. Callers with
-    possibly-null endpoints should filter first (a null never joins in
-    the distributed regimes; the Arrow funnel cannot represent it).
+    ``symmetrize``: rank the UNDIRECTED view of the edge list —
+    exactly ``pagerank(distinct(e) UNION swap(distinct(e)))``, but the
+    symmetrization never materializes on the small-graph path: the
+    driver collects only the DIRECTED distinct edges (half the rows of
+    the union) and relaxes each unordered pair in both directions
+    (degree = both-direction bincount; a pair present in BOTH input
+    orientations and self-loops are relaxed exactly once per bi-edge
+    via an unordered np.unique, matching the union's distinct).
+    Bit-identical to the caller-side union (pinned cross-shape in
+    tests). On the distributed regimes the union is built over the
+    persisted directed cache, so the upstream edge pipeline still runs
+    once.
+
+    A null endpoint is not a vertex: edges with a null ``src_col`` or
+    ``dst_col`` are dropped on entry, in every regime (the policy of
+    ``connected_components``' driver regime).
 
     ``stats``: optional dict populated with the chosen ``regime``
     (single_job / broadcast / smj) and the measured counts that drove
@@ -583,9 +575,11 @@ def pagerank(
     connected_components."""
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).distinct()
+    e = (
+        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+        .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
+        .distinct()
+    )
     # Regime decision: if the rank table (|V| rows) fits under the
     # broadcast threshold, every round's join gets an EXPLICIT
     # F.broadcast hint on the rank side (from round 2 on, ranks come
@@ -612,63 +606,21 @@ def pagerank(
     # edge pipeline — a join at bench scale — once for the count and
     # once for the cache fill; the r13 A/B priced that decision at
     # ~0.7 s on a sub-3 s query).
-    from finlogic_spark.operators.bloomjoin import _est_row_bytes
-    from finlogic_spark.sources import parse_size_bytes
-
-    threshold = parse_size_bytes(
-        edges.sparkSession.conf.get(
-            "spark.sql.autoBroadcastJoinThreshold", "10485760"
-        ),
-        default=10 * 1024 * 1024,
-    )
+    threshold = gate.broadcast_threshold(edges.sparkSession)
     ed = e.persist(_SPILL)
-    if (
-        round_table_dir is None
-        and 0 < threshold
-        and small_graph_max_bytes > 0
-    ):
+    if round_table_dir is None and 0 < threshold and 0 < SMALL_GRAPH_MAX_BYTES:
         # Small-graph gate: ONE measurement job over the bare edge
         # cache — this job IS the cache fill the multi-round path pays
-        # anyway (previously triggered by nodes.count(), now split: the
-        # big path's nodes.count() below reads the already-filled
-        # cache). Degrees are NOT joined in for the gate or the
-        # single-job path: the worker has the whole edge list and
-        # bincounts them in exact int64 — the deg groupBy+join cost
-        # ~0.5 s of the 3 s sf0.1 row for a column one numpy call
-        # reproduces. ADVICE r15: the gate sizes string/binary node ids
-        # by MEASURED octet sums (the bloomjoin pattern), not the flat
-        # 20-byte planner default — long ids could otherwise pass the
-        # gate on paper and funnel a much larger edge list through the
-        # repartition(1) task. The fixed per-type widths stay on top as
-        # per-row overhead allowance, same as bloomjoin.
-        from pyspark.sql import types as T
-
-        var_cols = [
-            f.name
-            for f in ed.schema.fields
-            if isinstance(f.dataType, (T.StringType, T.BinaryType))
-        ]
-        sized = ed.agg(
-            F.count(F.lit(1)).alias("__n"),
-            *[
-                F.sum(F.octet_length(F.col(c))).alias(f"__b{i}")
-                for i, c in enumerate(var_cols)
-            ],
-        ).collect()[0]
-        n_edges = sized["__n"] or 0
-        var_bytes = sum(
-            sized[f"__b{i}"] or 0 for i in range(len(var_cols))
-        )
-        if (
-            n_edges * _est_row_bytes(ed.schema) + var_bytes
-            <= small_graph_max_bytes
-        ):
+        # anyway (the big path's nodes.count() below then reads the
+        # filled cache). Degrees are NOT joined in: the driver kernel
+        # bincounts them from the edge list in exact int64.
+        n_edges, est_bytes = gate.measure(ed, SMALL_GRAPH_MAX_BYTES)
+        if est_bytes <= SMALL_GRAPH_MAX_BYTES:
             if stats is not None:
                 stats["regime"] = "single_job"
                 stats["n_edges"] = n_edges
-            out = _pagerank_single_job(
-                ed, iterations, scale, damping_num, damping_den,
-                symmetrize=symmetrize,
+            out = _pagerank_on_driver(
+                ed, iterations, scale, damping_num, damping_den, symmetrize
             )
             ed.unpersist()
             return out
@@ -701,7 +653,7 @@ def pagerank(
     n_nodes = nodes.count()  # fills ed + nodes caches in one lineage
     if ed_dir is not None:
         ed_dir.unpersist()
-    rank_bytes = n_nodes * (_est_row_bytes(nodes.schema) + 8)
+    rank_bytes = n_nodes * (gate.est_row_bytes(nodes.schema) + 8)
     broadcast_ranks = 0 < threshold and rank_bytes <= threshold
     degt = None
     if broadcast_ranks:
@@ -906,131 +858,79 @@ def _durable_round_start(
     return 0
 
 
-def _pagerank_single_job(
+def _pagerank_on_driver(
     ed: DataFrame,
     iterations: int,
     scale: int,
     damping_num: int,
     damping_den: int,
-    symmetrize: bool = False,
+    symmetrize: bool,
 ) -> DataFrame:
-    """All ``iterations`` PageRank rounds in ONE Spark job — the
-    small-graph regime behind ``pagerank(small_graph_max_bytes=...)``.
-
-    The multi-round plan pays a fixed per-round price (checkpoint +
-    join scheduling, ~2 jobs/round) that dwarfs the arithmetic on a
-    small graph: the sf0.1 bench graph (~600k edges) ran ~11
-    materialization jobs for ~4.5 s while the integer math itself is
-    milliseconds. When the distinct-edge cache is broadcast-sized by
-    the caller's explicit gate, the whole power iteration collapses
-    into a single Arrow pass: repartition(1) — the upstream pipeline
-    stays parallel; only the bounded result funnels — then the EXACT
-    int64 recurrence in numpy inside mapInPandas (the justified-Arrow
-    class: a bounded working set fenced by a measured regime gate, the
-    MMR/k-means precedent).
+    """All ``iterations`` PageRank rounds on the driver (the small-graph
+    regime of ``pagerank``; module docstring), over the cached DIRECTED
+    distinct edge list ``ed``; returns (node, rank) as a local relation.
 
     Bit-identical to the distributed rounds: floor division on
     non-negative int64 == Spark's DIV, and inflow accumulates via
     ``np.add.at`` in exact int64 (``np.bincount`` would route through
-    float64 — the wrong class for a value-hash contract). The worker
-    is ``mapInArrow``, not mapInPandas: node ids stay Arrow arrays
-    end-to-end and the node-id → dense-index mapping is Arrow's
-    C-level ``dictionary_encode`` (hash-based, order-of-appearance) —
-    converting the sf0.1 graph's 2.2M string endpoints into pandas
-    objects and factorizing cost ~0.4 s, and np.unique's SORT 3.1 s;
-    the mapping is internal, never emitted, so its order is free to
-    choose. Cross-regime equality is pinned in
-    tests/test_pagerank_bucketize.py and by the DuckDB unrolled-CTE
-    oracle of ``orders_supplier_pagerank``."""
+    float64 — the wrong class for a value-hash contract). Cross-regime
+    equality is pinned in tests/test_pagerank_bucketize.py and by the
+    DuckDB unrolled-CTE oracle of ``orders_supplier_pagerank``."""
+    import numpy as np
+    import pyarrow as pa
     from pyspark.sql import types as T
 
+    nodes, si, di = _encode_edges(ed, "src", "dst")
+    nn = len(nodes)
+    num = np.int64(damping_num)
+    tele = np.int64((damping_den - damping_num) * scale // damping_den)
+    rank = np.full(nn, scale, dtype=np.int64)
+    if symmetrize:
+        # Undirected view of the DIRECTED distinct input: collapse to
+        # unordered unique pairs (so an input carrying BOTH
+        # orientations, or a self-loop, relaxes exactly once per
+        # bi-edge — matching distinct(e UNION swap(e))), then relax
+        # every non-self pair in both directions. Pair packing is safe:
+        # nn <= 2*edges and the byte gate bounds edges far below the
+        # 3e9 packing limit (nn^2 < 2^63).
+        uniq = np.unique(np.minimum(si, di) * np.int64(nn) + np.maximum(si, di))
+        lo = uniq // nn
+        hi = uniq - lo * nn
+        self_m = lo == hi
+        plo, phi, sl = lo[~self_m], hi[~self_m], lo[self_m]
+        counts = (
+            np.bincount(plo, minlength=nn)
+            + np.bincount(phi, minlength=nn)
+            + np.bincount(sl, minlength=nn)
+        )
+        den_lo = np.int64(damping_den) * counts[plo]
+        den_hi = np.int64(damping_den) * counts[phi]
+        den_sl = np.int64(damping_den) * counts[sl]
+        for _ in range(iterations):
+            inflow = np.zeros(nn, dtype=np.int64)
+            np.add.at(inflow, phi, (num * rank[plo]) // den_lo)
+            np.add.at(inflow, plo, (num * rank[phi]) // den_hi)
+            np.add.at(inflow, sl, (num * rank[sl]) // den_sl)
+            rank = tele + inflow
+    else:
+        # out-degrees from the (distinct) edge list itself — exact
+        # int64 counts; the distributed regimes pay a groupBy+join for
+        # this column, here it is one bincount over src codes
+        denom = np.int64(damping_den) * np.bincount(si, minlength=nn)[si]
+        for _ in range(iterations):
+            inflow = np.zeros(nn, dtype=np.int64)
+            np.add.at(inflow, di, (num * rank[si]) // denom)
+            rank = tele + inflow
     out_schema = T.StructType(
         [
             T.StructField("node", ed.schema["src"].dataType),
             T.StructField("rank", T.LongType()),
         ]
     )
-    iters = int(iterations)
-    sc = int(scale)
-    dn = int(damping_num)
-    dd = int(damping_den)
-    sym = bool(symmetrize)
-    teleport = (dd - dn) * sc // dd
-
-    def _run(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        tbls = [pa.Table.from_batches([b]) for b in batches]
-        if not tbls:
-            return
-        t = pa.concat_tables(tbls)
-        src = t.column("src").combine_chunks()
-        dst = t.column("dst").combine_chunks()
-        enc = pa.chunked_array([src, dst]).combine_chunks().dictionary_encode()
-        nodes = enc.dictionary
-        inv = enc.indices.to_numpy().astype(np.int64, copy=False)
-        m = len(src)
-        si, di = inv[:m], inv[m:]
-        nn = len(nodes)
-        num = np.int64(dn)
-        tele = np.int64(teleport)
-        if sym:
-            # Undirected view of the DIRECTED distinct input: collapse
-            # to unordered unique pairs (so an input carrying BOTH
-            # orientations, or a self-loop, relaxes exactly once per
-            # bi-edge — matching distinct(e UNION swap(e))), then relax
-            # every non-self pair in both directions. Pair packing is
-            # safe: nn <= 2*edges and the byte gate bounds edges far
-            # below the 3e9 packing limit (nn^2 < 2^63).
-            lo = np.minimum(si, di)
-            hi = np.maximum(si, di)
-            uniq = np.unique(lo * np.int64(nn) + hi)
-            lo = uniq // nn
-            hi = uniq - lo * nn
-            self_m = lo == hi
-            plo, phi = lo[~self_m], hi[~self_m]
-            sl = lo[self_m]
-            counts = (
-                np.bincount(plo, minlength=nn)
-                + np.bincount(phi, minlength=nn)
-                + np.bincount(sl, minlength=nn)
-            )
-            den_lo = np.int64(dd) * counts[plo]
-            den_hi = np.int64(dd) * counts[phi]
-            den_sl = np.int64(dd) * counts[sl]
-            rank = np.full(nn, sc, dtype=np.int64)
-            for _ in range(iters):
-                inflow = np.zeros(nn, dtype=np.int64)
-                np.add.at(inflow, phi, (num * rank[plo]) // den_lo)
-                np.add.at(inflow, plo, (num * rank[phi]) // den_hi)
-                if sl.size:
-                    np.add.at(inflow, sl, (num * rank[sl]) // den_sl)
-                rank = tele + inflow
-        else:
-            # out-degrees from the (distinct) edge list itself — exact
-            # int64 counts; the distributed regimes pay a groupBy+join
-            # for this column, here it is one bincount over src codes
-            counts = np.bincount(si, minlength=nn)
-            denom = np.int64(dd) * counts[si]
-            rank = np.full(nn, sc, dtype=np.int64)
-            for _ in range(iters):
-                contrib = (num * rank[si]) // denom
-                inflow = np.zeros(nn, dtype=np.int64)
-                np.add.at(inflow, di, contrib)
-                rank = tele + inflow
-        yield pa.record_batch(
-            [nodes, pa.array(rank, type=pa.int64())], ["node", "rank"]
-        )
-
-    res = (
-        ed.select("src", "dst")
-        .repartition(1)
-        .mapInArrow(_run, out_schema)
+    return ed.sparkSession.createDataFrame(
+        pa.table([nodes, pa.array(rank, type=pa.int64())], names=["node", "rank"]),
+        out_schema,
     )
-    # one eager job end-to-end (cache scan -> funnel -> recurrence),
-    # after which the caller can release the edge cache
-    return res.localCheckpoint(eager=True, storageLevel=_SPILL)
 
 
 def sticky_split_assign(

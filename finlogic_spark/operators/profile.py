@@ -582,7 +582,7 @@ def js_divergence(
     # 4x. One lazy barrier materializes the (group, token, count)
     # aggregate once — post-shuffle vocab×groups rows, spill-safe —
     # measured better in all 3 alternating A/B samples at sf0.1
-    # (tools/probe_r16.py agg_reuse: 1.02-1.13 s vs 1.31-1.47 s).
+    # (BENCH_r16_probes.json agg_reuse: 1.02-1.13 s vs 1.31-1.47 s).
     from pyspark.storagelevel import StorageLevel
 
     gt = gt.localCheckpoint(

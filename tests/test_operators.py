@@ -207,12 +207,15 @@ def test_connected_components_star_chain_sublinear_rounds(spark):
     assert stats["star_rounds"] < 15, stats
 
 
-def test_connected_components_auto_escalates_and_composes(spark):
+def test_connected_components_auto_escalates_and_composes(spark, monkeypatch):
     """auto must hand off from partial min-label state to star and
     compose the two label maps correctly: a chain longer than the
     label-round budget still fully merges, and the clique fast path
     never escalates."""
+    from finlogic_spark.operators import graph
     from finlogic_spark.operators.graph import connected_components
+
+    monkeypatch.setattr(graph, "SMALL_GRAPH_MAX_BYTES", 0)
 
     n = 60  # diameter 59 >> label_rounds=4 -> escalation required
     edges = spark.createDataFrame(
@@ -222,7 +225,7 @@ def test_connected_components_auto_escalates_and_composes(spark):
     stats: dict = {}
     out = connected_components(
         edges, vertices, algorithm="auto", label_rounds=4, max_iters=40,
-        stats=stats, small_graph_max_bytes=0,
+        stats=stats,
     )
     assert {r["label"] for r in out.collect()} == {0}
     assert stats["label_rounds"] == 4 and stats["star_rounds"] > 0, stats
@@ -235,19 +238,22 @@ def test_connected_components_auto_escalates_and_composes(spark):
     cv = spark.createDataFrame([(v,) for v in range(5)], "id long")
     stats2: dict = {}
     out2 = connected_components(
-        clique, cv, algorithm="auto", stats=stats2, small_graph_max_bytes=0
+        clique, cv, algorithm="auto", stats=stats2
     )
     assert {r["label"] for r in out2.collect()} == {0}
     assert stats2["star_rounds"] == 0, stats2
 
 
-def test_connected_components_auto_is_shape_aware(spark):
+def test_connected_components_auto_is_shape_aware(spark, monkeypatch):
     """'auto' must pick the phase order by edge-set size: below the
     star threshold the label fast path runs first (bench-scale graphs
     converge in a few cheap rounds); at/above it the label rounds are
     skipped and star runs directly — the measured winner on the sf100
     117.9M-edge dedup graph."""
+    from finlogic_spark.operators import graph
     from finlogic_spark.operators.graph import connected_components
+
+    monkeypatch.setattr(graph, "SMALL_GRAPH_MAX_BYTES", 0)
 
     clique = spark.createDataFrame(
         [(i, j) for i in range(6) for j in range(i + 1, 6)],
@@ -256,17 +262,14 @@ def test_connected_components_auto_is_shape_aware(spark):
     v = spark.createDataFrame([(i,) for i in range(6)], "id long")
 
     small_stats: dict = {}
-    out = connected_components(
-        clique, v, stats=small_stats, small_graph_max_bytes=0
-    )
+    out = connected_components(clique, v, stats=small_stats)
     assert {r["label"] for r in out.collect()} == {0}
     assert small_stats["auto_choice"] == "label-first"
     assert small_stats["star_rounds"] == 0
 
     big_stats: dict = {}
     out2 = connected_components(
-        clique, v, stats=big_stats, star_edge_threshold=1,
-        small_graph_max_bytes=0,
+        clique, v, stats=big_stats, star_edge_threshold=1
     )
     assert {r["label"] for r in out2.collect()} == {0}
     assert big_stats["auto_choice"] == "star-first"
@@ -311,12 +314,15 @@ def test_connected_components_converged_flag_and_warning(spark):
     ), [str(w.message) for w in caught]
 
 
-def test_connected_components_max_iters_total_budget(spark):
+def test_connected_components_max_iters_total_budget(spark, monkeypatch):
     """max_iters caps TOTAL full-graph shuffle rounds across both
     phases in 'auto' (regression: the label phase ran its full
     label_rounds and star then got a fresh max_iters budget, so a
     caller asking for <=5 rounds could get 8 + 25)."""
+    from finlogic_spark.operators import graph
     from finlogic_spark.operators.graph import connected_components
+
+    monkeypatch.setattr(graph, "SMALL_GRAPH_MAX_BYTES", 0)
 
     n = 40
     edges = spark.createDataFrame(
@@ -326,13 +332,13 @@ def test_connected_components_max_iters_total_budget(spark):
     stats: dict = {}
     connected_components(
         edges, vertices, algorithm="auto", label_rounds=8, max_iters=5,
-        stats=stats, small_graph_max_bytes=0,
+        stats=stats,
     ).collect()
     assert stats["label_rounds"] <= 5, stats
     assert stats["label_rounds"] + stats["star_rounds"] <= 5, stats
 
 
-def test_connected_components_single_job_regime_bitwise(spark):
+def test_connected_components_single_job_regime_bitwise(spark, monkeypatch):
     """The r16 small-graph (single-job) regime must (a) actually be
     chosen for a gate-sized edge list, (b) produce IDENTICAL labels to
     the distributed regimes (min reachable id has exactly one answer)
@@ -342,6 +348,7 @@ def test_connected_components_single_job_regime_bitwise(spark):
     Spark's)."""
     import random
 
+    from finlogic_spark.operators import graph
     from finlogic_spark.operators.graph import connected_components
 
     rng = random.Random(41)
@@ -390,12 +397,12 @@ def test_connected_components_single_job_regime_bitwise(spark):
         assert fast == {conv(k): conv(lab) for k, lab in ref.items()}
         if typ == "long":
             st_dist: dict = {}
-            dist = {
-                r["id"]: r["label"]
-                for r in connected_components(
-                    e, v, stats=st_dist, small_graph_max_bytes=0
-                ).collect()
-            }
+            with monkeypatch.context() as m:
+                m.setattr(graph, "SMALL_GRAPH_MAX_BYTES", 0)
+                dist = {
+                    r["id"]: r["label"]
+                    for r in connected_components(e, v, stats=st_dist).collect()
+                }
             assert st_dist["auto_choice"] != "single-job"
             assert fast == dist
         assert fast[conv(999)] == conv(999)  # isolated self-label

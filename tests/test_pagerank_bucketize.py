@@ -1,10 +1,13 @@
 """Integer PageRank (operators/graph.py) and sketch-driven equi-depth
 binning (operators/sketch.py kll_bucketize)."""
 
+import time
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from finlogic_spark.operators import graph
 from finlogic_spark.operators.graph import pagerank
 from finlogic_spark.operators.sketch import kll_bucketize
 
@@ -367,12 +370,12 @@ def test_pagerank_resume_from_last_complete_round(spark, tmp_path):
     assert regapped == full
 
 
-def test_pagerank_single_job_regime_bitwise_and_stats(spark):
-    """The small-graph (single-job) regime must (a) actually be chosen
-    for a broadcast-sized edge cache, (b) produce bit-identical ranks
-    to the distributed broadcast regime (small_graph_max_bytes=0
-    forces it) and to the driver reference — exact integer arithmetic
-    has ONE answer regardless of which engine shape computes it."""
+def test_pagerank_single_job_regime_bitwise_and_stats(spark, monkeypatch):
+    """The small-graph (driver) regime must (a) actually be chosen for
+    a gate-sized edge cache, (b) produce bit-identical ranks to the
+    distributed broadcast regime (a zero SMALL_GRAPH_MAX_BYTES forces
+    it) and to the reference — exact integer arithmetic has ONE answer
+    regardless of which engine shape computes it."""
     rng = np.random.RandomState(23)
     raw = {(int(a), int(b)) for a, b in rng.randint(0, 70, (500, 2)) if a != b}
     sym = sorted(raw | {(b, a) for a, b in raw})
@@ -385,23 +388,22 @@ def test_pagerank_single_job_regime_bitwise_and_stats(spark):
     assert st_small["regime"] == "single_job"
     assert st_small["n_edges"] == len(sym)
     st_multi: dict = {}
+    monkeypatch.setattr(graph, "SMALL_GRAPH_MAX_BYTES", 0)
     multi = {
         r["node"]: r["rank"]
-        for r in pagerank(
-            df, iterations=4, small_graph_max_bytes=0, stats=st_multi
-        ).collect()
+        for r in pagerank(df, iterations=4, stats=st_multi).collect()
     }
     assert st_multi["regime"] == "broadcast"
     want = _reference_pagerank(sym, 4)
     assert got == want and multi == want
 
 
-def test_pagerank_symmetrize_matches_explicit_union_all_regimes(spark):
+def test_pagerank_symmetrize_matches_explicit_union_all_regimes(spark, monkeypatch):
     """r17: pagerank(symmetrize=True) over DIRECTED edges must be
     bit-identical to pagerank over the explicit
-    distinct(e UNION swap(e)) — in BOTH the single-job funnel (worker
-    symmetrizes: both-direction relax over unordered unique pairs) and
-    the distributed regime (operator builds the union itself). The
+    distinct(e UNION swap(e)) — in BOTH the driver regime (both-
+    direction relax over unordered unique pairs) and the distributed
+    regime (operator builds the union itself). The
     edge set deliberately contains BOTH orientations of some pairs and
     self-loops, the cases where a naive both-direction relax of the
     raw directed list would double-count."""
@@ -423,11 +425,59 @@ def test_pagerank_symmetrize_matches_explicit_union_all_regimes(spark):
     want = ranks(df_bi)  # explicit union, single-job
     assert got_sym_small == want
     st2: dict = {}
-    got_sym_dist = ranks(
-        df_dir, symmetrize=True, small_graph_max_bytes=0, stats=st2
-    )
+    monkeypatch.setattr(graph, "SMALL_GRAPH_MAX_BYTES", 0)
+    got_sym_dist = ranks(df_dir, symmetrize=True, stats=st2)
     assert st2["regime"] == "broadcast"
     assert got_sym_dist == want
+
+
+def test_pagerank_null_endpoints_are_not_vertices(spark, monkeypatch):
+    """An edge with a null endpoint is dropped on entry in every regime.
+    The driver regime used to fail on it (nulls in the dictionary
+    indices) while the distributed one ranked a None node and counted
+    c -> null in c's out-degree, so c sent mass nowhere."""
+    edges = [("a", "b"), ("b", "c"), (None, "a"), ("c", None)]
+    df = spark.createDataFrame(edges, "src string, dst string")
+    want = _reference_pagerank([("a", "b"), ("b", "c")], 3)
+
+    def ranks(stats):
+        out = pagerank(df, iterations=3, stats=stats).collect()
+        return {r["node"]: r["rank"] for r in out}
+
+    st: dict = {}
+    small = ranks(st)
+    assert st["regime"] == "single_job"
+    monkeypatch.setattr(graph, "SMALL_GRAPH_MAX_BYTES", 0)
+    st_dist: dict = {}
+    dist = ranks(st_dist)
+    assert st_dist["regime"] == "broadcast"
+    assert small == want and dist == want
+
+
+def test_pagerank_small_regime_job_floor(spark):
+    """A symmetrized PageRank over a ~2k-edge string graph runs at most
+    5 Spark jobs (5 measured): the edge-cache fill with its size
+    measurement, then one collect of the edges to the driver. The
+    Python-worker form ran 7 here (a repartition(1) shuffle, the
+    mapInArrow task and its eager checkpoint)."""
+    rng = np.random.RandomState(31)
+    cust, supp = rng.randint(0, 300, 2000), rng.randint(0, 40, 2000)
+    raw = {(f"c{a}", f"s{b}") for a, b in zip(cust, supp)}
+    df = spark.createDataFrame(sorted(raw), "src string, dst string")
+    sc = spark.sparkContext
+    sc.setJobGroup("pagerank-floor", "pagerank-floor")
+    try:
+        got = {
+            r["node"]: r["rank"]
+            for r in pagerank(df, iterations=5, symmetrize=True).collect()
+        }
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    time.sleep(0.5)  # job-start events reach the status store asynchronously
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("pagerank-floor"))
+    assert got == _reference_pagerank(sorted(raw | {(b, a) for a, b in raw}), 5)
+    assert n_jobs <= 5, n_jobs
 
 
 def test_pagerank_resume_refuses_foreign_round_tables(spark, tmp_path):

@@ -105,12 +105,18 @@ def test_bloom_auto_size_prunes_at_scale(spark):
     )
     from finlogic_spark.operators.bloomjoin import build_bloom_filter
 
-    # auto_bypass=False: this test pins the auto-SIZING of the filter;
-    # a 40k-key bigint dim fits broadcast, so the default would (rightly)
-    # skip the bloom entirely — that path is pinned in
-    # test_bloom_auto_bypass_regimes.
-    auto = bloom_pruned_join(probe, build, "pk", "bk", auto_bypass=False)
-    assert auto.count() == 1_000  # exact join result
+    # A 1-byte broadcast threshold: this test pins the auto-SIZING of
+    # the filter; a 40k-key bigint dim fits broadcast, so the default
+    # threshold would (rightly) skip the bloom entirely — that path is
+    # pinned in test_bloom_auto_bypass_regimes.
+    conf = spark.conf
+    old = conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
+        auto = bloom_pruned_join(probe, build, "pk", "bk")
+        assert auto.count() == 1_000  # exact join result
+    finally:
+        conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     # the auto-sized filter (>= 10 bits/key -> 2^19) prunes the
     # disjoint tail; the fixed 2^17 filter is saturated and cannot
     sized = bloom_prune(
@@ -149,12 +155,6 @@ def test_bloom_auto_bypass_regimes(spark):
         # byte) -> the bloom filter is in the plan
         conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
         plan = plans.formatted_plan(bloom_pruned_join(probe, build, "pk", "bk"))
-        assert "__bloom_words" in plan
-        # bypass off: filter present even in the broadcast regime
-        conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-        plan = plans.formatted_plan(
-            bloom_pruned_join(probe, build, "pk", "bk", auto_bypass=False)
-        )
         assert "__bloom_words" in plan
     finally:
         conf.set("spark.sql.autoBroadcastJoinThreshold", old)
@@ -413,14 +413,20 @@ def test_bloom_prune_runs_below_exact_join(spark):
     """Plan pin: the bloom bit-check (BroadcastNestedLoopJoin with the
     1-row filter) must sit BELOW the exact join in the physical plan —
     rows are dropped in the scan-side stage, before the join moves
-    them. (Deeper nodes print later in the plan string.) auto_bypass
-    off: this pins the FILTER's plan position — the tiny dim here would
-    otherwise (rightly) skip it."""
+    them. (Deeper nodes print later in the plan string.) A 1-byte
+    broadcast threshold: this pins the FILTER's plan position — the
+    tiny dim here would otherwise (rightly) skip it."""
     probe, build = _sides(spark)
-    plan = (
-        bloom_pruned_join(probe, build, "pk", "bk", auto_bypass=False)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    conf = spark.conf
+    old = conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
+        plan = (
+            bloom_pruned_join(probe, build, "pk", "bk")
+            ._jdf.queryExecution().executedPlan().toString()
+        )
+    finally:
+        conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     bnl = plan.index("BroadcastNestedLoopJoin")
     exact = min(
         i for i in (
