@@ -2482,19 +2482,19 @@ def doc_curriculum_order(spark, sf_dir):
 def doc_dedup_clusters(spark, sf_dir):
     # Near-dup CLUSTERING: LSH emits candidate pairs; keeping one
     # representative per duplicate class needs the transitive closure.
-    # Iterative min-label propagation (operators/graph.py) labels every
-    # doc with its component's smallest doc_id — the canonical
+    # Connected components (operators/graph.py) label every doc with
+    # its component's smallest doc_id — the canonical
     # representative a filter can then keep. The oracle computes the
     # same closure with a recursive CTE.
     from finlogic_spark.operators.graph import connected_components
 
     d = _t(spark, sf_dir, "documents")
     pairs = minhash_lsh_pairs(d, "text", "doc_id", k=3, num_hashes=6, bands=2)
-    # 'auto' is shape-aware (r8): above 10M candidate edges it goes
-    # star-FIRST — measured on the real 117.9M-edge sf100 dup graph
-    # (tools/probe_r8.py, identical 2.15M clusters): star-only 107.1 s
-    # in 4 rounds vs label-then-star 157.7 s. Below the threshold the
-    # label fast path wins (bench scale: ~2x faster than star-only).
+    # Under the driver gate (every bench-scale graph) the closure runs
+    # on the driver; above it star alternation runs — measured on the
+    # real 117.9M-edge sf100 dup graph (BENCH_r8_probes.json,
+    # identical 2.15M clusters): star-only 107.1 s in 4 rounds vs
+    # label-then-star 157.7 s.
     cc = connected_components(
         pairs, d.select("doc_id"), src="id_a", dst="id_b", id_col="doc_id"
     )
@@ -6166,9 +6166,8 @@ def doc_canonical_select(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents")
     pairs = minhash_lsh_pairs(d, "text", "doc_id", k=3, num_hashes=6, bands=2)
-    # 'auto' picks star-first above 10M edges by measurement (see
-    # doc_dedup_clusters / tools/probe_r8.py) and the label fast path
-    # below it.
+    # Driver kernel under the gate, star alternation above it (see
+    # doc_dedup_clusters / BENCH_r8_probes.json).
     cc = connected_components(
         pairs, d.select("doc_id"), src="id_a", dst="id_b", id_col="doc_id"
     ).select(F.col("id").alias("doc_id"), F.col("label").alias("cluster"))
@@ -6877,13 +6876,13 @@ def events_twap(spark, sf_dir):
 )
 def events_winsorize(spark, sf_dir):
     # Outlier-robust per-group location: p01/p99 clip bounds, clip
-    # counts, winsorized mean. Compact-histogram tier (default): ONE
-    # scan builds the per-group value-frequency histogram, exact
-    # interpolated percentiles come from cumulative counts over it,
-    # and the clipped stats are count-weighted sums over the same
-    # histogram — bit-identical to the exact percentile() tier
-    # (parity-pinned) at a fraction of its cost (sf100: 2.5 s vs
-    # 9.9 s exact vs 2.7 s DuckDB). Bounds rounded to 1e-6 before
+    # counts, winsorized mean. ONE scan builds the per-group
+    # value-frequency histogram, exact interpolated percentiles come
+    # from cumulative counts over it, and the clipped stats are
+    # count-weighted sums over the same histogram — bit-identical to
+    # per-group exact percentile() aggregates (parity-pinned) at a
+    # fraction of their cost (sf100: 2.5 s vs 9.9 s exact vs 2.7 s
+    # DuckDB). Bounds rounded to 1e-6 before
     # clipping so the clip decision is data, not interpolation luck;
     # mean via exact integer cents under an enforced |cents| < 2^31.
     from finlogic_spark.operators.profile import winsorize_stats

@@ -3,8 +3,8 @@ compact bit-set built from the (filtered) build side BEFORE the shuffle
 join moves the probe's bytes (engine-scope addition; Spark itself
 injects these as AQE runtime filters — `InjectRuntimeFilter`,
 `spark.sql.optimizer.runtime.bloomFilter.enabled` — but only under
-planner heuristics; this operator makes the reduction explicit,
-tunable, and available to any join the caller wants reduced).
+planner heuristics; this operator makes the reduction explicit
+and available to any join the caller wants reduced).
 
 Why this is the 100 TB shape: a fact⋈dim join where the dim carries a
 selective predicate shuffles the ENTIRE fact unless something removes
@@ -39,6 +39,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from finlogic_spark.operators import gate
+
+# bloom_pruned_join sizes its filter to the build side: m is the next
+# power of two >= BITS_PER_KEY * n, probed with NUM_HASHES hashes
+# (~1% false positives).
+BITS_PER_KEY = 10
+NUM_HASHES = 5
 
 
 def _pos_sql(key_col: str, i: int, num_bits: int) -> str:
@@ -159,9 +165,6 @@ def bloom_pruned_join(
     build: DataFrame,
     probe_key: str,
     build_key: str,
-    num_bits: int | None = None,
-    num_hashes: int = 5,
-    bits_per_key: int = 10,
 ) -> DataFrame:
     """Inner equi-join with the probe side bloom-reduced first. Result
     is identical to the plain inner join — the filter only removes rows
@@ -169,20 +172,20 @@ def bloom_pruned_join(
     merged key column, like ``probe.join(build, key)``); distinct names
     keep both columns.
 
-    ``num_bits=None`` (default) AUTO-SIZES the filter to the build
-    side: the build is localCheckpointed once (it is dim-sized by this
-    operator's contract — the big side goes in ``probe``), counted,
-    and m is the next power of two ≥ bits_per_key·n (10 bits/key at
-    k=5 ≈ 1% false positives). A fixed m is a scale bug in disguise:
+    The filter is sized to the build side: the build is
+    localCheckpointed once (it is dim-sized by this operator's contract
+    — the big side goes in ``probe``), counted, and m is the next power
+    of two ≥ ``BITS_PER_KEY``·n (10 bits/key at k = ``NUM_HASHES`` = 5
+    ≈ 1% false positives). A fixed m is a scale bug in disguise:
     2^17 bits saturate around ~30k build keys, after which the filter
     passes everything and the probe pays the hash cost for zero
     pruning. The checkpoint also means the build side is SCANNED ONCE
     — the same materialized rows feed the bit-set build and the final
     exact join — instead of once per consumer.
 
-    Broadcast bypass (auto-sized path only): when the build side fits
-    under the session's ``spark.sql.autoBroadcastJoinThreshold``, the
-    bloom is skipped and the plain join returned. In the broadcast
+    Broadcast bypass: when the build side fits under the session's
+    ``spark.sql.autoBroadcastJoinThreshold``, the bloom is skipped and
+    the plain join returned. In the broadcast
     regime the exact join already prunes probe rows inside the scan
     stage — the bloom is pure overhead there (measured sf100
     decomposition: plain broadcast join 1.28 s, bloom adds +1.16 s of
@@ -197,8 +200,8 @@ def bloom_pruned_join(
     un-checkpointed dim (row count + measured string/binary bytes),
     whose count also sizes the filter. A bypassed dim is never
     materialized. The threshold is the only switch: with broadcasting
-    off (``<= 0``) or a dim larger than the threshold, the auto-sized
-    join gets the filter.
+    off (``<= 0``) or a dim larger than the threshold, the join gets
+    the filter.
 
     Raises on probe/build key dtype mismatch: xxhash64 is
     type-sensitive, so hashing e.g. an int probe key against a bigint
@@ -220,36 +223,35 @@ def bloom_pruned_join(
             return p.join(b, [probe_key])
         return p.join(b, F.col(probe_key) == F.col(build_key))
 
-    if num_bits is None:
-        threshold = gate.broadcast_threshold(build.sparkSession)
-        if 0 < threshold:
-            # Zero-job fast path. Only a <=-threshold stats value
-            # short-circuits; unknown/huge stats (joins, checkpoints —
-            # LogicalRDD reports defaults) fall through to the measured
-            # decision below.
-            stats_bytes = int(
-                str(
-                    build._jdf.queryExecution()
-                    .optimizedPlan()
-                    .stats()
-                    .sizeInBytes()
-                )
+    threshold = gate.broadcast_threshold(build.sparkSession)
+    if 0 < threshold:
+        # Zero-job fast path. Only a <=-threshold stats value
+        # short-circuits; unknown/huge stats (joins, checkpoints —
+        # LogicalRDD reports defaults) fall through to the measured
+        # decision below.
+        stats_bytes = int(
+            str(
+                build._jdf.queryExecution()
+                .optimizedPlan()
+                .stats()
+                .sizeInBytes()
             )
-            if stats_bytes <= threshold:
-                return join(probe, build)
-        # Measured BEFORE checkpointing, so the bypass branch — the
-        # common case — costs one pushdown-filtered dim scan over the
-        # bare plain join. Only the bloom branch checkpoints, where
-        # scan-once across build+join pays.
-        n, est_bytes = gate.measure(build, threshold)
-        if 0 < threshold and est_bytes <= threshold:
-            # The hint is explicit because the dim's plan stats said
-            # "too big" (or unknown) while the measurement says it fits
-            # — without it the static planner would SMJ first and leave
-            # the fix to AQE after the probe's shuffle files are
-            # written.
-            return join(probe, F.broadcast(build))
-        build = build.localCheckpoint(eager=True)
-        num_bits = 1 << max(10, (bits_per_key * max(n, 1) - 1).bit_length())
-    bloom = build_bloom_filter(build, build_key, num_bits, num_hashes)
-    return join(bloom_prune(probe, probe_key, bloom, num_bits, num_hashes), build)
+        )
+        if stats_bytes <= threshold:
+            return join(probe, build)
+    # Measured BEFORE checkpointing, so the bypass branch — the
+    # common case — costs one pushdown-filtered dim scan over the
+    # bare plain join. Only the bloom branch checkpoints, where
+    # scan-once across build+join pays.
+    n, est_bytes = gate.measure(build, threshold)
+    if 0 < threshold and est_bytes <= threshold:
+        # The hint is explicit because the dim's plan stats said
+        # "too big" (or unknown) while the measurement says it fits
+        # — without it the static planner would SMJ first and leave
+        # the fix to AQE after the probe's shuffle files are
+        # written.
+        return join(probe, F.broadcast(build))
+    build = build.localCheckpoint(eager=True)
+    num_bits = 1 << max(10, (BITS_PER_KEY * max(n, 1) - 1).bit_length())
+    bloom = build_bloom_filter(build, build_key, num_bits, NUM_HASHES)
+    return join(bloom_prune(probe, probe_key, bloom, num_bits, NUM_HASHES), build)

@@ -3,58 +3,48 @@
 LSH/Jaccard emit PAIRS, but keeping one representative per duplicate
 CLASS needs the transitive closure (a~b, b~c ⇒ keep one of {a,b,c}).
 
-Two interchangeable algorithms behind one signature:
+Two regimes behind one signature, picked by the measured size of the
+edge list (``operators.gate.measure``: edge count + measured
+string/binary bytes, one job that also fills the edge checkpoint):
 
-- ``label`` — iterative min-label propagation. Every vertex starts
-  labelled with its own id; each round every vertex takes the minimum
-  label among itself and its neighbours; at fixpoint each component is
-  labelled with its smallest member id. Rounds = graph DIAMETER: the
-  cheapest per-round plan (one join + one partial-agg min), ideal for
-  the tiny-clique/short-chain graphs near-dup candidates actually form,
-  but an adversarial n-vertex chain needs n rounds.
-- ``star`` — large-star/small-star alternation [Kiveris et al.,
-  "Connected Components in MapReduce and Beyond", SoCC'14]. Large-star
-  hangs every neighbour LARGER than u off the minimum of u's
-  neighbourhood; small-star re-hangs the smaller neighbours. Each pair
-  of steps roughly squares path-shortcutting, so convergence is
-  O(log² n) rounds worst-case (log-ish in practice) — a 10k chain
-  closes in ~5 alternations where min-label needs 10k rounds (pinned
-  in tests/test_operators.py).
-- ``auto`` (default) — min-label for ``label_rounds`` rounds (the
-  measured fast path); if the graph hasn't converged by then it is NOT
-  clique-shaped: collapse it through the partial labels (src/dst →
-  current label, self-edges dropped — strictly shrinking) and finish
-  with star alternation. Worst case O(log² n) rounds overall, fast
-  path identical to ``label``.
+- the driver kernel (at most ``SMALL_GRAPH_MAX_BYTES``, every
+  bench-scale graph): the edges come back as one Arrow table,
+  ``_encode_edges`` turns their endpoints into dense int64 indices,
+  and an exact numpy min-label loop with pointer jumping runs every
+  round (``_cc_on_driver``); the result returns as a local relation. A
+  distributed round pays a fixed price (join + aggregate + checkpoint
+  jobs) that dwarfs the arithmetic at this size, and a Python worker
+  task would pay its own start-up on top (README "The Python-worker
+  tax"); the driver pays neither.
+- star alternation (above the gate) — large-star/small-star
+  [Kiveris et al., "Connected Components in MapReduce and Beyond",
+  SoCC'14]. Large-star hangs every neighbour LARGER than u off the
+  minimum of u's neighbourhood; small-star re-hangs the smaller
+  neighbours. Each pair of steps roughly squares path-shortcutting, so
+  convergence is O(log² n) rounds worst-case (log-ish in practice) —
+  a 10k chain closes in a handful of alternations (pinned in
+  tests/test_operators.py). Measured on the real 117.9M-edge sf100
+  dedup graph (``BENCH_r8_probes.json``, identical 2.15M clusters):
+  star-only converged in 4 rounds / 107.1 s where min-label rounds
+  followed by star took 157.7 s.
 
-Scale notes (both algorithms):
+Scale notes (star):
 - Per round: shuffles keyed by vertex id with map-side partial mins —
-  no broadcast of anything graph-sized, no driver collect. (Only the
-  small-graph regime collects, under its byte gate; see below.)
+  no broadcast of anything graph-sized, no driver collect.
 - ``localCheckpoint(eager=False)`` truncates per-iteration lineage —
   without it the plan doubles every round and analysis cost explodes
   by round ~10; the convergence certificate's agg is the one action
   that materializes each round (ONE Spark job per round).
-- Convergence certificates are cheap aggregates: min-label uses the
-  monotone sum-of-labels; star uses (edge count, sum u, sum v) over
-  the canonicalized edge set, confirmed by an exact except-check
-  before declaring the fixpoint (certificate equality is necessary,
-  the except makes it sufficient). Id sums are computed as exact
-  (high-20-bits, low-20-bits) pairs so billion-row edge sets with
-  ~1e12 ids cannot overflow int64 (_sum_pair).
+- The certificate is (edge count, sum of ``pmod(xxhash64(u, v),
+  1e9+7)``) over the canonicalized edge set — the fingerprint of
+  ``pagerank``'s durable-round sidecar: exact int64 partial sums under
+  any partitioning (< 2^63 up to ~9e9 edges), for any orderable id
+  type. It is only a screen: an exact except-check confirms the
+  fixpoint once it stops moving.
 
-Small graphs (connected components in 'auto' mode and ``pagerank``):
-one measurement job (``operators.gate.measure``: edge count + measured
-string/binary bytes) sizes the edge list, and when it is at most
-``SMALL_GRAPH_MAX_BYTES`` the whole computation runs ON THE DRIVER.
-The edges come back as one Arrow table, ``_encode_edges`` turns their
-endpoints into dense int64 indices, an exact numpy loop does every
-round, and the result returns as a local relation. A distributed round
-pays a fixed price (join + aggregate + checkpoint jobs) that dwarfs the
-arithmetic at this size, and a Python worker task would pay its own
-start-up on top (README "The Python-worker tax"); the driver pays
-neither. Both kernels are bit-identical to their distributed rounds
-(one exact answer exists; pinned cross-regime in tests).
+Both regimes return the same labels (min reachable id has exactly one
+answer; pinned cross-regime in tests). ``pagerank`` shares the gate
+and the edge encoding for its own driver kernel.
 """
 
 from __future__ import annotations
@@ -65,7 +55,7 @@ from pyspark.storagelevel import StorageLevel
 
 from finlogic_spark.operators import gate
 
-# Every per-round materialization (edge cache, label/edge checkpoints)
+# Every per-round materialization (edge cache, edge and rank checkpoints)
 # uses serialized MEMORY_AND_DISK: a 100M+-edge graph's working set
 # must SPILL when it outgrows the heap, not OOM the executor — found
 # by measurement at the sf100 probe (117.9M candidate pairs; the
@@ -87,155 +77,64 @@ def connected_components(
     dst: str = "dst",
     id_col: str = "id",
     max_iters: int = 25,
-    algorithm: str = "auto",
-    label_rounds: int = 8,
     stats: dict | None = None,
-    star_edge_threshold: int = 10_000_000,
 ) -> DataFrame:
     """Label each vertex with the smallest vertex id reachable from it
     (= its connected component's canonical representative).
 
     ``vertices`` must carry every id (isolated vertices label
-    themselves). Returns (id_col, label). Deterministic.
-    ``algorithm``: 'label' (diameter-bounded min propagation), 'star'
-    (O(log² n) large/small-star), or 'auto' (label fast path, star
-    escalation after ``label_rounds`` — see module docstring).
-    'auto' additionally goes star-FIRST when the edge set reaches
-    ``star_edge_threshold``: measured on the real 117.9M-edge sf100
-    dedup graph (tools/probe_r8.py, identical 2.15M-cluster output),
-    star-only converged in 4 rounds / 107.1 s where label-then-star
-    took 157.7 s — at that shape the label rounds are wasted work,
-    while at bench scale (thousands of edges) label converges in a few
-    cheap rounds and star's heavier per-round plan loses. The edge
-    count comes from the job that fills the edge checkpoint, so the
-    probe costs no extra pass over the pair computation.
-    ``stats``: pass a dict to receive {'label_rounds', 'star_rounds',
-    'converged'} — rounds actually executed (round-complexity pins in
-    tests) and whether a fixpoint was REACHED within ``max_iters``.
-    ``converged`` False means the budget was exhausted first and the
-    returned labels are PARTIAL (over-segmented: some components carry
-    more than one label); a warning is emitted in that case so budget
-    exhaustion is never silent.
+    themselves). Returns (id_col, label). Deterministic. A null
+    endpoint is not a vertex: edges with a null ``src`` or ``dst`` are
+    dropped on entry, in both regimes (connectivity among non-null ids
+    is unchanged).
 
-    Small graphs: in 'auto' mode, when the DIRECTED edge list measures
-    at most ``SMALL_GRAPH_MAX_BYTES`` (the gate job also materializes
-    the edge checkpoint), the label propagation runs on the driver
-    (``_cc_on_driver``; module docstring). ``stats['auto_choice']``
-    reads 'single-job' then. Explicit 'label'/'star' bypass the gate
-    (callers asking for a specific distributed algorithm get it). A
-    null endpoint is not a vertex: the driver regime drops such edges
-    (connectivity among non-null ids is unchanged).
+    Regime (module docstring): when the DIRECTED edge list measures at
+    most ``SMALL_GRAPH_MAX_BYTES`` the whole computation runs on the
+    driver (``_cc_on_driver``), otherwise star alternation runs for at
+    most ``max_iters`` rounds.
+
+    ``stats``: pass a dict to receive {'auto_choice', 'star_rounds',
+    'converged'}. ``auto_choice`` is 'single-job' (driver kernel) or
+    'star-first' (star alternation); ``star_rounds`` counts the star
+    rounds actually executed (round-complexity pins in tests).
+    ``converged`` False means ``max_iters`` ran out before a fixpoint
+    and the returned labels are PARTIAL (over-segmented: some
+    components carry more than one label); a warning is emitted in that
+    case so budget exhaustion is never silent.
     """
-    if algorithm not in ("auto", "label", "star"):
-        raise ValueError(
-            f"algorithm must be 'auto', 'label' or 'star'; got {algorithm!r}"
-        )
-    # Checkpoint the DIRECTED edge projection and derive the symmetrized
-    # view from it: materializing the union itself made the fill
-    # evaluate the upstream pair pipeline TWICE (Spark does not share
-    # subplans across union branches — at dedup scale that is two full
-    # tokenize->minhash->bucket passes); the union over the checkpoint
-    # is two in-memory scans instead. A lazy local checkpoint rather
-    # than a cache: AQE may coalesce its partitions (a cached plan keeps
-    # the shuffle default, 32 tasks per scan on a few hundred edges).
-    e0 = edges.select(F.col(src).alias("s"), F.col(dst).alias("d")).localCheckpoint(
-        eager=False, storageLevel=_SPILL
-    )
-    und = e0.unionByName(e0.select(F.col("d").alias("s"), F.col("s").alias("d")))
-    if stats is None:
-        stats = {}
-    stats["label_rounds"] = 0
-    stats["star_rounds"] = 0
-    if algorithm == "auto":
-        # Materialize the edge checkpoint with the shape/size
-        # measurement job (the first label/star round was about to pay
-        # this materialization anyway) and pick the regime: driver-side
-        # under the measured byte gate, else label-first/star-first by
-        # edge count (see docstring).
-        n_edges, est_bytes = gate.measure(e0, SMALL_GRAPH_MAX_BYTES)
-        if 0 < SMALL_GRAPH_MAX_BYTES and est_bytes <= SMALL_GRAPH_MAX_BYTES:
-            stats["auto_choice"] = "single-job"
-            stats["converged"] = True
-            labels = _cc_on_driver(e0)
-            isolated = (
-                vertices.select(F.col(id_col).alias("id"))
-                .join(labels.select("id"), "id", "left_anti")
-                .withColumn("label", F.col("id"))
-            )
-            return labels.unionByName(isolated)
-        if n_edges >= star_edge_threshold:
-            algorithm = "star"
-            stats["auto_choice"] = "star-first"
-        else:
-            stats["auto_choice"] = "label-first"
-    # Only vertices that touch an edge can change label — iterate on
-    # that (typically tiny) subgraph and union the untouched majority
-    # back at the end. In a dedup corpus most documents are in NO
-    # candidate pair; excluding them shrinks every per-round shuffle
-    # from |corpus| to |edge endpoints|.
-    labels = (
-        und.select(F.col("s").alias("id"))
-        .distinct()
-        .withColumn("label", F.col("id"))
+    # Checkpoint the DIRECTED edge projection: the gate job below fills
+    # it, and every later read (driver collect or star's first
+    # canonicalization) scans it instead of re-running the upstream
+    # pair pipeline. A lazy local checkpoint rather than a cache: AQE
+    # may coalesce its partitions (a cached plan keeps the shuffle
+    # default, 32 tasks per scan on a few hundred edges).
+    e0 = (
+        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
+        .filter(F.col("s").isNotNull() & F.col("d").isNotNull())
         .localCheckpoint(eager=False, storageLevel=_SPILL)
     )
-    # max_iters is a TOTAL round budget across both phases: in 'auto'
-    # the label fast path draws from it first and star gets the
-    # remainder, so a caller capping shuffle-round count gets at most
-    # max_iters full-graph rounds regardless of algorithm choice.
-    if algorithm != "star":
-        rounds = max_iters if algorithm == "label" else min(
-            label_rounds, max_iters
-        )
-        labels, converged = _min_label_rounds(und, labels, rounds, stats)
+    if stats is None:
+        stats = {}
+    stats["star_rounds"] = 0
+    _, est_bytes = gate.measure(e0, SMALL_GRAPH_MAX_BYTES)
+    if 0 < SMALL_GRAPH_MAX_BYTES and est_bytes <= SMALL_GRAPH_MAX_BYTES:
+        stats["auto_choice"] = "single-job"
+        stats["converged"] = True
+        labels = _cc_on_driver(e0)
     else:
-        converged = False
-    if not converged and algorithm != "label":
-        # Escalate: the graph is not clique-shaped. Collapse every edge
-        # through the partial labels (strictly shrinking: any edge
-        # inside an already-merged region becomes a dropped self-edge)
-        # and run the O(log² n) star alternation on the remainder. The
-        # star output labels the COLLAPSED vertices (current labels);
-        # composing through `labels` restores per-vertex results.
-        collapsed = (
-            und.join(labels.withColumnRenamed("id", "s"), "s")
-            .select(F.col("label").alias("cs"), "d")
-            .join(
-                labels.withColumnRenamed("id", "d").withColumnRenamed(
-                    "label", "cd"
-                ),
-                "d",
-            )
-            .select(F.col("cs").alias("s"), F.col("cd").alias("d"))
-            .filter(F.col("s") != F.col("d"))
-        )
-        star_budget = (
-            max_iters if algorithm == "star"
-            else max(0, max_iters - stats["label_rounds"])
-        )
-        roots, converged = _star_labels(collapsed, star_budget, stats)
-        labels = (
-            labels.withColumnRenamed("label", "mid")
-            .join(
-                roots.withColumnRenamed("id", "mid"),
-                "mid",
-                "left",
-            )
-            .select(
-                "id", F.coalesce("label", F.col("mid")).alias("label")
-            )
-        )
-    stats["converged"] = converged
-    if not converged:
-        import warnings
+        stats["auto_choice"] = "star-first"
+        labels, converged = _star_labels(e0, max_iters, stats)
+        stats["converged"] = converged
+        if not converged:
+            import warnings
 
-        warnings.warn(
-            f"connected_components: round budget max_iters={max_iters} "
-            "exhausted before a fixpoint — returned labels are PARTIAL "
-            "(over-segmented). Raise max_iters or check stats['converged'].",
-            RuntimeWarning,
-            stacklevel=2,
-        )
+            warnings.warn(
+                f"connected_components: round budget max_iters={max_iters} "
+                "exhausted before a fixpoint — returned labels are PARTIAL "
+                "(over-segmented). Raise max_iters or check stats['converged'].",
+                RuntimeWarning,
+                stacklevel=2,
+            )
     isolated = (
         vertices.select(F.col(id_col).alias("id"))
         .join(labels.select("id"), "id", "left_anti")
@@ -250,16 +149,16 @@ def _encode_edges(e: DataFrame, a: str, b: str):
     ids, ``ai``/``bi`` per-edge int64 indices into it. One Spark job
     (``toArrow``); the upstream pipeline stays parallel.
 
-    Edges with a null endpoint are dropped: a null is not a vertex (it
-    never joins in the distributed rounds either), and Arrow would put
-    nulls into the dictionary indices. The id → index mapping is Arrow's
-    C-level hash ``dictionary_encode`` (order of appearance): for the
-    sf0.1 PageRank graph's 2.2M string endpoints, pandas factorizing
-    cost ~0.4 s and np.unique's sort 3.1 s."""
+    Both callers drop edges with a null endpoint on entry (a null is
+    not a vertex, and Arrow would put nulls into the dictionary
+    indices). The id → index mapping is Arrow's C-level hash
+    ``dictionary_encode`` (order of appearance): for the sf0.1 PageRank
+    graph's 2.2M string endpoints, pandas factorizing cost ~0.4 s and
+    np.unique's sort 3.1 s."""
     import numpy as np
     import pyarrow as pa
 
-    t = e.filter(F.col(a).isNotNull() & F.col(b).isNotNull()).toArrow()
+    t = e.toArrow()
     ends = pa.chunked_array(
         t.column(a).chunks + t.column(b).chunks, t.schema.field(a).type
     )
@@ -285,7 +184,7 @@ def _cc_on_driver(e0: DataFrame) -> DataFrame:
       terminates at the first unchanged round — that IS the fixpoint.
 
     Output: (id, label) for every edge ENDPOINT as a local relation,
-    label = min reachable id — bit-identical to the distributed rounds
+    label = min reachable id — bit-identical to star alternation
     (pinned cross-regime in tests/test_operators.py)."""
     import numpy as np
     import pyarrow as pa
@@ -319,57 +218,6 @@ def _cc_on_driver(e0: DataFrame) -> DataFrame:
     )
 
 
-# Certificates sum vertex ids, which can be arbitrarily large (sf100
-# chained keys reach ~9e11; 118M edges × that overflows int64 — found
-# by an ANSI overflow error at the sf100 star probe). Summing the high
-# and low 20-bit halves separately keeps every partial EXACT and
-# overflow-safe to ~1e9 rows of ~1e12 ids: true_sum = 2^20·hi + lo, so
-# (count, hi, lo) equality ⟺ exact-sum equality — the monotone
-# convergence argument is unchanged.
-_CERT_SHIFT = 20
-_CERT_MASK = (1 << _CERT_SHIFT) - 1
-
-
-def _sum_pair(col: str) -> list:
-    return [
-        F.sum(F.shiftright(F.col(col), _CERT_SHIFT)),
-        F.sum(F.col(col).bitwiseAND(F.lit(_CERT_MASK))),
-    ]
-
-
-def _min_label_rounds(
-    und: DataFrame, labels: DataFrame, max_iters: int, stats: dict
-) -> tuple[DataFrame, bool]:
-    """Min-label propagation rounds; returns (labels, converged)."""
-
-    def cert(lab: DataFrame):
-        row = lab.agg(*_sum_pair("label")).first()
-        return (row[0], row[1])
-
-    prev_sum = cert(labels)
-    for _ in range(max_iters):
-        stats["label_rounds"] += 1
-        prop = (
-            und.join(labels, und.s == labels.id)
-            .select(F.col("d").alias("id"), "label")
-        )
-        # Lazy checkpoint + the convergence agg as the materializing
-        # action: one job computes the new labels, persists them (so
-        # the next round's join reads checkpointed blocks, lineage
-        # truncated), and returns the sum certificate.
-        labels = (
-            labels.unionByName(prop)
-            .groupBy("id")
-            .agg(F.min("label").alias("label"))
-            .localCheckpoint(eager=False, storageLevel=_SPILL)
-        )
-        new_sum = cert(labels)
-        if new_sum == prev_sum:
-            return labels, True
-        prev_sum = new_sum
-    return labels, False
-
-
 def _canon(e: DataFrame) -> DataFrame:
     """Canonical undirected edge set: (u=min, v=max), self-edges
     dropped, distinct."""
@@ -383,16 +231,16 @@ def _canon(e: DataFrame) -> DataFrame:
 
 
 def _star_labels(
-    edges_sd: DataFrame, max_iters: int, stats: dict | None = None
+    edges_sd: DataFrame, max_iters: int, stats: dict
 ) -> tuple[DataFrame, bool]:
     """Large-star/small-star alternation to fixpoint; input (s, d)
-    directed-or-not edges, output ((id, label), converged) — every
-    NON-ROOT edge endpoint plus (root, root) rows, i.e. every endpoint
-    labelled with its component min. ``converged`` False means
-    ``max_iters`` ran out before the fixpoint: the edge set is NOT a
-    disjoint star union and the derived labels are partial — callers
-    must surface that (connected_components records it in
-    stats['converged'] and warns).
+    directed-or-not edges without null endpoints, output ((id, label),
+    converged) — every edge endpoint (self-loop-only ones included, as
+    in the driver kernel) labelled with its component min.
+    ``converged`` False means ``max_iters`` ran out before the
+    fixpoint: the edge set is NOT a disjoint star union and the derived
+    labels are partial — callers must surface that
+    (connected_components records it in stats['converged'] and warns).
 
     Each alternation:
     - large-star: per neighbourhood Γ⁺(u) = Γ(u) ∪ {u} with
@@ -404,14 +252,16 @@ def _star_labels(
       that collapses chains of minima.
     Both emit only (bigger, smaller) pairs; a disjoint union of
     min-rooted stars is a fixpoint of the pair. Fixpoint detection:
-    cheap certificate (count, sum u, sum v) on the canonical edge set,
-    confirmed exact with subtract when it stops moving.
+    cheap certificate (count, fingerprint sum; module docstring) on the
+    canonical edge set, confirmed exact with subtract when it stops
+    moving.
     """
     e = _canon(edges_sd).localCheckpoint(eager=False, storageLevel=_SPILL)
 
     def certificate(cdf: DataFrame):
         row = cdf.agg(
-            F.count(F.lit(1)), *_sum_pair("u"), *_sum_pair("v")
+            F.count(F.lit(1)),
+            F.sum(F.pmod(F.xxhash64("u", "v"), F.lit(1_000_000_007))),
         ).first()
         return tuple(row)
 
@@ -457,16 +307,20 @@ def _star_labels(
             e = new_e
             converged = True
             break
-        if stats is not None:
-            stats["star_rounds"] += 1
+        stats["star_rounds"] += 1
         prev = cert
         e = new_e
     # star fixpoint: every edge is (root=u, leaf=v); labels = leaves ->
-    # root, roots -> themselves
+    # root, roots -> themselves. _canon dropped self-loops, so their
+    # vertices come back from the input (min keeps a real root).
+    loops = edges_sd.filter(F.col("s") == F.col("d"))
     labels = (
         e.select(F.col("v").alias("id"), F.col("u").alias("label"))
         .unionByName(
             e.select(F.col("u").alias("id"), F.col("u").alias("label"))
+        )
+        .unionByName(
+            loops.select(F.col("s").alias("id"), F.col("s").alias("label"))
         )
         .groupBy("id")
         .agg(F.min("label").alias("label"))
@@ -526,9 +380,11 @@ def pagerank(
     re-execution reads a consistent snapshot.
     Bit-identical to the default variant (integer arithmetic has one
     answer; pinned in tests/test_pagerank_bucketize.py) — the only
-    difference is where the round boundary materializes. Measured at
-    sf100 (tools/probe_pagerank_sf100.py): the per-round parquet
-    round-trip adds seconds per round against executor-local
+    difference is where the round boundary materializes. A measured
+    workload picks this regime: ``BENCH_r13_pagerank.json`` ran the
+    sf100 order graph (1.17B edges, 16.0M nodes) through 5 durable
+    rounds in 1021.8 s (tools/probe_pagerank_sf100.py); the per-round
+    parquet round-trip adds seconds per round against executor-local
     checkpoints — the price of restartability, paid per round, not
     per edge. Resume is parameter-checked: round 0 stamps a
     ``{dir}/_params`` sidecar (damping, scale, node/edge counts, an

@@ -652,7 +652,6 @@ def winsorize_stats(
     value_col: str,
     p_lo: float = 0.01,
     p_hi: float = 0.99,
-    strategy: str = "compact",
 ) -> DataFrame:
     """Per-group winsorization summary: clip bounds at the p_lo/p_hi
     percentiles, how many rows each bound clipped, and the mean of the
@@ -660,30 +659,20 @@ def winsorize_stats(
     metrics pipeline reports instead of a raw mean that one fat-fingered
     value can drag anywhere.
 
-    Two strategies, BIT-IDENTICAL output (parity-pinned in tests, the
-    outlier-MAD two-tier discipline):
-
-    - ``"compact"`` (default, the scale tier): ONE scan builds the
-      per-group value-frequency histogram — groupBy(keys, value) with
-      a map-side-combining count, so what shuffles is |distinct (key,
-      value)| rows, not |rows| (measurement values quantize heavily in
-      practice: 100M sf100 event rows compact to ~280k). Exact
-      percentiles then come from cumulative counts over the sorted
-      histogram, reproducing Spark ``percentile``'s interpolation
-      arithmetic step for step (position = p·(n−1) in doubles; at a
-      fractional position, (higher−pos)·v_lo + (pos−lower)·v_hi — the
-      same value→count map walk Percentile does internally), and the
-      clip counts and winsorized mean are count-weighted sums over the
-      SAME histogram — the raw rows are never touched again. Worst
-      case (a truly continuous column, zero compaction) this degrades
-      to an n-row shuffle and a spillable per-group sort — no
-      per-group in-memory percentile buffer at any shape, which the
-      exact tier cannot promise.
-    - ``"exact"`` (the reference tier): per-group exact ``percentile``
-      aggregates (each group's values buffered in the aggregation
-      state), bounds broadcast back onto the rows, one partial-agg
-      pass for the clipped stats. Two full scans; the cross-check the
-      compact tier is pinned against.
+    ONE scan builds the per-group value-frequency histogram —
+    groupBy(keys, value) with a map-side-combining count, so what
+    shuffles is |distinct (key, value)| rows, not |rows| (measurement
+    values quantize heavily in practice: 100M sf100 event rows compact
+    to ~280k). Exact percentiles then come from cumulative counts over
+    the sorted histogram (``histogram_percentiles``), reproducing Spark
+    ``percentile``'s interpolation arithmetic step for step, and the
+    clip counts and winsorized mean are count-weighted sums over the
+    SAME histogram — the raw rows are never touched again. Worst case
+    (a truly continuous column, zero compaction) this degrades to an
+    n-row shuffle and a spillable per-group sort — no per-group
+    in-memory percentile buffer at any shape. Bit-identical to per-group
+    exact ``percentile`` aggregates (parity-pinned in tests against
+    that form, inlined there).
 
     Bounds are rounded to 1e-6 BEFORE clipping so the clip decision is
     a property of the data, not of which engine's linear interpolation
@@ -691,50 +680,69 @@ def winsorize_stats(
     sum under the enforced |cents| < 2³¹ bound (order-independent,
     same discipline as trend_stats).
 
-    The compact tier lazily localCheckpoints the ~|distinct| histogram
-    so bounds and stats branches share one scan; in a long-lived
-    session scrub with spark.catalog.clearCache() between unrelated
-    jobs (see _hashed_set_verify's cleanup note).
+    The histogram is lazily localCheckpointed so the bounds and stats
+    branches share one scan; in a long-lived session scrub with
+    spark.catalog.clearCache() between unrelated jobs (see
+    _hashed_set_verify's cleanup note).
 
     Returns (keys..., p_lo_val, p_hi_val, n, n_clipped_lo,
     n_clipped_hi, win_mean).
     """
-    if strategy not in ("compact", "exact"):
-        raise ValueError(f"unknown winsorize strategy: {strategy!r}")
+    from pyspark.storagelevel import StorageLevel
+
+    keys = list(key_cols)
     v = F.col(value_col)
-    # project to (keys, value) before either pass: both the percentile
-    # buffers and the second aggregation only ever touch these columns
-    base = df.filter(v.isNotNull() & ~F.isnan(v)).select(
-        *key_cols, value_col
-    )
     r6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
-    if strategy == "compact":
-        return _winsorize_compact(base, key_cols, value_col, p_lo, p_hi, r6)
-    bounds = base.groupBy(*key_cols).agg(
-        r6(F.expr(f"percentile(`{value_col}`, {p_lo})")).alias("p_lo_val"),
-        r6(F.expr(f"percentile(`{value_col}`, {p_hi})")).alias("p_hi_val"),
+    hist = (
+        df.filter(v.isNotNull() & ~F.isnan(v))
+        .groupBy(*keys, value_col)
+        .agg(F.count(F.lit(1)).alias("__c"))
+        # both the bounds branch and the stats branch hang off this
+        # frame; without materialization the full-table scan + partial
+        # agg would run twice
+        .localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
     )
-    clipped = F.least(F.greatest(v, F.col("p_lo_val")), F.col("p_hi_val"))
+    pct = histogram_percentiles(
+        hist, keys, value_col, "__c", {"lo": p_lo, "hi": p_hi}
+    )
+    bounds = pct.select(
+        *keys,
+        r6(F.col("lo")).alias("p_lo_val"),
+        r6(F.col("hi")).alias("p_hi_val"),
+    )
+    # clipped stats from the SAME histogram: every row with value v
+    # contributes identically, so per-row sums become count-weighted
+    # sums over distinct values — the raw table is never re-read
+    clipped = F.least(
+        F.greatest(F.col("__v"), F.col("p_lo_val")), F.col("p_hi_val")
+    )
     cq = F.floor(clipped * F.lit(100.0) + F.lit(0.5)).cast("long")
     agg = (
-        base.join(F.broadcast(bounds), list(key_cols))
-        .groupBy(*key_cols)
+        hist.join(F.broadcast(bounds), keys)
+        .select(
+            *keys, F.col(value_col).alias("__v"), "__c", "p_lo_val", "p_hi_val"
+        )
+        .groupBy(*keys)
         .agg(
             F.first("p_lo_val").alias("p_lo_val"),
             F.first("p_hi_val").alias("p_hi_val"),
-            F.count(F.lit(1)).alias("n"),
+            F.sum("__c").alias("n"),
             F.sum(
-                F.when(v < F.col("p_lo_val"), F.lit(1)).otherwise(F.lit(0))
+                F.when(F.col("__v") < F.col("p_lo_val"), F.col("__c")).otherwise(
+                    F.lit(0)
+                )
             ).alias("n_clipped_lo"),
             F.sum(
-                F.when(v > F.col("p_hi_val"), F.lit(1)).otherwise(F.lit(0))
+                F.when(F.col("__v") > F.col("p_hi_val"), F.col("__c")).otherwise(
+                    F.lit(0)
+                )
             ).alias("n_clipped_hi"),
-            F.sum(cq).alias("__scq"),
+            F.sum(F.try_multiply(F.col("__c"), cq)).alias("__scq"),
             F.max(F.abs(cq)).alias("__max_acq"),
         )
     )
     return agg.select(
-        *key_cols,
+        *keys,
         "p_lo_val",
         "p_hi_val",
         "n",
@@ -756,7 +764,7 @@ def histogram_percentiles(
 ) -> DataFrame:
     """EXACT interpolated percentiles from a per-group value-frequency
     histogram (keys..., value, count) — the shared primitive behind
-    the compact winsorize tier and the KLL validation path: cumulative
+    ``winsorize_stats`` and the KLL validation path: cumulative
     counts over the sorted distinct values reproduce Spark
     ``percentile``'s interpolation arithmetic step for step
     (position = p·(n−1) in doubles; at a fractional position,
@@ -833,83 +841,6 @@ def histogram_percentiles(
             .alias(tag)
         )
     return agg.select(*out)
-
-
-def _winsorize_compact(
-    base: DataFrame,
-    key_cols: Sequence[str],
-    value_col: str,
-    p_lo: float,
-    p_hi: float,
-    r6,
-) -> DataFrame:
-    """Compact-histogram winsorize tier (see winsorize_stats): one
-    scan → value-frequency histogram → exact percentiles from
-    cumulative counts → count-weighted clipped stats, all on the
-    compacted frame (percentile arithmetic shared via
-    histogram_percentiles)."""
-    from pyspark.storagelevel import StorageLevel
-
-    keys = list(key_cols)
-    hist = (
-        base.groupBy(*keys, value_col)
-        .agg(F.count(F.lit(1)).alias("__c"))
-        # both the bounds branch and the stats branch hang off this
-        # frame; without materialization the full-table scan + partial
-        # agg would run twice
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
-    )
-    pct = histogram_percentiles(
-        hist, keys, value_col, "__c", {"lo": p_lo, "hi": p_hi}
-    )
-    bounds = pct.select(
-        *keys,
-        r6(F.col("lo")).alias("p_lo_val"),
-        r6(F.col("hi")).alias("p_hi_val"),
-    )
-    # clipped stats from the SAME histogram: every row with value v
-    # contributes identically, so per-row sums become count-weighted
-    # sums over distinct values — the raw table is never re-read
-    clipped = F.least(
-        F.greatest(F.col("__v"), F.col("p_lo_val")), F.col("p_hi_val")
-    )
-    cq = F.floor(clipped * F.lit(100.0) + F.lit(0.5)).cast("long")
-    agg = (
-        hist.join(F.broadcast(bounds), keys)
-        .select(
-            *keys, F.col(value_col).alias("__v"), "__c", "p_lo_val", "p_hi_val"
-        )
-        .groupBy(*keys)
-        .agg(
-            F.first("p_lo_val").alias("p_lo_val"),
-            F.first("p_hi_val").alias("p_hi_val"),
-            F.sum("__c").alias("n"),
-            F.sum(
-                F.when(F.col("__v") < F.col("p_lo_val"), F.col("__c")).otherwise(
-                    F.lit(0)
-                )
-            ).alias("n_clipped_lo"),
-            F.sum(
-                F.when(F.col("__v") > F.col("p_hi_val"), F.col("__c")).otherwise(
-                    F.lit(0)
-                )
-            ).alias("n_clipped_hi"),
-            F.sum(F.try_multiply(F.col("__c"), cq)).alias("__scq"),
-            F.max(F.abs(cq)).alias("__max_acq"),
-        )
-    )
-    return agg.select(
-        *keys,
-        "p_lo_val",
-        "p_hi_val",
-        "n",
-        "n_clipped_lo",
-        "n_clipped_hi",
-        (
-            _cents_sum_guard("__max_acq", "n", "__scq", "winsorize_stats")
-            / (F.lit(100.0) * F.col("n"))
-        ).alias("win_mean"),
-    )
 
 
 def vector_profile(df: DataFrame, vec_col: str, dim: int) -> DataFrame:

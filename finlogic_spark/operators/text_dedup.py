@@ -598,12 +598,12 @@ def _exact_ceil_tn(threshold: float) -> Column:
     return ((x - F.pmod(x, F.lit(den))) / F.lit(den)).cast("int")
 
 
-def _hashed_set_verify(
-    cands: DataFrame,
-    ranked: DataFrame,
-    broadcast_sets: bool | None = None,
-    broadcast_max_docs: int = 2_000_000,
-) -> DataFrame:
+# Largest per-doc set table _hashed_set_verify broadcasts (2M docs ≈
+# 1 GB of fingerprint arrays, safe in any reasonable driver).
+BROADCAST_MAX_DOCS = 2_000_000
+
+
+def _hashed_set_verify(cands: DataFrame, ranked: DataFrame) -> DataFrame:
     """Exact intersection counts for candidate pairs WITHOUT the
     per-pair shingle fan: each doc's distinct shingles are packed ONCE
     into a sorted array of xxhash64 fingerprints (8 B/element vs
@@ -630,7 +630,7 @@ def _hashed_set_verify(
     |set|²/2⁶⁴ ≈ 1e-15 per pair, the standard Rabin/Broder fingerprint
     trade, vastly tighter than the MinHash tiers this verifies for.
 
-    ``broadcast_sets``: on a family-clustered corpus the candidate set
+    Broadcast gate: on a family-clustered corpus the candidate set
     ≈ the true result (every intra-family pair is a match), so no
     filter can shrink it — the array carry through the pair joins is
     OUTPUT-inherent. When the per-doc set table is small relative to
@@ -638,10 +638,9 @@ def _hashed_set_verify(
     broadcasting it turns BOTH pair joins map-side: the pair stream
     never shuffles at all (measured at sf10: 94M candidate pairs ×
     ~950 B of arrays ≈ 90 GB of shuffle — more than a single box's
-    free disk — drops to ~zero). Default None auto-broadcasts when
-    |docs| ≤ ``broadcast_max_docs`` (2M docs ≈ 1 GB of arrays, safe
-    in any reasonable driver); on a corpus too big to broadcast the
-    shuffle join is the right plan anyway, because a cluster's
+    free disk — drops to ~zero). The set table is broadcast when
+    |docs| ≤ ``BROADCAST_MAX_DOCS``; on a corpus too big to broadcast
+    the shuffle join is the right plan anyway, because a cluster's
     aggregate shuffle disk scales with its executor count while a
     broadcast must fit every single one.
     Returns (id_a, id_b, inter, n_a, n_b)."""
@@ -658,7 +657,7 @@ def _hashed_set_verify(
     # without materialization it runs twice — and when broadcast, the
     # same ~|docs|-sized table is broadcast-BUILT twice. The lazy
     # checkpoint computes on first use and is reused by the second
-    # join and (auto path) the decision count. Cleanup contract: the
+    # join and the broadcast decision's count. Cleanup contract: the
     # MEMORY_AND_DISK blocks live until the session drops them — a
     # long-lived shared session running many verifies back-to-back
     # should scrub between calls (spark.catalog.clearCache() plus
@@ -667,9 +666,8 @@ def _hashed_set_verify(
     sets = sets.localCheckpoint(
         eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK
     )
-    if broadcast_sets is None:
-        broadcast_sets = sets.count() <= broadcast_max_docs
-    side = (lambda d: F.broadcast(d)) if broadcast_sets else (lambda d: d)
+    broadcast = sets.count() <= BROADCAST_MAX_DOCS
+    side = (lambda d: F.broadcast(d)) if broadcast else (lambda d: d)
     return (
         cands.join(
             side(
@@ -707,7 +705,6 @@ def jaccard_prefix_pairs(
     id_col: str,
     k: int = 3,
     threshold: float = 0.5,
-    broadcast_sets: bool | None = None,
 ) -> DataFrame:
     """PPJoin-style prefix-filtered exact Jaccard join (Xiao et al.,
     WWW '08): byte-identical output to
@@ -772,7 +769,7 @@ def jaccard_prefix_pairs(
         .select(F.col("p.pa").alias("id_a"), F.col("p.pb").alias("id_b"))
         .distinct()
     )
-    verified = _hashed_set_verify(cands, ranked, broadcast_sets)
+    verified = _hashed_set_verify(cands, ranked)
     return (
         verified.withColumn(
             "jaccard",
@@ -789,7 +786,6 @@ def containment_prefix_pairs(
     id_col: str,
     k: int = 3,
     threshold: float = 0.8,
-    broadcast_sets: bool | None = None,
 ) -> DataFrame:
     """Prefix-filtered DIRECTED containment join — the scale path for
     ``containment_pairs``, byte-identical to
@@ -826,7 +822,7 @@ def containment_prefix_pairs(
         .select("id_a", "id_b")
         .distinct()
     )
-    verified = _hashed_set_verify(cands, ranked, broadcast_sets)
+    verified = _hashed_set_verify(cands, ranked)
     return (
         verified.withColumn("containment", F.col("inter") / F.col("n_a"))
         .filter(F.col("containment") >= threshold)

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from finlogic_spark.functions import hierarchy_depth, multi_prefix, safe_div
@@ -154,14 +155,16 @@ def test_connected_components_long_chain_converges(spark):
     assert {r["label"] for r in got} == {0}
 
 
-def test_connected_components_one_job_per_round(spark):
+def test_connected_components_one_job_per_round(spark, monkeypatch):
     # The convergence certificate must ride the same action that
-    # materializes the round's checkpoint: a chain of diameter d needs
-    # ~d propagation rounds, and each round must cost ONE Spark job
-    # (round 4 ran an eager-checkpoint job plus a separate sum job —
-    # 2 jobs/round of pure driver latency at web-scale graph sizes).
+    # materializes the round's checkpoint: each star round costs ONE
+    # Spark action (an eager checkpoint plus a separate certificate
+    # job would be 2 actions per round of pure driver latency at
+    # web-scale graph sizes).
+    from finlogic_spark.operators import graph
     from finlogic_spark.operators.graph import connected_components
 
+    monkeypatch.setattr(graph, "SMALL_GRAPH_MAX_BYTES", 0)
     n = 8
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "src long, dst long"
@@ -169,91 +172,51 @@ def test_connected_components_one_job_per_round(spark):
     vertices = spark.createDataFrame([(v,) for v in range(n)], "id long")
     sc = spark.sparkContext
     # AQE splits one action into a job per query stage, which makes raw
-    # job counts a noisy proxy for driver round-trips; with it off, an
-    # action costs ~2 jobs (broadcast build + result).
+    # job counts a noisy proxy for driver round-trips.
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     sc.setJobGroup("cc-jobcount", "cc job accounting")
+    stats: dict = {}
     try:
-        labels = connected_components(edges, vertices, algorithm="label")
+        labels = connected_components(edges, vertices, stats=stats)
         jobs_inside = len(sc.statusTracker().getJobIdsForGroup("cc-jobcount"))
     finally:
         sc.setJobGroup(None, None)
         spark.conf.set("spark.sql.adaptive.enabled", "true")
-    # chain of n vertices: n-1 rounds + 1 detection round + 1 init
-    # action, ≤2 jobs each. The 2-actions-per-round version measured
-    # ~34 here; the fused one measures 17.
-    assert jobs_inside <= 2 * n + 4, jobs_inside
+    assert stats["auto_choice"] == "star-first" and stats["converged"]
+    # gate job + first certificate + one certificate per round + the
+    # fixpoint round's certificate and except-check
+    assert jobs_inside <= stats["star_rounds"] + 4, (jobs_inside, stats)
     assert {r["label"] for r in labels.collect()} == {0}
 
 
-def test_connected_components_star_chain_sublinear_rounds(spark):
-    """The adversarial case min-label can't handle: a 10k-vertex chain
-    (diameter 10k) must converge in O(log² n) star alternations — under
-    15 rounds, where min-label propagation needs ~10k. This is the
+def test_connected_components_star_chain_sublinear_rounds(spark, monkeypatch):
+    """The adversarial case for min-label propagation: a 10k-vertex
+    chain (diameter 10k) must converge in O(log² n) star alternations —
+    under 15 rounds, where min-label propagation needs ~10k. This is the
     100 TB guarantee: round count, i.e. number of full-graph shuffles,
     cannot degrade to graph diameter."""
+    from finlogic_spark.operators import graph
     from finlogic_spark.operators.graph import connected_components
 
+    monkeypatch.setattr(graph, "SMALL_GRAPH_MAX_BYTES", 0)
     n = 10_000
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "src long, dst long"
     )
     vertices = spark.range(n).select(F.col("id").cast("long").alias("id"))
     stats: dict = {}
-    out = connected_components(
-        edges, vertices, algorithm="star", max_iters=40, stats=stats
-    )
+    out = connected_components(edges, vertices, max_iters=40, stats=stats)
     assert out.filter(F.col("label") == 0).count() == n
     assert stats["star_rounds"] < 15, stats
 
 
-def test_connected_components_auto_escalates_and_composes(spark, monkeypatch):
-    """auto must hand off from partial min-label state to star and
-    compose the two label maps correctly: a chain longer than the
-    label-round budget still fully merges, and the clique fast path
-    never escalates."""
-    from finlogic_spark.operators import graph
-    from finlogic_spark.operators.graph import connected_components
-
-    monkeypatch.setattr(graph, "SMALL_GRAPH_MAX_BYTES", 0)
-
-    n = 60  # diameter 59 >> label_rounds=4 -> escalation required
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "src long, dst long"
-    )
-    vertices = spark.createDataFrame([(v,) for v in range(n)], "id long")
-    stats: dict = {}
-    out = connected_components(
-        edges, vertices, algorithm="auto", label_rounds=4, max_iters=40,
-        stats=stats,
-    )
-    assert {r["label"] for r in out.collect()} == {0}
-    assert stats["label_rounds"] == 4 and stats["star_rounds"] > 0, stats
-
-    # clique: label converges within budget, star never runs
-    clique = spark.createDataFrame(
-        [(i, j) for i in range(5) for j in range(i + 1, 5)],
-        "src long, dst long",
-    )
-    cv = spark.createDataFrame([(v,) for v in range(5)], "id long")
-    stats2: dict = {}
-    out2 = connected_components(
-        clique, cv, algorithm="auto", stats=stats2
-    )
-    assert {r["label"] for r in out2.collect()} == {0}
-    assert stats2["star_rounds"] == 0, stats2
-
-
 def test_connected_components_auto_is_shape_aware(spark, monkeypatch):
-    """'auto' must pick the phase order by edge-set size: below the
-    star threshold the label fast path runs first (bench-scale graphs
-    converge in a few cheap rounds); at/above it the label rounds are
-    skipped and star runs directly — the measured winner on the sf100
-    117.9M-edge dedup graph."""
+    """The regime follows the measured edge-list size: under
+    SMALL_GRAPH_MAX_BYTES the driver kernel runs ('single-job'), above
+    it star alternation runs ('star-first') — the measured winner on
+    the sf100 117.9M-edge dedup graph (BENCH_r8_probes.json)."""
     from finlogic_spark.operators import graph
     from finlogic_spark.operators.graph import connected_components
-
-    monkeypatch.setattr(graph, "SMALL_GRAPH_MAX_BYTES", 0)
 
     clique = spark.createDataFrame(
         [(i, j) for i in range(6) for j in range(i + 1, 6)],
@@ -264,27 +227,28 @@ def test_connected_components_auto_is_shape_aware(spark, monkeypatch):
     small_stats: dict = {}
     out = connected_components(clique, v, stats=small_stats)
     assert {r["label"] for r in out.collect()} == {0}
-    assert small_stats["auto_choice"] == "label-first"
+    assert small_stats["auto_choice"] == "single-job"
     assert small_stats["star_rounds"] == 0
 
+    monkeypatch.setattr(graph, "SMALL_GRAPH_MAX_BYTES", 0)
     big_stats: dict = {}
-    out2 = connected_components(
-        clique, v, stats=big_stats, star_edge_threshold=1
-    )
+    out2 = connected_components(clique, v, stats=big_stats)
     assert {r["label"] for r in out2.collect()} == {0}
     assert big_stats["auto_choice"] == "star-first"
-    assert big_stats["label_rounds"] == 0 and big_stats["star_rounds"] > 0
+    assert big_stats["star_rounds"] > 0
 
 
-def test_connected_components_converged_flag_and_warning(spark):
+def test_connected_components_converged_flag_and_warning(spark, monkeypatch):
     """Budget exhaustion must never be silent: stats['converged'] is
     True when a fixpoint was reached, and a too-small max_iters yields
     converged=False plus a RuntimeWarning (the returned labels are
     partial/over-segmented in that case)."""
     import warnings
 
+    from finlogic_spark.operators import graph
     from finlogic_spark.operators.graph import connected_components
 
+    monkeypatch.setattr(graph, "SMALL_GRAPH_MAX_BYTES", 0)
     n = 64
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "src long, dst long"
@@ -292,9 +256,7 @@ def test_connected_components_converged_flag_and_warning(spark):
     vertices = spark.createDataFrame([(v,) for v in range(n)], "id long")
 
     stats_ok: dict = {}
-    out = connected_components(
-        edges, vertices, algorithm="star", max_iters=40, stats=stats_ok
-    )
+    out = connected_components(edges, vertices, max_iters=40, stats=stats_ok)
     assert {r["label"] for r in out.collect()} == {0}
     assert stats_ok["converged"] is True
 
@@ -302,8 +264,7 @@ def test_connected_components_converged_flag_and_warning(spark):
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
         partial = connected_components(
-            edges, vertices, algorithm="star", max_iters=1,
-            stats=stats_exhausted,
+            edges, vertices, max_iters=1, stats=stats_exhausted
         )
         partial.count()  # labels still materialize, just partially merged
     assert stats_exhausted["converged"] is False
@@ -315,10 +276,8 @@ def test_connected_components_converged_flag_and_warning(spark):
 
 
 def test_connected_components_max_iters_total_budget(spark, monkeypatch):
-    """max_iters caps TOTAL full-graph shuffle rounds across both
-    phases in 'auto' (regression: the label phase ran its full
-    label_rounds and star then got a fresh max_iters budget, so a
-    caller asking for <=5 rounds could get 8 + 25)."""
+    """max_iters caps the full-graph shuffle rounds star runs (a caller
+    asking for <= 5 rounds gets at most 5, converged or not)."""
     from finlogic_spark.operators import graph
     from finlogic_spark.operators.graph import connected_components
 
@@ -330,12 +289,10 @@ def test_connected_components_max_iters_total_budget(spark, monkeypatch):
     )
     vertices = spark.createDataFrame([(v,) for v in range(n)], "id long")
     stats: dict = {}
-    connected_components(
-        edges, vertices, algorithm="auto", label_rounds=8, max_iters=5,
-        stats=stats,
-    ).collect()
-    assert stats["label_rounds"] <= 5, stats
-    assert stats["label_rounds"] + stats["star_rounds"] <= 5, stats
+    # the 39-hop chain needs more than 5 rounds, so the budget binds
+    with pytest.warns(RuntimeWarning, match="PARTIAL"):
+        connected_components(edges, vertices, max_iters=5, stats=stats).collect()
+    assert stats["star_rounds"] <= 5, stats
 
 
 def test_connected_components_single_job_regime_bitwise(spark, monkeypatch):
@@ -379,9 +336,6 @@ def test_connected_components_single_job_regime_bitwise(spark, monkeypatch):
         comp.setdefault(find(v_), []).append(v_)
     ref = {v_: min(members) for members in comp.values() for v_ in members}
 
-    # The distributed certificate is numeric-only (shiftright on label
-    # sums), so the string leg checks against the reference; the long
-    # leg additionally cross-checks the distributed regime bitwise.
     for typ, conv in (("long", int), ("string", lambda v: f"n{v:04d}")):
         e = spark.createDataFrame(
             [(conv(a), conv(b)) for a, b in edges], f"src {typ}, dst {typ}"
@@ -395,27 +349,29 @@ def test_connected_components_single_job_regime_bitwise(spark, monkeypatch):
         assert st_fast["auto_choice"] == "single-job", st_fast
         assert st_fast["converged"] is True
         assert fast == {conv(k): conv(lab) for k, lab in ref.items()}
-        if typ == "long":
-            st_dist: dict = {}
-            with monkeypatch.context() as m:
-                m.setattr(graph, "SMALL_GRAPH_MAX_BYTES", 0)
-                dist = {
-                    r["id"]: r["label"]
-                    for r in connected_components(e, v, stats=st_dist).collect()
-                }
-            assert st_dist["auto_choice"] != "single-job"
-            assert fast == dist
+        st_dist: dict = {}
+        with monkeypatch.context() as m:
+            m.setattr(graph, "SMALL_GRAPH_MAX_BYTES", 0)
+            dist = {
+                r["id"]: r["label"]
+                for r in connected_components(e, v, stats=st_dist).collect()
+            }
+        assert st_dist["auto_choice"] != "single-job"
+        assert fast == dist
         assert fast[conv(999)] == conv(999)  # isolated self-label
         assert fast[conv(99)] == conv(0)  # chain fully merged
 
 
-def test_connected_components_single_job_tolerates_null_endpoints(spark):
+def test_connected_components_single_job_tolerates_null_endpoints(
+    spark, monkeypatch
+):
     """ADVICE r16: a null src/dst used to crash the single-job regime
-    (nulls in enc.indices make zero-copy to_numpy raise) while the
-    distributed regime tolerated them via join semantics (a null
-    endpoint matches nothing). The funnel now filters null endpoints:
-    connectivity among non-null ids is unchanged and the query no
-    longer dies in the small-graph regime."""
+    (nulls in enc.indices make zero-copy to_numpy raise), and the
+    distributed regimes labelled a null into a component or emitted a
+    (null, null) row. Both regimes now drop null endpoints on entry:
+    connectivity among non-null ids is unchanged and the two regimes
+    agree."""
+    from finlogic_spark.operators import graph
     from finlogic_spark.operators.graph import connected_components
 
     e = spark.createDataFrame(
@@ -431,6 +387,15 @@ def test_connected_components_single_job_tolerates_null_endpoints(spark):
     # non-null connectivity: 1-2 merged; 5 only touched a null edge so
     # it self-labels through the isolated-vertex union
     assert got == {1: 1, 2: 1, 5: 5}
+
+    monkeypatch.setattr(graph, "SMALL_GRAPH_MAX_BYTES", 0)
+    st_dist: dict = {}
+    dist = [
+        (r["id"], r["label"])
+        for r in connected_components(e, v, stats=st_dist).collect()
+    ]
+    assert st_dist["auto_choice"] != "single-job", st_dist
+    assert len(dist) == len(got) and dict(dist) == got, dist
 
 
 def test_interval_join_bounds_inclusive(spark):

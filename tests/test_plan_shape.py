@@ -471,8 +471,9 @@ def test_containment_two_shuffles_like_jaccard(spark, sf_dir):
 
 
 def test_prefix_verify_broadcast_pair_stream_never_shuffles(spark, sf_dir):
-    # _hashed_set_verify with broadcast_sets=True must make BOTH pair
-    # joins map-side: after the candidate distinct, the (possibly
+    # _hashed_set_verify's broadcast regime (the set table is under
+    # BROADCAST_MAX_DOCS, as at sf0.001) must make BOTH pair joins
+    # map-side: after the candidate distinct, the (possibly
     # output-sized) pair stream reaches the intersect through
     # BroadcastHashJoins only — the 95 GB sf10 spill the old counting
     # verify paid came from shuffling that stream with arrays attached.
@@ -481,9 +482,7 @@ def test_prefix_verify_broadcast_pair_stream_never_shuffles(spark, sf_dir):
     from finlogic_spark.operators.text_dedup import containment_prefix_pairs
 
     d = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    df = containment_prefix_pairs(
-        d, "text", "doc_id", k=3, threshold=0.8, broadcast_sets=True
-    )
+    df = containment_prefix_pairs(d, "text", "doc_id", k=3, threshold=0.8)
     p = plans.formatted_plan(df)
     assert p.count("BroadcastHashJoin") >= 2
     # shuffles remaining: shingle df join / rank window / candidate

@@ -166,11 +166,12 @@ def test_hilo_split_roundtrip_property():
     check()
 
 
-def test_hashed_verify_matches_plain_counting(spark):
+def test_hashed_verify_matches_plain_counting(spark, monkeypatch):
     """_hashed_set_verify's intersection counts must equal the plain
     uncapped counting join's on a mixed corpus (fingerprint collisions
     are the only divergence mode and are ~impossible at test scale) —
     and the broadcast and shuffle variants must agree with each other."""
+    from finlogic_spark.operators import text_dedup
     from finlogic_spark.operators.text_dedup import (
         containment_pairs,
         containment_prefix_pairs,
@@ -191,10 +192,12 @@ def test_hashed_verify_matches_plain_counting(spark):
         ).collect())
     )
     for bcast in (True, False):
-        pref = sorted(
-            map(tuple, containment_prefix_pairs(
-                docs, "text", "doc_id", k=3, threshold=0.6,
-                broadcast_sets=bcast,
-            ).collect())
-        )
+        with monkeypatch.context() as m:
+            if not bcast:
+                m.setattr(text_dedup, "BROADCAST_MAX_DOCS", 0)
+            pref = sorted(
+                map(tuple, containment_prefix_pairs(
+                    docs, "text", "doc_id", k=3, threshold=0.6
+                ).collect())
+            )
         assert pref == plain and len(plain) > 0

@@ -61,12 +61,54 @@ def test_winsorize_stats_golden(spark):
     assert r["p_hi_val"] < 10_000.0
 
 
+def _exact_winsorize_stats(df, key_cols, value_col, p_lo, p_hi):
+    """The former exact tier of ``winsorize_stats``, inlined as the
+    reference: per-group exact ``percentile`` aggregates, bounds
+    broadcast back onto the rows, one pass for the clipped stats."""
+    from finlogic_spark.operators.profile import _cents_sum_guard
+
+    v = F.col(value_col)
+    base = df.filter(v.isNotNull() & ~F.isnan(v)).select(*key_cols, value_col)
+    r6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
+    bounds = base.groupBy(*key_cols).agg(
+        r6(F.expr(f"percentile(`{value_col}`, {p_lo})")).alias("p_lo_val"),
+        r6(F.expr(f"percentile(`{value_col}`, {p_hi})")).alias("p_hi_val"),
+    )
+    clipped = F.least(F.greatest(v, F.col("p_lo_val")), F.col("p_hi_val"))
+    cq = F.floor(clipped * F.lit(100.0) + F.lit(0.5)).cast("long")
+    agg = (
+        base.join(F.broadcast(bounds), list(key_cols))
+        .groupBy(*key_cols)
+        .agg(
+            F.first("p_lo_val").alias("p_lo_val"),
+            F.first("p_hi_val").alias("p_hi_val"),
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.when(v < F.col("p_lo_val"), 1).otherwise(0)).alias("n_clipped_lo"),
+            F.sum(F.when(v > F.col("p_hi_val"), 1).otherwise(0)).alias("n_clipped_hi"),
+            F.sum(cq).alias("__scq"),
+            F.max(F.abs(cq)).alias("__max_acq"),
+        )
+    )
+    return agg.select(
+        *key_cols,
+        "p_lo_val",
+        "p_hi_val",
+        "n",
+        "n_clipped_lo",
+        "n_clipped_hi",
+        (
+            _cents_sum_guard("__max_acq", "n", "__scq", "winsorize_stats")
+            / (F.lit(100.0) * F.col("n"))
+        ).alias("win_mean"),
+    )
+
+
 def test_winsorize_tier_parity(spark):
-    """The compact-histogram tier must be BIT-IDENTICAL to the exact
-    percentile() tier — same interpolation arithmetic, same integer-
-    cents mean — across tied values, skewed groups, fractional
-    interpolation positions, and a single-row group (the outlier-MAD
-    two-strategy discipline)."""
+    """The compact-histogram winsorize_stats must be BIT-IDENTICAL to
+    per-group exact percentile() aggregates — same interpolation
+    arithmetic, same integer-cents mean — across tied values, skewed
+    groups, fractional interpolation positions, and a single-row group
+    (the outlier-MAD two-strategy discipline)."""
     import random
 
     from finlogic_spark.operators.profile import winsorize_stats
@@ -85,9 +127,7 @@ def test_winsorize_tier_parity(spark):
     df = spark.createDataFrame(rows, "k string, v double")
     for p_lo, p_hi in [(0.01, 0.99), (0.25, 0.75), (0.0, 1.0)]:
         exact = sorted(
-            winsorize_stats(
-                df, ["k"], "v", p_lo, p_hi, strategy="exact"
-            ).collect(),
+            _exact_winsorize_stats(df, ["k"], "v", p_lo, p_hi).collect(),
             key=lambda r: r["k"],
         )
         compact = sorted(

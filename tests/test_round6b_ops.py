@@ -53,9 +53,11 @@ def test_bloom_tiny_filter_still_exact(spark):
     expected = sorted(
         probe.join(build, probe.pk == build.bk).select("pk", "dval").collect()
     )
+    pruned = bloom_prune(
+        probe, "pk", build_bloom_filter(build, "bk", 64, 2), 64, 2
+    )
     got = sorted(
-        bloom_pruned_join(probe, build, "pk", "bk", num_bits=64, num_hashes=2)
-        .select("pk", "dval").collect()
+        pruned.join(build, pruned.pk == build.bk).select("pk", "dval").collect()
     )
     assert got == expected
 
@@ -91,7 +93,7 @@ def test_bloom_prune_probe_with_bloom_column(spark):
 
 
 def test_bloom_auto_size_prunes_at_scale(spark):
-    """num_bits=None sizes the filter to the build cardinality: a
+    """bloom_pruned_join sizes the filter to the build cardinality: a
     40k-key build (which SATURATES a fixed 2^17-bit filter at 5 hashes
     and prunes nothing) must still drop the vast majority of a
     disjoint-key probe — the scale bug the auto-size exists to kill —

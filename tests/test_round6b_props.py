@@ -11,7 +11,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from finlogic_spark.operators.bloomjoin import bloom_pruned_join
+from finlogic_spark.operators.bloomjoin import bloom_prune, build_bloom_filter
 from finlogic_spark.operators.corpus import cap_per_group
 from finlogic_spark.operators.resample import resample_ffill
 
@@ -40,13 +40,11 @@ def test_bloom_join_always_equals_plain_join(spark, pk, bk):
     want = sorted(
         map(tuple, probe.join(build, probe.pk == build.bk).collect())
     )
+    pruned = bloom_prune(
+        probe, "pk", build_bloom_filter(build, "bk", 256, 3), 256, 3
+    )
     got = sorted(
-        map(
-            tuple,
-            bloom_pruned_join(
-                probe, build, "pk", "bk", num_bits=256, num_hashes=3
-            ).collect(),
-        )
+        map(tuple, pruned.join(build, pruned.pk == build.bk).collect())
     )
     assert got == want
 
