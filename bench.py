@@ -13,6 +13,7 @@ import json
 import os
 import statistics
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -262,6 +263,23 @@ def duckdb_baseline(sf_dir: str, runs: int = 3) -> dict[str, float]:
     return timings, timeouts
 
 
+def baseline_detail_path(subset: bool) -> str:
+    """Where the per-query detail sidecar goes: $SPARK_GRAFT_BASELINE_DETAIL
+    when set; else the committed BENCH_baseline_detail.json for a full
+    run, and a fresh temp file for a subset run — a subset's few rows
+    must never replace the full run's committed sidecar."""
+    env = os.environ.get("SPARK_GRAFT_BASELINE_DETAIL")
+    if env:
+        return env
+    if subset:
+        fd, path = tempfile.mkstemp(prefix="bench_detail_", suffix=".json")
+        os.close(fd)
+        return path
+    return os.path.join(
+        os.path.dirname(os.path.abspath(__file__)), "BENCH_baseline_detail.json"
+    )
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -385,18 +403,13 @@ def main() -> None:
         # tripled its length and the driver's r15 stdout capture
         # truncated the JSON mid-object, losing the round-over-round
         # comparison. They now live in the sidecar artifact named
-        # here (same directory as this file unless overridden by
-        # $SPARK_GRAFT_BASELINE_DETAIL). Same queries, same env
-        # contract, same methodology; nothing removed from "queries".
+        # here (see baseline_detail_path: this file's directory on a
+        # full run, a temp file on a subset run). Same queries, same
+        # env contract, same methodology; nothing removed from
+        # "queries".
         "baseline_detail_file": None,
     }
-    detail_path = os.environ.get(
-        "SPARK_GRAFT_BASELINE_DETAIL",
-        os.path.join(
-            os.path.dirname(os.path.abspath(__file__)),
-            "BENCH_baseline_detail.json",
-        ),
-    )
+    detail_path = baseline_detail_path(bool(subset))
     try:
         with open(detail_path, "w") as fh:
             json.dump(

@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from finlogic_spark.session import local_frame
+from finlogic_spark.sources.index_table import read_params, write_params
 
 __all__ = [
     "append_bpe_index",
@@ -288,6 +289,9 @@ def bpe_pieces(
 # --------------------------------------------------------------- persistence
 
 BPE_INDEX_VERSION = 2  # v2: word_pieces carries per-word corpus counts
+_BPE_STATS = "version int, num_merges int, top_words int"
+_MERGES = "rank int, left string, right string"
+_WORD_PIECES = "word string, n long, pieces array<string>"
 
 
 def _encode_words_df(
@@ -310,9 +314,7 @@ def _encode_words_df(
             ]
             yield pdf
 
-    return words.mapInPandas(
-        enc, schema="word string, n long, pieces array<string>"
-    )
+    return words.mapInPandas(enc, schema=_WORD_PIECES)
 
 
 def build_bpe_index(
@@ -331,9 +333,10 @@ def build_bpe_index(
       + occurrence counts for every distinct corpus word (vocab-sized;
       serving seeds encode caches from its FREQUENCY HEAD so known
       words cost a lookup, not a merge loop)
-    - ``{path}/_stats``       version + build parameters (the
-      n_buckets-sidecar precedent: serving can never bind to stale
-      parameters, and a format change refuses to decode)
+    - ``{path}/_stats``       version + build parameters (the sidecar
+      of every persisted index, sources/index_table.py: serving can
+      never bind to stale parameters, and a format change refuses to
+      decode)
 
     Scale: learning reads the vocab-bounded word-frequency table
     (top-``top_words`` driver materialization, the centroids
@@ -348,7 +351,7 @@ def build_bpe_index(
     local_frame(
         spark,
         [(i, a, b) for i, (a, b) in enumerate(merges)],
-        "rank int, left string, right string",
+        _MERGES,
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/merges")
     words = (
         docs.filter(F.col(text_col).isNotNull())
@@ -359,11 +362,9 @@ def build_bpe_index(
     _encode_words_df(words, merges).write.mode("overwrite").parquet(
         f"{path}/word_pieces"
     )
-    local_frame(
-        spark,
-        [(BPE_INDEX_VERSION, num_merges, top_words)],
-        "version int, num_merges int, top_words int",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/_stats")
+    write_params(
+        spark, path, _BPE_STATS, [(BPE_INDEX_VERSION, num_merges, top_words)]
+    )
 
 
 def read_bpe_index(
@@ -382,7 +383,7 @@ def read_bpe_index(
     parameter change would otherwise silently serve the stale model —
     the caller catches the ValueError and rebuilds, the
     n_buckets-sidecar precedent)."""
-    st = spark.read.parquet(f"{path}/_stats").collect()[0]
+    st = read_params(spark, path, _BPE_STATS)[0]
     if st["version"] != BPE_INDEX_VERSION:
         raise ValueError(
             f"BPE index at {path} has version {st['version']}, this build "
@@ -397,9 +398,11 @@ def read_bpe_index(
                 f"BPE index at {path} was built with {name}={st[name]}, "
                 f"caller expects {want} — rebuild the index"
             )
-    mrows = spark.read.parquet(f"{path}/merges").orderBy("rank").collect()
+    # schemas given: no schema-inference job per table
+    merges_df = spark.read.schema(_MERGES).parquet(f"{path}/merges")
+    mrows = merges_df.orderBy("rank").collect()
     merges = [(r["left"], r["right"]) for r in mrows]
-    return merges, spark.read.parquet(f"{path}/word_pieces")
+    return merges, spark.read.schema(_WORD_PIECES).parquet(f"{path}/word_pieces")
 
 
 def append_bpe_index(

@@ -272,7 +272,12 @@ def _bytes_to_embedding(data: bytes, dim: int) -> list[float]:
 
 
 def extract_features(
-    media: DataFrame, dim: int = 16, decoder=stub_decoder
+    media: DataFrame,
+    dim: int = 16,
+    # The codec seam: test_multimodal.py drives pil_decoder (real PNG
+    # containers, stub fallback) and a swapped codec through it; the
+    # registry rows use the stub.
+    decoder=stub_decoder,
 ) -> DataFrame:
     """binary payload → (decoded metadata, embedding) via Arrow-batched
     mapInPandas; the binary column does NOT survive into the output.

@@ -7,8 +7,9 @@ building retrieval eval sets).
 Shape at 100 TB:
 - postings build = tokenize → explode → groupBy(token, doc) — one
   shuffle keyed by (token, doc) with map-side combine; the result is
-  the classic inverted index laid out as a DataFrame, ready to be
-  written bucketed by token so later term lookups are partition-pruned
+  the classic inverted index laid out as a DataFrame, written bucketed
+  by token (build_postings_table, in the one on-disk index format of
+  sources/index_table.py) so later term lookups are partition-pruned
   scans.
 - document frequency / corpus stats = partial-aggregated counts, a
   few-row side output.
@@ -36,6 +37,12 @@ from pyspark.sql import functions as F
 
 from finlogic_spark.functions.text import tokens
 from finlogic_spark.session import local_frame
+from finlogic_spark.sources.index_table import (
+    params_frame,
+    read_params,
+    write_index,
+    write_params,
+)
 
 
 def build_postings(
@@ -86,13 +93,18 @@ class PostingsIndex(NamedTuple):
     partitioned by doc-id bucket (``__doc_bkt``) — the forward-index
     twin that makes BY-DOCUMENT lookups (tf-idf more-like-this query
     vectors) a pruned scan instead of a full pass over a
-    token-partitioned table. None on indexes built before it existed."""
+    token-partitioned table."""
 
     postings: DataFrame
     stats: DataFrame
     norms: DataFrame
     n_buckets: int
-    forward: "DataFrame | None" = None
+    forward: DataFrame
+
+
+# ``_stats`` sidecar schemas (sources/index_table.py).
+_POSTINGS_STATS = "n_docs long, total_dl long, n_buckets int"
+_POSITIONAL_STATS = "n_buckets int"
 
 
 def build_postings_table(
@@ -109,15 +121,16 @@ def build_postings_table(
     partition-PRUNED scan of |terms| buckets (plan-pinned in
     tests/test_plan_shape.py) with zero corpus passes.
 
-    Layout under ``path``:
+    Layout under ``path`` (the persisted-index format of
+    sources/index_table.py):
     - bucketed postings, partitioned by ``__tok_bkt``, with the
       token's document frequency df DENORMALIZED onto every row (one
       int per posting buys scoring without the per-query df aggregate);
-    - ``_stats/``: 1 row (n_docs, total_dl, n_buckets) — underscore
-      prefix keeps it invisible to the main-path parquet listing;
+    - ``_stats/``: 1 row (n_docs, total_dl, n_buckets);
     - ``_norms/``: per-doc tf-idf L2 norm, precomputed with the same
       integer micro-unit quantization as the live path so persisted
-      and from-scratch cosines are bit-identical.
+      and from-scratch cosines are bit-identical;
+    - ``_forward/``: the same rows partitioned by doc-id bucket.
 
     Size n_buckets so one bucket ≈ one scan task's worth of postings
     (4096+ for a web-scale corpus; 64 keeps small test tables from
@@ -130,32 +143,20 @@ def build_postings_table(
     enriched = postings.join(dfs, "token").withColumn(
         "__tok_bkt", _token_bucket(F.col("token"), n_buckets)
     )
-    enriched.write.partitionBy("__tok_bkt").mode("overwrite").parquet(path)
+    # stats/norms describe the persisted table, and downstream plans
+    # scan parquet instead of recomputing the postings
+    persisted = write_index(enriched, path, "__tok_bkt")
     spark = docs.sparkSession
-    # re-read what was written: stats/norms must describe the persisted
-    # table, and downstream plans should scan parquet, not recompute
-    persisted = spark.read.parquet(path)
-    stats = (
+    n_docs, total_dl = (
         persisted.groupBy("doc_id")
         .agg(F.first("dl").alias("dl"))
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("dl").alias("total_dl"),
-            F.lit(n_buckets).alias("n_buckets"),
-        )
+        .agg(F.count(F.lit(1)), F.sum("dl"))
+        .first()
     )
-    stats.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(path, "_stats")
-    )
+    write_params(spark, path, _POSTINGS_STATS, [(n_docs, total_dl, n_buckets)])
     norms = _tfidf_norms(
         _tfidf_weight(
-            persisted.join(
-                F.broadcast(
-                    spark.read.parquet(os.path.join(path, "_stats")).select(
-                        F.col("n_docs").cast("double").alias("n_docs")
-                    )
-                )
-            )
+            persisted.withColumn("n_docs", F.lit(float(n_docs)))
         )
     )
     norms.write.mode("overwrite").parquet(os.path.join(path, "_norms"))
@@ -165,28 +166,33 @@ def build_postings_table(
     # the doc_id filter full-scans a token-partitioned table (measured
     # 4.4 s warm per tf-idf serve at sf10; the classic inverted+forward
     # index pair every search engine ships).
-    persisted.withColumn(
-        "__doc_bkt", _doc_bucket(F.col("doc_id"), n_buckets)
-    ).drop("__tok_bkt").write.partitionBy("__doc_bkt").mode(
-        "overwrite"
-    ).parquet(os.path.join(path, "_forward"))
-    return read_postings(spark, path)
+    forward = write_index(
+        persisted.withColumn(
+            "__doc_bkt", _doc_bucket(F.col("doc_id"), n_buckets)
+        ).drop("__tok_bkt"),
+        os.path.join(path, "_forward"),
+        "__doc_bkt",
+    )
+    return PostingsIndex(
+        postings=persisted,
+        stats=params_frame(spark, path, _POSTINGS_STATS),
+        norms=spark.read.parquet(os.path.join(path, "_norms")),
+        n_buckets=n_buckets,
+        forward=forward,
+    )
 
 
 def read_postings(spark: SparkSession, path: str) -> "PostingsIndex":
-    """Open a persisted postings table for serving."""
-    stats = spark.read.parquet(os.path.join(path, "_stats"))
-    n_buckets = int(stats.select("n_buckets").first()[0])
-    try:
-        forward = spark.read.parquet(os.path.join(path, "_forward"))
-    except Exception:  # pre-forward-index layout
-        forward = None
+    """Open a persisted postings table for serving. An index without
+    its ``_forward`` twin raises: it was not written by
+    build_postings_table."""
+    stats = params_frame(spark, path, _POSTINGS_STATS)
     return PostingsIndex(
         postings=spark.read.parquet(path),
         stats=stats,
         norms=spark.read.parquet(os.path.join(path, "_norms")),
-        n_buckets=n_buckets,
-        forward=forward,
+        n_buckets=stats.first()["n_buckets"],
+        forward=spark.read.parquet(os.path.join(path, "_forward")),
     )
 
 
@@ -394,48 +400,38 @@ def tfidf_similar(
                 F.col("n_docs").cast("double").alias("n_docs")
             )
         )
-        if postings.forward is not None:
-            # Forward-index path: the query docs' bucket list is
-            # computed from the id literals alone (a tiny literal-frame
-            # job, zero index access), so fetching the |Q| query
-            # vectors is a pruned scan of ≤|Q| doc-bucket directories —
-            # never a full pass over the token-partitioned table.
-            spark = postings.forward.sparkSession
-            # xxhash64 is TYPE-sensitive (xxhash64(5 int) != xxhash64(5L)),
-            # so the literal query frame must hash the ids at the exact
-            # dtype the index was built over — cast to the stored
-            # forward-index doc_id type, never a hard-coded long (which
-            # silently pruned to wrong buckets for int32 ids and crashed
-            # outright on string ids).
-            stored_t = postings.forward.schema["doc_id"].dataType
-            doc_bkts = sorted(
-                int(r[0])
-                for r in spark.createDataFrame(
-                    # Normalize numpy scalars (a caller iterating a
-                    # pandas/numpy id array hands us np.int64 /
-                    # np.str_) to native Python values: schema
-                    # inference rejects numpy types outright.
-                    [
-                        (i.item() if hasattr(i, "item") else i,)
-                        for i in query_ids
-                    ],
-                    ["doc_id"],
-                )
-                .select(
-                    _doc_bucket(
-                        F.col("doc_id").cast(stored_t), postings.n_buckets
-                    )
-                )
-                .distinct()
-                .collect()
+        # Forward-index path: the query docs' bucket list is computed
+        # from the id literals alone (a tiny literal-frame job, zero
+        # index access), so fetching the |Q| query vectors is a pruned
+        # scan of ≤|Q| doc-bucket directories — never a full pass over
+        # the token-partitioned table.
+        spark = postings.forward.sparkSession
+        # xxhash64 is TYPE-sensitive (xxhash64(5 int) != xxhash64(5L)),
+        # so the literal query frame must hash the ids at the exact
+        # dtype the index was built over — cast to the stored
+        # forward-index doc_id type, never a hard-coded long (which
+        # silently pruned to wrong buckets for int32 ids and crashed
+        # outright on string ids).
+        stored_t = postings.forward.schema["doc_id"].dataType
+        doc_bkts = sorted(
+            int(r[0])
+            for r in spark.createDataFrame(
+                # Normalize numpy scalars (a caller iterating a
+                # pandas/numpy id array hands us np.int64 / np.str_)
+                # to native Python values: schema inference rejects
+                # numpy types outright.
+                [(i.item() if hasattr(i, "item") else i,) for i in query_ids],
+                ["doc_id"],
             )
-            q_rows = postings.forward.filter(
-                F.col("__doc_bkt").isin(doc_bkts)
-            ).filter(F.col("doc_id").isin(query_ids))
-        else:  # pre-forward layout: full scan is the only option
-            q_rows = postings.postings.filter(
-                F.col("doc_id").isin(query_ids)
+            .select(
+                _doc_bucket(F.col("doc_id").cast(stored_t), postings.n_buckets)
             )
+            .distinct()
+            .collect()
+        )
+        q_rows = postings.forward.filter(
+            F.col("__doc_bkt").isin(doc_bkts)
+        ).filter(F.col("doc_id").isin(query_ids))
         # The query vectors are |Q|-bounded by the more-like-this
         # contract, and BOTH the candidate pruning below and the dots
         # broadcast consume them — eagerly checkpoint so the pruned
@@ -571,14 +567,8 @@ def build_positional_postings(
     """Positional inverted index: one row per token OCCURRENCE —
     (token, doc_id, pos), pos 1-based in the whitespace token stream.
     ~dl rows per doc (vs one per distinct token in build_postings).
-
-    Serving recipe (mirrors the frequency postings): pass
-    ``n_buckets`` to also emit ``__tok_bkt``, write the result
-    ``.partitionBy('__tok_bkt')``, and serve via
-    ``phrase_search(postings=..., n_buckets=same)`` — the phrase
-    terms' buckets are computed driver-side from the literals alone,
-    so the scan is partition-PRUNED to |distinct term buckets|
-    directories plus a pushed token filter."""
+    ``n_buckets`` also emits the ``__tok_bkt`` partition column of the
+    persisted form (build_positional_postings_table)."""
     out = docs.select(
         F.col(id_col).alias("doc_id"),
         F.posexplode(tokens(text_col)).alias("pos0", "token"),
@@ -610,20 +600,16 @@ def build_positional_postings_table(
 ) -> "PositionalIndex":
     """Build the positional index ONCE and persist it partitioned by
     token-hash bucket, with ``n_buckets`` recorded in a ``_stats``
-    sidecar (mirroring build_postings_table). Serving MUST go through
-    the returned handle / read_positional_postings: the bucket count is
-    read from the sidecar, never re-supplied by the caller, closing the
-    footgun where a caller-passed value differing from build time
-    prunes to the WRONG partitions and silently drops matches."""
-    out = build_positional_postings(docs, id_col, text_col,
-                                    n_buckets=n_buckets)
-    out.write.partitionBy("__tok_bkt").mode("overwrite").parquet(path)
-    spark = docs.sparkSession
-    stats = spark.range(1).select(F.lit(n_buckets).alias("n_buckets"))
-    stats.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(path, "_stats")
+    sidecar (the persisted-index format of sources/index_table.py).
+    Serving goes through the returned handle / read_positional_postings:
+    the bucket count is read from the sidecar, never re-supplied by the
+    caller, so a value differing from build time cannot prune to the
+    WRONG partitions and silently drop matches."""
+    out = build_positional_postings(docs, id_col, text_col, n_buckets=n_buckets)
+    df = write_index(
+        out, path, "__tok_bkt", params=(_POSITIONAL_STATS, [(n_buckets,)])
     )
-    return read_positional_postings(spark, path)
+    return PositionalIndex(postings=df, n_buckets=n_buckets)
 
 
 def append_positional_postings(
@@ -652,13 +638,10 @@ def append_positional_postings(
     index (re-appending an existing doc_id would double its positions
     and inflate its match counts); dedup upstream on doc_id.
     """
-    spark = new_docs.sparkSession
-    idx = read_positional_postings(spark, path)
-    out = build_positional_postings(
-        new_docs, id_col, text_col, n_buckets=idx.n_buckets
-    )
-    out.write.partitionBy("__tok_bkt").mode("append").parquet(path)
-    return read_positional_postings(spark, path)
+    (n_buckets,) = read_params(new_docs.sparkSession, path, _POSITIONAL_STATS)[0]
+    out = build_positional_postings(new_docs, id_col, text_col, n_buckets=n_buckets)
+    df = write_index(out, path, "__tok_bkt", mode="append")
+    return PositionalIndex(postings=df, n_buckets=n_buckets)
 
 
 def read_positional_postings(
@@ -666,11 +649,8 @@ def read_positional_postings(
 ) -> "PositionalIndex":
     """Open a persisted positional index for serving; ``n_buckets``
     comes from the ``_stats`` sidecar written at build time."""
-    stats = spark.read.parquet(os.path.join(path, "_stats"))
-    n_buckets = int(stats.select("n_buckets").first()[0])
-    return PositionalIndex(
-        postings=spark.read.parquet(path), n_buckets=n_buckets
-    )
+    (n_buckets,) = read_params(spark, path, _POSITIONAL_STATS)[0]
+    return PositionalIndex(postings=spark.read.parquet(path), n_buckets=n_buckets)
 
 
 def phrase_search(
@@ -678,8 +658,7 @@ def phrase_search(
     phrase: list[str],
     id_col: str = "doc_id",
     text_col: str = "text",
-    postings: "DataFrame | PositionalIndex | None" = None,
-    n_buckets: int | None = None,
+    postings: "PositionalIndex | None" = None,
 ) -> DataFrame:
     """Exact token-sequence match: (doc_id, n_matches) for documents
     containing ``phrase`` as consecutive tokens.
@@ -692,20 +671,18 @@ def phrase_search(
     |corpus| — selectivity does the work, no regex scan of every
     document.
 
-    Against a PERSISTED index, pass the ``PositionalIndex`` handle from
-    ``build_positional_postings_table`` / ``read_positional_postings``:
-    the terms' buckets are computed driver-side from the literals alone
-    and added as a partition predicate — static partition pruning, same
-    as the BM25 term lookup (without it a bucket-partitioned index
-    would be scanned in full, token filter notwithstanding). The bucket
-    count comes from the index's ``_stats`` sidecar (the build-time
-    value), because a mismatched count prunes to the WRONG partitions
-    and silently drops matches — undetectable from the pruned read
-    itself. An explicit ``n_buckets`` that CONTRADICTS the handle's
-    stored value raises ValueError instead of silently mis-pruning.
-    (Passing a raw bucketed DataFrame + manual ``n_buckets`` still
-    works for ad-hoc use, but the persisted path should always go
-    through the handle.)
+    ``postings=``: the ``PositionalIndex`` handle from
+    ``build_positional_postings_table`` / ``read_positional_postings``.
+    When given, ``docs`` is ignored: the terms' buckets are computed
+    driver-side from the literals alone and added as a partition
+    predicate — static partition pruning, same as the BM25 term lookup
+    (without it a bucket-partitioned index would be scanned in full,
+    token filter notwithstanding). The bucket count always comes from
+    the index's ``_stats`` sidecar: a caller-supplied count that
+    differed from build time would prune to the WRONG partitions and
+    silently drop matches, undetectable from the pruned read itself.
+    Without ``postings`` the positional rows are built live from
+    ``docs``.
 
     A repeated term in the phrase self-joins the same postings slice
     at different offsets; positions are unique per doc so counts never
@@ -714,30 +691,10 @@ def phrase_search(
     if not phrase:
         raise ValueError("phrase must contain at least one token")
     norm = [t.lower() for t in phrase]
-    if isinstance(postings, PositionalIndex):
-        if n_buckets is not None and n_buckets != postings.n_buckets:
-            raise ValueError(
-                f"n_buckets={n_buckets} contradicts the persisted "
-                f"index's build-time value {postings.n_buckets} (from "
-                "its _stats sidecar) — pruning with it would silently "
-                "drop matches. Omit n_buckets to use the stored value."
-            )
-        n_buckets = postings.n_buckets
-        p = postings.postings
+    if postings is not None:
+        p = _bucket_pruned_terms(postings.postings, norm, postings.n_buckets)
     else:
-        p = (
-            postings
-            if postings is not None
-            else build_positional_postings(docs, id_col, text_col,
-                                           n_buckets=n_buckets)
-        )
-    if n_buckets is not None:
-        if "__tok_bkt" not in p.columns:
-            raise ValueError(
-                "n_buckets given but postings carry no __tok_bkt column "
-                "— build with build_positional_postings(n_buckets=...)"
-            )
-        p = _bucket_pruned_terms(p, norm, n_buckets)
+        p = build_positional_postings(docs, id_col, text_col)
     parts = [
         p.filter(F.col("token") == F.lit(t)).select(
             "doc_id", (F.col("pos") - F.lit(i)).alias("start")

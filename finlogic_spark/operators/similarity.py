@@ -13,6 +13,9 @@ Three tiers:
   to its nearest centroid ONCE (shuffle-free expression argmax), then
   each query scans only its n_probe nearest cells.
 
+The LSH and IVF tiers persist as serving indexes (build once, append,
+open) in the one on-disk index format of sources/index_table.py.
+
 No Python UDFs: higher-order array functions compile to Catalyst
 expressions. Literal-heavy expressions (hyperplanes, centroid tables)
 are built as ONE ``F.expr`` SQL string each — building them from
@@ -28,12 +31,14 @@ import hashlib
 import math
 import struct
 from collections.abc import Sequence
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 from finlogic_spark.session import local_frame
+from finlogic_spark.sources.index_table import read_params, write_index
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -288,18 +293,20 @@ def lsh_index_multi(
     )
 
 
-class LshIndex:
+class LshIndex(NamedTuple):
     """Handle on a persisted multi-table LSH index: the serving frame
     plus the build parameters from the ``_stats`` sidecar (so serving
     and appends can never drift from the stored layout)."""
 
-    __slots__ = ("df", "dim", "num_planes", "num_tables")
+    df: DataFrame
+    dim: int
+    num_planes: int
+    num_tables: int
 
-    def __init__(self, df: DataFrame, dim: int, num_planes: int, num_tables: int):
-        self.df = df
-        self.dim = dim
-        self.num_planes = num_planes
-        self.num_tables = num_tables
+
+# ``_stats`` sidecar schemas (sources/index_table.py).
+_LSH_STATS = "dim int, num_planes int, num_tables int"
+_IVF_STATS = "cid int, cv array<double>"
 
 
 def build_lsh_index_table(
@@ -315,66 +322,21 @@ def build_lsh_index_table(
     by ``__tbl`` with rows sorted by ``__bucket`` inside each file
     (row-group min/max skipping for bucket-selective reads), plus a
     ``_stats`` sidecar pinning (dim, num_planes, num_tables) — the
-    exact lifecycle ``search.build_positional_postings_table`` gives
-    the text side. Underscore-prefixed sidecars are invisible to the
-    parquet scan, so ``spark.read.parquet(path)`` is the serving frame.
+    layout of every persisted index (sources/index_table.py).
+    Underscore-prefixed sidecars are invisible to the parquet scan, so
+    ``spark.read.parquet(path)`` is the serving frame.
     """
-    import os
-
-    spark = corpus.sparkSession
-    idx = lsh_index_multi(
-        corpus, vec_col, dim, num_planes, num_tables, id_col=id_col
+    params = (dim, num_planes, num_tables)
+    rows = lsh_index_multi(corpus, vec_col, *params, id_col=id_col)
+    df = write_index(
+        rows, path, "__tbl", sort_col="__bucket", n_parts=num_tables,
+        params=(_LSH_STATS, [params]),
     )
-    (
-        idx.repartition(num_tables, F.col("__tbl"))
-        .sortWithinPartitions("__tbl", "__bucket")
-        .write.partitionBy("__tbl")
-        .mode("overwrite")
-        .parquet(path)
-    )
-    local_frame(
-        spark, [(dim, num_planes, num_tables)], _LSH_STATS
-    ).write.mode("overwrite").parquet(os.path.join(path, "_stats"))
-    return read_lsh_index(spark, path)
-
-
-# ``_stats`` sidecar schemas. Reading with the schema given skips the
-# schema-inference job a plain ``spark.read.parquet`` runs first.
-_LSH_STATS = "dim int, num_planes int, num_tables int"
-_IVF_STATS = "cid int, cv array<double>"
-
-
-def _read_stats(spark, path: str, schema: str) -> list:
-    import os
-
-    return spark.read.schema(schema).parquet(os.path.join(path, "_stats")).collect()
-
-
-def _appended_index_frame(spark, path: str, rows: DataFrame, part_col: str) -> DataFrame:
-    """Serving frame of an index just appended to, read with the
-    schema the written ``rows`` imply instead of inferring it again:
-    the data columns nullable as Parquet reads them, then the partition
-    column as the int that partition discovery infers for small ids."""
-    data = [
-        StructField(f.name, f.dataType, True)
-        for f in rows.schema.fields
-        if f.name != part_col
-    ]
-    schema = StructType(data + [StructField(part_col, IntegerType(), True)])
-    return spark.read.schema(schema).parquet(path)
-
-
-def _lsh_handle(df: DataFrame, stats) -> LshIndex:
-    return LshIndex(
-        df=df,
-        dim=int(stats["dim"]),
-        num_planes=int(stats["num_planes"]),
-        num_tables=int(stats["num_tables"]),
-    )
+    return LshIndex(df, *params)
 
 
 def read_lsh_index(spark, path: str) -> LshIndex:
-    return _lsh_handle(spark.read.parquet(path), _read_stats(spark, path, _LSH_STATS)[0])
+    return LshIndex(spark.read.parquet(path), *read_params(spark, path, _LSH_STATS)[0])
 
 
 def append_to_lsh_index(
@@ -398,32 +360,21 @@ def append_to_lsh_index(
     Parameters always come from the sidecar, never the caller — a
     mismatched plane count would silently split the corpus across
     incompatible bucket spaces."""
-    spark = new_vecs.sparkSession
-    stats = _read_stats(spark, path, _LSH_STATS)[0]
-    num_tables = int(stats["num_tables"])
-    rows = lsh_index_multi(
-        new_vecs, vec_col, int(stats["dim"]), int(stats["num_planes"]),
-        num_tables, id_col=id_col,
+    params = read_params(new_vecs.sparkSession, path, _LSH_STATS)[0]
+    rows = lsh_index_multi(new_vecs, vec_col, *params, id_col=id_col)
+    df = write_index(
+        rows, path, "__tbl", sort_col="__bucket", n_parts=params.num_tables,
+        mode="append",
     )
-    (
-        rows.repartition(num_tables, F.col("__tbl"))
-        .sortWithinPartitions("__tbl", "__bucket")
-        .write.partitionBy("__tbl")
-        .mode("append")
-        .parquet(path)
-    )
-    return _lsh_handle(_appended_index_frame(spark, path, rows, "__tbl"), stats)
+    return LshIndex(df, *params)
 
 
-class IvfIndex:
+class IvfIndex(NamedTuple):
     """Handle on a persisted IVF index: the (id, vec, __cell) serving
     frame plus the frozen centroid table from the ``_stats`` sidecar."""
 
-    __slots__ = ("df", "cents")
-
-    def __init__(self, df: DataFrame, cents: list):
-        self.df = df
-        self.cents = cents
+    df: DataFrame
+    cents: list
 
 
 def build_ivf_index_table(
@@ -438,27 +389,22 @@ def build_ivf_index_table(
     table in the ``_stats`` sidecar: the centroids are part of the
     INDEX, not the caller's state — appends must assign against the
     exact centroids the existing rows used."""
-    import os
-
-    spark = corpus.sparkSession
-    cells = ivf_assign(
-        corpus.select(id_col, vec_col), list(cents), vec_col, "__cell"
+    cents = sorted((int(c), [float(x) for x in v]) for c, v in cents)
+    cells = ivf_assign(corpus.select(id_col, vec_col), cents, vec_col, "__cell")
+    return IvfIndex(
+        df=write_index(cells, path, "__cell", params=(_IVF_STATS, cents)), cents=cents
     )
-    cells.write.partitionBy("__cell").mode("overwrite").parquet(path)
-    local_frame(
-        spark, [(int(c), [float(x) for x in v]) for c, v in cents], _IVF_STATS
-    ).write.mode("overwrite").parquet(os.path.join(path, "_stats"))
-    return read_ivf_index(spark, path)
 
 
-def _ivf_cents(stats) -> list:
-    return sorted((int(r["cid"]), list(map(float, r["cv"]))) for r in stats)
+def _ivf_cents(spark, path: str) -> list:
+    return sorted(
+        (int(r["cid"]), list(map(float, r["cv"])))
+        for r in read_params(spark, path, _IVF_STATS)
+    )
 
 
 def read_ivf_index(spark, path: str) -> IvfIndex:
-    return IvfIndex(
-        df=spark.read.parquet(path), cents=_ivf_cents(_read_stats(spark, path, _IVF_STATS))
-    )
+    return IvfIndex(df=spark.read.parquet(path), cents=_ivf_cents(spark, path))
 
 
 def append_to_ivf_index(
@@ -474,11 +420,9 @@ def append_to_ivf_index(
     argmin over the stored centroid table; pinned by
     tests/test_ann_append.py). Centroid DRIFT is a rebuild decision,
     not an append one: fold-in never re-clusters."""
-    spark = new_vecs.sparkSession
-    cents = _ivf_cents(_read_stats(spark, path, _IVF_STATS))
+    cents = _ivf_cents(new_vecs.sparkSession, path)
     cells = ivf_assign(new_vecs.select(id_col, vec_col), cents, vec_col, "__cell")
-    cells.write.partitionBy("__cell").mode("append").parquet(path)
-    return IvfIndex(df=_appended_index_frame(spark, path, cells, "__cell"), cents=cents)
+    return IvfIndex(df=write_index(cells, path, "__cell", mode="append"), cents=cents)
 
 
 def lsh_query_probes_local(
@@ -687,8 +631,11 @@ def cosine_neardup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     num_tables: int = 1,
+    # Mega-bucket guard, pinned by test_similarity_ivf.py
+    # test_neardup_degenerate_single_bucket. It drops pairs, so no
+    # registry query sets it; the pair-preserving bound is ROADMAP's
+    # "Bound `bucket_pairs` for giant buckets".
     max_bucket_size: int | None = None,
-    corpus_size: int | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id_a < id_b, cos >= τ):
     the vector-space dedup tier (exact / n-gram / MinHash-LSH / SimHash
@@ -702,7 +649,7 @@ def cosine_neardup_pairs(
     Scale levers (the recall/cost curve):
     - ``num_planes=None`` sizes the plane count from the corpus
       (``auto_num_planes``): pairs stay ~n·target_bucket instead of
-      n²/2^const. Pass ``corpus_size`` to skip the count job.
+      n²/2^const. The corpus count it runs is that measurement.
     - ``num_tables>1`` unions candidates from independent plane sets —
       each extra table multiplies candidate cost but recovers pairs a
       single sign-pattern splits (recall ≈ 1-(1-p)^T for per-table
@@ -712,8 +659,7 @@ def cosine_neardup_pairs(
       expansion — the same guard the text MinHash-LSH tier uses.
     """
     if num_planes is None:
-        n = corpus_size if corpus_size is not None else df.count()
-        num_planes = auto_num_planes(n)
+        num_planes = auto_num_planes(df.count())
     pair_sets = []
     for t in range(num_tables):
         b = lsh_assign_buckets(

@@ -29,7 +29,6 @@ def salted_join(
     on: list[str] | str,
     salt_source: str | Column | None = None,
     salts: int = 8,
-    num_salts: int | None = None,
     how: str = "inner",
 ) -> DataFrame:
     """Equi-join ``fact`` ⋈ ``dim`` on ``on`` with the fact side salted
@@ -58,8 +57,6 @@ def salted_join(
     """
     if how not in ("inner", "left"):
         raise ValueError(f"salted_join supports inner/left, got {how!r}")
-    if num_salts is not None:  # legacy alias
-        salts = num_salts
     keys = [on] if isinstance(on, str) else list(on)
     if salt_source is None:
         src = F.xxhash64(*[F.col(c) for c in fact.columns])

@@ -8,7 +8,8 @@ SURVEY.md §7 phase 4). Four tiers, cheapest first:
                  (exact near-dup, quadratic only within shared shingles).
 3. minhash+LSH — per-doc MinHash signature, banded into LSH buckets;
                  candidate pairs only from shared buckets (sub-quadratic,
-                 the 100 TB path).
+                 the 100 TB path). The bucket rows persist as an index
+                 (sources/index_table.py) that new batches append to.
 4. simhash     — 32-bit weighted fingerprint; near-dups share all but a
                  few bits.
 
@@ -26,11 +27,13 @@ near-linear; this is the standard web-scale dedup layout.
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from finlogic_spark.functions.text import bind, tokens
-from finlogic_spark.session import local_frame
+from finlogic_spark.sources.index_table import read_params, write_index
 
 DEFAULT_NUM_HASHES = 12
 DEFAULT_BANDS = 4  # 4 bands × 3 rows: ~Jaccard 0.6+ candidates
@@ -235,15 +238,17 @@ def bucket_pairs(
     )
 
 
-class MinhashIndex:
+class MinhashIndex(NamedTuple):
     """Handle on a persisted MinHash-LSH bucket index: the serving
     frame plus the sidecar parameters every lookup must reuse."""
 
-    def __init__(self, df: DataFrame, k: int, num_hashes: int, bands: int):
-        self.df = df
-        self.k = k
-        self.num_hashes = num_hashes
-        self.bands = bands
+    df: DataFrame
+    k: int
+    num_hashes: int
+    bands: int
+
+
+_MINHASH_STATS = "k int, num_hashes int, bands int"
 
 
 def build_minhash_index_table(
@@ -259,43 +264,24 @@ def build_minhash_index_table(
     (id, band, band_hash) rows, parquet partitioned by ``band`` and
     sorted by ``band_hash`` inside each file (row-group min/max
     skipping for hash-selective lookups), plus a ``_stats`` sidecar
-    pinning (k, num_hashes, bands) — the text-dedup twin of
-    ``similarity.build_lsh_index_table``. At 100 TB the corpus's
-    near-dup fingerprints are an ASSET you maintain, not a derivation
-    you re-run: pair generation, clustering, and new-batch screening
-    all serve from these rows without touching document text again.
+    pinning (k, num_hashes, bands) — the layout of every persisted
+    index (sources/index_table.py). At 100 TB the corpus's near-dup
+    fingerprints are an ASSET you maintain, not a derivation you
+    re-run: pair generation, clustering, and new-batch screening all
+    serve from these rows without touching document text again.
     """
-    import os
-
-    spark = docs.sparkSession
-    buckets = lsh_buckets(
-        minhash_signature(docs, text_col, id_col, k, num_hashes),
-        id_col,
-        num_hashes,
-        bands,
+    sig = minhash_signature(docs, text_col, id_col, k, num_hashes)
+    df = write_index(
+        lsh_buckets(sig, id_col, num_hashes, bands), path, "band",
+        sort_col="band_hash", n_parts=bands,
+        params=(_MINHASH_STATS, [(k, num_hashes, bands)]),
     )
-    (
-        buckets.repartition(bands, F.col("band"))
-        .sortWithinPartitions("band", "band_hash")
-        .write.partitionBy("band")
-        .mode("overwrite")
-        .parquet(path)
-    )
-    local_frame(
-        spark, [(k, num_hashes, bands)], "k int, num_hashes int, bands int"
-    ).write.mode("overwrite").parquet(os.path.join(path, "_stats"))
-    return read_minhash_index(spark, path)
+    return MinhashIndex(df, k, num_hashes, bands)
 
 
 def read_minhash_index(spark, path: str) -> MinhashIndex:
-    import os
-
-    r = spark.read.parquet(os.path.join(path, "_stats")).first()
     return MinhashIndex(
-        df=spark.read.parquet(path),
-        k=int(r["k"]),
-        num_hashes=int(r["num_hashes"]),
-        bands=int(r["bands"]),
+        spark.read.parquet(path), *read_params(spark, path, _MINHASH_STATS)[0]
     )
 
 
@@ -321,22 +307,13 @@ def append_to_minhash_index(
     re-appended id would pair with itself through every band); dedup
     upstream. Parameters come from the sidecar, never the caller.
     """
-    spark = new_docs.sparkSession
-    idx = read_minhash_index(spark, path)
-    rows = lsh_buckets(
-        minhash_signature(new_docs, text_col, id_col, idx.k, idx.num_hashes),
-        id_col,
-        idx.num_hashes,
-        idx.bands,
+    k, num_hashes, bands = read_params(new_docs.sparkSession, path, _MINHASH_STATS)[0]
+    sig = minhash_signature(new_docs, text_col, id_col, k, num_hashes)
+    df = write_index(
+        lsh_buckets(sig, id_col, num_hashes, bands), path, "band",
+        sort_col="band_hash", n_parts=bands, mode="append",
     )
-    (
-        rows.repartition(idx.bands, F.col("band"))
-        .sortWithinPartitions("band", "band_hash")
-        .write.partitionBy("band")
-        .mode("append")
-        .parquet(path)
-    )
-    return read_minhash_index(spark, path)
+    return MinhashIndex(df, k, num_hashes, bands)
 
 
 def screen_against_index(
@@ -661,8 +638,9 @@ def _hashed_set_verify(cands: DataFrame, ranked: DataFrame) -> DataFrame:
     # MEMORY_AND_DISK blocks live until the session drops them — a
     # long-lived shared session running many verifies back-to-back
     # should scrub between calls (spark.catalog.clearCache() plus
-    # unpersisting leftover RDDs, as tools/probe_r10._drop_persisted
-    # does); a per-job session gets cleanup for free at stop().
+    # unpersisting every RDD in sc._jsc.getPersistentRDDs(), as the
+    # runs behind BENCH_r10_probes.json did between queries); a
+    # per-job session gets cleanup for free at stop().
     sets = sets.localCheckpoint(
         eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK
     )

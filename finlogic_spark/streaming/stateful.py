@@ -452,6 +452,11 @@ MG_STATE_SCHEMA = T.StructType(
     ]
 )
 
+# Token-hash shards of heavy_tokens_stream: the stateful keys. Changing
+# it re-routes tokens across shards, so it is a checkpoint-format
+# change too.
+NUM_SHARDS = 32
+
 MG_OUTPUT_SCHEMA = T.StructType(
     [
         T.StructField("shard", T.IntegerType()),
@@ -486,7 +491,7 @@ def _mg_update(
     )
 
 
-def heavy_tokens_stream(docs: DataFrame, num_shards: int = 32) -> DataFrame:
+def heavy_tokens_stream(docs: DataFrame) -> DataFrame:
     """Streaming frequent tokens with sharded Misra-Gries summaries as
     keyed state (streaming twin of operators/freq.py heavy_hitters):
     tokens shard by hash — every occurrence of a token lands on ONE
@@ -515,7 +520,7 @@ def heavy_tokens_stream(docs: DataFrame, num_shards: int = 32) -> DataFrame:
     vocabulary converges at ~904 tokens*, so the JVM count's state
     stops growing. Its state is the whole vocabulary, linear in
     distinct tokens ever seen; the MG shards hold <= k counters x
-    num_shards (71.5 KB measured) at ANY stream length. Pick the JVM
+    NUM_SHARDS (71.5 KB measured) at ANY stream length. Pick the JVM
     count when a vocabulary estimate says state fits (dashboards over
     enum-like keys); pick this op for open-vocabulary token streams,
     where the JVM state is the 1e8+-key scale bug. Only the MG drain
@@ -527,7 +532,7 @@ def heavy_tokens_stream(docs: DataFrame, num_shards: int = 32) -> DataFrame:
     # the shared tokenizer — the no-miss guarantee requires the screen
     # and the batch verify pass to tokenize IDENTICALLY
     toks = docs.select(F.explode(tokens("text")).alias("token")).withColumn(
-        "shard", F.pmod(F.xxhash64("token"), F.lit(num_shards)).cast("int")
+        "shard", F.pmod(F.xxhash64("token"), F.lit(NUM_SHARDS)).cast("int")
     )
     return toks.groupBy("shard").applyInPandasWithState(
         _mg_update,

@@ -184,7 +184,7 @@ def test_stream_hll_state_equals_batch_build(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
-def test_stream_heavy_tokens_superset_and_exact_verify(spark, tmp_path):
+def test_stream_heavy_tokens_superset_and_exact_verify(spark, tmp_path, monkeypatch):
     """Three micro-batches of documents through the sharded-MG state
     op: the drained candidate set must contain every true phi-heavy
     token (the MG no-miss bound), totals must be exact, and the
@@ -192,7 +192,10 @@ def test_stream_heavy_tokens_superset_and_exact_verify(spark, tmp_path):
     from collections import Counter
 
     from finlogic_spark.streaming import drain_stream_to_df
+    from finlogic_spark.streaming import stateful
     from finlogic_spark.streaming.stateful import heavy_tokens_stream
+
+    monkeypatch.setattr(stateful, "NUM_SHARDS", 8)
 
     rng = np.random.RandomState(23)
     vocab = ["hot%d" % i for i in range(5)] + [
@@ -223,7 +226,7 @@ def test_stream_heavy_tokens_superset_and_exact_verify(spark, tmp_path):
         .parquet(str(src))
     )
     drained = drain_stream_to_df(
-        heavy_tokens_stream(stream, num_shards=8), output_mode="update"
+        heavy_tokens_stream(stream), output_mode="update"
     )
     finals = {}
     for r in drained.collect():

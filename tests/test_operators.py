@@ -116,13 +116,13 @@ def test_salted_join_matches_plain_join(spark, sf_dir):
         F.col("s_suppkey").alias("l_suppkey"), "s_name"
     )
     plain = l.join(s, "l_suppkey").groupBy("l_suppkey").count()
-    salted = salted_join(l, s, "l_suppkey", num_salts=8).groupBy("l_suppkey").count()
+    salted = salted_join(l, s, "l_suppkey", salts=8).groupBy("l_suppkey").count()
     assert sorted(plain.collect()) == sorted(salted.collect())
 
     # Left join keeps unmatched fact rows exactly once.
     s_half = s.filter(F.col("l_suppkey") % 2 == 0)
     plain_left = l.join(s_half, "l_suppkey", "left").count()
-    salted_left = salted_join(l, s_half, "l_suppkey", num_salts=8, how="left").count()
+    salted_left = salted_join(l, s_half, "l_suppkey", salts=8, how="left").count()
     assert plain_left == salted_left == l.count()
 
 

@@ -328,9 +328,11 @@ def test_phrase_search_serves_with_pushed_term_filters(spark, tmp_path):
     # Positional-postings twin of the BM25 serving pin: phrase terms
     # are LITERAL equality filters, so against a persisted positional
     # index they reach the scan (PushedFilters on token) — never a
-    # full-postings or full-corpus read per query.
+    # full-postings or full-corpus read per query — and the driver-side
+    # term buckets show up as PartitionFilters (a token filter alone
+    # cannot prune a __tok_bkt-partitioned layout).
     from finlogic_spark.operators.search import (
-        build_positional_postings,
+        build_positional_postings_table,
         phrase_search,
     )
 
@@ -339,30 +341,19 @@ def test_phrase_search_serves_with_pushed_term_filters(spark, tmp_path):
          for i in range(40)],
         "doc_id long, text string",
     )
-    path = str(tmp_path / "pos_postings")
-    build_positional_postings(docs).write.parquet(path)
-    idx = spark.read.parquet(path)
+    idx = build_positional_postings_table(
+        docs, str(tmp_path / "pos_postings"), n_buckets=16
+    )
     served = phrase_search(None, ["w1", "w2"], postings=idx)
     assert plans.has_pushed_filter(served, "token")
+    plan = plans.formatted_plan(served)
+    assert "PartitionFilters" in plan and "__tok_bkt" in plan
     live = sorted(
         (r.doc_id, r.n_matches)
         for r in phrase_search(docs, ["w1", "w2"]).collect()
     )
     assert sorted((r.doc_id, r.n_matches) for r in served.collect()) == live
     assert live  # non-trivial corpus: the phrase does occur
-
-    # Bucket-partitioned index: the driver-side term buckets must show
-    # up as PartitionFilters (a token filter alone cannot prune a
-    # __tok_bkt-partitioned layout).
-    bpath = str(tmp_path / "pos_postings_bkt")
-    build_positional_postings(docs, n_buckets=16).write.partitionBy(
-        "__tok_bkt"
-    ).parquet(bpath)
-    bidx = spark.read.parquet(bpath)
-    bserved = phrase_search(None, ["w1", "w2"], postings=bidx, n_buckets=16)
-    bplan = plans.formatted_plan(bserved)
-    assert "PartitionFilters" in bplan and "__tok_bkt" in bplan
-    assert sorted((r.doc_id, r.n_matches) for r in bserved.collect()) == live
 
 
 def test_sorted_neighborhood_one_window_one_scan(spark, sf_dir):

@@ -4,6 +4,7 @@ search, bigram LM scoring."""
 
 from __future__ import annotations
 
+import inspect
 from datetime import datetime
 
 import pytest
@@ -11,7 +12,7 @@ from pyspark.sql import functions as F
 
 from finlogic_spark.operators.corpus import bigram_logprob_score
 from finlogic_spark.operators.search import (
-    build_positional_postings,
+    build_positional_postings_table,
     phrase_search,
 )
 from finlogic_spark.operators.sliding import (
@@ -183,9 +184,9 @@ def test_phrase_search_repeated_token_counts_overlaps(spark):
     assert out == {2: 2}
 
 
-def test_phrase_search_single_token_and_prebuilt_postings(spark):
+def test_phrase_search_single_token_and_prebuilt_postings(spark, tmp_path):
     docs = _docs(spark)
-    p = build_positional_postings(docs)
+    p = build_positional_postings_table(docs, str(tmp_path / "posidx"))
     out = {
         r.doc_id: r.n_matches
         for r in phrase_search(docs, ["Cat"], postings=p).collect()
@@ -196,10 +197,7 @@ def test_phrase_search_single_token_and_prebuilt_postings(spark):
 
 
 def test_phrase_persisted_index_serves_and_pins_n_buckets(spark, tmp_path):
-    from finlogic_spark.operators.search import (
-        build_positional_postings_table,
-        read_positional_postings,
-    )
+    from finlogic_spark.operators.search import read_positional_postings
 
     docs = _docs(spark)
     path = str(tmp_path / "posidx")
@@ -227,18 +225,9 @@ def test_phrase_persisted_index_serves_and_pins_n_buckets(spark, tmp_path):
     }
     assert served2 == fresh
 
-    # The footgun is CLOSED: an explicit n_buckets contradicting the
-    # build-time value raises instead of silently pruning to the wrong
-    # partitions and dropping matches.
-    with pytest.raises(ValueError, match="contradicts"):
-        phrase_search(docs, ["the", "cat"], postings=idx, n_buckets=16)
-    # A matching explicit value is allowed (harmless redundancy).
-    ok = {
-        r.doc_id: r.n_matches
-        for r in phrase_search(docs, ["the", "cat"], postings=idx,
-                               n_buckets=8).collect()
-    }
-    assert ok == fresh
+    # The footgun is CLOSED: the bucket count can only come from the
+    # sidecar, so there is no caller value to contradict it.
+    assert "n_buckets" not in inspect.signature(phrase_search).parameters
 
 
 # ----------------------------------------------------------- bigram LM

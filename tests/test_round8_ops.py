@@ -260,22 +260,8 @@ def test_append_positional_equals_rebuild_over_union(spark, tmp_path):
     assert served_t == {4: 2}
 
 
-def test_forward_index_serves_tfidf_pruned_and_falls_back(spark, tmp_path):
-    """The frequency-postings table now ships a forward-index twin
-    (_forward, partitioned by doc-id bucket): tf-idf's query-vector
-    fetch must (a) produce cosines identical to from-scratch, (b)
-    plan a PartitionFilters prune on __doc_bkt rather than a full scan
-    of the token-partitioned table, and (c) degrade gracefully (same
-    results, full scan) when opening a pre-forward-layout index."""
-    import shutil
-
-    from finlogic_spark.operators.search import (
-        build_postings_table,
-        read_postings,
-        tfidf_similar,
-    )
-
-    docs = spark.createDataFrame(
+def _forward_docs(spark):
+    return spark.createDataFrame(
         [
             (0, "spark engine for big data"),
             (1, "spark engine for bigger data"),
@@ -285,9 +271,21 @@ def test_forward_index_serves_tfidf_pruned_and_falls_back(spark, tmp_path):
         ],
         "doc_id long, text string",
     )
-    path = str(tmp_path / "fwd_idx")
-    idx = build_postings_table(docs, path, n_buckets=8)
-    assert idx.forward is not None
+
+
+def test_forward_index_serves_tfidf_pruned(spark, tmp_path):
+    """The frequency-postings table ships a forward-index twin
+    (_forward, partitioned by doc-id bucket): tf-idf's query-vector
+    fetch must (a) produce cosines identical to from-scratch and (b)
+    plan a PartitionFilters prune on __doc_bkt rather than a full scan
+    of the token-partitioned table."""
+    from finlogic_spark.operators.search import (
+        build_postings_table,
+        tfidf_similar,
+    )
+
+    docs = _forward_docs(spark)
+    idx = build_postings_table(docs, str(tmp_path / "fwd_idx"), n_buckets=8)
 
     live = sorted(map(tuple, tfidf_similar(docs, [0, 2], k=3).collect()))
     served = sorted(
@@ -311,17 +309,27 @@ def test_forward_index_serves_tfidf_pruned_and_falls_back(spark, tmp_path):
     ]
     assert part_lines and any("__doc_bkt" in ln for ln in part_lines), plan
 
-    # (c) pre-forward layout: drop _forward, reopen, results identical
-    shutil.rmtree(str(tmp_path / "fwd_idx" / "_forward"))
-    old = read_postings(spark, path)
-    assert old.forward is None
-    served_old = sorted(
-        map(
-            tuple,
-            tfidf_similar(None, [0, 2], k=3, postings=old).collect(),
-        )
+
+def test_postings_open_without_forward_raises(spark, tmp_path):
+    """Opening a postings directory that lacks its _forward twin
+    raises instead of serving tf-idf from a full scan of the
+    token-partitioned table: every index build_postings_table writes
+    has the twin, so a missing one is damage, not an old layout."""
+    import shutil
+
+    from pyspark.errors import AnalysisException
+
+    from finlogic_spark.operators.search import (
+        build_postings_table,
+        read_postings,
     )
-    assert served_old == live
+
+    path = str(tmp_path / "fwd_idx")
+    build_postings_table(_forward_docs(spark), path, n_buckets=8)
+    assert read_postings(spark, path).n_buckets == 8
+    shutil.rmtree(str(tmp_path / "fwd_idx" / "_forward"))
+    with pytest.raises(AnalysisException):
+        read_postings(spark, path)
 
 
 def test_append_uses_sidecar_bucket_count_not_caller(spark, tmp_path):
@@ -335,7 +343,3 @@ def test_append_uses_sidecar_bucket_count_not_caller(spark, tmp_path):
         for r in idx.postings.select("__tok_bkt").distinct().collect()
     }
     assert buckets <= set(range(4)), buckets
-    with pytest.raises(ValueError, match="contradicts"):
-        phrase_search(
-            _docs_a(spark), ["cat"], postings=idx, n_buckets=16
-        )

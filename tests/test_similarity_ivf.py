@@ -121,9 +121,7 @@ def test_neardup_auto_planes_scale_with_corpus(spark):
         assert 32 <= n / 2**p <= 128
 
     base = _vectors(spark, n=40)
-    got = cosine_neardup_pairs(
-        base, threshold=0.9, dim=8, num_planes=None, corpus_size=40
-    )
+    got = cosine_neardup_pairs(base, threshold=0.9, dim=8, num_planes=None)
     got.count()  # plan resolves and runs with the derived plane count
 
 
