@@ -17,6 +17,7 @@ Cross-engine determinism rules used throughout:
 
 from __future__ import annotations
 
+import functools
 import os
 from collections.abc import Callable
 
@@ -49,7 +50,6 @@ from finlogic_spark.operators.reshape import pivot_wide, unpivot_long
 from finlogic_spark.operators.similarity import (
     cosine,
     cosine_topk,
-    ivf_assign,
     lsh_cosine_topk,
     _deterministic_planes,
 )
@@ -87,39 +87,42 @@ from finlogic_spark.operators.text_dedup import (
 _CPU_HEAVY = {"documents", "embeddings"}
 
 
-# Analyzed-relation cache: re-running spark.read.parquet per query
-# re-lists the directory and re-reads footers on the DRIVER — measured
-# 230-490 ms of pure plan-build time per small query at sf0.1, the
-# dominant term of the fixed job floor. A production engine resolves a
-# table through a catalog/metastore exactly once; this dict is that
-# catalog for the driver tables. DataFrames are immutable, so handing
-# the same analyzed relation to every query is safe.
-_TABLE_CACHE: dict[tuple[str, str], DataFrame] = {}
+# Everything the registry builds once per sf_dir (analyzed tables,
+# persisted indexes, learned models) is memoized here by key, together
+# with the session that built it. Re-running spark.read.parquet per
+# query re-lists the directory and re-reads footers on the DRIVER
+# (measured 230-490 ms of plan-build time per small query at sf0.1), and
+# an index is corpus-only work that production builds once and serves
+# from. An entry made under another session is rebuilt, never served:
+# its DataFrames are bound to that session, and after spark.stop() +
+# getOrCreate() to a dead JVM context (multi-session pytest runs,
+# sequential bench and probe scripts).
+_MEMO: dict[tuple, tuple[SparkSession, object]] = {}
+
+
+def _once(spark: SparkSession, key: tuple, build: Callable[[], object]):
+    """``build()``'s value for ``key``, built at most once per session."""
+    hit = _MEMO.get(key)
+    if hit is not None and hit[0] is spark:
+        return hit[1]
+    value = build()
+    _MEMO[key] = (spark, value)
+    return value
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    key = (sf_dir, name)
-    cached = _TABLE_CACHE.get(key)
-    # A cached relation is only valid for the session that analyzed it:
-    # after spark.stop()+getOrCreate() the old DataFrame is bound to a
-    # dead JVM context, so a hit from a different live session must
-    # re-resolve (multi-session pytest runs, sequential bench scripts).
-    if cached is not None and cached.sparkSession is spark:
-        return cached
-    df = (
-        _events(spark, sf_dir)
-        if name == "events"
-        else spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    )
-    if name in _CPU_HEAVY:
+    def read() -> DataFrame:
         path = os.path.join(sf_dir, f"{name}.parquet")
-        max_split = _parse_bytes(
-            spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")
-        )
-        if os.path.isfile(path) and os.path.getsize(path) < max_split:
-            df = df.repartition(spark.sparkContext.defaultParallelism)
-    _TABLE_CACHE[key] = df
-    return df
+        df = _events(spark, sf_dir) if name == "events" else spark.read.parquet(path)
+        if name in _CPU_HEAVY:
+            max_split = _parse_bytes(
+                spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")
+            )
+            if os.path.isfile(path) and os.path.getsize(path) < max_split:
+                df = df.repartition(spark.sparkContext.defaultParallelism)
+        return df
+
+    return _once(spark, ("table", sf_dir, name), read)
 
 
 from finlogic_spark.sources import parse_size_bytes as _parse_bytes  # noqa: E402
@@ -1406,16 +1409,6 @@ def _emb_corpus(spark, sf_dir):
     )
 
 
-# Build-once ANN indexes, keyed by sf_dir. An ANN index (LSH buckets /
-# IVF cell assignment) is corpus-only work: production builds it once,
-# persists it partitioned by bucket/cell, and serves every query batch
-# from it. Caching the persisted DataFrame here gives the bench's warm
-# (timed) run the true production shape — query cost = probe-side hash +
-# equi-join against the prebuilt index, not a per-query re-index. The
-# brute-force tier (emb_cosine_topk) deliberately stays index-free as
-# the exact baseline.
-_ANN_INDEX: dict[tuple[str, str], object] = {}
-
 # sf_dir -> catalog table written through sources.write_fact_layout
 # (keys=[event_type], time_col=ts, grain=day, tiebreaks=[event_id]).
 # Registered by scale tooling (tools/probe_twap_bucketed.py) after the
@@ -1429,10 +1422,10 @@ _SCRATCH_ROOT: str | None = None
 
 
 def _scratch_root() -> str:
-    """One lazily-created, atexit-removed temp root for every persisted
-    index this module builds (postings, positional postings). Children
-    use deterministic names so a rebuild after a session restart
-    overwrites in place instead of leaking a new mkdtemp each time."""
+    """The one temp root, made on first use and removed at exit, under
+    which every index this module persists lives (see ``_scratch``).
+    Per process: an index built under other parameters by an earlier
+    process can never be found here."""
     global _SCRATCH_ROOT
     if _SCRATCH_ROOT is None:
         import atexit
@@ -1444,103 +1437,119 @@ def _scratch_root() -> str:
     return _SCRATCH_ROOT
 
 
-def _ann_cached(key, spark):
-    """Cache hit only when the entry's DataFrames belong to the LIVE
-    session — same contract as _t's table cache: after a
-    stop()+getOrCreate() the old plans are bound to a dead JVM context
-    and must be rebuilt, not served (multi-session pytest runs,
-    sequential bench/probe scripts)."""
-    entry = _ANN_INDEX.get(key)
-    if entry is None:
-        return None
-    dfs = (
-        entry
-        if isinstance(entry, DataFrame)
-        else next(
-            (x for x in entry if isinstance(x, DataFrame)), None
-        )
-        if isinstance(entry, tuple)
-        else None
-    )
-    if dfs is not None and dfs.sparkSession is not spark:
-        del _ANN_INDEX[key]
-        return None
-    return entry
+def _scratch(kind: str, sf_dir: str) -> str:
+    """The deterministic path of the ``kind`` index over ``sf_dir``: a
+    rebuild under a new session overwrites it in place rather than
+    leaking a new directory per session."""
+    tag = "".join(c if c.isalnum() else "_" for c in sf_dir)
+    return os.path.join(_scratch_root(), kind + tag, "idx")
 
 
+def _materialized(df: DataFrame) -> DataFrame:
+    df = df.persist()
+    df.count()
+    return df
+
+
+# The registry's indexes are built in the persisted format every serving
+# path reads (sources/index_table.py), once per session through _once, so
+# the warm (timed) run has the production shape: query cost is the
+# probe-side hash plus an equi-join against the prebuilt index, never a
+# per-query re-index. The brute-force tier (emb_cosine_topk) stays
+# index-free as the exact baseline.
 def _lsh_index(spark, sf_dir):
-    key = ("lsh", sf_dir)
-    if _ann_cached(key, spark) is None:
-        from finlogic_spark.operators.similarity import lsh_index_multi
+    def build():
+        from finlogic_spark.operators.similarity import build_lsh_index_table
 
-        bucketed = lsh_index_multi(
+        idx = build_lsh_index_table(
             _emb_corpus(spark, sf_dir),
-            "embedding",
+            _scratch("lsh", sf_dir),
             dim=64,
             num_planes=_LSH_PLANES,
             num_tables=_LSH_TABLES,
-        ).persist()
-        bucketed.count()  # materialize the index build
-        _ANN_INDEX[key] = bucketed
-    return _ANN_INDEX[key]
+        )
+        return _materialized(idx.df)
+
+    return _once(spark, ("lsh", sf_dir), build)
 
 
 def _postings_index(spark, sf_dir):
-    """Build-once persisted inverted index over documents (same
-    lifecycle as _lsh_index): written via build_postings_table to a
-    session temp dir, partitioned by token-hash bucket, with df /
-    corpus stats / tf-idf norms prebuilt. BM25 and tf-idf registry
-    queries serve from it — query cost is the pruned-bucket scan plus
-    the candidate join, with ZERO corpus passes, mirroring a production
-    deployment where the index build is amortized over every query."""
-    key = ("postings", sf_dir)
-    if _ann_cached(key, spark) is None:
-        from finlogic_spark.operators.search import build_postings_table
+    """Persisted inverted index over documents, partitioned by
+    token-hash bucket, with df / corpus stats / tf-idf norms prebuilt.
+    BM25 and tf-idf registry queries serve from it: query cost is the
+    pruned-bucket scan plus the candidate join, with ZERO corpus passes."""
+    from finlogic_spark.operators.search import build_postings_table
 
-        # Deterministic per-sf_dir path under ONE atexit-cleaned temp
-        # root: a session restart (which evicts the _ANN_INDEX entry)
-        # rebuilds with mode=overwrite into the SAME directory instead
-        # of leaking a fresh mkdtemp per session (multi-session
-        # bench/pytest runs used to accumulate orphan index dirs).
-        safe = "".join(c if c.isalnum() else "_" for c in sf_dir)
-        path = os.path.join(_scratch_root(), f"postings{safe}", "idx")
-        _ANN_INDEX[key] = build_postings_table(
-            _t(spark, sf_dir, "documents"), path
-        )
-    return _ANN_INDEX[key]
+    return _once(
+        spark,
+        ("postings", sf_dir),
+        lambda: build_postings_table(
+            _t(spark, sf_dir, "documents"), _scratch("postings", sf_dir)
+        ),
+    )
 
 
 def _positional_index(spark, sf_dir):
-    """Build-once persisted positional (phrase) index over documents —
-    same lifecycle as _postings_index; n_buckets persists in the
-    table's _stats sidecar, so serving can never prune with a stale
-    bucket count."""
-    key = ("pos_postings", sf_dir)
-    if _ann_cached(key, spark) is None:
-        from finlogic_spark.operators.search import (
-            build_positional_postings_table,
-        )
+    """Persisted positional (phrase) index over documents; n_buckets
+    persists in the table's _stats sidecar, so serving can never prune
+    with a stale bucket count."""
+    from finlogic_spark.operators.search import build_positional_postings_table
 
-        safe = "".join(c if c.isalnum() else "_" for c in sf_dir)
-        path = os.path.join(_scratch_root(), f"pospost{safe}", "idx")
-        _ANN_INDEX[key] = build_positional_postings_table(
-            _t(spark, sf_dir, "documents"), path
-        )
-    return _ANN_INDEX[key]
+    return _once(
+        spark,
+        ("pos_postings", sf_dir),
+        lambda: build_positional_postings_table(
+            _t(spark, sf_dir, "documents"), _scratch("pospost", sf_dir)
+        ),
+    )
 
 
 def _ivf_index(spark, sf_dir):
-    key = ("ivf", sf_dir)
-    if _ann_cached(key, spark) is None:
+    """Persisted IVF index over the 8 seed-vector centroids: an
+    ``IvfIndex`` whose ``.df`` carries each vector's ``__cell``."""
+
+    def build():
+        from finlogic_spark.operators.similarity import build_ivf_index_table
+
         corpus = _emb_corpus(spark, sf_dir)
         rows = corpus.filter(F.col("vec_id") < 8).collect()
         cents = [
             (int(r["vec_id"]), list(map(float, r["embedding"]))) for r in rows
         ]
-        cells = ivf_assign(corpus, cents, "embedding", "__cell").persist()
-        cells.count()
-        _ANN_INDEX[key] = (cents, cells)
-    return _ANN_INDEX[key]
+        idx = build_ivf_index_table(corpus, cents, _scratch("ivf", sf_dir))
+        return idx._replace(df=_materialized(idx.df))
+
+    return _once(spark, ("ivf", sf_dir), build)
+
+
+def _emb_queries(spark, sf_dir):
+    """The first 10 vectors as the (query_id, query_vec) serve batch."""
+    return _emb_corpus(spark, sf_dir).filter(F.col("vec_id") < 10).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("query_vec"),
+    )
+
+
+def _lsh_topk(corpus, queries, k):
+    """Top-k served from a persisted LSH index at the shipped parameters."""
+    return lsh_cosine_topk(
+        corpus,
+        queries,
+        k=k,
+        dim=64,
+        num_planes=_LSH_PLANES,
+        num_tables=_LSH_TABLES,
+        probe_radius=_LSH_RADIUS,
+        corpus_bucketed=True,
+        local_query_probes=True,
+    )
+
+
+def _lsh_top5(spark, sf_dir, corpus):
+    out = _lsh_topk(corpus, _emb_queries(spark, sf_dir), k=5)
+    return out.select(
+        "query_id", "vec_id", rN(F.col("cos_sim"), 6).alias("cos_sim"), "rk"
+    ).orderBy("query_id", "rk")
 
 
 def _planes_sql(dim: int = 64, num_planes: int = 6) -> str:
@@ -1628,25 +1637,7 @@ def emb_lsh_topk(spark, sf_dir):
     # + broadcast join. Defaults measured: recall@5 0.94 at sf0.1 at a
     # ~29% uniform-corpus scan (see _LSH_PLANES comment /
     # tools/lsh_frontier.py / tools/measure_recall.py).
-    corpus = _lsh_index(spark, sf_dir)
-    queries = _emb_corpus(spark, sf_dir).filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    )
-    out = lsh_cosine_topk(
-        corpus,
-        queries,
-        k=5,
-        dim=64,
-        num_planes=_LSH_PLANES,
-        num_tables=_LSH_TABLES,
-        probe_radius=_LSH_RADIUS,
-        corpus_bucketed=True,
-        local_query_probes=True,
-    )
-    return out.select(
-        "query_id", "vec_id", rN(F.col("cos_sim"), 6).alias("cos_sim"), "rk"
-    ).orderBy("query_id", "rk")
+    return _lsh_top5(spark, sf_dir, _lsh_index(spark, sf_dir))
 
 
 _PAIR_DOT = "list_sum(list_transform(range(1, 65), i -> va[i] * vb[i]))"
@@ -2079,12 +2070,9 @@ def emb_ivf_topk(spark, sf_dir):
     # (_ivf_index); query time is cell-probe + equi-join only.
     from finlogic_spark.operators.similarity import ivf_topk
 
-    cents, cells = _ivf_index(spark, sf_dir)
-    queries = _emb_corpus(spark, sf_dir).filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    )
-    out = ivf_topk(cells, queries, cents, k=5, n_probe=2, corpus_assigned=True)
+    idx = _ivf_index(spark, sf_dir)
+    queries = _emb_queries(spark, sf_dir)
+    out = ivf_topk(idx.df, queries, idx.cents, k=5, n_probe=2, corpus_assigned=True)
     return out.select(
         "query_id", "vec_id", rN(F.col("cos_sim"), 6).alias("cos_sim"), "rk"
     ).orderBy("query_id", "rk")
@@ -3849,21 +3837,18 @@ def approx_quantiles(spark, sf_dir):
 
 
 def _pq_ivf_index(spark, sf_dir):
-    # Build-once persisted serving index (same lifecycle as _lsh_index /
-    # _ivf_index): IVF cell assignment + PQ encode, embeddings projected
-    # away. Production writes this .partitionBy("__cell") so a probe is
-    # a partition-pruned scan of n_probe cells.
-    from finlogic_spark.operators.similarity import pq_ivf_index
+    # Build-once serving index: IVF cell assignment + PQ encode, the
+    # embeddings projected away. Production writes this
+    # .partitionBy("__cell") so a probe is a partition-pruned scan of
+    # n_probe cells.
+    def build():
+        from finlogic_spark.operators.similarity import pq_ivf_index
 
-    key = ("pq_ivf", sf_dir)
-    if key not in _ANN_INDEX:
-        cents, _ = _ivf_index(spark, sf_dir)
-        idx = pq_ivf_index(
-            _emb_corpus(spark, sf_dir), cents, _pq_codebooks()
-        ).persist()
-        idx.count()
-        _ANN_INDEX[key] = (cents, idx)
-    return _ANN_INDEX[key]
+        cents = _ivf_index(spark, sf_dir).cents
+        idx = pq_ivf_index(_emb_corpus(spark, sf_dir), cents, _pq_codebooks())
+        return cents, _materialized(idx)
+
+    return _once(spark, ("pq_ivf", sf_dir), build)
 
 
 def _pq_ivf_oracle_sql() -> str:
@@ -3936,10 +3921,7 @@ def emb_pq_ivf_topk(spark, sf_dir):
     from finlogic_spark.operators.similarity import pq_ivf_topk
 
     cents, idx = _pq_ivf_index(spark, sf_dir)
-    queries = _emb_corpus(spark, sf_dir).filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    )
+    queries = _emb_queries(spark, sf_dir)
     out = pq_ivf_topk(idx, queries, cents, _pq_codebooks(), k=5, n_probe=2)
     return out.select(
         "query_id", "vec_id", rN(F.col("adist"), 6).alias("adist"), "rk"
@@ -6340,9 +6322,9 @@ def emb_semantic_dedup(spark, sf_dir):
     # (real deployments run 0.9+ on genuinely duplicated corpora).
     from finlogic_spark.operators.similarity import semantic_dedup
 
-    cents, cells = _ivf_index(spark, sf_dir)
+    idx = _ivf_index(spark, sf_dir)
     kept = semantic_dedup(
-        cells, cents, threshold=0.35, cell_col="__cell",
+        idx.df, idx.cents, threshold=0.35, cell_col="__cell",
         corpus_assigned=True,
     )
     return kept.select(
@@ -7099,19 +7081,18 @@ def doc_dsir_select(spark, sf_dir):
 
 def _lsh_append_index(spark, sf_dir):
     """Persisted LSH index built over HALF the corpus then extended to
-    the full corpus via ``append_to_lsh_index`` — build-once lifecycle
-    like _lsh_index, but exercising the hourly-ingest maintenance path
+    the full corpus via ``append_to_lsh_index``: the _lsh_index
+    lifecycle, exercising the hourly-ingest maintenance path
     (parameters ride the _stats sidecar; appended files land in the
     same __tbl partitions; nothing existing is re-read or rewritten)."""
-    key = ("lsh_append", sf_dir)
-    if _ann_cached(key, spark) is None:
+
+    def build():
         from finlogic_spark.operators.similarity import (
             append_to_lsh_index,
             build_lsh_index_table,
         )
 
-        safe = "".join(c if c.isalnum() else "_" for c in sf_dir)
-        path = os.path.join(_scratch_root(), f"lshappend{safe}", "idx")
+        path = _scratch("lshappend", sf_dir)
         corpus = _emb_corpus(spark, sf_dir)
         build_lsh_index_table(
             corpus.filter(F.col("vec_id") % 2 == 0),
@@ -7120,13 +7101,10 @@ def _lsh_append_index(spark, sf_dir):
             num_planes=_LSH_PLANES,
             num_tables=_LSH_TABLES,
         )
-        idx = append_to_lsh_index(
-            corpus.filter(F.col("vec_id") % 2 == 1), path
-        )
-        df = idx.df.persist()
-        df.count()
-        _ANN_INDEX[key] = df
-    return _ANN_INDEX[key]
+        idx = append_to_lsh_index(corpus.filter(F.col("vec_id") % 2 == 1), path)
+        return _materialized(idx.df)
+
+    return _once(spark, ("lsh_append", sf_dir), build)
 
 
 @q("emb_lsh_append_topk", None)  # oracle attached below (rebuild twin's)
@@ -7139,25 +7117,7 @@ def emb_lsh_append_topk(spark, sf_dir):
     # (tests/test_ann_append.py) and this query shares the rebuild
     # twin's oracle VERBATIM — the gate itself certifies the appended
     # index serves identical top-k.
-    corpus = _lsh_append_index(spark, sf_dir)
-    queries = _emb_corpus(spark, sf_dir).filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    )
-    out = lsh_cosine_topk(
-        corpus,
-        queries,
-        k=5,
-        dim=64,
-        num_planes=_LSH_PLANES,
-        num_tables=_LSH_TABLES,
-        probe_radius=_LSH_RADIUS,
-        corpus_bucketed=True,
-        local_query_probes=True,
-    )
-    return out.select(
-        "query_id", "vec_id", rN(F.col("cos_sim"), 6).alias("cos_sim"), "rk"
-    ).orderBy("query_id", "rk")
+    return _lsh_top5(spark, sf_dir, _lsh_append_index(spark, sf_dir))
 
 
 ORACLES["emb_lsh_append_topk"] = ORACLES["emb_lsh_topk"]
@@ -7199,30 +7159,22 @@ def _minhash_append_index(spark, sf_dir):
     (text twin of ``_lsh_append_index``): parameters ride the _stats
     sidecar, appended files land in the same band partitions, nothing
     existing is re-read or rewritten."""
-    key = ("minhash_append", sf_dir)
-    if _ann_cached(key, spark) is None:
+
+    def build():
         from finlogic_spark.operators.text_dedup import (
             append_to_minhash_index,
             build_minhash_index_table,
         )
 
-        safe = "".join(c if c.isalnum() else "_" for c in sf_dir)
-        path = os.path.join(_scratch_root(), f"mhappend{safe}", "idx")
+        path = _scratch("mhappend", sf_dir)
         d = _t(spark, sf_dir, "documents")
         build_minhash_index_table(
-            d.filter(F.col("doc_id") % 2 == 0),
-            path,
-            k=3,
-            num_hashes=6,
-            bands=2,
+            d.filter(F.col("doc_id") % 2 == 0), path, k=3, num_hashes=6, bands=2
         )
-        idx = append_to_minhash_index(
-            d.filter(F.col("doc_id") % 2 == 1), path
-        )
-        df = idx.df.persist()
-        df.count()
-        _ANN_INDEX[key] = df
-    return _ANN_INDEX[key]
+        idx = append_to_minhash_index(d.filter(F.col("doc_id") % 2 == 1), path)
+        return _materialized(idx.df)
+
+    return _once(spark, ("minhash_append", sf_dir), build)
 
 
 @q("doc_lsh_append_pairs", None)  # oracle attached below (rebuild twin's)
@@ -7297,8 +7249,7 @@ def events_hll_rollup(spark, sf_dir):
     e = _t(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
     base = e.select(F.to_date("ts").alias("day"), "event_type", "user_id")
     daily = hll_sketch_table(base, ["day", "event_type"], "user_id", lgk=12)
-    safe = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    path = os.path.join(_scratch_root(), f"hllroll{safe}")
+    path = _scratch("hllroll", sf_dir)
     daily.write.mode("overwrite").parquet(path)
     stored = spark.read.parquet(path)
     est = hll_table_estimate(stored, ["event_type"], "approx_users")
@@ -7754,63 +7705,39 @@ ORACLES["stream_heavy_tokens"] = ORACLES["doc_heavy_tokens"]
 
 _BPE_TOP_WORDS = 30_000
 _BPE_NUM_MERGES = 200
-_BPE_MERGES_CACHE: dict[str, list] = {}
-_BPE_ENC_VALUES_CACHE: dict[str, list] = {}
 
 
 def _bpe_index_store(spark, sf_dir):
-    """Durable BPE serving index, built once per sf_dir (r13 verdict
-    item 5 — the merge table was a per-session cache while every other
-    serving structure had a persisted store): merges + per-word
-    encodings + version sidecar under the session scratch root (the
-    _postings_index lifecycle). Returns (merges, pieces_lookup) —
+    """Durable BPE serving index, built once per sf_dir: merges +
+    per-word encodings + version sidecar under ``_scratch`` (the
+    _postings_index lifecycle). Returns (merges, pieces_lookup):
     merges is num_merges rows, the lookup is vocab-bounded (the
     top-30k materialization precedent); registry queries SERVE from
     them (seeded encode caches), so query-time BPE cost for known
     words is a dict hit, not a merge loop."""
-    key = ("bpe_index", sf_dir)
-    if key not in _BPE_MERGES_CACHE:
+
+    def build():
         from finlogic_spark.operators.bpe import (
             build_bpe_index,
             load_pieces_lookup,
             read_bpe_index,
         )
 
-        safe = "".join(c if c.isalnum() else "_" for c in sf_dir)
-        path = os.path.join(_scratch_root(), f"bpe{safe}", "idx")
-        try:
-            # expected-params check (ADVICE r14): a scratch root that
-            # outlives a _BPE_NUM_MERGES/_BPE_TOP_WORDS change must
-            # rebuild, not silently serve the stale-parameter model
-            merges, _wp = read_bpe_index(
-                spark,
-                path,
-                expected_num_merges=_BPE_NUM_MERGES,
-                expected_top_words=_BPE_TOP_WORDS,
-            )
-        except Exception:
-            build_bpe_index(
-                _t(spark, sf_dir, "documents"),
-                path,
-                "text",
-                num_merges=_BPE_NUM_MERGES,
-                top_words=_BPE_TOP_WORDS,
-            )
-            merges, _wp = read_bpe_index(
-                spark,
-                path,
-                expected_num_merges=_BPE_NUM_MERGES,
-                expected_top_words=_BPE_TOP_WORDS,
-            )
-        _BPE_MERGES_CACHE[key] = (merges, load_pieces_lookup(spark, path))
-    return _BPE_MERGES_CACHE[key]
+        path = _scratch("bpe", sf_dir)
+        build_bpe_index(
+            _t(spark, sf_dir, "documents"),
+            path,
+            "text",
+            num_merges=_BPE_NUM_MERGES,
+            top_words=_BPE_TOP_WORDS,
+        )
+        merges, _wp = read_bpe_index(spark, path)
+        return merges, load_pieces_lookup(spark, path)
+
+    return _once(spark, ("bpe_index", sf_dir), build)
 
 
-def _bpe_merges(spark, sf_dir):
-    """The learned merge table, served from the persisted index."""
-    return _bpe_index_store(spark, sf_dir)[0]
-
-
+@functools.cache
 def _bpe_enc_pairs(sf_dir: str) -> list[tuple[str, str]]:
     """The oracle's word -> pieces lookup — an INDEPENDENT serial twin
     (pyarrow + pure Python, zero Spark): it re-tokenizes the corpus,
@@ -7824,8 +7751,6 @@ def _bpe_enc_pairs(sf_dir: str) -> list[tuple[str, str]]:
     emb_pca_project pattern: the non-SQL-expressible derivation is
     baked as literals, the data-sized work is SQL). Returns sorted
     (word, 'p1 p2 ...') pairs, SQL-escaped downstream."""
-    if sf_dir in _BPE_ENC_VALUES_CACHE:
-        return _BPE_ENC_VALUES_CACHE[sf_dir]
     from collections import Counter
 
     import pyarrow.parquet as pq
@@ -7847,10 +7772,7 @@ def _bpe_enc_pairs(sf_dir: str) -> list[tuple[str, str]]:
     top = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))
     merges = learn_bpe_merges(top[:_BPE_TOP_WORDS], _BPE_NUM_MERGES)
     ranks = {p: i for i, p in enumerate(merges)}
-    _BPE_ENC_VALUES_CACHE[sf_dir] = [
-        (w, " ".join(encode_word(w, ranks))) for w in sorted(counts)
-    ]
-    return _BPE_ENC_VALUES_CACHE[sf_dir]
+    return [(w, " ".join(encode_word(w, ranks))) for w in sorted(counts)]
 
 
 def _sqlq(s: str) -> str:
@@ -8304,17 +8226,7 @@ def doc_hybrid_search(spark, sf_dir):
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_vec"),
     )
-    sem = lsh_cosine_topk(
-        corpus,
-        q0,
-        k=20,
-        dim=64,
-        num_planes=_LSH_PLANES,
-        num_tables=_LSH_TABLES,
-        probe_radius=_LSH_RADIUS,
-        corpus_bucketed=True,
-        local_query_probes=True,
-    )
+    sem = _lsh_topk(corpus, q0, k=20)
     sem_r = sem.select(
         F.col("vec_id").alias("doc_id"), F.col("rk").cast("int").alias("r_sem")
     )
@@ -8335,9 +8247,7 @@ def doc_hybrid_search(spark, sf_dir):
 # Model-based quality gate (round 14)
 # ---------------------------------------------------------------------------
 
-_QCLF_CACHE: dict[str, tuple[list, int]] = {}
-
-
+@functools.cache
 def _qclf_params(sf_dir: str) -> tuple[list, int]:
     """Train (once per sf_dir) the hashed-feature logistic quality
     model — pure pyarrow+numpy, deterministic, bounded sample (see
@@ -8347,15 +8257,9 @@ def _qclf_params(sf_dir: str) -> tuple[list, int]:
     corpus-wide SCORING expression (the part that runs at 100 TB),
     exactly the pca_components_numpy precedent for the non-SQL-
     expressible fit step."""
-    if sf_dir not in _QCLF_CACHE:
-        from finlogic_spark.operators.quality_model import (
-            train_quality_classifier,
-        )
+    from finlogic_spark.operators.quality_model import train_quality_classifier
 
-        _QCLF_CACHE[sf_dir] = train_quality_classifier(
-            os.path.join(sf_dir, "documents.parquet")
-        )
-    return _QCLF_CACHE[sf_dir]
+    return train_quality_classifier(os.path.join(sf_dir, "documents.parquet"))
 
 
 def _quality_clf_oracle_sql(sf_dir: str) -> str:
@@ -8402,27 +8306,23 @@ def doc_quality_classifier(spark, sf_dir):
 
 
 def _fingerprint_store(spark, sf_dir):
-    """Build-once persisted exact-dedup fingerprint store over the
-    EVEN-doc_id half of documents (the corpus history; odd ids play
-    the ingest batch) — same lifecycle as _postings_index."""
-    key = ("fp_store", sf_dir)
-    if _ann_cached(key, spark) is None:
-        from finlogic_spark.operators.text_dedup import (
-            build_fingerprint_store,
-        )
+    """Persisted exact-dedup fingerprint store over the EVEN-doc_id
+    half of documents (the corpus history; odd ids play the ingest
+    batch), built once like _postings_index."""
 
-        safe = "".join(c if c.isalnum() else "_" for c in sf_dir)
-        path = os.path.join(_scratch_root(), f"fp{safe}", "idx")
+    def build():
+        from finlogic_spark.operators.text_dedup import build_fingerprint_store
+
+        path = _scratch("fp", sf_dir)
         build_fingerprint_store(
             _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 2 == 0),
             path,
             "text",
             "doc_id",
         )
-        store = spark.read.parquet(path).persist()
-        store.count()
-        _ANN_INDEX[key] = store
-    return _ANN_INDEX[key]
+        return _materialized(spark.read.parquet(path))
+
+    return _once(spark, ("fp_store", sf_dir), build)
 
 
 @q(
@@ -8514,16 +8414,10 @@ def emb_lsh_recall(spark, sf_dir):
         F.col("vec_id").alias("query_id"), as_double.alias("query_vec")
     )
     exact5 = cosine_topk(corpus, queries, k=5).select("query_id", "vec_id")
-    lsh5 = lsh_cosine_topk(
+    lsh5 = _lsh_topk(
         _lsh_index(spark, sf_dir),
         queries.withColumnRenamed("query_vec", "query_vec"),
         k=5,
-        dim=64,
-        num_planes=_LSH_PLANES,
-        num_tables=_LSH_TABLES,
-        probe_radius=_LSH_RADIUS,
-        corpus_bucketed=True,
-        local_query_probes=True,
     ).select("query_id", "vec_id")
     # r17 (VERDICT r16 item 3): the exact brute-force leg used to be
     # consumed twice — once as the hits join side, once for the

@@ -367,37 +367,18 @@ def build_bpe_index(
     )
 
 
-def read_bpe_index(
-    spark,
-    path: str,
-    expected_num_merges: int | None = None,
-    expected_top_words: int | None = None,
-):
+def read_bpe_index(spark, path: str):
     """-> (merges list ordered by rank, word_pieces DataFrame). The
     merge table is bounded (num_merges rows) by construction — a
     driver read, like every consumer of the model. Raises on a stats
     version mismatch (silent format drift makes silently-wrong
-    encodings). Pass ``expected_num_merges`` /
-    ``expected_top_words`` to ALSO refuse an index built under other
-    training parameters (ADVICE r14: a scratch root surviving a
-    parameter change would otherwise silently serve the stale model —
-    the caller catches the ValueError and rebuilds, the
-    n_buckets-sidecar precedent)."""
+    encodings)."""
     st = read_params(spark, path, _BPE_STATS)[0]
     if st["version"] != BPE_INDEX_VERSION:
         raise ValueError(
             f"BPE index at {path} has version {st['version']}, this build "
             f"reads {BPE_INDEX_VERSION} — rebuild the index"
         )
-    for name, want in (
-        ("num_merges", expected_num_merges),
-        ("top_words", expected_top_words),
-    ):
-        if want is not None and st[name] != want:
-            raise ValueError(
-                f"BPE index at {path} was built with {name}={st[name]}, "
-                f"caller expects {want} — rebuild the index"
-            )
     # schemas given: no schema-inference job per table
     merges_df = spark.read.schema(_MERGES).parquet(f"{path}/merges")
     mrows = merges_df.orderBy("rank").collect()

@@ -150,25 +150,16 @@ def _deterministic_planes(
     return planes
 
 
-def lsh_bucket(vec: Column | str, planes: Sequence[Sequence[float]]) -> Column:
-    """Sign-pattern bucket id: bit p set iff dot(vec, plane_p) >= 0.
-
-    Pass the vector column by NAME to get the single-parse SQL form
-    (one py4j call); a Column argument falls back to the per-plane
-    Column construction (compatible, slower to build)."""
-    if isinstance(vec, str):
-        parts = [
-            f"(CASE WHEN {_sql_dot(_bt(vec), arr)} >= 0.0D "
-            f"THEN {2**p}L ELSE 0L END)"
-            for p, arr in enumerate(_planes_sql(planes))
-        ]
-        return F.expr("(" + " + ".join(parts) + ")")
-    bucket = F.lit(0).cast("long")
-    for p, plane in enumerate(planes):
-        lit_plane = F.array(*[F.lit(float(v)) for v in plane])
-        bit = F.when(dot(vec, lit_plane) >= 0, F.lit(2**p)).otherwise(F.lit(0))
-        bucket = bucket + bit.cast("long")
-    return bucket
+def lsh_bucket(vec: str, planes: Sequence[Sequence[float]]) -> Column:
+    """Sign-pattern bucket id of the vector column named ``vec``: bit p
+    set iff dot(vec, plane_p) >= 0, parsed as one SQL expression (one
+    py4j call)."""
+    parts = [
+        f"(CASE WHEN {_sql_dot(_bt(vec), arr)} >= 0.0D "
+        f"THEN {2**p}L ELSE 0L END)"
+        for p, arr in enumerate(_planes_sql(planes))
+    ]
+    return F.expr("(" + " + ".join(parts) + ")")
 
 
 # ---------------------------------------------------------------------------
@@ -425,17 +416,12 @@ def append_to_ivf_index(
     return IvfIndex(df=write_index(cells, path, "__cell", mode="append"), cents=cents)
 
 
-def lsh_query_probes_local(
-    queries: DataFrame,
-    dim: int,
-    num_planes: int,
-    num_tables: int,
-    probe_radius: int,
-    query_id: str = "query_id",
-    query_vec: str = "query_vec",
-) -> DataFrame:
-    """Driver-side query bucket assignment + probe fan-out:
-    (query_id, __tbl, __bucket) rows for every table x probe mask.
+def _probe_rows_from_collected(
+    rows, dim: int, num_planes: int, num_tables: int, probe_radius: int
+) -> list[tuple]:
+    """Driver-side query bucket assignment + probe fan-out: (id, tbl,
+    bucket) tuples for every table x probe mask of the collected (id,
+    vec) query rows.
 
     Why driver-side: the Spark-expression form embeds
     tables x planes x dim plane literals in the QUERY-side plan —
@@ -452,21 +438,7 @@ def lsh_query_probes_local(
     so the >= 0 sign — and hence the bucket — can't disagree. That
     includes degenerate vectors: a NULL / too-short / NULL-element
     vector null-propagates every SQL dot, so CASE sets no bit and the
-    row lands in bucket 0 — mirrored here instead of crashing.
-    """
-    q_sel = queries.select(query_id, query_vec)
-    rows = q_sel.collect()
-    return _probe_df_from_rows(
-        queries.sparkSession, q_sel.schema, rows, dim, num_planes,
-        num_tables, probe_radius,
-    )
-
-
-def _probe_rows_from_collected(
-    rows, dim: int, num_planes: int, num_tables: int, probe_radius: int
-) -> list[tuple]:
-    """(id, tbl, bucket) probe tuples from collected (id, vec) rows —
-    the shared core of the driver-side serve path."""
+    row lands in bucket 0 — mirrored here instead of crashing."""
     masks = probe_masks(num_planes, probe_radius)
     out = []
     for r in rows:
@@ -550,7 +522,7 @@ def lsh_cosine_topk(
     only the tiny query-side hash + join.
 
     ``local_query_probes=True`` computes the query-side buckets on the
-    driver (lsh_query_probes_local): the serve plan then carries ZERO
+    driver (_probe_rows_from_collected): the serve plan then carries ZERO
     plane literals — measured 2.8x faster per query batch at the
     shipped defaults. Requires the query batch to be collectable
     (it broadcasts anyway); results are bit-identical."""

@@ -14,29 +14,20 @@ from finlogic_spark.driver_queries import _t
 from finlogic_spark.sources import write_bucketed, write_parquet
 
 
-def test_table_cache_rebinds_on_new_session(spark, sf_dir):
-    """A cached relation bound to a stopped/replaced session must not
-    be served to a different live session (regression: sequential
+def test_once_rebinds_table_on_new_session(spark, sf_dir):
+    """A memoized relation made under a stopped/replaced session must
+    not be served to a different live session (regression: sequential
     bench scripts and multi-session pytest runs got DataFrames bound
     to a dead SparkContext)."""
     import finlogic_spark.driver_queries as dq
 
-    class _Stale:
-        sparkSession = object()  # anything that is not `spark`
-
-    key = (sf_dir, "region")
-    old = dq._TABLE_CACHE.get(key)
-    try:
-        dq._TABLE_CACHE[key] = _Stale()
-        df = dq._t(spark, sf_dir, "region")
-        assert df.sparkSession is spark
-        assert dq._TABLE_CACHE[key] is df  # cache refreshed, not bypassed
-        assert df.count() > 0
-    finally:
-        if old is not None:
-            dq._TABLE_CACHE[key] = old
-        else:
-            dq._TABLE_CACHE.pop(key, None)
+    key = ("table", sf_dir, "region")
+    dq._MEMO[key] = (object(), "stale")  # made under another session
+    df = dq._t(spark, sf_dir, "region")
+    assert df.sparkSession is spark
+    assert dq._MEMO[key] == (spark, df)  # memo refreshed, not bypassed
+    assert dq._t(spark, sf_dir, "region") is df
+    assert df.count() > 0
 
 
 def test_partitioned_write_prunes(spark, sf_dir):
@@ -297,32 +288,40 @@ def test_csv_json_roundtrip_with_explicit_schema(spark, tmp_path):
         read_csv(spark, str(bad), ddl, mode="FAILFAST").collect()
 
 
-def test_ann_index_cache_rebinds_on_new_session(spark, sf_dir):
-    """Same contract as the table cache: an ANN index whose DataFrames
-    belong to a different (stopped/replaced) session must be evicted
-    and rebuilt, not served — for both plain-DataFrame entries (LSH)
-    and tuple entries carrying DataFrames (postings, IVF)."""
+@pytest.mark.parametrize(
+    "builder, key", [("_lsh_index", "lsh"), ("_ivf_index", "ivf")]
+)
+def test_once_rebinds_index_on_new_session(spark, sf_dir, builder, key):
+    """An index is served while its session is live and rebuilt, never
+    served, for another session: a DataFrame-valued entry (LSH) and a
+    NamedTuple-valued one (IVF) alike."""
     import finlogic_spark.driver_queries as dq
 
-    live = dq._lsh_index(spark, sf_dir)
-    assert dq._lsh_index(spark, sf_dir) is live  # cache hit while live
-    assert dq._ann_cached(("lsh", sf_dir), spark) is live
+    build = getattr(dq, builder)
+    live = build(spark, sf_dir)
+    assert build(spark, sf_dir) is live  # memo hit while live
+    dq._MEMO[(key, sf_dir)] = (object(), live)  # made under another session
+    fresh = build(spark, sf_dir)
+    assert fresh is not live
+    assert dq._MEMO[(key, sf_dir)] == (spark, fresh)
+    frame = fresh if builder == "_lsh_index" else fresh.df
+    assert frame.sparkSession is spark
+    assert frame.count() > 0
 
-    key = ("lsh", sf_dir)
-    try:
-        # A lookup from a DIFFERENT session must evict, not serve.
-        assert dq._ann_cached(key, object()) is None
-        assert key not in dq._ANN_INDEX
-    finally:
-        dq._ANN_INDEX[key] = live
 
-    pidx = dq._postings_index(spark, sf_dir)
-    pkey = ("postings", sf_dir)
-    try:
-        assert dq._ann_cached(pkey, spark) is pidx
-        assert dq._ann_cached(pkey, object()) is None  # tuple entry too
-    finally:
-        dq._ANN_INDEX[pkey] = pidx
+def test_pq_ivf_index_rebinds_on_new_session(spark, sf_dir):
+    """The PQ-IVF index must be rebuilt for a second session of the
+    same process, not served from the first (regression: its cache
+    had no session check, so emb_pq_ivf_topk failed after a session
+    restart)."""
+    import finlogic_spark.driver_queries as dq
+
+    cents, live = dq._pq_ivf_index(spark, sf_dir)
+    other = spark.newSession()  # same JVM, a different session
+    other_cents, idx = dq._pq_ivf_index(other, sf_dir)
+    assert idx.sparkSession is other
+    assert other_cents == cents
+    assert idx.count() == live.count()
 
 
 def test_orc_roundtrip_pushdown_and_partitioning(spark, tmp_path):

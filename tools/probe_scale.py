@@ -53,12 +53,8 @@ def main() -> int:
             # a prior OOM can kill the context; keep probing the rest
             from pyspark.sql import SparkSession
 
-            from finlogic_spark import driver_queries as dq
-
             SparkSession._instantiatedSession = None
             SparkSession._activeSession = None
-            dq._TABLE_CACHE.clear()  # cached DFs bound to the dead session
-            dq._ANN_INDEX.clear()
             spark = get_spark("scale-probe-recovered")
         t0 = time.perf_counter()
         try:
