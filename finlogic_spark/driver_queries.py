@@ -76,6 +76,7 @@ from finlogic_spark.operators.text_dedup import (
     repeated_segment_dedup,
     winnow_fingerprints,
 )
+from finlogic_spark.sources.index_table import read_written
 
 
 # Tables whose queries are CPU-bound per row (tokenize/hash/vector math)
@@ -146,6 +147,14 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def rN(col, digits: int):
     scale = float(10 ** digits)
     return F.floor(col * scale + F.lit(0.5)) / F.lit(scale)
+
+
+def _within(approx: str, exact: str, rel: float, slack: float = 0):
+    """An estimate's band flag: |approx - exact| <= rel * exact + slack."""
+    bound = rel * F.col(exact)
+    if slack:
+        bound = bound + slack
+    return F.abs(F.col(approx) - F.col(exact)) <= bound
 
 
 def _rN_sql(expr: str, digits: int) -> str:
@@ -1504,6 +1513,18 @@ def _positional_index(spark, sf_dir):
     )
 
 
+def _ivf_seeds(spark, sf_dir):
+    """The 8 seed vectors (vec_id < 8) as IVF centroids, sorted by id."""
+
+    def build():
+        rows = _emb_corpus(spark, sf_dir).filter(F.col("vec_id") < 8).collect()
+        return sorted(
+            (int(r["vec_id"]), list(map(float, r["embedding"]))) for r in rows
+        )
+
+    return _once(spark, ("ivf_seeds", sf_dir), build)
+
+
 def _ivf_index(spark, sf_dir):
     """Persisted IVF index over the 8 seed-vector centroids: an
     ``IvfIndex`` whose ``.df`` carries each vector's ``__cell``."""
@@ -1511,11 +1532,7 @@ def _ivf_index(spark, sf_dir):
     def build():
         from finlogic_spark.operators.similarity import build_ivf_index_table
 
-        corpus = _emb_corpus(spark, sf_dir)
-        rows = corpus.filter(F.col("vec_id") < 8).collect()
-        cents = [
-            (int(r["vec_id"]), list(map(float, r["embedding"]))) for r in rows
-        ]
+        corpus, cents = _emb_corpus(spark, sf_dir), _ivf_seeds(spark, sf_dir)
         idx = build_ivf_index_table(corpus, cents, _scratch("ivf", sf_dir))
         return idx._replace(df=_materialized(idx.df))
 
@@ -2007,9 +2024,6 @@ def approx_distinct(spark, sf_dir):
     # A4 at scale: approx_count_distinct (HLL++) next to the exact
     # count — the 100 TB variant of n_unique (SURVEY §2.4).
     l = _t(spark, sf_dir, "lineitem")
-    within = lambda approx, exact: (
-        F.abs(F.col(approx) - F.col(exact)) / F.col(exact) <= 0.06
-    )
     return (
         l.agg(
             F.count_distinct("l_partkey").alias("exact_parts"),
@@ -2020,8 +2034,8 @@ def approx_distinct(spark, sf_dir):
         .select(
             "exact_parts",
             "exact_orders",
-            within("approx_parts", "exact_parts").alias("approx_parts_ok"),
-            within("approx_orders", "exact_orders").alias("approx_orders_ok"),
+            _within("approx_parts", "exact_parts", 0.06).alias("approx_parts_ok"),
+            _within("approx_orders", "exact_orders", 0.06).alias("approx_orders_ok"),
         )
     )
 
@@ -3803,9 +3817,6 @@ def approx_quantiles(spark, sf_dir):
     # group's values; the sketch is bounded-memory and combinable
     # map-side).
     l = _t(spark, sf_dir, "lineitem")
-    within = lambda approx, exact: (
-        F.abs(F.col(approx) - F.col(exact)) / F.col(exact) <= 0.01
-    )
     return (
         l.groupBy("l_returnflag")
         .agg(
@@ -3822,8 +3833,8 @@ def approx_quantiles(spark, sf_dir):
             "l_returnflag",
             "exact_median",
             "exact_p99",
-            within("__am", "exact_median").alias("median_ok"),
-            within("__ap", "exact_p99").alias("p99_ok"),
+            _within("__am", "exact_median", 0.01).alias("median_ok"),
+            _within("__ap", "exact_p99", 0.01).alias("p99_ok"),
         )
         .orderBy("l_returnflag")
     )
@@ -3844,7 +3855,7 @@ def _pq_ivf_index(spark, sf_dir):
     def build():
         from finlogic_spark.operators.similarity import pq_ivf_index
 
-        cents = _ivf_index(spark, sf_dir).cents
+        cents = _ivf_seeds(spark, sf_dir)
         idx = pq_ivf_index(_emb_corpus(spark, sf_dir), cents, _pq_codebooks())
         return cents, _materialized(idx)
 
@@ -7251,7 +7262,7 @@ def events_hll_rollup(spark, sf_dir):
     daily = hll_sketch_table(base, ["day", "event_type"], "user_id", lgk=12)
     path = _scratch("hllroll", sf_dir)
     daily.write.mode("overwrite").parquet(path)
-    stored = spark.read.parquet(path)
+    stored = read_written(spark, path, daily.schema)
     est = hll_table_estimate(stored, ["event_type"], "approx_users")
     # n_days is a property of the STORED table (one row per (day,type))
     # — no raw re-scan; exact_users as a single distinct pipeline
@@ -7268,11 +7279,7 @@ def events_hll_rollup(spark, sf_dir):
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("exact_users"))
     )
-    band_ok = (
-        F.abs(F.col("approx_users") - F.col("exact_users"))
-        / F.col("exact_users")
-        <= 0.06
-    )
+    band_ok = _within("approx_users", "exact_users", 0.06)
     return (
         exact.join(est, "event_type")
         .join(n_days, "event_type")
@@ -7317,11 +7324,7 @@ def stream_hll_distinct(spark, sf_dir):
     exact = e.groupBy("event_type").agg(
         F.count_distinct("user_id").alias("exact_users")
     )
-    band_ok = (
-        F.abs(F.col("approx_users") - F.col("exact_users"))
-        / F.col("exact_users")
-        <= 0.06
-    )
+    band_ok = _within("approx_users", "exact_users", 0.06)
     return (
         exact.join(est, "event_type")
         .select("event_type", "exact_users", band_ok.alias("est_ok"))
@@ -7559,11 +7562,7 @@ def events_hll_window(spark, sf_dir):
         .groupBy("event_type", "day")
         .agg(F.count_distinct("user_id").alias("exact_users"))
     )
-    band_ok = (
-        F.abs(F.col("approx_users") - F.col("exact_users"))
-        / F.col("exact_users")
-        <= 0.06
-    )
+    band_ok = _within("approx_users", "exact_users", 0.06)
     return (
         exact.join(est, ["event_type", "day"])
         .select(
@@ -7640,10 +7639,7 @@ def events_kmv_overlap(spark, sf_dir):
         .groupBy("type_a", "type_b")
         .agg(F.count(F.lit(1)).alias("exact_overlap"))
     )
-    band_ok = (
-        F.abs(F.col("approx_overlap") - F.col("exact_overlap"))
-        <= 0.25 * F.col("exact_overlap") + 2
-    )
+    band_ok = _within("approx_overlap", "exact_overlap", 0.25, slack=2)
     return (
         exact.join(
             est.withColumnsRenamed({"key_a": "type_a", "key_b": "type_b"}),
@@ -8128,10 +8124,8 @@ def data_profile_approx(spark, sf_dir):
             "n_rows",
             "n_nulls",
             "frac_null",
-            (
-                F.abs(F.col("n_distinct") - F.col("__exact"))
-                <= 0.15 * F.col("__exact")  # 3 sigma at rsd=0.05
-            ).alias("distinct_ok"),
+            # 3 sigma at rsd=0.05
+            _within("n_distinct", "__exact", 0.15).alias("distinct_ok"),
         )
         .orderBy("col_name")
     )
@@ -8313,14 +8307,13 @@ def _fingerprint_store(spark, sf_dir):
     def build():
         from finlogic_spark.operators.text_dedup import build_fingerprint_store
 
-        path = _scratch("fp", sf_dir)
-        build_fingerprint_store(
+        store = build_fingerprint_store(
             _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 2 == 0),
-            path,
+            _scratch("fp", sf_dir),
             "text",
             "doc_id",
         )
-        return _materialized(spark.read.parquet(path))
+        return _materialized(store)
 
     return _once(spark, ("fp_store", sf_dir), build)
 

@@ -9,7 +9,7 @@ import functools
 import operator
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -38,33 +38,3 @@ def safe_div(num: Column, den: Column, cutoff: float | None = None) -> Column:
     if cutoff is not None:
         return F.when(den > F.lit(cutoff), num / den).otherwise(F.lit(None))
     return F.when(den != F.lit(0), num / den).otherwise(F.lit(None))
-
-
-def translate_with_fallback(
-    df: DataFrame,
-    col: str,
-    mapping: DataFrame,
-    from_col: str = "pt",
-    to_col: str = "en",
-    fallback_prefix: str = "(pt) ",
-) -> DataFrame:
-    """Dictionary translation as a broadcast left join, untranslated
-    values prefixed (reference used a driver-side dict replace +
-    fallback concat, src/finlogic/company.py:425-433; a join scales
-    where a literal map does not)."""
-    out = df.join(
-        F.broadcast(mapping.select(from_col, to_col)),
-        df[col] == mapping[from_col],
-        "left",
-    )
-    translated = F.coalesce(
-        F.col(to_col), F.concat(F.lit(fallback_prefix), F.col(col))
-    ).alias(col)
-    keep = [translated if c == col else F.col(c) for c in df.columns]
-    return out.select(*keep)
-
-
-def period_label(date_col: str | Column) -> Column:
-    """Date → "yyyy-MM-dd" display label (src/finlogic/company.py:331)."""
-    c = F.col(date_col) if isinstance(date_col, str) else date_col
-    return F.date_format(c, "yyyy-MM-dd")

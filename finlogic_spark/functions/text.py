@@ -128,11 +128,6 @@ def quality_score(col: str | Column) -> Column:
     return (length_term + punct_term + tok_term) / F.lit(3.0)
 
 
-def lang_scores(col: str | Column) -> list[tuple[str, Column]]:
-    """Per-language stopword-hit ratios (the language-ID signal)."""
-    return [(lang, stopword_ratio(col, lang)) for lang in STOPWORDS]
-
-
 def lang_id(col: str | Column) -> Column:
     """Argmax language by stopword ratio; deterministic tiebreak by
     language code order (array_position → first max wins); 'und'

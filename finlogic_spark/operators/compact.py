@@ -41,6 +41,7 @@ from pyspark.sql import SparkSession
 from finlogic_spark.sources.fsutil import (
     delete_path,
     list_data_files,
+    numbered_dirs,
     rename_path,
 )
 
@@ -146,13 +147,10 @@ def compact_snapshot(
     _SUCCESS marker is untouched, so readers keep resolving the same
     version before/during/after. Pair: the sink bounds version COUNT
     via ``retain``; this bounds FILE COUNT within a version."""
-    from finlogic_spark.streaming import _latest_snapshot_version
-
-    v = (
-        version
-        if version is not None
-        else _latest_snapshot_version(spark, snapshot_path)
-    )
+    v = version
+    if v is None:
+        versions = numbered_dirs(spark, snapshot_path, "v=")
+        v = max((n for n, ok in versions.items() if ok), default=None)
     if v is None:
         raise FileNotFoundError(f"no committed snapshot under {snapshot_path}")
     stats = compact_dir(

@@ -54,6 +54,13 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from finlogic_spark.operators import gate
+from finlogic_spark.sources.fsutil import delete_path, exists, numbered_dirs
+from finlogic_spark.sources.index_table import (
+    STATS,
+    read_params,
+    read_written,
+    write_params,
+)
 
 # Every per-round materialization (edge cache, edge and rank checkpoints)
 # uses serialized MEMORY_AND_DISK: a 100M+-edge graph's working set
@@ -387,7 +394,7 @@ def pagerank(
     parquet round-trip adds seconds per round against executor-local
     checkpoints — the price of restartability, paid per round, not
     per edge. Resume is parameter-checked: round 0 stamps a
-    ``{dir}/_params`` sidecar (damping, scale, node/edge counts, an
+    ``{dir}/_stats`` sidecar (damping, scale, node/edge counts, an
     order-independent edge fingerprint — NOT ``iterations``, so a
     3-round run can legitimately be extended to 5) and ``resume=True``
     refuses tables written under different parameters or a different
@@ -560,8 +567,8 @@ def pagerank(
             n_nodes,
         )
         if start > 0:
-            ranks = spark.read.parquet(
-                f"{round_table_dir}/round{start - 1}"
+            ranks = read_written(
+                spark, f"{round_table_dir}/round{start - 1}", ranks.schema
             )
     for i in range(start, iterations):
         rank_side = ranks.withColumnRenamed("node", "src")
@@ -590,7 +597,7 @@ def pagerank(
         else:
             path = f"{round_table_dir}/round{i}"
             ranks.write.mode("overwrite").parquet(path)
-            ranks = spark.read.parquet(path)
+            ranks = read_written(spark, path, ranks.schema)
     ed.unpersist()
     nodes.unpersist()
     return ranks
@@ -601,20 +608,19 @@ def _last_complete_round(spark, round_table_dir: str, iterations: int) -> int:
     COMPLETE (has the committer's ``_SUCCESS`` marker), scanning
     contiguously from 0 — a missing round{j} stops the scan even if
     round{j+1} exists, because round j+1's content would then not be
-    derived from a surviving lineage. Storage-agnostic via the Hadoop
-    FileSystem API (works for local paths, HDFS, and object stores
-    alike)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    base = hpath(round_table_dir)
-    fs = base.getFileSystem(spark._jsc.hadoopConfiguration())
+    derived from a surviving lineage. Listed through ``sources/fsutil``
+    (local paths, HDFS and object stores alike)."""
+    rounds = numbered_dirs(spark, round_table_dir, "round")
     last = -1
-    for i in range(iterations):
-        if fs.exists(hpath(f"{round_table_dir}/round{i}/_SUCCESS")):
-            last = i
-        else:
-            break
+    while last + 1 < iterations and rounds.get(last + 1, False):
+        last += 1
     return last
+
+
+_ROUND_STATS_DDL = (
+    "version int, damping_num int, damping_den int, scale long, "
+    "n_nodes long, n_edges long, edge_fp long"
+)
 
 
 def _durable_round_start(
@@ -628,7 +634,7 @@ def _durable_round_start(
     scale: int,
     n_nodes: int,
 ) -> int:
-    """Validate-or-stamp the ``{dir}/_params`` sidecar and return the
+    """Validate-or-stamp the ``{dir}/_stats`` sidecar and return the
     round index to start from (0 = fresh).
 
     ADVICE r14: resume used to trust any ``round{i}/_SUCCESS`` under
@@ -642,11 +648,14 @@ def _durable_round_start(
     not depend on how many rounds follow, so extending a finished
     3-round run to 5 is a legitimate resume. The fingerprint costs one
     aggregate over the already-cached edge list — the durable path
-    only, where a per-round parquet round-trip already dominates.
+    only, where a per-round parquet round-trip already dominates. The
+    sidecar is written and read through ``sources/index_table`` (one
+    row, its DDL given) and counts as present once its ``_SUCCESS``
+    marker is.
 
     Refuses (ValueError) on a parameter/edge mismatch, and on round
-    tables with NO sidecar (pre-sidecar or foreign provenance — clear
-    the directory to proceed)."""
+    tables with NO sidecar (written before the sidecar was ``_stats``,
+    or of foreign provenance — clear the directory to proceed)."""
     fp = ed.agg(
         F.count(F.lit(1)).alias("__n"),
         F.sum(
@@ -662,14 +671,10 @@ def _durable_round_start(
         "n_edges": int(fp["__n"] or 0),
         "edge_fp": int(fp["__fp"] or 0),
     }
-    pdir = f"{round_table_dir}/_params"
     if resume:
-        try:
-            row = spark.read.parquet(pdir).collect()[0]
+        if exists(spark, f"{round_table_dir}/{STATS}/_SUCCESS"):
+            row = read_params(spark, round_table_dir, _ROUND_STATS_DDL)[0]
             stored = {k: int(row[k]) for k in params}
-        except Exception:
-            stored = None
-        if stored is not None:
             if stored != params:
                 diffs = {
                     k: {"stored": stored[k], "requested": params[k]}
@@ -688,7 +693,7 @@ def _durable_round_start(
         if _last_complete_round(spark, round_table_dir, iterations) >= 0:
             raise ValueError(
                 f"pagerank resume refused: {round_table_dir} holds round "
-                "tables but no _params sidecar, so their provenance "
+                f"tables but no {STATS} sidecar, so their provenance "
                 "cannot be verified; clear the directory to start fresh"
             )
     # Fresh-stamp path (ADVICE r15): clear any pre-existing round
@@ -697,20 +702,9 @@ def _durable_round_start(
     # a later longer resume would pass the sidecar check and walk the
     # contiguous _SUCCESS scan into those stale foreign rounds —
     # exactly the silent-wrong-resume the sidecar exists to prevent.
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    base = hpath(round_table_dir)
-    fs = base.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(base):
-        for st in fs.listStatus(base):
-            name = st.getPath().getName()
-            if name.startswith("round") and name[len("round"):].isdigit():
-                fs.delete(st.getPath(), True)
-    spark.createDataFrame(
-        [tuple(params.values())],
-        "version int, damping_num int, damping_den int, scale long, "
-        "n_nodes long, n_edges long, edge_fp long",
-    ).coalesce(1).write.mode("overwrite").parquet(pdir)
+    for i in numbered_dirs(spark, round_table_dir, "round"):
+        delete_path(spark, f"{round_table_dir}/round{i}")
+    write_params(spark, round_table_dir, _ROUND_STATS_DDL, [tuple(params.values())])
     return 0
 
 

@@ -18,7 +18,7 @@ training.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -29,14 +29,6 @@ from finlogic_spark.operators.similarity import _sql_vec
 # grows linearly in k and blows up analysis/codegen time at IVF-scale
 # cell counts (thousands), while numpy matmul is flat.
 EXPR_LITERAL_BUDGET = 8192
-
-
-def sq_dist(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
 
 
 def assign_clusters(

@@ -140,24 +140,6 @@ def token_bucket(tok: Column, n_buckets: int = N_BUCKETS) -> Column:
     )
 
 
-def classifier_logit(
-    text_col: str | Column,
-    weights_micro: list[int],
-    bias_micro: int,
-    n_buckets: int = N_BUCKETS,
-) -> Column:
-    """Per-row integer logit fold: n·b + Σ_t w[bucket(t)], exact int64.
-    The weight table is a FOLDABLE array literal (F.lit(list) →
-    Literal(ArrayData), not per-row CreateArray — the bloomjoin probe
-    measured per-row array construction at 3.3x), indexed inside one
-    ``aggregate`` fold, so scoring is expression-only: no UDF, no
-    join, no exchange."""
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    return _logit_from_tokens(
-        tokens(c), weights_micro, bias_micro, n_buckets
-    )
-
-
 def _logit_from_tokens(
     ts: Column,
     weights_micro: list[int],

@@ -33,7 +33,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from finlogic_spark.functions.text import bind, tokens
-from finlogic_spark.sources.index_table import read_params, write_index
+from finlogic_spark.sources.index_table import read_params, read_written, write_index
 
 DEFAULT_NUM_HASHES = 12
 DEFAULT_BANDS = 4  # 4 bands × 3 rows: ~Jaccard 0.6+ candidates
@@ -1352,7 +1352,7 @@ def substring_excise(
 
 def build_fingerprint_store(
     docs: DataFrame, path: str, text_col: str, id_col: str
-) -> None:
+) -> DataFrame:
     """Persisted exact-dedup fingerprint store: ONE row per distinct
     canonical-text md5 with its lowest owning id — the corpus-history
     side of incremental ingestion dedup ("have we seen this exact text
@@ -1361,7 +1361,8 @@ def build_fingerprint_store(
     (the exact_dedup null contract). At 100 TB the store is one row
     per DISTINCT document — write it partitioned/bucketed by a hash
     prefix if the ingest join needs co-location; the store schema is
-    (hash, owner)."""
+    (hash, owner). Returns the store as written, read back with that
+    schema (``index_table.read_written``: no schema-inference job)."""
     keyed = (
         docs.filter(F.col(text_col).isNotNull())
         .select(
@@ -1372,6 +1373,7 @@ def build_fingerprint_store(
         .agg(F.min("owner").alias("owner"))
     )
     keyed.write.mode("overwrite").parquet(path)
+    return read_written(docs.sparkSession, path, keyed.schema)
 
 
 def dedup_against_store(

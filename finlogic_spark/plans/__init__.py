@@ -72,15 +72,3 @@ def count_shuffles(df: DataFrame) -> int:
         for line in formatted_plan(df).splitlines()
         if re.match(r"^\(\d+\) Exchange", line.strip())
     )
-
-
-def whole_stage_codegen_spans(df: DataFrame) -> int:
-    """How many WholeStageCodegen regions the plan compiles to —
-    wider/fewer spans mean more of the query runs as fused JVM loops."""
-    plan = formatted_plan(df)
-    ids = set()
-    for line in plan.splitlines():
-        s = line.strip()
-        if "WholeStageCodegen" in s:
-            ids.add(s)
-    return len(ids)

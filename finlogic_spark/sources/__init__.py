@@ -15,20 +15,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# Driver-provided test tables (TESTDATA.md).
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
@@ -72,20 +58,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     pushdown — check ``PushedFilters`` / ``ReadSchema`` in ``.explain``.
     """
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TESTDATA_TABLES
-) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in names}
-
-
-def register_views(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TESTDATA_TABLES
-) -> None:
-    """Register each table as a temp view so SQL-first call sites work."""
-    for name in names:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
 def write_fact_layout(

@@ -16,9 +16,13 @@ caller never re-supplies, so an append cannot drift from the stored
 layout (the underscore hides it from the main table's listing).
 
 Jobs: ``spark.read.parquet`` infers a schema with one Spark job. The
-sidecar is read with its DDL given, and the frame returned after a
-write with the schema the written rows imply, so neither pays it
-(tests/test_index_table.py pins jobs per build, append and open).
+sidecar is read with its DDL given, and a frame read back after a
+write (``read_written``) with the schema the written rows imply, so
+neither pays it (tests/test_index_table.py pins jobs per build, append
+and open). Other writers that read their own output again use
+``read_written`` too: the streaming drain's batches, PageRank's round
+tables and sidecar, and the registry's stored sketch and fingerprint
+tables.
 """
 
 from __future__ import annotations
@@ -64,6 +68,16 @@ def read_params(spark: SparkSession, path: str, ddl: str) -> list[Row]:
     return params_frame(spark, path, ddl).collect()
 
 
+def read_written(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
+    """The parquet table under ``path`` that was written from a frame
+    of ``schema``, read with that schema in the nullable form parquet
+    gives it back — the same frame as ``spark.read.parquet(path)``
+    without its schema-inference job. Partition columns discovered
+    under ``path`` and absent from ``schema`` are appended as Spark
+    infers them."""
+    return spark.read.schema(_nullable(schema)).parquet(path)
+
+
 def write_index(
     rows: DataFrame,
     path: str,
@@ -97,6 +111,6 @@ def write_index(
     spark = rows.sparkSession
     if params is not None:
         write_params(spark, path, *params)
-    data = [f for f in _nullable(rows.schema).fields if f.name != part_col]
+    data = [f for f in rows.schema.fields if f.name != part_col]
     schema = T.StructType(data + [T.StructField(part_col, T.IntegerType(), True)])
-    return spark.read.schema(schema).parquet(path)
+    return read_written(spark, path, schema)

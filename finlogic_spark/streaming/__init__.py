@@ -26,6 +26,9 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from finlogic_spark.sources.fsutil import delete_path, exists, numbered_dirs
+from finlogic_spark.sources.index_table import read_written
+
 DEFAULT_WATERMARK = "1 hour"
 SESSION_GAP = "30 minutes"
 
@@ -215,7 +218,6 @@ def drain_stream_to_df(
     path: str | None = None,
     output_mode: str = "update",
     timeout: int = 600,
-    last_batch_only: bool | None = None,
 ) -> DataFrame:
     """Scale-safe drain of a bounded stream: ``run_to_parquet_sink``
     (foreachBatch, one ``batch_id=<id>`` parquet directory per
@@ -231,12 +233,14 @@ def drain_stream_to_df(
     through this; ``run_to_memory_sink`` stays a test/debug harness
     for fixture-sized streams.
 
-    ``last_batch_only`` (default: ``output_mode == "complete"``):
-    complete mode re-emits the ENTIRE result every batch, so only the
+    Complete mode re-emits the ENTIRE result every batch, so only the
     final batch's directory is the answer — reading the union would
     duplicate rows. Update/append read all batches (downstream
     keep-last collapses tentative re-emissions exactly as with the
-    memory sink).
+    memory sink). The batches are listed through ``sources/fsutil``
+    (so ``file:``, ``hdfs:`` and ``s3a:`` paths drain alike) and read
+    back with ``stream_df``'s schema (``index_table.read_written``),
+    so the read-back runs no schema-inference job.
 
     An explicit ``path`` must be FRESH: reusing one resumes from the
     old run's checkpoint offsets and the read-back unions the stale
@@ -249,6 +253,7 @@ def drain_stream_to_df(
     import shutil
     import tempfile
 
+    spark = stream_df.sparkSession
     if path is None:
         base = tempfile.mkdtemp(prefix="fl_stream_sink_")
         atexit.register(shutil.rmtree, base, ignore_errors=True)
@@ -256,46 +261,27 @@ def drain_stream_to_df(
         checkpoint = os.path.join(base, "ckpt")
     else:
         checkpoint = path.rstrip("/") + "_ckpt"
-        stale = (
-            [d for d in os.listdir(path) if d.startswith("batch_id=")]
-            if os.path.isdir(path)
-            else []
-        )
-        if stale or os.path.isdir(checkpoint):
+        stale = numbered_dirs(spark, path, "batch_id=")
+        has_ckpt = exists(spark, checkpoint)
+        if stale or has_ckpt:
             raise ValueError(
                 f"drain_stream_to_df path {path!r} holds output/checkpoint "
                 f"state from a previous run ({len(stale)} batch_id dirs; "
-                f"checkpoint={os.path.isdir(checkpoint)}); draining into it "
+                f"checkpoint={has_ckpt}); draining into it "
                 "would resume stale offsets and union stale batches — "
                 "clear both or pass a fresh path"
             )
-    if last_batch_only is None:
-        last_batch_only = output_mode == "complete"
     q = run_to_parquet_sink(
         stream_df, path, checkpoint, output_mode=output_mode, timeout=timeout
     )
     q.stop()
-    spark = stream_df.sparkSession
-    batch_ids = (
-        sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(path)
-            if d.startswith("batch_id=")
-        )
-        if os.path.isdir(path)
-        else []
-    )
+    batch_ids = sorted(numbered_dirs(spark, path, "batch_id="))
     if not batch_ids:  # empty bounded source: zero micro-batches ran
         return spark.createDataFrame([], stream_df.schema)
-    if last_batch_only:
-        return spark.read.parquet(
-            os.path.join(path, f"batch_id={batch_ids[-1]}")
-        )
-    return (
-        spark.read.option("basePath", path)
-        .parquet(path)
-        .drop("batch_id")
-    )
+    if output_mode == "complete":
+        last = os.path.join(path, f"batch_id={batch_ids[-1]}")
+        return read_written(spark, last, stream_df.schema)
+    return read_written(spark, path, stream_df.schema).drop("batch_id")
 
 
 def foreach_batch_idempotent_writer(path: str):
@@ -309,7 +295,6 @@ def foreach_batch_idempotent_writer(path: str):
     ``spark.read.option("basePath", path).parquet(path)`` (batch_id
     becomes a partition column; last-writer-wins consumers dedup on it
     if the stream runs in update mode)."""
-    import os
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(
@@ -317,55 +302,6 @@ def foreach_batch_idempotent_writer(path: str):
         )
 
     return write_batch
-
-
-def _hadoop_fs(spark, path: str):
-    """(FileSystem, Path, jvm) for ``path`` via the Hadoop FileSystem
-    API — the same abstraction Spark's own committers use, so snapshot
-    management works identically on file:, hdfs: and s3a: URIs instead
-    of assuming the driver's POSIX view IS the store."""
-    from finlogic_spark.sources.fsutil import hadoop_fs
-
-    return hadoop_fs(spark, path)
-
-
-def _list_versions(spark, path: str) -> dict[int, bool]:
-    """{version: is_committed} for ``v=N`` children of ``path``.
-    Committed = the dir carries Spark's ``_SUCCESS`` marker. One
-    listStatus + one exists per version dir — the two-call pattern
-    object stores price as LIST + HEAD."""
-    import re
-
-    fs, jpath, jvm = _hadoop_fs(spark, path)
-    if not fs.exists(jpath):
-        return {}
-    out: dict[int, bool] = {}
-    for status in fs.listStatus(jpath):
-        name = status.getPath().getName()
-        m = re.fullmatch(r"v=(\d+)", name)
-        if not m or not status.isDirectory():
-            continue
-        marker = jvm.org.apache.hadoop.fs.Path(status.getPath(), "_SUCCESS")
-        out[int(m.group(1))] = bool(fs.exists(marker))
-    return out
-
-
-def _delete_version(spark, path: str, version: int) -> None:
-    fs, _, jvm = _hadoop_fs(spark, path)
-    vdir = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + f"/v={version}")
-    fs.delete(vdir, True)
-
-
-def _latest_snapshot_version(spark, path: str, below: int | None = None) -> int | None:
-    """Highest COMMITTED snapshot version under ``path`` (dirs named
-    v=N carrying Spark's _SUCCESS marker), optionally restricted to
-    versions < ``below``. Hadoop FS listing — DFS/object-store safe."""
-    committed = [
-        v
-        for v, ok in _list_versions(spark, path).items()
-        if ok and (below is None or v < below)
-    ]
-    return max(committed) if committed else None
 
 
 def foreach_batch_upsert_writer(
@@ -402,9 +338,9 @@ def foreach_batch_upsert_writer(
     committed base v<N, so at least one committed version strictly
     below the newest must always survive pruning. Torn dirs (no
     _SUCCESS) below the current batch are deleted outright and never
-    consume retain budget. All listing/deletion goes through the
-    Hadoop FileSystem API, so the sink works on hdfs:/s3a: paths,
-    not just the driver's local disk."""
+    consume retain budget. All listing/deletion goes through
+    ``sources/fsutil`` (the Hadoop FileSystem API), so the sink works
+    on hdfs:/s3a: paths, not just the driver's local disk."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         from finlogic_spark.operators.dedup import keep_last
@@ -412,7 +348,8 @@ def foreach_batch_upsert_writer(
 
         spark = batch_df.sparkSession
         root = path.rstrip("/")
-        base_v = _latest_snapshot_version(spark, path, below=batch_id)
+        below = [v for v in list_upsert_versions(spark, path) if v < batch_id]
+        base_v = below[-1] if below else None
         target_cols = [c for c in batch_df.columns if c != delete_col]
         if base_v is None:
             target = batch_df.select(*target_cols).limit(0)
@@ -427,15 +364,15 @@ def foreach_batch_upsert_writer(
         )
         merged.write.mode("overwrite").parquet(f"{root}/v={batch_id}")
         if retain is not None:
-            versions = _list_versions(spark, path)
+            versions = numbered_dirs(spark, path, "v=")
             # Torn writes below this batch are unreadable garbage.
             for v, ok in versions.items():
                 if not ok and v < batch_id:
-                    _delete_version(spark, path, v)
+                    delete_path(spark, f"{root}/v={v}")
             committed = sorted(v for v, ok in versions.items() if ok)
             keep = max(retain, 2)
             for v in committed[: max(0, len(committed) - keep)]:
-                _delete_version(spark, path, v)
+                delete_path(spark, f"{root}/v={v}")
 
     return write_batch
 
@@ -487,16 +424,17 @@ def read_upsert_snapshot(spark, path: str, version: int | None = None) -> DataFr
     the same version-pinned read a table format's ``VERSION AS OF``
     serves. Reading a torn (uncommitted) or pruned version raises
     rather than returning partial rows."""
+    versions = numbered_dirs(spark, path, "v=")
     if version is None:
-        v = _latest_snapshot_version(spark, path)
-        if v is None:
+        committed = [v for v, ok in versions.items() if ok]
+        if not committed:
             raise FileNotFoundError(f"no committed snapshot under {path}")
+        v = max(committed)
     else:
-        committed = _list_versions(spark, path)
-        if not committed.get(version, False):
+        if not versions.get(version, False):
             raise FileNotFoundError(
                 f"snapshot v={version} under {path} is "
-                + ("uncommitted (torn write)" if version in committed
+                + ("uncommitted (torn write)" if version in versions
                    else "absent (never written or pruned)")
             )
         v = version
@@ -506,7 +444,7 @@ def read_upsert_snapshot(spark, path: str, version: int | None = None) -> DataFr
 def list_upsert_versions(spark, path: str) -> list[int]:
     """Committed snapshot versions under ``path``, ascending — the
     time-travel history ``read_upsert_snapshot(version=...)`` accepts."""
-    return sorted(v for v, ok in _list_versions(spark, path).items() if ok)
+    return sorted(v for v, ok in numbered_dirs(spark, path, "v=").items() if ok)
 
 
 def run_to_parquet_sink(

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import sys
 import tempfile
+import time
 from pathlib import Path
 
 import pytest
@@ -38,3 +39,16 @@ SF_DIR = "/root/testdata/sf0.001"
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+def count_jobs(spark, group: str, fn) -> int:
+    """Spark jobs that ``fn`` runs, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    time.sleep(0.5)  # job-start events reach the status store asynchronously
+    return len(sc.statusTracker().getJobIdsForGroup(group))

@@ -122,4 +122,4 @@ def test_compact_snapshot_pairs_with_upsert_sink(spark, tmp_path):
     snap = st.read_upsert_snapshot(spark, path)
     assert sorted(map(tuple, snap.collect())) == rows_before
     # _SUCCESS survived: the version still reads as committed.
-    assert st._latest_snapshot_version(spark, path) == 2
+    assert st.list_upsert_versions(spark, path)[-1] == 2

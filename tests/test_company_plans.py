@@ -8,6 +8,7 @@ sort), inlined here, and guard the number of Spark jobs per call.
 from __future__ import annotations
 
 import pytest
+from conftest import count_jobs
 from pyspark.sql import functions as F
 
 from finlogic_spark import indicators as ic
@@ -147,31 +148,21 @@ def test_format_indicators_matches_pivot_form(engine, cvm_id, is_consolidated, r
     _same(ic.format_indicators(df, c.acc_unit), _legacy_format_indicators(df, c.acc_unit))
 
 
-def _jobs(spark, group: str, fn) -> int:
-    """Spark jobs that ``fn`` runs, counted by job group."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_report_and_indicators_job_floor(spark, engine):
     """A per-company call runs a small fixed number of jobs: at most 6
     for ``report`` and 5 for ``indicators``. The previous forms run more
     than that on the same call, so the bound tells the two apart."""
     c = Company(engine, 1001, acc_unit="m")
     engine.indicators.count()  # fill the cache outside the counted calls
-    report = _jobs(spark, "floor-report", lambda: c.report("income_statement", 2, 2).collect())
-    legacy_report = _jobs(
+    report = count_jobs(
+        spark, "floor-report", lambda: c.report("income_statement", 2, 2).collect()
+    )
+    legacy_report = count_jobs(
         spark, "floor-report-legacy",
         lambda: _legacy_report(c, "income_statement", 2, 2).collect(),
     )
-    ind = _jobs(spark, "floor-ind", lambda: c.indicators(num_years=2).collect())
-    legacy_ind = _jobs(
+    ind = count_jobs(spark, "floor-ind", lambda: c.indicators(num_years=2).collect())
+    legacy_ind = count_jobs(
         spark, "floor-ind-legacy",
         lambda: _legacy_format_indicators(_company_indicators(c), c.acc_unit).collect(),
     )
@@ -181,7 +172,7 @@ def test_report_and_indicators_job_floor(spark, engine):
 
 def test_info_collects_without_a_job(spark, company):
     info = company.info()
-    assert _jobs(spark, "info-company", info.collect) == 0
+    assert count_jobs(spark, "info-company", info.collect) == 0
     rows = dict(map(tuple, info.collect()))
     assert int(rows["Total Accounting Rows"]) == company._df.count()
 
@@ -194,7 +185,7 @@ def test_local_frame_is_a_local_relation(spark):
     assert plan.nodeName() == "LocalRelation"
     assert df.schema.simpleString() == "struct<id:bigint,vec:array<double>,Company Info:string>"
     got = []
-    assert _jobs(spark, "local-frame", lambda: got.extend(df.collect())) == 0
+    assert count_jobs(spark, "local-frame", lambda: got.extend(df.collect())) == 0
     assert [tuple(r) for r in got] == rows
     assert [r[0] for r in df.select("`Company Info`").collect()] == ["a", None, "c.d"]
 

@@ -6,9 +6,8 @@ return."""
 
 from __future__ import annotations
 
-import time
-
 import pytest
+from conftest import count_jobs
 from pyspark.sql import functions as F
 
 from finlogic_spark.operators.graph import connected_components
@@ -179,19 +178,6 @@ def test_cc_driver_regime_edge_cases(spark):
             assert got == {i[0]: i[0] for i in ids}
 
 
-def _jobs(spark, group: str, fn) -> int:
-    """Spark jobs that ``fn`` runs, counted by job group."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    time.sleep(0.5)  # job-start events reach the status store asynchronously
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_lsh_pairs_and_components_job_floor(spark):
     """MinHash-LSH pairs into connected components on a small corpus
     runs at most 8 jobs (7 measured). The previous plans ran 10 here:
@@ -214,7 +200,7 @@ def test_lsh_pairs_and_components_job_floor(spark):
         vertices = docs.select(F.col("doc_id").alias("id"))
         out.extend(connected_components(edges, vertices, stats=st).collect())
 
-    n = _jobs(spark, "dedup-tail-floor", run)
+    n = count_jobs(spark, "dedup-tail-floor", run)
     assert st["auto_choice"] == "single-job"
     assert len(out) == 80 and len({r.label for r in out}) == 27
     assert n <= 8, n

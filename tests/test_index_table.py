@@ -6,21 +6,10 @@ here). Tiny inputs; the bounds are the counts measured on them."""
 
 from __future__ import annotations
 
-import time
-
 import pytest
+from conftest import count_jobs
 
 from finlogic_spark.operators import bpe, search, similarity, text_dedup
-
-
-def _in_group(spark, group: str, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        return fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
 
 
 def _frames(spark):
@@ -93,18 +82,20 @@ JOB_BOUNDS = {
 def test_index_jobs_per_build_append_open(spark, tmp_path, name):
     build, append, open_, serving = _cases(spark)[name]
     path = str(tmp_path / name)
-    built = _in_group(spark, f"{name}-build", lambda: build(path))
-    if append is not None:
-        built = _in_group(spark, f"{name}-append", lambda: append(path))
-    opened = _in_group(spark, f"{name}-open", lambda: open_(spark, path))
-    time.sleep(0.5)  # job-start events reach the status store asynchronously
-    st = spark.sparkContext.statusTracker()
-    got = tuple(
-        len(st.getJobIdsForGroup(f"{name}-{step}")) if w is not None else None
-        for step, w in zip(("build", "append", "open"), JOB_BOUNDS[name])
+    out = {}
+
+    def jobs(step, key, fn):
+        return count_jobs(spark, f"{name}-{step}", lambda: out.update({key: fn()}))
+
+    got = (
+        jobs("build", "built", lambda: build(path)),
+        None if append is None else jobs("append", "built", lambda: append(path)),
+        jobs("open", "opened", lambda: open_(spark, path)),
     )
+    got = tuple(g if w is not None else None for g, w in zip(got, JOB_BOUNDS[name]))
     assert all(g is None or g <= w for g, w in zip(got, JOB_BOUNDS[name])), got
     if serving is not None:
         # the frame a write returns is the one a fresh open serves
+        built, opened = out["built"], out["opened"]
         assert serving(built).schema == serving(opened).schema
         assert sorted(serving(built).collect()) == sorted(serving(opened).collect())

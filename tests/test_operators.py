@@ -7,6 +7,7 @@ from __future__ import annotations
 import datetime as dt
 
 import pytest
+from conftest import count_jobs
 from pyspark.sql import functions as F
 
 from finlogic_spark.functions import hierarchy_depth, multi_prefix, safe_div
@@ -170,18 +171,20 @@ def test_connected_components_one_job_per_round(spark, monkeypatch):
         [(i, i + 1) for i in range(n - 1)], "src long, dst long"
     )
     vertices = spark.createDataFrame([(v,) for v in range(n)], "id long")
-    sc = spark.sparkContext
     # AQE splits one action into a job per query stage, which makes raw
     # job counts a noisy proxy for driver round-trips.
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    sc.setJobGroup("cc-jobcount", "cc job accounting")
     stats: dict = {}
+    out = []
     try:
-        labels = connected_components(edges, vertices, stats=stats)
-        jobs_inside = len(sc.statusTracker().getJobIdsForGroup("cc-jobcount"))
+        jobs_inside = count_jobs(
+            spark,
+            "cc-jobcount",
+            lambda: out.append(connected_components(edges, vertices, stats=stats)),
+        )
     finally:
-        sc.setJobGroup(None, None)
         spark.conf.set("spark.sql.adaptive.enabled", "true")
+    labels = out[0]
     assert stats["auto_choice"] == "star-first" and stats["converged"]
     # gate job + first certificate + one certificate per round + the
     # fixpoint round's certificate and except-check

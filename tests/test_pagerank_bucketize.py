@@ -1,10 +1,9 @@
 """Integer PageRank (operators/graph.py) and sketch-driven equi-depth
 binning (operators/sketch.py kll_bucketize)."""
 
-import time
-
 import numpy as np
 import pytest
+from conftest import count_jobs
 from pyspark.sql import functions as F
 
 from finlogic_spark.operators import graph
@@ -464,24 +463,19 @@ def test_pagerank_small_regime_job_floor(spark):
     cust, supp = rng.randint(0, 300, 2000), rng.randint(0, 40, 2000)
     raw = {(f"c{a}", f"s{b}") for a, b in zip(cust, supp)}
     df = spark.createDataFrame(sorted(raw), "src string, dst string")
-    sc = spark.sparkContext
-    sc.setJobGroup("pagerank-floor", "pagerank-floor")
-    try:
-        got = {
-            r["node"]: r["rank"]
-            for r in pagerank(df, iterations=5, symmetrize=True).collect()
-        }
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    time.sleep(0.5)  # job-start events reach the status store asynchronously
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup("pagerank-floor"))
+    rows = []
+    n_jobs = count_jobs(
+        spark,
+        "pagerank-floor",
+        lambda: rows.extend(pagerank(df, iterations=5, symmetrize=True).collect()),
+    )
+    got = {r["node"]: r["rank"] for r in rows}
     assert got == _reference_pagerank(sorted(raw | {(b, a) for a, b in raw}), 5)
     assert n_jobs <= 5, n_jobs
 
 
 def test_pagerank_resume_refuses_foreign_round_tables(spark, tmp_path):
-    """The _params sidecar (ADVICE r14): resume must refuse round
+    """The _stats sidecar (ADVICE r14): resume must refuse round
     tables written under different parameters (damping here) or a
     different edge set, and refuse tables with no sidecar at all —
     silently resuming from wrong ranks is the failure mode."""
@@ -499,11 +493,12 @@ def test_pagerank_resume_refuses_foreign_round_tables(spark, tmp_path):
     with pytest.raises(ValueError, match="resume refused"):
         pagerank(other, iterations=4, round_table_dir=d, resume=True)
 
-    # no sidecar but rounds present -> provenance unverifiable
-    import shutil
+    # no sidecar but rounds present -> provenance unverifiable; this is
+    # also the layout written before the sidecar was named _stats
+    import os
 
-    shutil.rmtree(f"{d}/_params")
-    with pytest.raises(ValueError, match="_params sidecar"):
+    os.rename(f"{d}/_stats", f"{d}/_params")
+    with pytest.raises(ValueError, match="_stats sidecar"):
         pagerank(df, iterations=4, round_table_dir=d, resume=True)
 
     # matching params on an intact dir still resumes and extends

@@ -324,6 +324,18 @@ def test_pq_ivf_index_rebinds_on_new_session(spark, sf_dir):
     assert idx.count() == live.count()
 
 
+def test_pq_ivf_index_builds_no_ivf_index(spark, sf_dir):
+    """The PQ-IVF index takes its 8 centroids from the seed vectors, not
+    from the IVF index: a session that asks for it first builds no IVF
+    index (no corpus pass, write or cached frame it never reads)."""
+    import finlogic_spark.driver_queries as dq
+
+    other = spark.newSession()
+    dq._pq_ivf_index(other, sf_dir)
+    hit = dq._MEMO.get(("ivf", sf_dir))
+    assert hit is None or hit[0] is not other
+
+
 def test_orc_roundtrip_pushdown_and_partitioning(spark, tmp_path):
     """ORC scan/sink: typed round-trip, pushed predicate on the
     vectorized reader, and hive-partitioned writes pruning like

@@ -4,6 +4,7 @@ with their batch twins (whose correctness the DuckDB oracle pins)."""
 from __future__ import annotations
 
 import pytest
+from conftest import count_jobs
 from pyspark.sql import functions as F
 
 from finlogic_spark import streaming as st
@@ -341,10 +342,10 @@ def test_upsert_sink_ignores_uncommitted_partial_writes(spark, tmp_path):
     os.makedirs(torn)
     with open(os.path.join(torn, "part-corrupt.parquet"), "w") as f:
         f.write("not parquet")
-    assert st._latest_snapshot_version(spark, path) == 0
+    assert st.list_upsert_versions(spark, path)[-1] == 0
     assert {r["k"] for r in st.read_upsert_snapshot(spark, path).collect()} == {1}
     writer(spark.createDataFrame([(2, "b", 1)], "k long, v string, seq long"), 1)
-    assert st._latest_snapshot_version(spark, path) == 1
+    assert st.list_upsert_versions(spark, path)[-1] == 1
     assert {r["k"] for r in st.read_upsert_snapshot(spark, path).collect()} == {1, 2}
     shutil.rmtree(str(tmp_path / "snap"), ignore_errors=True)
 
@@ -428,7 +429,7 @@ def test_upsert_sink_works_on_file_uri_via_hadoop_fs(spark, tmp_path):
             spark.createDataFrame([(i, f"v{i}", i)], "k long, v string, seq long"), i
         )
     assert not os.path.isdir(uri)  # the URI is not a POSIX path
-    assert st._latest_snapshot_version(spark, uri) == 3
+    assert st.list_upsert_versions(spark, uri)[-1] == 3
     kept = sorted(n for n in os.listdir(local) if n.startswith("v="))
     assert kept == ["v=2", "v=3"]
     snap = st.read_upsert_snapshot(spark, uri)
@@ -802,6 +803,42 @@ def test_parquet_sink_refuses_stale_path(spark, sf_dir, tmp_path):
     (tmp_path / "drain_out2_ckpt").mkdir()
     with pytest.raises(ValueError, match="previous run"):
         st.drain_stream_to_df(stream, path=str(sink2))
+    # a file: URI names the same directories; the guard lists them
+    # through the Hadoop FileSystem, not the driver's POSIX view
+    for stale in (sink, sink2):
+        with pytest.raises(ValueError, match="previous run"):
+            st.drain_stream_to_df(stream, path="file://" + str(stale))
+
+
+@pytest.mark.parametrize("mode", ["update", "complete"])
+def test_parquet_sink_drains_file_uri_like_plain_path(spark, sf_dir, tmp_path, mode):
+    """A ``file:`` URI drain returns the rows of a plain-path drain: the
+    batches are listed through the Hadoop FileSystem (a driver-side
+    os.listdir takes the URI for a missing directory and returns no
+    rows)."""
+
+    def drain(path):
+        stream = st.tumbling_counts(st.read_events_stream(spark, sf_dir))
+        out = st.drain_stream_to_df(stream, path=path, output_mode=mode)
+        return sorted(map(tuple, out.collect()))
+
+    plain = drain(str(tmp_path / "plain"))
+    assert plain
+    assert drain("file://" + str(tmp_path / "uri")) == plain
+
+
+def test_parquet_sink_read_back_runs_no_inference_job(spark, sf_dir):
+    """The drained batches are read back with the stream's schema: the
+    drain call itself runs no Spark job on the caller's thread (the
+    micro-batches run under the stream's own job group). An inferring
+    read-back costs one job here."""
+    stream = st.tumbling_counts(st.read_events_stream(spark, sf_dir))
+    out = []
+    n = count_jobs(
+        spark, "drain-read-back", lambda: out.append(st.drain_stream_to_df(stream))
+    )
+    assert n == 0, n
+    assert out[0].count() > 0
 
 
 def test_stream_kll_state_carries_across_batches(spark, tmp_path):
