@@ -20,6 +20,7 @@ Scale design:
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -58,6 +59,7 @@ class Engine:
     ):
         self.spark = spark
         self.data_url = data_url or "(in-memory)"
+        self.entry_order_col = entry_order_col
         trades = trades.filter(F.col("volume") >= min_volume)
         order = [entry_order_col] if entry_order_col else []
         # One row per company. Sized before the semi-join below uses it,
@@ -79,6 +81,13 @@ class Engine:
             self.indicators = self.indicators.coalesce(
                 _cache_partitions(financials)
             ).cache()
+
+    @functools.cached_property
+    def language_names(self) -> dict[str, str]:
+        """PT → EN account names, collected once on first use (a small
+        dimension, which the reference also holds in memory)."""
+        t = self.language.select("pt", "en").toArrow()
+        return {p: e for p, e in zip(t["pt"].to_pylist(), t["en"].to_pylist()) if e is not None}
 
     @classmethod
     def from_urls(

@@ -1,29 +1,37 @@
 """Company — per-company reports and indicators
 (reference: src/finlogic/company.py).
 
-Validated mutable properties re-derive state like the reference, but
-"state" here is a cheap lazy plan rebuild; the only eager work per
-re-set is one aggregate collect for the period boundaries and the row
-count (the same driver boundary the reference has,
-src/finlogic/company.py:267-278).
+One company's statements are bounded by years × periods × accounts (a
+few thousand rows) however large the financials grow, and the
+reference answers ``report`` and ``indicators`` with a small in-memory
+pivot over them. Here too:
 
-Each call runs a small, fixed number of Spark jobs: per-call fixed cost,
-not data volume, dominates an interactive session on one company's few
-hundred accounts. ``report`` collects its period set with one small
-aggregate and names every period column explicitly, so the table is one
-``groupBy("acc_code")`` aggregation ordered inside one partition.
+- setting the identifier runs ONE Spark job, a filtered ``toArrow()``
+  of the cached financials (both consolidation flags); the name, tax
+  id, row count and period bounds come from those rows, so re-setting
+  ``is_consolidated`` or ``acc_unit`` runs no job;
+- ``report`` filters, dedups, translates and pivots them on the driver
+  and returns a ``local_frame``: no job;
+- ``indicators`` fetches the company's indicator rows with one
+  ``toArrow()`` on its first call and pivots them on the driver
+  (``indicators.format_rows``); repeats and re-sets run no job.
+
+Each fetch is one filtered scan of a cached table at any data size. A
+company larger than ``spark.driver.maxResultSize`` fails it with
+Spark's error for that limit instead of exhausting driver memory.
 """
 
 from __future__ import annotations
 
 from typing import Literal
 
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from finlogic_spark import indicators as ic
 from finlogic_spark.api import Engine
-from finlogic_spark.functions import hierarchy_depth, multi_prefix
 from finlogic_spark.session import local_frame
 
 # acc_code first segment selects the statement; prefix lists per report
@@ -47,6 +55,20 @@ REPORT_TYPES: dict[str, list[str]] = {
 
 ACC_UNITS = {"t": 1_000.0, "m": 1_000_000.0, "b": 1_000_000_000.0}
 
+# The financials columns a report reads (plus the Engine's entry order).
+_FETCH_COLS = (
+    "cvm_id", "name_id", "tax_id", "is_consolidated", "is_annual",
+    "period_end", "acc_code", "acc_name", "acc_value",
+)
+
+
+def _desc_rank(v):
+    """Sort key of Spark's descending order: nulls last, NaN above
+    every number."""
+    if v is None:
+        return (0, 0)
+    return (2, 0) if v != v else (1, v)
+
 
 class Company:
     def __init__(
@@ -66,7 +88,7 @@ class Company:
         self.tax_rate = tax_rate
         self.language = language
         self._initialized = True
-        self._set_df()
+        self._set_rows()
 
     # ---- validated properties (semantics: company.py:94-246) ----
     @property
@@ -76,19 +98,24 @@ class Company:
     @identifier.setter
     def identifier(self, identifier: int | str):
         col = "cvm_id" if isinstance(identifier, int) else "tax_id"
-        row = (
-            self._engine.financials.select("cvm_id", "tax_id", "name_id")
-            .filter(F.col(col) == identifier)
-            .first()
+        order = self._engine.entry_order_col
+        rows = (
+            self._engine.financials.filter(F.col(col) == identifier)
+            .select(*_FETCH_COLS, *([order] if order else []))
+            .toArrow()
+            .to_pylist()
         )
-        if row is None:
+        if not rows:
             raise KeyError(f"Company 'identifier' {identifier} not found.")
-        self._cvm_id = row["cvm_id"]
-        self.tax_id = row["tax_id"]
-        self.name_id = row["name_id"]
+        first = rows[0]
+        self._cvm_id = first["cvm_id"]
+        self.tax_id = first["tax_id"]
+        self.name_id = first["name_id"]
+        self._fetched = [r for r in rows if r["cvm_id"] == self._cvm_id]
+        self._indicator_rows = None
         self._identifier = identifier
         if self._initialized:
-            self._set_df()
+            self._set_rows()
 
     @property
     def is_consolidated(self) -> bool:
@@ -100,7 +127,7 @@ class Company:
             raise ValueError("Company 'is_consolidated' value is invalid")
         self._is_consolidated = value
         if self._initialized:
-            self._set_df()
+            self._set_rows()
 
     @property
     def acc_unit(self) -> float:
@@ -116,8 +143,6 @@ class Company:
             self._acc_unit = float(value)
         else:
             raise ValueError("Accounting Unit is invalid")
-        if self._initialized:
-            self._set_df()
 
     @property
     def tax_rate(self) -> float:
@@ -142,38 +167,25 @@ class Company:
         self._language = language.capitalize()
 
     # ---- state (company.py:248-281) ----
-    def _set_df(self) -> None:
-        df = self._engine.financials.filter(
-            (F.col("cvm_id") == self._cvm_id)
-            & (F.col("is_consolidated") == self._is_consolidated)
+    def _set_rows(self) -> None:
+        """The selected statements of the fetched rows and their bounds."""
+        rows = [r for r in self._fetched if r["is_consolidated"] == self._is_consolidated]
+        periods = [r["period_end"] for r in rows if r["period_end"] is not None]
+        last_annual = max(
+            (r["period_end"] for r in rows if r["is_annual"] and r["period_end"] is not None),
+            default=None,
         )
-        # Unit scaling, EPS accounts (3.99*) exempt (company.py:259-265).
-        df = df.withColumn(
-            "acc_value",
-            F.when(
-                ~F.col("acc_code").startswith("3.99"),
-                F.col("acc_value") / F.lit(self._acc_unit),
-            ).otherwise(F.col("acc_value")),
+        self._n_rows = len(rows)
+        self._first_period = min(periods, default=None)
+        self._last_period = max(periods, default=None)
+        self._last_period_type = (
+            "annual" if self._last_period == last_annual else "quarterly"
         )
-        # ONE eager collect for the period boundaries and the row count.
-        bounds = df.agg(
-            F.count("*").alias("rows"),
-            F.min("period_end").alias("first"),
-            F.max("period_end").alias("last"),
-            F.max(F.when(F.col("is_annual"), F.col("period_end"))).alias("last_annual"),
-            F.max(F.when(~F.col("is_annual"), F.col("period_end"))).alias("last_quarterly"),
-        ).first()
-        self._n_rows = bounds["rows"]
-        self._first_period = bounds["first"]
-        self._last_period = bounds["last"]
-        self._last_annual = bounds["last_annual"]
-        if self._last_period == self._last_annual:
-            self._last_period_type = "annual"
-            self._last_quarterly = None
-        else:
-            self._last_period_type = "quarterly"
-            self._last_quarterly = bounds["last_quarterly"]
-        self._df = df.drop("name_id", "cvm_id", "tax_id", "is_consolidated")
+        # One row per (acc_code, period_end): the latest entry, or the
+        # largest value without an entry order (build_indicators' D5).
+        order = self._engine.entry_order_col or "acc_value"
+        ranked = sorted(rows, key=lambda r: _desc_rank(r[order]))
+        self._rows = list({(r["acc_code"], r["period_end"]): r for r in ranked}.values())
 
     def info(self) -> DataFrame:
         rows = [
@@ -202,86 +214,100 @@ class Company:
             label += " ltm"
         return label
 
-    def _build_report(self, dfi: DataFrame, periods: list) -> DataFrame:
-        """One row per acc_code: its latest acc_name and one column per
-        period, 0.0 where the account has no value. The reference's
-        per-period loop-join (company.py:323-336) is one conditional
-        aggregation over explicit period columns here. The output is
-        one company's few hundred accounts, so it is ordered in a
-        single partition instead of through a range-partitioning sort."""
-        labels = sorted((self._period_label(p), p) for p in periods)
-        cells = [
-            F.coalesce(
-                F.first(
-                    F.when(F.col("period_end") == F.lit(p), F.col("acc_value")),
-                    ignorenulls=True,
-                ),
-                F.lit(0.0),
-            ).alias(label)
-            for label, p in labels
-        ]
-        return (
-            dfi.groupBy("acc_code")
-            .agg(F.max_by("acc_name", "period_end").alias("acc_name"), *cells)
-            .coalesce(1)
-            .sortWithinPartitions("acc_code")
-        )
+    def _acc_name(self, pt: str | None) -> str | None:
+        if self._language != "English" or pt is None:
+            return pt
+        en = self._engine.language_names.get(pt)
+        return en if en is not None else f"(pt) {pt}"
 
-    def _remove_not_last_quarters(self, df: DataFrame) -> DataFrame:
-        return df.filter(
-            F.col("is_annual") | (F.col("period_end") == F.lit(self._last_period))
-        )
-
-    def report(
-        self, report_type: str, acc_level: int = 0, num_years: int = 0
-    ) -> DataFrame:
+    def _report_rows(
+        self, report_type: str, acc_level: int, num_years: int
+    ) -> tuple[list[str], list[tuple]]:
+        """(period labels, rows): one row per acc_code in code order, its
+        latest acc_name and one value per period, 0.0 where the account
+        has none. The reference's per-period loop-join
+        (company.py:323-336) is one pass over the company's rows."""
         if acc_level not in (0, 1, 2, 3, 4):
             raise ValueError("acc_level expects 0, 1, 2, 3 or 4")
         if report_type not in REPORT_TYPES:
             raise ValueError(f"Invalid report_type: {report_type}")
-        df = self._remove_not_last_quarters(self._df)
-        if acc_level:
-            df = df.filter(hierarchy_depth("acc_code") <= acc_level)
-        df = df.filter(multi_prefix("acc_code", REPORT_TYPES[report_type]))
-        # The report's period set: one small aggregate over the
-        # company's filtered rows, collected once.
-        periods = sorted(df.agg(F.collect_set("period_end")).first()[0])
+        prefixes = tuple(REPORT_TYPES[report_type])
+        rows = [
+            r
+            for r in self._rows
+            if (r["is_annual"] or r["period_end"] == self._last_period)
+            and (r["acc_code"] or "").startswith(prefixes)
+            # depth = separators + 1 (functions.hierarchy_depth)
+            and (not acc_level or r["acc_code"].count(".") < acc_level)
+        ]
+        periods = sorted({r["period_end"] for r in rows} - {None})
         if num_years:
             periods = periods[-num_years:]
-            df = df.filter(F.col("period_end").isin(periods))
-        if self._language == "English":
-            lang = self._engine.language
-            df = (
-                df.join(
-                    F.broadcast(lang),
-                    df["acc_name"] == lang["pt"],
-                    "left",
-                )
-                .withColumn(
-                    "acc_name",
-                    F.coalesce(F.col("en"), F.concat(F.lit("(pt) "), F.col("acc_name"))),
-                )
-                .drop("pt", "en")
+            kept = set(periods)
+            rows = [r for r in rows if r["period_end"] in kept]
+        named: dict = {}  # acc_code -> (period_end, acc_name)
+        cells: dict = {}  # acc_code -> {period_end: value}
+        for r in rows:
+            code, period, value = r["acc_code"], r["period_end"], r["acc_value"]
+            by_period = cells.setdefault(code, {})
+            if period is None:
+                continue
+            if code not in named or period > named[code][0]:
+                named[code] = (period, r["acc_name"])
+            # Unit scaling, EPS accounts (3.99*) exempt (company.py:259-265).
+            if value is not None and not code.startswith("3.99"):
+                value = value / self._acc_unit
+            by_period[period] = value
+        out = [
+            (
+                code,
+                self._acc_name(named[code][1]) if code in named else None,
+                *(0.0 if cells[code].get(p) is None else cells[code][p] for p in periods),
             )
-        return self._build_report(df, periods)
+            for code in sorted(cells)
+        ]
+        return [self._period_label(p) for p in periods], out
+
+    def _report_frame(self, labels: list[str], rows: list[tuple]) -> DataFrame:
+        schema = ", ".join(["acc_code string, acc_name string", *(f"`{p}` double" for p in labels)])
+        return local_frame(self._engine.spark, rows, schema)
+
+    def report(
+        self, report_type: str, acc_level: int = 0, num_years: int = 0
+    ) -> DataFrame:
+        return self._report_frame(*self._report_rows(report_type, acc_level, num_years))
 
     def custom_report(self, acc_list: list[str], num_years: int = 0) -> DataFrame:
-        df_bs = self.report("balance_sheet", num_years=num_years)
-        df_is = self.report("income_statement", num_years=num_years)
-        df_cf = self.report("cash_flow", num_years=num_years)
-        out = df_bs.unionByName(df_is, allowMissingColumns=True).unionByName(
-            df_cf, allowMissingColumns=True
-        )
-        return out.filter(F.col("acc_code").isin(acc_list))
+        """The balance sheet, income statement and cash flow rows whose
+        code is in ``acc_list``, in that order; a period column missing
+        from one statement is null in its rows."""
+        parts = [
+            self._report_rows(t, 0, num_years)
+            for t in ("balance_sheet", "income_statement", "cash_flow")
+        ]
+        labels = list(dict.fromkeys(label for part, _ in parts for label in part))
+        wanted = set(acc_list)
+        rows = [
+            (row[0], row[1], *(dict(zip(part, row[2:])).get(label) for label in labels))
+            for part, part_rows in parts
+            for row in part_rows
+            if row[0] in wanted
+        ]
+        return self._report_frame(labels, rows)
 
     def indicators(self, num_years: int = 0) -> DataFrame:
-        df = self._engine.indicators.filter(
-            (F.col("cvm_id") == self._cvm_id)
-            & (F.col("is_consolidated") == self._is_consolidated)
-        )
-        df = ic.format_indicators(df, unit=self._acc_unit)
-        df = df.drop("cvm_id", "is_consolidated")
+        if self._indicator_rows is None:
+            self._indicator_rows = self._engine.indicators.filter(
+                F.col("cvm_id") == self._cvm_id
+            ).toArrow()
+        rows = self._indicator_rows
+        rows = rows.filter(pc.equal(rows["is_consolidated"], self._is_consolidated))
+        schema, out = ic.format_rows(rows, self._acc_unit)
+        keep = list(range(2, len(schema.fields)))  # drop cvm_id, is_consolidated
         if num_years > 0:
-            period_cols = df.columns[1:]
-            df = df.select("indicator", *period_cols[-num_years:])
-        return df
+            keep = [2, *keep[1:][-num_years:]]
+        return local_frame(
+            self._engine.spark,
+            [tuple(r[i] for i in keep) for r in out],
+            T.StructType([schema.fields[i] for i in keep]),
+        )

@@ -22,12 +22,16 @@ Documented deviations from Polars semantics (SURVEY.md §4.3):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import pyarrow as pa
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_type
 
 from finlogic_spark.operators.dedup import keep_last
 from finlogic_spark.operators.reshape import pivot_wide
 from finlogic_spark.operators.windows import lag_smooth
+from finlogic_spark.session import local_frame
 
 TAX_RATE = 0.34
 CUT_OFF_VALUE = 1_000_000
@@ -215,44 +219,42 @@ def build_indicators(financials: DataFrame, entry_order_col: str | None = None) 
     return cadence(True).unionByName(cadence(False))
 
 
-def adjust_unit(df: DataFrame, unit: float) -> DataFrame:
-    """Divide currency columns by unit; EPS and ratios untouched."""
-    present = [c for c in CURRENCY_COLS if c in df.columns]
-    return df.withColumns({c: F.col(c) / F.lit(unit) for c in present})
+def format_rows(rows: pa.Table, unit: float) -> tuple[T.StructType, list[tuple]]:
+    """Wide indicator rows → the display pivot, on the driver: one row
+    per (cvm_id, is_consolidated, indicator) in ``INDICATOR_ORDER``, one
+    column per period ("yyyy-MM-dd", ascending) holding the period's
+    first non-null value, null where there is none. Currency columns
+    are divided by ``unit``; EPS and ratios are not. Returns the schema
+    and the rows for ``local_frame``."""
+    names = [c for c in INDICATOR_ORDER if c in rows.column_names]
+    col = {c: rows[c].to_pylist() for c in ("cvm_id", "is_consolidated", "period_end", *names)}
+    labels = [None if p is None else p.isoformat() for p in col["period_end"]]
+    currency = set(CURRENCY_COLS)
+    cells: dict = {}  # (cvm_id, is_consolidated, indicator) -> {label: value}
+    for name in names:
+        for i, label in enumerate(labels):
+            cell = cells.setdefault((col["cvm_id"][i], col["is_consolidated"][i], name), {})
+            v = col[name][i]
+            if label is not None and v is not None and label not in cell:
+                cell[label] = v / unit if name in currency else v
+    periods = sorted(set(labels) - {None})
+    schema = T.StructType(
+        [
+            T.StructField("cvm_id", from_arrow_type(rows.schema.field("cvm_id").type)),
+            T.StructField("is_consolidated", T.BooleanType()),
+            T.StructField("indicator", T.StringType()),
+            *(T.StructField(p, T.DoubleType()) for p in periods),
+        ]
+    )
+    return schema, [(*key, *(cell.get(p) for p in periods)) for key, cell in cells.items()]
 
 
 def format_indicators(df: DataFrame, unit: float) -> DataFrame:
-    """Wide indicators → display pivot: one row per indicator, one
-    column per period (presentation edge only — the canonical form
-    stays wide-by-indicator).
-
-    Meant for one company's rows: the period set is collected with one
-    small aggregate and named explicitly, so the pivot is a single
-    conditional aggregation with no distinct-collection job, and the
-    27 output rows are ordered in one partition, not by a range sort."""
-    df = adjust_unit(df, unit)
-    melt_cols = ["cvm_id", "name_id", "is_annual", "is_consolidated", "period_end"]
-    value_cols = [c for c in df.columns if c not in melt_cols]
-    long = df.unpivot(melt_cols, value_cols, "indicator", "value").withColumn(
-        "period_end", F.col("period_end").cast("string")
-    )
-    periods = sorted(
-        df.agg(F.collect_set(F.col("period_end").cast("string"))).first()[0]
-    )
-    keys = ["cvm_id", "is_consolidated", "indicator"]
-    cells = [
-        F.first(
-            F.when(F.col("period_end") == F.lit(p), F.col("value")),
-            ignorenulls=True,
-        ).alias(p)
-        for p in periods
-    ]
-    out = long.groupBy(*keys).agg(*cells) if cells else long.select(*keys).distinct()
-    order = F.array(*[F.lit(i) for i in INDICATOR_ORDER])
-    return (
-        out.withColumn("_order", F.array_position(order, F.col("indicator")))
-        .filter(F.col("_order") > 0)
-        .coalesce(1)
-        .sortWithinPartitions("_order")
-        .drop("_order")
-    )
+    """Wide indicators → display pivot (presentation edge only — the
+    canonical form stays wide-by-indicator): ``df`` is collected with
+    one ``toArrow()`` and pivoted on the driver by ``format_rows``, the
+    same kernel ``Company.indicators`` runs, and comes back as a
+    ``local_frame``. Meant for one company's rows: the input must fit
+    in ``spark.driver.maxResultSize``."""
+    schema, out = format_rows(df.toArrow(), unit)
+    return local_frame(df.sparkSession, out, schema)

@@ -930,24 +930,25 @@ def winnow_fingerprints(col: str | Column, k: int = 3, w: int = 4) -> Column:
     engines, so min() needs no numeric conversion.
 
     Expression-only (no explode, no shuffle): the fingerprint set of a
-    bounded-length document is computed inside whole-stage codegen in
-    one scan pass — at 100 TB this is scan-shaped, embarrassingly
-    parallel, and the output (distinct minima) is a small fraction of
-    the shingle count (expected |fp| ~ 2/(w+1) of positions).
+    bounded-length document is computed in one scan pass, by
+    higher-order functions that Spark evaluates interpreted (outside
+    whole-stage codegen) — at 100 TB this is scan-shaped,
+    embarrassingly parallel, and the output (distinct minima) is a
+    small fraction of the shingle count (expected |fp| ~ 2/(w+1) of
+    positions). The shingle hashes are bound once per document
+    (``bind``): referenced from the window lambda unbound, they would
+    be re-hashed for every window, O(n²) md5 calls per document.
 
     Documents with fewer than ``w`` windows degrade to min-of-all —
     the standard short-document convention."""
 
-    def winnow(sh: Column) -> Column:
-        hashes = F.transform(sh, lambda s: F.md5(s))
+    def winnow(hashes: Column) -> Column:
         n = F.size(hashes)
         idx = F.sequence(F.lit(1), F.greatest(n - F.lit(w - 1), F.lit(1)))
         minima = F.transform(idx, lambda i: F.array_min(F.slice(hashes, i, w)))
         return F.array_sort(F.array_distinct(minima))
 
-    # one-element-array bind: evaluate the shingle array once per row
-    # (HOF lambdas re-inline referenced expressions; see shingles()).
-    return F.flatten(F.transform(F.array(shingles(col, k)), winnow))
+    return bind(F.transform(shingles(col, k), lambda s: F.md5(s)), winnow)
 
 
 def token_segments(col: str | Column, seg: int = 8) -> Column:

@@ -316,7 +316,8 @@ def foreach_batch_upsert_writer(
     ``operators.merge.merge_upsert``.
 
     Per batch id N:
-    1. base snapshot = highest committed version v<N (None → empty);
+    1. base snapshot = highest committed version v<N (None → empty),
+       read back with the batch's schema (no inference job);
     2. the batch dedups to one change per key (``keep_last`` on
        ``order_cols`` — CDC batches carry multiple versions per key);
     3. ``merge_upsert`` applies update/insert/delete semantics;
@@ -354,7 +355,9 @@ def foreach_batch_upsert_writer(
         if base_v is None:
             target = batch_df.select(*target_cols).limit(0)
         else:
-            target = spark.read.parquet(f"{root}/v={base_v}")
+            target = read_written(
+                spark, f"{root}/v={base_v}", batch_df.select(*target_cols).schema
+            )
         changes = keep_last(batch_df, keys, order_cols)
         # order_cols makes the MERGE order-robust: a stale change row
         # (older order tuple than the snapshot's) is a no-op, so a

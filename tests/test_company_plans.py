@@ -1,9 +1,10 @@
-"""Per-company plans: ``Company.report`` and ``format_indicators`` name
-their period columns explicitly after one small aggregate, and order
-their rows inside one partition. These tests pin them to the previous
-forms (pivot with a collected value list, index ⋈ pivot join, range
-sort), inlined here, and guard the number of Spark jobs per call.
-``local_frame`` is pinned as the driver-rows → ``LocalRelation`` path."""
+"""Per-company calls: ``Company`` fetches its rows with one Spark job,
+``report`` pivots them on the driver, and ``indicators`` and
+``format_indicators`` pivot one fetched company on the driver. These
+tests pin them to the Spark forms (pivot with a collected value list,
+index ⋈ pivot join, range sort), inlined here, and guard the number of
+Spark jobs per call. ``local_frame`` is pinned as the driver-rows →
+``LocalRelation`` path."""
 
 from __future__ import annotations
 
@@ -19,11 +20,39 @@ from finlogic_spark.operators.reshape import pivot_wide
 from finlogic_spark.session import local_frame
 
 
+def _company_df(c: Company):
+    """The company's selected statements in Spark, unit-scaled (EPS
+    accounts exempt)."""
+    df = c._engine.financials.filter(
+        (F.col("cvm_id") == c._cvm_id) & (F.col("is_consolidated") == c.is_consolidated)
+    )
+    return df.withColumn(
+        "acc_value",
+        F.when(~F.col("acc_code").startswith("3.99"), F.col("acc_value") / F.lit(c.acc_unit))
+        .otherwise(F.col("acc_value")),
+    ).drop("name_id", "cvm_id", "tax_id", "is_consolidated")
+
+
+def _legacy_open(c: Company):
+    """The Spark form of opening a company: its first row, then one
+    aggregate for the row count and the period bounds."""
+    c._engine.financials.filter(F.col("cvm_id") == c._cvm_id).first()
+    return _company_df(c).agg(
+        F.count("*").alias("rows"),
+        F.max("period_end").alias("last"),
+        F.max(F.when(F.col("is_annual"), F.col("period_end"))).alias("last_annual"),
+    ).first()
+
+
 def _legacy_report(c: Company, report_type: str, acc_level: int, num_years: int):
     """The index ⋈ pivot form: latest name per code by a window, the
     periods by ``groupBy().pivot()`` over collected values, ``num_years``
     as a broadcast semi-join, ``na.fill`` and a global ``orderBy``."""
-    df = c._remove_not_last_quarters(c._df)
+    bounds = _legacy_open(c)
+    last_period, quarterly = bounds["last"], bounds["last"] != bounds["last_annual"]
+    df = _company_df(c).filter(
+        F.col("is_annual") | (F.col("period_end") == F.lit(last_period))
+    )
     if acc_level:
         df = df.filter(hierarchy_depth("acc_code") <= acc_level)
     if c.language == "English":
@@ -50,8 +79,7 @@ def _legacy_report(c: Company, report_type: str, acc_level: int, num_years: int)
     labeled = df.withColumn(
         "period_str",
         F.when(
-            (F.col("period_end") == F.lit(c._last_period))
-            & F.lit(c._last_period_type == "quarterly"),
+            (F.col("period_end") == F.lit(last_period)) & F.lit(quarterly),
             F.concat(F.date_format("period_end", "yyyy-MM-dd"), F.lit(" ltm")),
         ).otherwise(F.date_format("period_end", "yyyy-MM-dd")),
     )
@@ -63,7 +91,7 @@ def _legacy_report(c: Company, report_type: str, acc_level: int, num_years: int)
 
 
 def _legacy_format_indicators(df, unit: float):
-    df = ic.adjust_unit(df, unit)
+    df = df.withColumns({c: F.col(c) / F.lit(unit) for c in ic.CURRENCY_COLS if c in df.columns})
     melt_cols = ["cvm_id", "name_id", "is_annual", "is_consolidated", "period_end"]
     value_cols = [c for c in df.columns if c not in melt_cols]
     long = df.unpivot(melt_cols, value_cols, "indicator", "value").withColumn(
@@ -148,12 +176,44 @@ def test_format_indicators_matches_pivot_form(engine, cvm_id, is_consolidated, r
     _same(ic.format_indicators(df, c.acc_unit), _legacy_format_indicators(df, c.acc_unit))
 
 
+@pytest.mark.parametrize("cvm_id", [1000, 1001, 1002])
+def test_report_keeps_the_indicators_value_of_a_duplicated_key(engine, cvm_id):
+    """The fixtures enter 2020's ``6.01.01.04`` of companies 1000–1002
+    twice, the second time doubled. ``report`` keeps the latest entry,
+    as the indicators table does (D5), so both read the same value."""
+    c = Company(engine, cvm_id, acc_unit="m")
+    report = c.report("cash_flow").filter(F.col("acc_code") == "6.01.01.04").first().asDict()
+    ind = next(
+        r.asDict() for r in c.indicators().collect()
+        if r["indicator"] == "depreciation_amortization"
+    )
+    dup = (
+        engine.financials.filter(
+            (F.col("cvm_id") == cvm_id) & F.col("is_consolidated")
+            & (F.col("acc_code") == "6.01.01.04") & (F.year("period_end") == 2020)
+        )
+        .orderBy("entry_id")
+        .collect()
+    )
+    assert len(dup) == 2 and dup[1]["acc_value"] == 2 * dup[0]["acc_value"]
+    assert report["2020-12-31"] == ind["2020-12-31"] == dup[1]["acc_value"] / 1e6
+    common = [p for p in ind if p != "indicator" and p in report]
+    assert len(common) >= 5
+    assert [report[p] for p in common] == [ind[p] for p in common]
+
+
 def test_report_and_indicators_job_floor(spark, engine):
-    """A per-company call runs a small fixed number of jobs: at most 6
-    for ``report`` and 5 for ``indicators``. The previous forms run more
-    than that on the same call, so the bound tells the two apart."""
-    c = Company(engine, 1001, acc_unit="m")
+    """Opening a company runs one job, ``report`` none, and
+    ``indicators`` one on its first call for the company and none on a
+    repeat or after a re-set of ``is_consolidated`` or ``acc_unit``.
+    The Spark forms run more than that on the same calls, so each bound
+    tells the two apart."""
     engine.indicators.count()  # fill the cache outside the counted calls
+    engine.language_names  # collected once per Engine, on first use
+    box = []
+    opened = count_jobs(spark, "floor-open", lambda: box.append(Company(engine, 1001, acc_unit="m")))
+    c = box[0]
+    legacy_open = count_jobs(spark, "floor-open-legacy", lambda: _legacy_open(c))
     report = count_jobs(
         spark, "floor-report", lambda: c.report("income_statement", 2, 2).collect()
     )
@@ -162,19 +222,30 @@ def test_report_and_indicators_job_floor(spark, engine):
         lambda: _legacy_report(c, "income_statement", 2, 2).collect(),
     )
     ind = count_jobs(spark, "floor-ind", lambda: c.indicators(num_years=2).collect())
+    repeat = count_jobs(spark, "floor-ind-repeat", lambda: c.indicators(num_years=2).collect())
+
+    def reset():
+        c.is_consolidated = False
+        c.acc_unit = "t"
+        c.indicators().collect()
+        c.report("cash_flow").collect()
+
+    after_reset = count_jobs(spark, "floor-ind-reset", reset)
     legacy_ind = count_jobs(
         spark, "floor-ind-legacy",
         lambda: _legacy_format_indicators(_company_indicators(c), c.acc_unit).collect(),
     )
-    assert report <= 6 < legacy_report
-    assert ind <= 5 < legacy_ind
+    assert opened <= 1 < legacy_open
+    assert report == 0 < legacy_report
+    assert ind == 1 < legacy_ind
+    assert repeat == 0 and after_reset == 0
 
 
 def test_info_collects_without_a_job(spark, company):
     info = company.info()
     assert count_jobs(spark, "info-company", info.collect) == 0
     rows = dict(map(tuple, info.collect()))
-    assert int(rows["Total Accounting Rows"]) == company._df.count()
+    assert int(rows["Total Accounting Rows"]) == _company_df(company).count()
 
 
 def test_local_frame_is_a_local_relation(spark):

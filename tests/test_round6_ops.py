@@ -18,6 +18,7 @@ from finlogic_spark.operators.fuzzy import fuzzy_join_blocked
 from finlogic_spark.operators.profile import expect, profile_columns
 from finlogic_spark.operators.text_dedup import (
     repeated_segment_dedup,
+    shingles,
     token_segments,
     winnow_fingerprints,
 )
@@ -62,6 +63,34 @@ def test_winnow_plan_no_shuffle(spark):
         .toString()
     )
     assert "Exchange" not in plan, "winnowing must be expression-only"
+
+
+def test_winnow_bound_hashes_match_unbound_form(spark):
+    """Binding the shingle hashes once changes no fingerprint: normal,
+    short (fewer than ``w`` windows), empty and null documents."""
+
+    def unbound(col, k=3, w=4):
+        def winnow(sh):
+            hashes = F.transform(sh, lambda s: F.md5(s))
+            n = F.size(hashes)
+            idx = F.sequence(F.lit(1), F.greatest(n - F.lit(w - 1), F.lit(1)))
+            minima = F.transform(idx, lambda i: F.array_min(F.slice(hashes, i, w)))
+            return F.array_sort(F.array_distinct(minima))
+
+        return F.flatten(F.transform(F.array(shingles(col, k)), winnow))
+
+    rows = [
+        (1, " ".join(f"w{i % 7} x{i % 3}" for i in range(60))),
+        (2, "just two"),
+        (3, "one two three four five"),
+        (4, ""),
+        (5, None),
+    ]
+    df = spark.createDataFrame(rows, "doc_id int, text string")
+    got = df.select("doc_id", winnow_fingerprints("text").alias("a"), unbound("text").alias("b"))
+    out = {r["doc_id"]: (r["a"], r["b"]) for r in got.collect()}
+    assert all(a == b for a, b in out.values()), out
+    assert len(out[1][0]) > 1 and len(out[2][0]) == len(out[3][0]) == 1
 
 
 # ---------------------------------------------------------- segment dedup

@@ -206,6 +206,19 @@ def test_upsert_sink_folds_to_keep_last(spark, tmp_path):
     assert got == {1: ("a1", 2), 3: ("c2", 6)}
 
 
+def test_upsert_sink_reads_its_base_without_inference(spark, tmp_path):
+    # A batch with a committed base reads it with the batch's schema:
+    # three jobs, one fewer than with parquet schema inference.
+    path = str(tmp_path / "snap")
+    writer = st.foreach_batch_upsert_writer(path, keys=["k"], order_cols=["seq"])
+    schema = "k long, v string, seq long"
+    writer(spark.createDataFrame([(1, "a", 0), (2, "b", 1)], schema), 0)
+    b1 = spark.createDataFrame([(1, "a1", 2), (3, "c", 3)], schema)
+    assert count_jobs(spark, "upsert-batch", lambda: writer(b1, 1)) == 3
+    snap = st.read_upsert_snapshot(spark, path)
+    assert sorted(map(tuple, snap.collect())) == [(1, "a1", 2), (2, "b", 1), (3, "c", 3)]
+
+
 def test_upsert_sink_replay_is_idempotent(spark, tmp_path):
     # A replayed batch (same deterministic id after crash recovery)
     # rebuilds its version from the SAME base and overwrites itself.

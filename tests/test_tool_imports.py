@@ -1,10 +1,12 @@
 """Every ``finlogic_spark`` name a script under ``tools/`` imports still
 exists. ``python -m compileall tools`` only parses the scripts; an
 import of a removed name inside a function fails first when that code
-path runs. No Spark session is needed."""
+path runs. ``tools/ab.py``'s pairing and summary are checked on
+synthetic runs. No Spark session is needed."""
 
 import ast
 import importlib
+import importlib.util
 from pathlib import Path
 
 import pytest
@@ -39,3 +41,33 @@ def test_tool_imports_resolve(path):
         except ModuleNotFoundError:
             missing.append(f"{module}.{name}")
     assert not missing, missing
+
+
+def _load_tool(name: str):
+    path = next(p for p in TOOLS if p.name == name)
+    spec = importlib.util.spec_from_file_location(path.stem, path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_ab_alternates_sides_and_summarizes_pairs():
+    ab = _load_tool("ab.py")
+    assert [ab.pair_order(i, "p", "c") for i in range(3)] == [
+        ("p", "c"), ("c", "p"), ("p", "c")
+    ]
+
+    def side(op_ms, quality, failed=0):
+        return {"failed": failed, "metrics": {
+            "op_ms": {"value": op_ms}, "result_quality": {"value": quality}}}
+
+    runs = [
+        {"parent": side(10, 1.0), "change": side(5, 1.0)},
+        {"parent": side(12, 1.0), "change": side(6, 0.9, failed=1)},
+        {"parent": side(11, 1.0), "change": side(13, 1.0)},
+    ]
+    s = ab.summarize(runs, {"op_ms": "lower", "result_quality": "higher"})
+    assert s["op_ms"]["parent"]["median"] == 11 and s["op_ms"]["change"]["median"] == 6
+    assert s["op_ms"]["change_won"] == 2 and s["op_ms"]["pairs"] == 3
+    assert s["result_quality"]["change_won"] == 0
+    assert s["failed"] == {"parent": [0, 0, 0], "change": [0, 1, 0]}
