@@ -16,9 +16,13 @@ pivot over them. Here too:
   ``toArrow()`` on its first call and pivots them on the driver
   (``indicators.format_rows``); repeats and re-sets run no job.
 
-Each fetch is one filtered scan of a cached table at any data size. A
-company larger than ``spark.driver.maxResultSize`` fails it with
-Spark's error for that limit instead of exhausting driver memory.
+Each fetch is one filtered scan of a cached table at any data size.
+``spark.driver.maxResultSize`` bounds the transfer: a company over it
+fails the fetch with Spark's error for that limit. It does not bound
+the driver-side copy. The fetched rows stay columnar in Arrow, but the
+selected consolidation flag's rows become Python dicts for the pivot,
+several times their Arrow size, so a result just under the limit can
+still need more driver memory than the limit suggests.
 """
 
 from __future__ import annotations
@@ -99,19 +103,18 @@ class Company:
     def identifier(self, identifier: int | str):
         col = "cvm_id" if isinstance(identifier, int) else "tax_id"
         order = self._engine.entry_order_col
-        rows = (
+        fetched = (
             self._engine.financials.filter(F.col(col) == identifier)
             .select(*_FETCH_COLS, *([order] if order else []))
             .toArrow()
-            .to_pylist()
         )
-        if not rows:
+        if not fetched.num_rows:
             raise KeyError(f"Company 'identifier' {identifier} not found.")
-        first = rows[0]
+        first = fetched.slice(0, 1).to_pylist()[0]
         self._cvm_id = first["cvm_id"]
         self.tax_id = first["tax_id"]
         self.name_id = first["name_id"]
-        self._fetched = [r for r in rows if r["cvm_id"] == self._cvm_id]
+        self._fetched = fetched.filter(pc.equal(fetched["cvm_id"], self._cvm_id))
         self._indicator_rows = None
         self._identifier = identifier
         if self._initialized:
@@ -169,7 +172,10 @@ class Company:
     # ---- state (company.py:248-281) ----
     def _set_rows(self) -> None:
         """The selected statements of the fetched rows and their bounds."""
-        rows = [r for r in self._fetched if r["is_consolidated"] == self._is_consolidated]
+        fetched = self._fetched
+        rows = fetched.filter(
+            pc.equal(fetched["is_consolidated"], self._is_consolidated)
+        ).to_pylist()
         periods = [r["period_end"] for r in rows if r["period_end"] is not None]
         last_annual = max(
             (r["period_end"] for r in rows if r["is_annual"] and r["period_end"] is not None),

@@ -255,6 +255,7 @@ def format_indicators(df: DataFrame, unit: float) -> DataFrame:
     one ``toArrow()`` and pivoted on the driver by ``format_rows``, the
     same kernel ``Company.indicators`` runs, and comes back as a
     ``local_frame``. Meant for one company's rows: the input must fit
-    in ``spark.driver.maxResultSize``."""
+    in ``spark.driver.maxResultSize``, which bounds the transfer, and
+    its Python copy in driver memory, which that limit does not bound."""
     schema, out = format_rows(df.toArrow(), unit)
     return local_frame(df.sparkSession, out, schema)

@@ -1,12 +1,13 @@
 """Every ``finlogic_spark`` name a script under ``tools/`` imports still
 exists. ``python -m compileall tools`` only parses the scripts; an
 import of a removed name inside a function fails first when that code
-path runs. ``tools/ab.py``'s pairing and summary are checked on
-synthetic runs. No Spark session is needed."""
+path runs. ``tools/ab.py``'s pairing, summary and run length are
+checked on synthetic runs. No Spark session is needed."""
 
 import ast
 import importlib
 import importlib.util
+import json
 from pathlib import Path
 
 import pytest
@@ -71,3 +72,23 @@ def test_ab_alternates_sides_and_summarizes_pairs():
     assert s["op_ms"]["change_won"] == 2 and s["op_ms"]["pairs"] == 3
     assert s["result_quality"]["change_won"] == 0
     assert s["failed"] == {"parent": [0, 0, 0], "change": [0, 1, 0]}
+
+
+def test_ab_runs_for_the_benchmarks_run_seconds(tmp_path, monkeypatch):
+    ab = _load_tool("ab.py")
+    (tmp_path / "BENCHMARK.json").write_text(json.dumps({
+        "run_seconds": 7,
+        "end_to_end": [{"name": "op_ms", "better": "lower"}],
+    }))
+    calls = []
+
+    def run_once(checkout, workload, seed, seconds):
+        calls.append((checkout, seed, seconds))
+        return {"failed": 0, "metrics": {"op_ms": {"value": 1.0}}}
+
+    monkeypatch.setattr(ab, "run_once", run_once)
+    out = tmp_path / "ab.json"
+    assert ab.main(["P", str(tmp_path), "--workload", "w", "--seeds", "1", "2",
+                    "--out", str(out)]) == 0
+    assert calls == [("P", 1, 7), (str(tmp_path), 1, 7), (str(tmp_path), 2, 7), ("P", 2, 7)]
+    assert json.loads(out.read_text())["seconds"] == 7

@@ -1,15 +1,16 @@
 """Alternating A/B of one perfbench workload between two checkouts.
 
     python tools/ab.py PARENT_DIR CHANGE_DIR --workload finlogic_session \\
-        --seeds 1 2 3 4 5 6 [--seconds 6] [--out BENCH_x.json]
+        --seeds 1 2 3 4 5 6 7 8 9 10 [--out BENCH_x.json]
 
 Pair i runs ``python3 perfbench/run.py --workload W --seed N --seconds S``
 in both checkouts back to back on seed N, the parent first on even
 pairs and the change first on odd ones, so host drift hits both sides
-alike. Prints, per end-to-end metric, each side's median and quartiles
-and the pairs the change won (by the metric's ``better`` direction in
-the change's BENCHMARK.json), plus ``failed`` per side. ``--out``
-writes every run and that summary as JSON.
+alike. S is ``run_seconds`` of the change's BENCHMARK.json, the run
+length the benchmark itself uses. Prints, per end-to-end metric, each
+side's median and quartiles and the pairs the change won (by the
+metric's ``better`` direction in the same file), plus ``failed`` per
+side. ``--out`` writes every run and that summary as JSON.
 """
 
 from __future__ import annotations
@@ -78,18 +79,19 @@ def main(argv=None) -> int:
     ap.add_argument("change")
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", type=int, nargs="+", required=True)
-    ap.add_argument("--seconds", type=float, default=6)
     ap.add_argument("--out")
     a = ap.parse_args(argv)
     with open(os.path.join(a.change, "BENCHMARK.json")) as f:
-        better = {m["name"]: m["better"] for m in json.load(f)["end_to_end"]}
+        bench = json.load(f)
+    better = {m["name"]: m["better"] for m in bench["end_to_end"]}
+    seconds = bench["run_seconds"]
 
     runs = []
     for i, seed in enumerate(a.seeds):
         pair = {"seed": seed, "first": "parent" if i % 2 == 0 else "change"}
         for checkout in pair_order(i, a.parent, a.change):
             side = "parent" if checkout == a.parent else "change"
-            pair[side] = run_once(checkout, a.workload, seed, a.seconds)
+            pair[side] = run_once(checkout, a.workload, seed, seconds)
         runs.append(pair)
         print(f"pair {i} seed {seed}: " + json.dumps(
             {s: {k: v["value"] for k, v in pair[s].get("metrics", {}).items()} for s in ("parent", "change")}
@@ -106,7 +108,7 @@ def main(argv=None) -> int:
               f"change won {s['change_won']}/{s['pairs']} ({s['better']} is better)")
     if a.out:
         with open(a.out, "w") as f:
-            json.dump({"workload": a.workload, "seconds": a.seconds, "seeds": a.seeds,
+            json.dump({"workload": a.workload, "seconds": seconds, "seeds": a.seeds,
                        "cpus": len(os.sched_getaffinity(0)),
                        "runs": runs, "summary": summary}, f, indent=1)
     return 0
